@@ -1,48 +1,47 @@
-"""Distributed global prefix sum: exact running totals without a
+"""Distributed global prefix scan: exact running sums and maxima without a
 single-partition window.
 
 ``Window.orderBy(...)`` with no partitionBy moves the whole input through
 ONE task — fine for metadata-scale sets (bin-pack policy tables, commit
 logs), fatal for corpus-scale ones. This operator computes the identical
-running sum in two phases, the classic scan-then-offset decomposition:
+running aggregate in two phases, the classic scan-then-offset decomposition:
 
 1. split the total order into contiguous key ranges, then a per-range
-   cumulative sum (window partitioned by the range id — each task sorts and
-   scans only its own key range);
-2. per-range totals (one row per range — metadata-scale by construction)
-   get their own tiny prefix sum and broadcast back as base offsets.
+   running aggregate (window partitioned by the range id — each task sorts
+   and scans only its own key range);
+2. per-range aggregates (one row per range — metadata-scale by
+   construction) get their own tiny prefix scan and broadcast back as base
+   offsets.
 
 The result is bit-identical to the global window: range boundaries only
 decide where the local/global split lands, never the value.
 
-Two range-assignment modes:
+Range ids are deterministic buckets. ``bucket=(key, lo, hi, n)`` gives the
+range id ``width_bucket(key, lo, hi, n)``: a pure expression of the row, so
+every consumer of the relation computes the SAME id with no
+materialization and no lineage cut. ``lo``/``hi`` only steer balance — ids
+0 and n+1 catch out-of-range keys correctly — so approximate domain
+knowledge (parquet footer min/max, a fixed score domain) is enough. Pass
+the folded min/max straight through: a ``None`` bound (empty or all-NULL
+input) or ``lo >= hi`` gives one range. Put any monotone transform on the
+key, never on the bounds.
 
-- **Deterministic buckets** (``bucket=(key, lo, hi, n)``) — the preferred
-  path. The range id is ``width_bucket(key, lo, hi, n)``: a pure expression
-  of the row, so every consumer of the relation computes the SAME id with no
-  materialization. Both phases hang off one explicit ``repartition(id)``
-  exchange — the local-scan window and the per-range totals aggregation each
-  consume it (ReusedExchange), so the upstream plan executes once, there is
-  no lineage cut (whole-stage codegen and AQE see through the whole plan),
-  and nothing depends on executor-local checkpoint blocks surviving (the
-  r11 form cut lineage with localCheckpoint, which on a real cluster turns
-  an executor loss into a job failure instead of a recompute).
-  ``bucket`` monotonicity contract: the key expression must be non-null and
-  non-decreasing along ``order_cols`` (pass the negated key for a descending
-  first column), and rows equal on the first order column must share a key
-  value. ``lo``/``hi`` only steer balance — ids 0 and n+1 catch out-of-range
-  keys correctly — so approximate domain knowledge (parquet footer min/max,
-  a fixed score domain) is enough.
+Key contract: the key is non-NULL and non-decreasing along the full
+``order_cols`` order (pass the negated key for a descending column; a
+composite key such as ``metric + position`` is fine as long as it never
+decreases). A NULL key fails the task instead of guessing a position; a NaN
+key takes the last id, where Spark orders NaN.
 
-- **Sampled ranges** (``bucket=None``) — fallback when no cheap key domain
-  exists. ``repartitionByRange`` samples boundaries at execution time, which
-  is non-deterministic per execution, so the ranged relation is pinned with
-  a lazy localCheckpoint: the two consumers MUST see one sampled
-  partitioning (re-sampling per consumer silently corrupts the running sums
-  — the r11 correctness bug, regression-tested in test_properties.py).
+One range exchange per call: both phases read the per-range window over
+ONE ``repartition(id)`` exchange — the offsets side takes each range's
+aggregate from an unbounded frame of the same window spec, so its exchange
+keeps exactly the columns of the local-scan side and AQE plans it as a
+ReusedExchange. That holds when ``df`` carries exactly the order columns
+and the value column (join anything else back by key); extra columns used
+downstream only cost a second exchange, never correctness.
 
-AQE-safe either way — coalescing merges whole hash partitions, and the
-window re-partitions logically by the id column, not by physical layout.
+AQE-safe — coalescing merges whole hash partitions, and the window
+re-partitions logically by the id column, not by physical layout.
 
 The order must be total (include a unique tiebreaker column): with ties
 spanning a range boundary the local scan could not reproduce the global tie
@@ -52,54 +51,74 @@ callers to pass a full ordering.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 _PID = "__range_pid"
-_LOCAL = "__local_cum"
+_LOCAL = "__local_scan"
+_RANGE = "__range_agg"
 _BASE = "__base_offset"
 
-#: (key expression, domain lo, domain hi, bucket count) for the
-#: deterministic range-id path; lo/hi/n are Python numbers
-Bucket = tuple[Column, float, float, int]
+#: (key expression, domain lo, domain hi, bucket count); lo/hi are Python
+#: numbers, or None when the domain fold saw no non-NULL value
+Bucket = tuple[Column, float | None, float | None, int]
 
 
-def _bucket_ranged(df: DataFrame, bucket: Bucket) -> DataFrame:
-    """df + deterministic ``_PID`` range id, hash-repartitioned by it.
+def _range_id(bucket: Bucket) -> Column:
+    """Provably non-nullable range id: monotone in the key, failing on a
+    NULL key.
 
-    ``width_bucket`` is monotone non-decreasing in the key (floating multiply
-    by a positive constant and floor both preserve order), so equal ranges
-    are contiguous key intervals; out-of-domain keys land in ids 0 / n+1,
-    which still sort correctly against the interior ids.
+    Non-nullability matters for the plan: the offsets join's implied
+    isnotnull(id) then folds away on both sides, so the two exchange
+    subtrees stay canonically equal and AQE reuses one for the other.
     """
     key, lo, hi, n = bucket
-    if float(lo) < float(hi):
-        rid = F.width_bucket(
-            key.cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(int(n))
-        )
-    else:  # degenerate single-value domain: one range
-        rid = F.lit(0).cast("bigint")
-    # coalesce with a literal makes the id provably NON-NULLABLE, so the
-    # offsets join's implied isnotnull(_PID) folds away statically on both
-    # consumers — without this the filter pushes into only ONE side's scan,
-    # the two exchange subtrees stop being canonically equal, and runtime
-    # exchange reuse silently fails (observed: the whole upstream aggregation
-    # executed twice). Keys are non-null by the operator contract, so the -1
-    # arm never fires.
-    rid = F.coalesce(rid, F.lit(-1).cast("bigint"))
-    return df.withColumn(_PID, rid).repartition(F.col(_PID))
+    if lo is None or hi is None or not float(lo) < float(hi):
+        ids = [F.lit(0)]
+    else:
+        ids = [
+            F.width_bucket(key.cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(int(n))),
+            F.lit(int(n) + 1),  # NaN key: width_bucket is NULL, Spark orders NaN last
+        ]
+    null_key = F.when(key.isNull(), F.raise_error(F.lit("global prefix scan: NULL range key")))
+    return F.coalesce(null_key, *ids).cast("bigint")
 
 
-def _sampled_ranged(df: DataFrame, order_cols: list[Column], num_ranges: int | None) -> DataFrame:
-    """Sampled-boundary fallback: range exchange + boundary pin (see module
-    docstring — the lazy localCheckpoint is CORRECTNESS, not tuning)."""
-    ranged = (
-        df.repartitionByRange(num_ranges, *order_cols)
-        if num_ranges is not None
-        else df.repartitionByRange(*order_cols)
+def _two_phase_scan(
+    df: DataFrame,
+    order_cols: list[Column],
+    value_col: Column,
+    out_col: str,
+    bucket: Bucket,
+    agg: Callable[[Column], Column],
+    frame_end: int,
+    combine: Callable[[Column, Column], Column],
+) -> DataFrame:
+    ranged = df.withColumn(_PID, _range_id(bucket)).repartition(F.col(_PID))
+    w = Window.partitionBy(_PID).orderBy(*order_cols)
+    local = ranged.withColumn(
+        _LOCAL, agg(value_col).over(w.rowsBetween(Window.unboundedPreceding, frame_end))
     )
-    # spark_partition_id is non-deterministic-tagged, so Catalyst cannot push
-    # it below the range exchange — it reads the post-shuffle range id.
-    return ranged.withColumn(_PID, F.spark_partition_id()).localCheckpoint(eager=False)
+    # the per-range aggregate comes from the SAME window spec (an unbounded
+    # frame), so column pruning leaves the offsets side's exchange equal to
+    # the local side's — a plain groupBy would prune the order columns and
+    # plan a second exchange that re-runs everything upstream
+    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        ranged.withColumn(
+            _RANGE,
+            agg(value_col).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+        )
+        .groupBy(_PID)
+        .agg(F.max(_RANGE).alias(_RANGE))  # one value per range
+        .select(_PID, agg(F.col(_RANGE)).over(w_prev).alias(_BASE))
+    )
+    return (
+        local.join(F.broadcast(offsets), _PID)
+        .withColumn(out_col, combine(F.col(_LOCAL), F.col(_BASE)))
+        .drop(_PID, _LOCAL, _BASE)
+    )
 
 
 def global_prefix_sum(
@@ -107,44 +126,25 @@ def global_prefix_sum(
     order_cols: list[Column],
     value_col: Column,
     out_col: str,
-    num_ranges: int | None = None,
-    bucket: Bucket | None = None,
+    bucket: Bucket,
 ) -> DataFrame:
     """df + ``out_col`` = running sum of ``value_col`` in ``order_cols`` order.
 
     Equivalent to ``F.sum(value_col).over(Window.orderBy(*order_cols)
     .rowsBetween(unboundedPreceding, currentRow))`` but scales: no task ever
     holds more than one key range, and the only single-partition step is the
-    per-range totals table (|ranges| rows). Pass ``bucket=(key, lo, hi, n)``
-    when a cheap approximate key domain exists (see module docstring) —
-    deterministic ids, no lineage cut, one shared exchange.
+    per-range offsets table (|ranges| rows). Range totals are sums of the
+    values, so negative values are exact too.
     """
-    with_pid = (
-        _bucket_ranged(df, bucket)
-        if bucket is not None
-        else _sampled_ranged(df, order_cols, num_ranges)
-    )
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = with_pid.withColumn(_LOCAL, F.sum(value_col).over(w_local))
-    # per-range totals: |ranges| rows — the tiny global window here is the
-    # point of the decomposition. On the bucket path the aggregation hangs
-    # directly off the shared repartition exchange (no sort, no window).
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    totals_src = with_pid if bucket is not None else local
-    offsets = (
-        totals_src.groupBy(_PID)
-        .agg(F.sum(value_col).alias("__range_total"))  # not max(local cum): exact for negative values too
-        .withColumn(_BASE, F.coalesce(F.sum("__range_total").over(w_prev), F.lit(0)))
-        .select(_PID, _BASE)
-    )
-    return (
-        local.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, F.col(_LOCAL) + F.col(_BASE))
-        .drop(_PID, _LOCAL, _BASE)
+    return _two_phase_scan(
+        df,
+        order_cols,
+        value_col,
+        out_col,
+        bucket,
+        F.sum,
+        Window.currentRow,
+        lambda local, base: local + F.coalesce(base, F.lit(0)),
     )
 
 
@@ -153,41 +153,18 @@ def global_prefix_max(
     order_cols: list[Column],
     value_col: Column,
     out_col: str,
-    num_ranges: int | None = None,
-    bucket: Bucket | None = None,
+    bucket: Bucket,
 ) -> DataFrame:
     """df + ``out_col`` = max of ``value_col`` over STRICTLY-PRECEDING rows
     in ``order_cols`` order (NULL for the global first row).
 
-    The exclusive-scan sibling of :func:`global_prefix_sum` — same two-phase
-    decomposition (per-range local scan + tiny per-range offset table), with
-    ``max`` as the monoid and an exclusive frame, which is what dominance /
-    skyline tests need ("is anything BEFORE me bigger"). The same total-order
-    caveat applies: callers must pass a tie-free ordering (dedupe/collapse
-    first), or rows tying across a range boundary would see a different
-    'preceding' set than the single-window form.
+    The exclusive-scan sibling of :func:`global_prefix_sum`, with ``max`` as
+    the monoid, which is what dominance / skyline tests need ("is anything
+    BEFORE me bigger"). The same total-order caveat applies: callers must
+    pass a tie-free ordering (dedupe/collapse first), or rows tying across a
+    range boundary would see a different 'preceding' set than the
+    single-window form.
     """
-    with_pid = (
-        _bucket_ranged(df, bucket)
-        if bucket is not None
-        else _sampled_ranged(df, order_cols, num_ranges)
-    )
-    w_local = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = with_pid.withColumn(_LOCAL, F.max(value_col).over(w_local))
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    totals_src = with_pid if bucket is not None else local
-    offsets = (
-        totals_src.groupBy(_PID)
-        .agg(F.max(value_col).alias("__range_max"))
-        .withColumn(_BASE, F.max("__range_max").over(w_prev))
-        .select(_PID, _BASE)
-    )
-    return (
-        local.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, F.greatest(F.col(_LOCAL), F.col(_BASE)))
-        .drop(_PID, _LOCAL, _BASE)
+    return _two_phase_scan(
+        df, order_cols, value_col, out_col, bucket, F.max, -1, F.greatest
     )

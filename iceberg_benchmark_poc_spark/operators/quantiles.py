@@ -31,8 +31,9 @@ This operator computes the identical result as a distributed plan:
    this operator must spell out the same CASE over explicit order
    statistics instead of calling ``quantile_cont`` (see q_equidepth_hist).
 
-The only driver-side value is ``n_rows`` (one scalar count) because the
-rank targets are literals in the final aggregation.
+The driver-side values are the non-NULL row count ``n_rows`` (the rank
+targets are literals in the final aggregation) and the value's min/max
+(the prefix sum's bucket domain), folded in one aggregation.
 """
 
 from __future__ import annotations
@@ -53,7 +54,6 @@ def exact_quantiles(
     df: DataFrame,
     value: Column,
     percentages: list[float],
-    n_rows: int | None = None,
     out_col: str = "bs",
     counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -61,46 +61,46 @@ def exact_quantiles(
 
     ``value`` must be an integral/orderable numeric column; the result array
     is ``double`` and bit-equal to
-    ``F.expr(f"percentile(v, array({percentages}))")``. Pass ``n_rows`` if
-    the caller already knows the row count to skip the scalar fold.
+    ``F.expr(f"percentile(v, array({percentages}))")``, NULL semantics
+    included: NULL values are ignored, and empty or all-NULL input gives
+    NULL, not an array of NULLs.
 
     Pass ``counts`` — a ``(__qv, __qcnt)`` DataFrame of per-distinct-value
     counts — when the caller already has (or wants to reuse) the value
-    histogram; ``df``/``value`` are then ignored, and an unknown ``n_rows``
-    is folded from the CACHED histogram (one pass over |distinct values|
-    rows, reused by the main plan) instead of re-scanning the input.
+    histogram; ``df``/``value`` are then ignored, and the row count and
+    value domain are folded from the CACHED histogram (one pass over
+    |distinct values| rows, reused by the main plan) instead of re-scanning
+    the input.
 
-    Without ``counts``, an unknown ``n_rows`` is folded with ``min``/``max``
-    of the value in ONE aggregation of the raw rows — deliberately: all
-    three collapse to row-group metadata over a parquet scan (aggregate
+    Without ``counts``, the row count is folded with ``min``/``max`` of the
+    value in ONE aggregation of the raw rows — deliberately: all three
+    collapse to row-group metadata over a parquet scan (aggregate
     pushdown), which is far cheaper than building and caching a histogram
     that near-unique value domains (raw doubles) would inflate to row
-    scale. The min/max feed the prefix sum's deterministic bucket path
-    (operators/prefix.py): range ids become a pure expression of the value,
-    so no boundary-pinning lineage cut is needed.
+    scale. The min/max are the prefix sum's bucket domain
+    (operators/prefix.py).
     """
-    lo = hi = None
     if counts is None:
-        if n_rows is None:
-            n_rows, lo, hi = df.agg(F.count(F.lit(1)), F.min(value), F.max(value)).collect()[0]
+        n_rows, lo, hi = df.agg(F.count(value), F.min(value), F.max(value)).collect()[0]
         counts = (
-            df.select(value.alias("__qv")).groupBy("__qv").agg(F.count("*").alias("__qcnt"))
+            df.select(value.alias("__qv"))
+            .filter(F.col("__qv").isNotNull())
+            .groupBy("__qv")
+            .agg(F.count("*").alias("__qcnt"))
         )
-    elif n_rows is None:
+    else:
         from pyspark import StorageLevel
 
-        counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
+        # persist the caller's histogram itself, so its later uses hit the cache
+        counts.persist(StorageLevel.MEMORY_AND_DISK)
+        counts = counts.filter(F.col("__qv").isNotNull())
         n_rows, lo, hi = counts.agg(
             F.sum("__qcnt"), F.min("__qv"), F.max("__qv")
         ).collect()[0]
-        n_rows = n_rows or 0
-    n_rows = max(n_rows, 1)
-    bucket = (
-        (F.col("__qv"), float(lo), float(hi), _N_RANGES) if lo is not None else None
-    )
-    cum = global_prefix_sum(
-        counts, [F.col("__qv")], F.col("__qcnt"), "__qcum", bucket=bucket
-    )
+    if not n_rows:  # builtin percentile: NULL on empty or all-NULL input
+        return counts.agg(F.lit(None).cast("array<double>").alias(out_col))
+    bucket = (F.col("__qv"), lo, hi, _N_RANGES)
+    cum = global_prefix_sum(counts, [F.col("__qv")], F.col("__qcnt"), "__qcum", bucket=bucket)
     ks = sorted(
         {
             k

@@ -18,10 +18,13 @@ Parity conventions (established in core/io.py + q_corr_stats):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import epoch_micros, load_table
 from ..core.registry import register
+from ..operators.prefix import global_prefix_sum
 
 #: one day in microseconds — the retention bucketing grid (the events
 #: fixture spans one month, so weekly cohorts would collapse to a single
@@ -48,6 +51,18 @@ def _day_index(col) -> F.Column:
     em = epoch_micros(col)
     d = F.lit(DAY_US)
     return ((em - F.pmod(em, d)) / d).cast("bigint")
+
+
+def _log_key(col) -> F.Column:
+    """Monotone log1p range key for a heavy-tailed count or total; NULL
+    maps to +inf so it sorts last, as the oracles' NULLS LAST order does."""
+    return F.when(col.isNull(), F.lit(math.inf)).otherwise(F.log1p(F.greatest(col, F.lit(0))))
+
+
+def _user_cents_bound(n_ev, v_hi) -> float:
+    """Loose upper bound of one user's cents total (event count x max
+    value), from a metadata-only parquet footer fold."""
+    return max(float(n_ev) * max(float(v_hi or 0.0), 0.0) * 100.0, 1.0)
 
 
 @register(
@@ -727,10 +742,6 @@ def q_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally sorted — at 1e9 users the rank lookup still runs on the
     histogram, not the users.
     """
-    import math as _math
-
-    from ..operators.prefix import global_prefix_sum
-
     ev = load_table(spark, sf_dir, "events")
     totals = (
         ev.select("user_id", F.floor(F.col("value") * 100).cast("bigint").alias("cents"))
@@ -741,19 +752,19 @@ def q_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("nu"), F.sum("cents").cast("bigint").alias("tot")
     )
     hist = totals.groupBy("cents").agg(F.count("*").alias("cnt"))
-    # deterministic log1p buckets for the prefix scan (operators/prefix.py):
-    # only a LOOSE upper bound exists for a per-user total (event count x max
+    # log1p range buckets for the prefix scan (operators/prefix.py): only a
+    # LOOSE upper bound exists for a per-user total (event count x max
     # value, from a metadata-only parquet footer fold), and log spacing keeps
     # heavy-tailed totals from collapsing into one range — bounds steer
-    # balance only, never values
+    # balance only, never values. NULL totals (users whose values are all
+    # NULL) sort last, as in the oracle, under an infinite key.
     n_ev, v_hi = ev.agg(F.count(F.lit(1)), F.max("value")).collect()[0]
-    cents_hi = max(float(n_ev) * max(float(v_hi or 0.0), 0.0) * 100.0, 1.0)
     summed = global_prefix_sum(
         hist,
-        [F.col("cents")],
+        [F.col("cents").asc_nulls_last()],
         F.col("cnt"),
         "cum",
-        bucket=(F.log1p(F.greatest(F.col("cents"), F.lit(0))), 0.0, _math.log1p(cents_hi), 1024),
+        bucket=(_log_key(F.col("cents")), 0.0, math.log1p(_user_cents_bound(n_ev, v_hi)), 1024),
     )
     thr = (
         summed.crossJoin(F.broadcast(n))
@@ -1486,20 +1497,17 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle covering all three metrics (r12: the old form built three
     separate histograms, each with its own shuffle and boundary-pinned
     prefix-sum range exchange — ~40 scheduler jobs at sf0.1), and one
-    deterministic-bucket range exchange for all three cumulative scans.
-    The 12 cut cells fold to one broadcast row. At 1e9 users the heavy
-    table is the single melted histogram, 3 x |distinct values|. Bucket
-    domains come from a metadata-only parquet footer fold (count/min/max
-    pushdown); freq/cents use log1p buckets because only loose upper
-    bounds exist for the per-user totals — bounds steer balance only,
-    never values (operators/prefix.py semantics, inlined here because the
-    cumulative sum must RESET per metric: the range id is
-    metric * (NB + 2) + width_bucket, contiguous in (metric, v) order).
+    global_prefix_sum over the melted histogram in (metric, value) order
+    for all three cumulative scans: every user contributes exactly one row
+    per metric, so a metric's own running count is the global one minus
+    metric * n_users and the scan needs no per-metric reset. The 12 cut
+    cells fold to one broadcast row. At 1e9 users the heavy table is the
+    single melted histogram, 3 x |distinct values|. The range key is
+    metric + the value's position in its metric's domain, from a
+    metadata-only parquet footer fold (count/min/max pushdown); freq/cents
+    positions are log1p-spaced because only loose upper bounds exist for
+    the per-user totals — bounds steer balance only, never values.
     """
-    import math as _math
-
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.select(
@@ -1528,17 +1536,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         us = calendar.timegm(dt.utctimetuple()) * 1_000_000 + dt.microsecond
         return us // DAY_US
 
-    NB = 256  # buckets per metric; ids 0..NB+1 catch out-of-domain keys
-
-    def _bucket(key: F.Column, lo: float, hi: float) -> F.Column:
-        if not (float(lo) < float(hi)):
-            return F.lit(0).cast("bigint")
-        # coalesce: provably non-nullable id, so join-key isnotnull filters
-        # fold away symmetrically and exchange reuse holds (operators/prefix)
-        return F.coalesce(
-            F.width_bucket(key.cast("double"), F.lit(float(lo)), F.lit(float(hi)), F.lit(NB)),
-            F.lit(-1).cast("bigint"),
-        )
+    NB = 256  # buckets per metric
 
     melted = u.select(
         F.explode(
@@ -1551,45 +1549,33 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("x.m", "x.v")
     hist = melted.groupBy("m", "v").agg(F.count("*").alias("c"))
 
-    rid_day = _bucket(F.col("v"), _py_day(ts_lo), _py_day(ts_hi))
-    rid_freq = _bucket(F.log1p(F.col("v")), 0.0, _math.log1p(max(int(n_ev), 1)))
-    cents_hi = max(float(n_ev) * max(float(v_hi or 0.0), 0.0) * 100.0, 1.0)
-    rid_cents = _bucket(F.log1p(F.greatest(F.col("v"), F.lit(0))), 0.0, _math.log1p(cents_hi))
-    rid = F.col("m").cast("bigint") * (NB + 2) + (
-        F.when(F.col("m") == 0, rid_day).when(F.col("m") == 1, rid_freq).otherwise(rid_cents)
+    # composite range key m + position-in-[0, 1] of v within metric m: it
+    # never decreases along (m, v nulls last), so ONE prefix scan covers all
+    # three metrics (NULL v — a user whose values are all NULL — sits at the
+    # top of its metric, as in the oracle)
+    day_lo, day_hi = _py_day(ts_lo), _py_day(ts_hi)
+    pos = (
+        F.when(F.col("m") == 0, (F.col("v") - day_lo) / (day_hi - day_lo + 1))
+        .when(F.col("m") == 1, _log_key(F.col("v")) / math.log1p(max(int(n_ev), 1)))
+        .otherwise(_log_key(F.col("v")) / math.log1p(_user_cents_bound(n_ev, v_hi)))
     )
-    ranged = hist.withColumn("__rid", rid).repartition(F.col("__rid"))
-
-    w_local = (
-        Window.partitionBy("__rid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = global_prefix_sum(
+        hist,
+        [F.col("m"), F.col("v").asc_nulls_last()],
+        F.col("c"),
+        "cum",
+        bucket=(F.col("m") + F.least(pos, F.lit(1.0)), 0.0, 3.0, 3 * NB),
     )
-    local = ranged.withColumn("__lc", F.sum("c").over(w_local))
-    # per-range totals off the SAME exchange; base offsets reset per metric
-    # (partitionBy the decoded metric — a |metrics| x |buckets| table)
-    totals = ranged.groupBy("__rid").agg(F.sum("c").alias("__rt"))
-    w_prev = (
-        Window.partitionBy((F.col("__rid") / (NB + 2)).cast("int"))
-        .orderBy("__rid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "__base", F.coalesce(F.sum("__rt").over(w_prev), F.lit(0))
-    ).select("__rid", "__base")
-    cum = (
-        local.join(F.broadcast(offsets), "__rid")
-        .withColumn("cum", F.col("__lc") + F.col("__base"))
-        .select("m", "v", "cum")
-    )
-    # per-metric user counts, also metadata-scale, off the totals table
-    nm = totals.groupBy((F.col("__rid") / (NB + 2)).cast("int").alias("m")).agg(
-        F.sum("__rt").alias("n")
-    )
-    cuts_row = cum.join(F.broadcast(nm), "m").agg(
+    # every user has one row per metric, so the global running count is
+    # m * n_users plus the metric's own; n_users = (last running count) / 3
+    nu = cum.agg(F.expr("max(cum) div 3").alias("n"))
+    cuts_row = cum.crossJoin(F.broadcast(nu)).agg(
         *[
             F.min(
-                F.when((F.col("m") == mi) & (F.col("cum") * 5 >= k * F.col("n")), F.col("v"))
+                F.when(
+                    (F.col("m") == mi) & ((F.col("cum") - mi * F.col("n")) * 5 >= k * F.col("n")),
+                    F.col("v"),
+                )
             ).alias(f"{prefix}{k}")
             for mi, prefix in ((0, "r"), (1, "f"), (2, "m"))
             for k in (1, 2, 3, 4)

@@ -8,8 +8,6 @@ broadcast dimension joins, partial aggregation.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.io import load_table
@@ -1363,11 +1361,9 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_size",
     )
     g = p.groupBy("price_cents").agg(F.max("p_size").alias("eqmax"))
-    # deterministic range buckets for the prefix max: the price domain folds
-    # from parquet footer stats (aggregate pushdown — metadata-only job), so
-    # the range id is a pure expression and the operator needs no
-    # boundary-pinning lineage cut (floor(x*100) is monotone: the cents
-    # domain is [floor(min*100), floor(max*100)])
+    # range buckets for the prefix max over the price domain folded from
+    # parquet footer stats (aggregate pushdown — metadata-only job);
+    # price_cents / 100 is monotone in price_cents and lies in that domain
     lo, hi = (
         load_table(spark, sf_dir, "part")
         .agg(F.min("p_retailprice"), F.max("p_retailprice"))
@@ -1378,12 +1374,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("price_cents")],
         F.col("eqmax"),
         "m1",
-        bucket=(
-            F.col("price_cents"),
-            math.floor(lo * 100),
-            math.floor(hi * 100),
-            256,
-        ),
+        bucket=(F.col("price_cents") / 100, lo, hi, 256),
     )
     return (
         p.join(g2, "price_cents")

@@ -840,11 +840,11 @@ def q_corpus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _quality_candidates(spark, sf_dir)
     from ..operators.prefix import global_prefix_sum
 
-    # deterministic range buckets (operators/prefix.py): the candidate score
-    # domain is FIXED by construction — the quality gate floors it at
-    # QUALITY_MIN and the score formula caps at 1.0 — so the descending
-    # order maps to ascending buckets of the NEGATED score with literal
-    # bounds: no boundary sampling, no lineage cut, one shared exchange.
+    # range buckets (operators/prefix.py): the candidate score domain is
+    # FIXED by construction — the quality gate floors it at QUALITY_MIN and
+    # the score formula caps at 1.0 — so the descending order maps to
+    # ascending buckets of the NEGATED score with literal bounds. cand holds
+    # exactly the order and value columns, so both phases share one exchange.
     summed = global_prefix_sum(
         cand,
         [F.col("quality_score").desc(), F.col("doc_id")],
@@ -1689,10 +1689,9 @@ def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _quality_candidates(spark, sf_dir).select("doc_id", "n_bpe_tokens")
     from ..operators.prefix import global_prefix_sum
 
-    # deterministic range buckets over the doc_id domain, folded from parquet
-    # footer stats (aggregate pushdown — metadata-only job): the range id is
-    # a pure expression of the row, so the prefix sum needs no
-    # boundary-pinning lineage cut (see operators/prefix.py)
+    # range buckets over the doc_id domain, folded from parquet footer stats
+    # (aggregate pushdown — metadata-only job) and passed straight through:
+    # an empty table folds to None, which the operator scans as one range
     id_lo, id_hi = (
         load_table(spark, sf_dir, "documents").agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     )

@@ -107,13 +107,19 @@ def spark():
     spark.stop()
 
 
-@pytest.fixture(scope="session")
-def duck():
+def duck_views(sf_dir: str):
+    """DuckDB connection with one view per fixture table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -205,8 +211,8 @@ def assert_oracle_types_match(name, sdf, rel):
     )
 
 
-def compare_query_to_oracle(spark, duck, name, fn, oracle):
-    sdf = fn(spark, SF_DIR)
+def compare_query_to_oracle(spark, duck, name, fn, oracle, sf_dir=SF_DIR):
+    sdf = fn(spark, sf_dir)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     rel = duck.sql(oracle)

@@ -6,6 +6,7 @@ optimized plans — a slow plan that still returns correct rows should fail CI.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
@@ -154,7 +155,7 @@ GLOBAL_SORT_ALLOWLIST = {
     "q_corpus_select": "prefix-sum totals table: one row per range partition",
     "q_equidepth_hist": "prefix-sum totals table: one row per range partition",
     "q_power_users": "prefix-sum totals table: one row per range partition",
-    "q_rfm_segments": "prefix-sum totals tables (3 metric histograms): one row per range partition",
+    "q_rfm_segments": "prefix-sum totals table over the melted 3-metric histogram: one row per range partition",
     "q_shard_pack": "prefix-sum totals table: one row per range partition",
     "q_dv_positional_join": "manifest entries (reference positional semantics)",
     "q_growth": "commit log",
@@ -587,17 +588,16 @@ def test_cep_match_reuses_user_partitioning(spark):
 
 
 def test_skyline_never_sorts_the_catalog_globally(spark):
-    """q_skyline's scan must be the two-phase prefix-max. Since r12 the
-    operator derives DETERMINISTIC range ids (width_bucket over the cents
-    domain folded from parquet footer stats), so there is no boundary
-    sampling, no boundary-pinning localCheckpoint, and no lineage cut: the
-    whole plan is visible again. Pinned: no ExistingRDD cut, the
-    catalog-scale window partitioned by the range id (never an
-    unpartitioned window over the catalog — the only global window is the
-    |ranges|-row offsets table), both phases hanging off ONE shared range
-    exchange (ReusedExchange), and no cartesian anywhere. The operator's
-    distribution behavior itself is covered by the prefix property tests
-    (including the persisted-input regression)."""
+    """q_skyline's scan must be the two-phase prefix-max. The operator
+    derives DETERMINISTIC range ids (width_bucket over the price domain
+    folded from parquet footer stats), so there is no boundary sampling, no
+    boundary-pinning localCheckpoint, and no lineage cut: the whole plan is
+    visible. Pinned: no ExistingRDD cut, the catalog-scale window
+    partitioned by the range id (never an unpartitioned window over the
+    catalog — the only global window is the |ranges|-row offsets table),
+    and no cartesian anywhere. That both phases share one range exchange at
+    run time is checked on the executed plan in test_properties.py
+    (test_prefix_scan_materializes_one_range_exchange)."""
     plan = plan_of(spark, "q_skyline")
     assert "ExistingRDD" not in plan  # the r11 pinning cut is gone
     assert "hashpartitioning(__range_pid" in plan  # per-range catalog window
@@ -606,14 +606,23 @@ def test_skyline_never_sorts_the_catalog_globally(spark):
     assert "width_bucket" in plan
     assert "rangepartitioning" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    # runtime exchange reuse (AQE defers it past the static explain): after
-    # execution the final adaptive plan must show the offsets side consuming
-    # the local-scan side's range exchange as a reused stage, proving the
-    # upstream aggregation executed once for both phases
-    df = all_queries()["q_skyline"].fn(spark, SF_DIR)
-    df.collect()  # executes df's own QueryExecution so the AQE plan finalizes
-    final = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in final or "reused" in final.lower(), final[:2000]
+
+
+def test_prefix_scan_range_ids_live_only_in_the_operator():
+    """One prefix-scan path: range ids (width_bucket, the __range_pid
+    column) are built only in operators/prefix.py — no query inlines its
+    own copy of the scan — and the operator has no sampled-boundary mode
+    (repartitionByRange) or lineage cut (localCheckpoint)."""
+    pkg = Path(__file__).resolve().parents[1] / "iceberg_benchmark_poc_spark"
+    prefix = pkg / "operators" / "prefix.py"
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in sorted(pkg.rglob("*.py"))
+        if path != prefix and re.search(r"width_bucket|__range_pid", path.read_text())
+    ]
+    assert not offenders, f"range ids built outside operators/prefix.py: {offenders}"
+    src = prefix.read_text()
+    assert "localCheckpoint" not in src and "repartitionByRange" not in src
 
 
 def test_min_cost_supplier_window_partitions_by_part(spark):

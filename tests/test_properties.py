@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import Window, functions as F
 
@@ -491,8 +492,8 @@ def test_quadratic_baseline_samples_are_scale_bounded(spark):
 
 
 def test_global_prefix_sum_matches_global_window(spark):
-    """The two-phase range-partitioned prefix sum must be bit-identical to
-    the single-partition window it replaces — including negative values,
+    """The two-phase bucketed prefix sum must be bit-identical to the
+    single-partition window it replaces — including negative values,
     duplicates of the VALUE column, forced multi-range splits, and a
     descending order key."""
     from pyspark.sql import Window
@@ -502,27 +503,32 @@ def test_global_prefix_sum_matches_global_window(spark):
     rows = [(i, ((i * 37) % 19) - 9) for i in range(1, 501)]  # values in [-9, 9]
     df = spark.createDataFrame(rows, "k bigint, v bigint").repartition(8)
 
-    for order in ([F.col("k")], [F.col("v").desc(), F.col("k")]):
+    for order, (key, lo, hi) in (
+        ([F.col("k")], (F.col("k"), 1, 500)),
+        ([F.col("v").desc(), F.col("k")], (-F.col("v"), -9, 9)),
+    ):
         w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
         expected = {
             r["k"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()
         }
         for n_ranges in (1, 7, 64):  # fewer, comparable, and more ranges than rows/partitions
+            bucket = (key, lo, hi, n_ranges)
             got = {
                 r["k"]: r["cum"]
-                for r in global_prefix_sum(df, order, F.col("v"), "cum", n_ranges).collect()
+                for r in global_prefix_sum(df, order, F.col("v"), "cum", bucket=bucket).collect()
             }
             assert got == expected, f"order={order} n_ranges={n_ranges}"
 
 
 def test_global_prefix_sum_bucket_path_matches_global_window(spark):
-    """The deterministic-bucket path (r12: width_bucket range ids, no
-    boundary-pinning cut) must be bit-identical to the single-partition
-    window — including negative values, a descending order key with a
-    negated bucket key, approximate domains that leave keys OUTSIDE
-    [lo, hi] (ids 0 / n+1 must still order correctly), a degenerate
-    lo == hi domain, and a persisted input (the r11 reuse-failure trigger —
-    harmless here because the ids are pure expressions)."""
+    """The deterministic-bucket path (width_bucket range ids, no lineage
+    cut) must be bit-identical to the single-partition window — including
+    negative values, a descending order key with a negated bucket key,
+    approximate domains that leave keys OUTSIDE [lo, hi] (ids 0 / n+1 must
+    still order correctly), a degenerate lo == hi domain, a None domain
+    (the fold of an empty or all-NULL input: one range), and a persisted
+    input (the r11 reuse-failure trigger — harmless here because the ids
+    are pure expressions). A NULL range key fails loudly."""
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
@@ -537,6 +543,7 @@ def test_global_prefix_sum_bucket_path_matches_global_window(spark):
         ([F.col("k")], (F.col("k"), 1, 500, 64)),
         ([F.col("k")], (F.col("k"), 100, 400, 7)),  # keys outside the domain
         ([F.col("k")], (F.col("k"), 3, 3, 16)),  # degenerate lo == hi
+        ([F.col("k")], (F.col("k"), None, None, 16)),  # None domain: one range
         ([F.col("v").desc(), F.col("k")], (-F.col("v"), -9, 9, 5)),  # negated desc key
     ]
     for order, bucket in cases:
@@ -575,40 +582,58 @@ def test_global_prefix_sum_bucket_path_matches_global_window(spark):
             assert got == expected
     finally:
         dfp.unpersist()
+    # a NULL key has no defined range: the scan must fail, not guess a place.
+    # The error class depends on how many stages fail: a SparkRuntimeException
+    # for one, a Py4JJavaError (STAGE_MATERIALIZATION_MULTIPLE_FAILURES) for more.
+    nulled = df.withColumn("k", F.when(F.col("k") != 250, F.col("k")))
+    with pytest.raises(Exception, match="NULL range key"):
+        global_prefix_sum(
+            nulled, [F.col("k")], F.col("v"), "cum", bucket=(F.col("k"), 1, 500, 16)
+        ).collect()
 
 
-def test_global_prefix_sum_correct_over_persisted_input(spark):
-    """Regression (r11): a PERSISTED input defeats exchange reuse, so the
-    operator's range exchange used to execute once per consumer with
-    independently-sampled boundaries — partition ids then meant different
-    key ranges on the local-scan side vs the offsets side and running sums
-    silently corrupted (observed live in q_equidepth_hist once its counts
-    table was cached). The operator now pins one set of range boundaries
-    with a lazy localCheckpoint; prefix sums over a cached input must be
-    exact on every run."""
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
+#: every registered caller of the prefix scan (operators/prefix.py)
+PREFIX_SCAN_QUERIES = (
+    "q_corpus_select",
+    "q_skyline",
+    "q_shard_pack",
+    "q_equidepth_hist",
+    "q_power_users",
+    "q_approx_stats",
+    "q_rfm_segments",
+)
 
-    from iceberg_benchmark_poc_spark.operators.prefix import global_prefix_sum
 
-    rows = [(i, (i * 37) % 19) for i in range(1, 2001)]
-    df = (
-        spark.createDataFrame(rows, "k bigint, v bigint")
-        .repartition(16)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        df.count()  # materialize the cache so the exchange sits above an InMemoryRelation
-        w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        expected = {r["k"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
-        for _ in range(3):  # boundary sampling is random per execution — run repeatedly
-            got = {
-                r["k"]: r["cum"]
-                for r in global_prefix_sum(df, [F.col("k")], F.col("v"), "cum", 16).collect()
-            }
-            assert got == expected
-    finally:
-        df.unpersist()
+@pytest.mark.parametrize("name", PREFIX_SCAN_QUERIES)
+def test_prefix_scan_materializes_one_range_exchange(spark, name):
+    """Both phases of each query's one prefix scan read ONE materialized
+    range exchange: the offsets side plans a ReusedExchange, so everything
+    upstream (q_corpus_select's keeper aggregation, q_skyline's per-price
+    collapse) runs once. Checked on the final AQE plan after execution,
+    because AQE decides stage reuse at run time.
+
+    q_equidepth_hist scans a CACHED histogram. AQE gives every cached-scan
+    occurrence its own TableCacheQueryStage and never reuses an exchange
+    above two of them, so there each phase has its own range exchange —
+    but both must read the cache directly, re-running nothing upstream."""
+    from iceberg_benchmark_poc_spark.core.registry import all_queries
+
+    from .conftest import SF_DIR
+
+    df = all_queries()[name].fn(spark, SF_DIR)
+    df.collect()  # executes df's own QueryExecution so the AQE plan finalizes
+    lines = df._jdf.queryExecution().executedPlan().executedPlan().toString().splitlines()
+    materialized = [
+        i for i, line in enumerate(lines) if "+- Exchange hashpartitioning(__range_pid" in line
+    ]
+    reused = [line for line in lines if "ReusedExchange" in line and "__range_pid" in line]
+    if name == "q_equidepth_hist":
+        assert len(materialized) == 2, "\n".join(lines)
+        for i in materialized:
+            stage = next(line for line in lines[i + 1 :] if "QueryStage" in line)
+            assert "TableCacheQueryStage" in stage, "\n".join(lines)
+    else:
+        assert len(materialized) == 1 and reused, "\n".join(lines)
 
 
 def test_ann_query_sets_constant_across_sf(spark):
@@ -645,7 +670,7 @@ def test_ann_query_sets_constant_across_sf(spark):
 
 
 @given(
-    values=st.lists(st.integers(-(10**6), 10**6), min_size=1, max_size=80),
+    values=st.lists(st.none() | st.integers(-(10**6), 10**6), min_size=0, max_size=80),
     pcts=st.lists(
         st.floats(0.0, 1.0, allow_nan=False, allow_infinity=False), min_size=1, max_size=6
     ),
@@ -654,9 +679,10 @@ def test_ann_query_sets_constant_across_sf(spark):
 def test_exact_quantiles_matches_builtin_percentile(spark, values, pcts):
     """The distributed order-statistic quantile (operators/quantiles.py) must
     reproduce builtin exact percentile() bit-for-bit on any value multiset and
-    any percentage list — duplicates, negatives, single rows, p=0/1, and
+    any percentage list — duplicates, negatives, single rows, p=0/1,
     fractional positions whose interpolation exercises the IEEE weight
-    arithmetic."""
+    arithmetic, NULL values (ignored) and empty or all-NULL input (a NULL
+    result)."""
     from iceberg_benchmark_poc_spark.operators.quantiles import exact_quantiles
 
     df = spark.createDataFrame([(v,) for v in values], "v bigint")
@@ -1062,8 +1088,6 @@ def test_countmin_matches_bruteforce(spark, tmp_path_factory, docs):
 # temporal bucketed-join boundary exactness
 # ---------------------------------------------------------------------------
 
-import pytest
-
 
 def _write_boundary_events(tmp_path_factory):
     """events.parquet whose timestamps sit EXACTLY on every interval edge the
@@ -1214,9 +1238,10 @@ def test_global_prefix_max_matches_single_window(spark, vals, num_ranges):
     count — including ranges holding zero or one rows."""
     rows = [(k, (k * 7919) % 31 - 15) for k in vals]
     df = spark.createDataFrame(rows, "k bigint, v bigint")
+    bucket = (F.col("k"), min(vals), max(vals), num_ranges)
     got = {
         r["k"]: r["m"]
-        for r in global_prefix_max(df, [F.col("k")], F.col("v"), "m", num_ranges).collect()
+        for r in global_prefix_max(df, [F.col("k")], F.col("v"), "m", bucket=bucket).collect()
     }
     expect = {}
     running = None
@@ -1248,7 +1273,9 @@ def test_skyline_reduction_matches_brute_force(spark, points):
     dominate each other) all survive together."""
     df = spark.createDataFrame(points, "price_cents bigint, p_size bigint")
     g = df.groupBy("price_cents").agg(F.max("p_size").alias("eqmax"))
-    g2 = global_prefix_max(g, [F.col("price_cents")], F.col("eqmax"), "m1")
+    g2 = global_prefix_max(
+        g, [F.col("price_cents")], F.col("eqmax"), "m1", bucket=(F.col("price_cents"), 0, 20, 4)
+    )
     out = (
         df.join(g2, "price_cents")
         .filter(
