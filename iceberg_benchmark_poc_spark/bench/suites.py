@@ -1,11 +1,17 @@
 """The reference's 11 benchmark suites as Spark workloads.
 
-Synthetic inputs come from ``spark.range`` + the same modular arithmetic as
-the correctness fixtures (deterministic, JVM-only, no Python round-trips), at
-the reference's own scale points so numbers are directly comparable to
-BASELINE.md. Wall-clocks are measured around full materialization (count or
-noop write); simulated-I/O metrics (S3 TTFB sleeps) are reproduced as
-request counts + the reference's published cost model, marked "modeled".
+Synthetic inputs are the correctness fixtures' own builders
+(core/fixtures.py ``file_meta_of`` / ``dv_entries_of`` / ``dv_multi_of``)
+fed by a row-count-sized ``spark.range`` id source (deterministic,
+JVM-only, no Python round-trips), and a suite that times a registered
+query's workload runs that query's body (``skip_rate`` / ``scan_tree`` in
+queries/manifests.py, ``spill_policy`` in queries/aggregates.py): each
+formula and plan is defined once and oracle-gated there, and the suites
+only pick the reference's own scale points, so numbers are directly
+comparable to BASELINE.md. Wall-clocks are measured around full
+materialization (count, collect or noop write); simulated-I/O metrics (S3
+TTFB sleeps) are reproduced as request counts + the reference's published
+cost model, marked "modeled".
 
 Reference provenance per suite is cited in each function docstring.
 """
@@ -19,32 +25,51 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-EPOCH_DATE = "2020-01-01"
-DATE_DOMAIN_DAYS = 1826
-ROW_GROUP_ENTRIES = 1000  # tab0_content.txt:180 (1,000 entries per row group)
-ENTRY_BYTES = 200  # poc/test_delete_storm.py:141
+from ..core.fixtures import (
+    ENTRY_BYTES,
+    S3_BYTES_PER_MS,
+    dv_entries_of,
+    dv_multi_of,
+    dv_size_bytes,
+    file_meta_of,
+    has_dv,
+)
+from ..queries.aggregates import spill_policy
+from ..queries.manifests import N_PROBES, TREE_PROBE_DATE, scan_tree, skip_rate
+
+#: the writer-organization experiment's row groups hold 1,000 entries
+#: (tab0_content.txt:180); the registered q_skip_rate keeps the fixtures' 100
+WRITER_ORG_ROW_GROUP_ENTRIES = 1000
 TTFB_MS = 50.0  # poc/utils/s3_simulator.py avg TTFB
 
 
-def _timed(df: DataFrame, warm: bool = True, reps: int = 3) -> tuple[float, int]:
-    """Wall-clock of a full materialization; ``warm`` runs once first so the
-    number is steady-state (codegen compiled, JIT warm) — what the
-    reference's repeated-iteration timings measure. Median of ``reps`` timed
-    runs: at the ~100 ms local job floor a single shot jitters ~2x under
-    GC/writeback noise (same rationale as the skew-join suite's median)."""
-    if warm:
-        df.count()
+def _timed(df: DataFrame, collect: bool = False) -> tuple[float, object]:
+    """Wall-clock of a full materialization (count, or collect when
+    ``collect``) and its last result. One untimed run first so the number
+    is steady-state (codegen compiled, JIT warm) — what the reference's
+    repeated-iteration timings measure. Median of 3 timed runs: at the
+    ~100 ms local job floor a single shot jitters ~2x under GC/writeback
+    noise (same rationale as the skew-join suite's median).
+
+    Every run collects a fresh ``select("*")``: collecting one DataFrame
+    twice re-runs only its final stage, because the adaptive plan keeps
+    the finished shuffle stages of its one physical plan (count already
+    plans afresh on each call)."""
+
+    def run():
+        return df.select("*").collect() if collect else df.count()
+
+    run()
     walls = []
-    n = 0
-    for _ in range(max(1, reps)):
+    for _ in range(3):
         t0 = time.perf_counter()
-        n = df.count()
+        result = run()
         walls.append((time.perf_counter() - t0) * 1000)
-    return sorted(walls)[len(walls) // 2], n
+    return sorted(walls)[1], result
 
 
-def synth_file_meta(spark: SparkSession, n: int) -> DataFrame:
-    """V4 manifest entries at arbitrary scale (poc/utils/manifest_generator.py:79-126).
+def _file_ids(spark: SparkSession, n: int) -> DataFrame:
+    """``n`` synthetic file ids, the input of the fixture builders.
 
     Partition count is sized to the row count (~25K rows per task, capped at
     the session parallelism): at the reference's scales (1K-100K) a 32-way
@@ -54,17 +79,7 @@ def synth_file_meta(spark: SparkSession, n: int) -> DataFrame:
     maxPartitionBytes does for file scans.
     """
     parallelism = int(spark.sparkContext.defaultParallelism)
-    fid = F.col("id")
-    return spark.range(n, numPartitions=max(1, min(n // 25_000, parallelism))).select(
-        fid.alias("file_id"),
-        F.date_add(F.to_date(F.lit(EPOCH_DATE)), ((fid * 7919) % DATE_DOMAIN_DAYS).cast("int")).alias(
-            "partition_date"
-        ),
-        ((fid * 104729) % 24).cast("int").alias("partition_hour"),
-        (F.lit(500_000) + (fid * 7919) % 1_000_001).alias("record_count"),
-        (F.lit(100) + (fid * 31) % 9901).alias("dv_size_bytes"),
-        ((fid % 10) < 3).alias("has_dv"),
-    )
+    return spark.range(n, numPartitions=max(1, min(n // 25_000, parallelism)))
 
 
 # ---------------------------------------------------------------------------
@@ -72,62 +87,20 @@ def synth_file_meta(spark: SparkSession, n: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def suite_writer_org(spark: SparkSession, n_entries: int = 100_000, n_probes: int = 100) -> dict:
-    """Sorted vs unsorted layout -> row-group skip rate and bytes read."""
-    fm = synth_file_meta(spark, n_entries)
-    w_uns = Window.orderBy("file_id")
-    w_srt = Window.orderBy("partition_date", "partition_hour", "file_id")
-    rg = (
-        fm.select(
-            F.lit("unsorted").alias("layout"),
-            F.floor((F.row_number().over(w_uns) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
-            "partition_date",
-        )
-        .unionByName(
-            fm.select(
-                F.lit("sorted").alias("layout"),
-                F.floor((F.row_number().over(w_srt) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
-                "partition_date",
-            )
-        )
-        .groupBy("layout", "rg_id")
-        .agg(
-            F.min("partition_date").alias("min_date"),
-            F.max("partition_date").alias("max_date"),
-            F.count("*").alias("n_entries"),
-        )
-    )
-    probes = spark.range(n_probes).select(
-        F.date_add(F.to_date(F.lit(EPOCH_DATE)), (F.col("id") * 18).cast("int")).alias("probe_date")
-    )
-    query = (
-        rg.crossJoin(F.broadcast(probes))
-        .withColumn(
-            "skipped",
-            F.when(
-                (F.col("probe_date") < F.col("min_date")) | (F.col("probe_date") > F.col("max_date")), 1
-            ).otherwise(0),
-        )
-        .groupBy("layout")
-        .agg(
-            (F.sum("skipped") / F.count("*")).alias("skip_rate"),
-            F.sum(F.when(F.col("skipped") == 0, F.col("n_entries") * ENTRY_BYTES).otherwise(0)).alias(
-                "bytes_read"
-            ),
-        )
-    )
-    query.collect()  # warm: codegen + JIT
-    t0 = time.perf_counter()
-    stats = query.collect()
-    wall_ms = (time.perf_counter() - t0) * 1000
+def suite_writer_org(spark: SparkSession, n_entries: int = 100_000) -> dict:
+    """Sorted vs unsorted layout -> row-group skip rate and bytes read: the
+    q_skip_rate plan over ``n_entries`` entries in 1,000-entry row groups."""
+    query = skip_rate(file_meta_of(_file_ids(spark, n_entries)), WRITER_ORG_ROW_GROUP_ENTRIES)
+    wall_ms, stats = _timed(query, collect=True)
     r = {row["layout"]: row for row in stats}
+    bytes_uns, bytes_srt = r["unsorted"]["bytes_read_total"], r["sorted"]["bytes_read_total"]
     return {
         "n_entries": n_entries,
         "skip_rate_unsorted": round(r["unsorted"]["skip_rate"], 4),
         "skip_rate_sorted": round(r["sorted"]["skip_rate"], 4),
-        "bytes_read_unsorted_mb": round(r["unsorted"]["bytes_read"] / n_probes / 1048576, 3),
-        "bytes_read_sorted_mb": round(r["sorted"]["bytes_read"] / n_probes / 1048576, 3),
-        "bytes_reduction_x": round(r["unsorted"]["bytes_read"] / max(r["sorted"]["bytes_read"], 1), 1),
+        "bytes_read_unsorted_mb": round(bytes_uns / N_PROBES / 1048576, 3),
+        "bytes_read_sorted_mb": round(bytes_srt / N_PROBES / 1048576, 3),
+        "bytes_reduction_x": round(bytes_uns / max(bytes_srt, 1), 1),
         "wall_ms": round(wall_ms, 1),
     }
 
@@ -141,8 +114,7 @@ def suite_writer_org(spark: SparkSession, n_entries: int = 100_000, n_probes: in
 
 def suite_delete_storm(spark: SparkSession, n_files: int = 10_000) -> dict:
     """Inline vs external DV resolution during scan planning."""
-    fm = synth_file_meta(spark, n_files)
-    plan = fm.filter("has_dv").select("file_id", "dv_size_bytes")
+    plan = dv_entries_of(_file_ids(spark, n_files)).select("file_id", "dv_size_bytes")
     wall_ms, n_dv = _timed(plan)
     # one lookup per FILE (not per DV): the external planner must ask for
     # every file's DV to learn it has none — the reference's own published
@@ -188,8 +160,7 @@ def suite_parallel_fetch(spark: SparkSession, n_files: int = 1000, threads: int 
     scheduler floor vs single-thread Python dict walk), which is why the
     request counts, not the ratio, are the parity gate.
     """
-    fm = synth_file_meta(spark, n_files)
-    plan = fm.filter("has_dv").select("file_id", "dv_size_bytes")
+    plan = dv_entries_of(_file_ids(spark, n_files)).select("file_id", "dv_size_bytes")
     plan.count()  # warm: absorb codegen + first-scan costs, as every suite
     # median-of-3: the ratio divides a fixed modeled numerator by this wall,
     # so its run-to-run TTFB-class variance (r8: 18.2x driver vs 22.6x
@@ -205,7 +176,7 @@ def suite_parallel_fetch(spark: SparkSession, n_files: int = 1000, threads: int 
     # 100 MiB/s — the same S3 model the external side uses, so the ratio is
     # deterministic and round-over-round comparable (the measured Spark wall
     # is dominated by the local scheduler floor and swings 2-4x)
-    inline_model_ms = PARALLEL_FETCH_TTFB_MS + n_files * ENTRY_BYTES / 104_857.6
+    inline_model_ms = PARALLEL_FETCH_TTFB_MS + n_files * ENTRY_BYTES / S3_BYTES_PER_MS
     return {
         "n_files": n_files,
         "threads": threads,
@@ -254,9 +225,22 @@ def suite_manifest_parse(spark: SparkSession, tmp_dir: str, sizes_mb: tuple = (1
     across each parse plus process peak RSS, and flag a cliff if parse time
     grows superlinearly (>3x the per-MB rate of the smallest manifest).
     """
+
+    def write_manifest(n: int, path: str) -> None:
+        # V4 entries with their DV riding inline (poc/utils/manifest_generator.py:79-126)
+        fid = F.col("file_id")
+        file_meta_of(_file_ids(spark, n)).select(
+            "file_id",
+            "partition_date",
+            "partition_hour",
+            "record_count",
+            dv_size_bytes(fid).alias("dv_size_bytes"),
+            has_dv(fid).alias("has_dv"),
+        ).coalesce(1).write.mode("overwrite").json(path)
+
     results = {}
     warm = os.path.join(tmp_dir, "manifest_warm")
-    synth_file_meta(spark, 100).coalesce(1).write.mode("overwrite").json(warm)
+    write_manifest(100, warm)
     spark.read.json(warm).count()  # absorb first-json-read codepath warmup
     # fixed per-job overhead (scheduler + task launch, ~100ms on local[32]):
     # measured on a near-empty read and subtracted from every parse wall
@@ -269,7 +253,7 @@ def suite_manifest_parse(spark: SparkSession, tmp_dir: str, sizes_mb: tuple = (1
     for mb in sizes_mb:
         n = mb * 1048576 // ENTRY_BYTES
         path = os.path.join(tmp_dir, f"manifest_{mb}mb")
-        synth_file_meta(spark, n).coalesce(1).write.mode("overwrite").json(path)
+        write_manifest(n, path)
         heap0 = _jvm_heap_used_mb(spark)
         t0 = time.perf_counter()
         cnt = spark.read.json(path).count()
@@ -298,7 +282,7 @@ def suite_manifest_parse(spark: SparkSession, tmp_dir: str, sizes_mb: tuple = (1
 
 
 def suite_density_policy(spark: SparkSession, n_mdvs: int = 10_000) -> dict:
-    """4KB-floor / run-container / 16MB-cap policy as one window pass.
+    """4KB-floor / run-container / 16MB-cap policy: the q_spill_policy plan.
 
     MDV sizes mirror the reference's scenario C density (10K MDVs totaling
     ~9.8 MB, avg ~1 KB — poc/results/density_adaptive_policy_results.json),
@@ -306,8 +290,8 @@ def suite_density_policy(spark: SparkSession, n_mdvs: int = 10_000) -> dict:
     """
     fid = F.col("id")
     # container mix: runs every 7th, a bitmap (8 KiB) every 101st — the
-    # bitmaps exceed the 4 KiB floor, so the cap-admission window below runs
-    # on a REAL candidate set (with arrays only, deleted_rows caps at 983 ->
+    # bitmaps exceed the 4 KiB floor, so the policy's cap-admission window
+    # runs on a REAL candidate set (with arrays only, deleted_rows caps at 983 ->
     # every MDV was must_inline and the admission path was measured on empty
     # input). They still fit the 16 MiB budget, so the reference scenario's
     # expected outcome — 100% inline — is preserved.
@@ -326,22 +310,9 @@ def suite_density_policy(spark: SparkSession, n_mdvs: int = 10_000) -> dict:
         .cast("bigint"),
     )
     t0 = time.perf_counter()
-    classified = mdv.withColumn("must_inline", (F.col("mdv_size") < 4096) | (F.col("container_type") == "run"))
-    budget_row = classified.agg(
-        (F.lit(16 * 1024 * 1024) - F.coalesce(F.sum(F.when(F.col("must_inline"), F.col("mdv_size"))), F.lit(0))).alias("remaining")
-    )
-    w = Window.orderBy("mdv_size", "manifest_id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    admitted = (
-        classified.filter(~F.col("must_inline"))
-        .select("manifest_id", "mdv_size", F.sum("mdv_size").over(w).alias("cum"))
-        .crossJoin(F.broadcast(budget_row))
-        .select(F.when(F.col("cum") <= F.col("remaining"), 1).otherwise(0).alias("inl"))
-        .agg(F.coalesce(F.sum("inl"), F.lit(0)).alias("inlined"), F.count("*").alias("candidates"))
-        .collect()[0]
-    )
-    n_forced = classified.filter("must_inline").count()
+    n_inline = spill_policy(mdv).filter(F.col("decision") == "inline").count()
     wall_ms = (time.perf_counter() - t0) * 1000
-    inline_rate = (n_forced + admitted["inlined"]) / n_mdvs
+    inline_rate = n_inline / n_mdvs
     return {
         "n_mdvs": n_mdvs,
         "decision_wall_ms": round(wall_ms, 1),
@@ -375,8 +346,9 @@ def suite_dv_resolution(
         # the 1M point's shuffle/broadcast garbage otherwise lands as a GC
         # pause inside the 100K measurement (the baseline-comparable one)
         spark._jvm.System.gc()
-        fm = synth_file_meta(spark, n)
-        dv = fm.filter("has_dv").select("file_id", "dv_size_bytes")
+        ids = _file_ids(spark, n)
+        fm = file_meta_of(ids)
+        dv = dv_entries_of(ids).select("file_id", "dv_size_bytes")
         # scheduler/synthesis floor for this scale point: materializing the
         # probe side ALONE, same task count, no join. hash_join_ms minus this
         # is the join's own cost — at reference scales (<=100K) the floor is
@@ -389,19 +361,13 @@ def suite_dv_resolution(
         # only) — broadcast it explicitly so the measured operator is the
         # map-side hash join itself, never a sort-merge shuffle of the big side
         hash_ms, _ = _timed(fm.join(F.broadcast(dv.withColumnRenamed("dv_size_bytes", "s")), "file_id"))
-        data_side = fm.filter("has_dv").withColumn("pos", F.row_number().over(Window.orderBy("file_id")))
+        data_side = dv.select("file_id").withColumn("pos", F.row_number().over(Window.orderBy("file_id")))
         dv_side = dv.withColumn("pos", F.row_number().over(Window.orderBy("file_id"))).select(
             "pos", F.col("dv_size_bytes").alias("s")
         )
         pos_ms, _ = _timed(data_side.join(dv_side, "pos"))
-        multi = (
-            spark.range(5)
-            .select(F.col("id").cast("int").alias("m"))
-            .crossJoin(fm.select("file_id"))
-            .filter((F.col("file_id") + F.col("m") * 7) % 10 < 3)
-        )
-        w = Window.partitionBy("file_id").orderBy("m")
-        coal_ms, _ = _timed(multi.withColumn("rk", F.row_number().over(w)).filter("rk = 1"))
+        w = Window.partitionBy("file_id").orderBy("manifest_idx")
+        coal_ms, _ = _timed(dv_multi_of(ids).withColumn("rk", F.row_number().over(w)).filter("rk = 1"))
         out[str(n)] = {
             "job_floor_ms": round(floor_ms, 1),
             "hash_join_ms": round(hash_ms, 1),
@@ -737,40 +703,25 @@ def suite_stream_throughput(spark: SparkSession, sf_dir: str, tmp_dir: str, n_fi
 
 
 def suite_adaptive_tree(spark: SparkSession, scales: tuple = (1_000, 10_000, 50_000)) -> dict:
-    """Flat vs pruned 2-level tree planning over synthetic manifests.
+    """Flat scan vs the q_scan_tree plan over synthetic manifests.
 
-    The tree prune is genuinely TWO-level (the reference's root->branch->leaf
-    descent, poc/test_adaptive_metadata_tree.py): branch summaries are
-    consulted first, leaf summaries only within surviving branches, and
-    entries only within surviving leaves.
+    The tree is the reference's root->branch->leaf descent
+    (poc/test_adaptive_metadata_tree.py): branch summaries are consulted
+    first, leaf summaries only within surviving branches, and entries only
+    within surviving leaves. ``tree_prune_ms`` is the wall of the whole
+    plan, matched files included.
     """
-    probe = F.to_date(F.lit("2022-03-01"))
+    probe = F.to_date(F.lit(TREE_PROBE_DATE))
     out = {}
     for n in scales:
-        fm = synth_file_meta(spark, n)
+        fm = file_meta_of(_file_ids(spark, n))
         flat_ms, _ = _timed(fm.filter(F.col("partition_date") == probe))
-        w = Window.orderBy("partition_date", "partition_hour", "file_id")
-        entries = fm.select("partition_date", F.floor((F.row_number().over(w) - 1) / 100).alias("leaf_id"))
-        leaves = entries.groupBy("leaf_id").agg(
-            F.min("partition_date").alias("mn"), F.max("partition_date").alias("mx")
-        ).withColumn("branch_id", F.floor(F.col("leaf_id") / 10))
-        branches = leaves.groupBy("branch_id").agg(
-            F.min("mn").alias("bmn"), F.max("mx").alias("bmx")
-        )
-        vb = branches.filter((probe >= F.col("bmn")) & (probe <= F.col("bmx"))).select("branch_id")
-        vl = (
-            leaves.join(vb, "branch_id")
-            .filter((probe >= F.col("mn")) & (probe <= F.col("mx")))
-            .select("leaf_id")
-        )
-        tree_ms, leaves_visited = _timed(vl)
-        matched_ms, n_match = _timed(entries.join(vl, "leaf_id").filter(F.col("partition_date") == probe))
+        tree_ms, (row,) = _timed(scan_tree(fm), collect=True)
         out[str(n)] = {
             "flat_scan_ms": round(flat_ms, 1),
             "tree_prune_ms": round(tree_ms, 1),
-            "pruned_match_ms": round(matched_ms, 1),
-            "leaves_visited": leaves_visited,
-            "files_matched": n_match,
+            "leaves_visited": row["leaves_visited"],
+            "files_matched": row["files_matched"],
         }
     return out
 
@@ -1305,27 +1256,23 @@ def suite_mdv_compression() -> dict:
     }
 
 
-def run_all_suites(spark: SparkSession, sf_dir: str, tmp_dir: str, quick: bool = False) -> dict:
-    """Run every suite; ``quick`` shrinks scale points for CI-speed runs."""
-    dv_scales = (1_000, 10_000) if quick else (1_000, 10_000, 25_000, 1_000_000, 100_000)
-    tree_scales = (1_000, 10_000) if quick else (1_000, 10_000, 50_000)
+def run_all_suites(spark: SparkSession, sf_dir: str, tmp_dir: str) -> dict:
+    """Run every suite at the reference's scale points."""
     return {
-        "writer_org": suite_writer_org(spark, 10_000 if quick else 100_000),
-        "delete_storm": suite_delete_storm(spark, 10_000),
+        "writer_org": suite_writer_org(spark),
+        "delete_storm": suite_delete_storm(spark),
         "parallel_fetch": suite_parallel_fetch(spark),
-        "manifest_parse": suite_manifest_parse(spark, tmp_dir, (1, 8) if quick else (1, 8, 16, 32)),
+        "manifest_parse": suite_manifest_parse(spark, tmp_dir),
         "density_policy": suite_density_policy(spark),
-        "dv_resolution": suite_dv_resolution(spark, dv_scales),
+        "dv_resolution": suite_dv_resolution(spark),
         "single_file_commits": suite_single_file_commits(spark, sf_dir, tmp_dir),
         "stream_throughput": suite_stream_throughput(spark, sf_dir, tmp_dir),
-        "skew_join": suite_skew_join(spark, n_rows=400_000 if quick else 4_000_000),
-        "bucketed_join": suite_bucketed_join(
-            spark, tmp_dir, n_fact=200_000 if quick else 2_000_000, n_dim=40_000 if quick else 400_000
-        ),
-        "bloom_prune": suite_bloom_prune(spark, tmp_dir, n_rows=2_000_000 if quick else 40_000_000, n_files=4),
+        "skew_join": suite_skew_join(spark),
+        "bucketed_join": suite_bucketed_join(spark, tmp_dir),
+        "bloom_prune": suite_bloom_prune(spark, tmp_dir),
         "mdv_compression": suite_mdv_compression(),
-        "adaptive_tree": suite_adaptive_tree(spark, tree_scales),
-        "wide_table": suite_wide_table(spark, tmp_dir, n_cols=100 if quick else 500, n_files=10 if quick else 50),
+        "adaptive_tree": suite_adaptive_tree(spark),
+        "wide_table": suite_wide_table(spark, tmp_dir),
         # the survey's full range is "up to 1000 columns"
         # (poc/test_wide_table_pruning.py:76-95 supports 998 metrics; the
         # published config is 500). Row count is kept small: footer-scan
@@ -1333,14 +1280,14 @@ def run_all_suites(spark: SparkSession, sf_dir: str, tmp_dir: str, quick: bool =
         "wide_table_1000": suite_wide_table(
             spark,
             os.path.join(tmp_dir, "wide1000"),
-            n_cols=200 if quick else 1000,
-            n_files=10 if quick else 50,
+            n_cols=1000,
+            n_files=50,
             rows_per_file=200,
         ),
-        "concurrent_writers": suite_concurrent_writers(spark, tmp_dir, n_writers=2 if quick else 5, writes_each=5 if quick else 50),
+        "concurrent_writers": suite_concurrent_writers(spark, tmp_dir),
         "column_update": suite_column_update(spark, tmp_dir),
         "media_decode": suite_media_decode(spark, sf_dir, tmp_dir),
-        "text_index": suite_text_index(spark, sf_dir, tmp_dir, n_probes=5 if quick else 20),
+        "text_index": suite_text_index(spark, sf_dir, tmp_dir),
     }
 
 

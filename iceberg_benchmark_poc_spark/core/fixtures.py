@@ -3,6 +3,12 @@
 1. as Spark DataFrame builders (used by the engine's queries), and
 2. as DuckDB CTE SQL strings (used by the oracle twins).
 
+The manifest fixtures' formulas live in ``file_meta_of`` / ``dv_entries_of``
+/ ``dv_multi_of``, which take any one-column id frame: the ``(spark,
+sf_dir)`` fixtures feed them ``orders.o_orderkey``, and the benchmark suites
+(bench/suites.py) feed them ``spark.range`` ids at the reference's scale
+points.
+
 Everything derives from the driver's read-only parquet tables via *modular
 arithmetic only* — no RNG — mirroring the reference's deterministic scenario
 generators (reference: poc/test_density_adaptive_policy.py:154 uses
@@ -97,8 +103,17 @@ FILE_PATH_SQL = (
 # ---------------------------------------------------------------------------
 
 
+def _order_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "orders").select("o_orderkey")
+
+
 def file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Manifest-entry table derived from ``orders`` (file_id = o_orderkey).
+    """Manifest-entry table derived from ``orders`` (file_id = o_orderkey)."""
+    return file_meta_of(_order_keys(spark, sf_dir))
+
+
+def file_meta_of(ids: DataFrame) -> DataFrame:
+    """Manifest entries over a one-column id frame (file_id = that column).
 
     Mirrors the binary V4 DataFile schema at
     reference poc/utils/manifest_generator.py:79-126. Partition values are
@@ -106,9 +121,8 @@ def file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural (file_id) ordering is an *unsorted streaming arrival* layout —
     exactly the writer-organization experiment's premise (tab0_content.txt:120-140).
     """
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    fid = F.col("o_orderkey")
-    return o.select(
+    fid = F.col(ids.columns[0])
+    return ids.select(
         fid.alias("file_id"),
         F.lit(0).alias("content_type"),
         file_path_col(fid).alias("file_path"),
@@ -149,19 +163,33 @@ FROM orders
 
 
 def dv_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DV manifest: file_id % 10 < 3 files carry a delete vector.
+    """DV manifest over ``orders`` (file_id = o_orderkey)."""
+    return dv_entries_of(_order_keys(spark, sf_dir))
+
+
+def has_dv(fid: Column) -> Column:
+    """file_id % 10 < 3: ~30% of files carry a delete vector."""
+    return fid % DV_COVERAGE_MOD < DV_COVERAGE_LT
+
+
+def dv_size_bytes(fid: Column) -> Column:
+    """Deterministic 100 B - 10 KB delete-vector size of a file."""
+    return F.lit(100) + (fid * 31) % 9901
+
+
+def dv_entries_of(ids: DataFrame) -> DataFrame:
+    """DV manifest over a one-column id frame: the ``has_dv`` files.
 
     Mirrors reference poc/test_dv_resolution_strategies.py:65-98 (30% DV ratio,
     100B-10KB DVs, 1-1000 deleted rows) with deterministic sizes.
     """
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    fid = F.col("o_orderkey")
+    fid = F.col(ids.columns[0])
     return (
-        o.filter(fid % DV_COVERAGE_MOD < DV_COVERAGE_LT)
+        ids.filter(has_dv(fid))
         .select(
             fid.alias("file_id"),
             file_path_col(fid).alias("file_path"),
-            (F.lit(100) + (fid * 31) % 9901).alias("dv_size_bytes"),
+            dv_size_bytes(fid).alias("dv_size_bytes"),
             (F.lit(1) + (fid * 17) % 1000).alias("deleted_row_count"),
         )
     )
@@ -184,18 +212,23 @@ WHERE o_orderkey % {DV_COVERAGE_MOD} < {DV_COVERAGE_LT}
 
 
 def dv_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k=5 DV manifests, each covering ~30% of files with shifted membership.
+    """k=5 DV manifests over ``orders`` (file_id = o_orderkey)."""
+    return dv_multi_of(_order_keys(spark, sf_dir))
+
+
+def dv_multi_of(ids: DataFrame) -> DataFrame:
+    """k=5 DV manifests over a one-column id frame, each covering ~30% of
+    files with shifted membership.
 
     Mirrors reference poc/test_dv_resolution_strategies.py:230-291 (multiple
     DV manifests written by successive MERGE jobs; a file's live DV is the one
     from the *latest* manifest = lowest manifest_idx here).
     """
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    manifests = spark.range(N_DV_MANIFESTS).select(F.col("id").cast("int").alias("manifest_idx"))
-    fid = F.col("o_orderkey")
+    manifests = ids.sparkSession.range(N_DV_MANIFESTS).select(F.col("id").cast("int").alias("manifest_idx"))
+    fid = F.col(ids.columns[0])
     m = F.col("manifest_idx")
     return (
-        o.crossJoin(manifests)
+        ids.crossJoin(manifests)
         .filter((fid + m * 7) % DV_COVERAGE_MOD < DV_COVERAGE_LT)
         .select(
             fid.alias("file_id"),

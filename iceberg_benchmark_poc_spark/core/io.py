@@ -117,8 +117,3 @@ def epoch_micros(col) -> "F.Column":
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register the fixture tables as temp views for spark.sql access."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

@@ -91,7 +91,7 @@ def get_spark(
         # the floor is inert there (parallelismFirst targets cluster
         # parallelism first — Spark default, unchanged). Interleaved A/B at
         # sf0.1: 12-query text/graph mix 1.20x total, q_embed_neardup 1.98x,
-        # cheap-query controls flat (scratch/ab_spread.py).
+        # cheap-query controls flat (commit e9022f9).
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"),

@@ -11,45 +11,38 @@ from .text import (
     hash60,
     word_shingles,
     minhash_signatures,
-    lsh_candidate_pairs,
     simhash_sig,
 )
 from .vectors import (
     QUANT_SCALE,
-    cosine_quant,
     cosine_topk,
     dot_decimal,
     dot_double,
     dot_quant,
     quantize,
-    sq_norm_decimal,
 )
 from .graph import connected_components_star
 from .multimodal import media_features
 from .prefix import global_prefix_sum
 from .quantiles import exact_quantiles
-from .skew import salted_agg, salted_count, salted_join
+from .skew import salted_count, salted_join
 
 __all__ = [
     "PORTABLE_HASH_PRIME",
     "hash60",
     "word_shingles",
     "minhash_signatures",
-    "lsh_candidate_pairs",
     "simhash_sig",
     "QUANT_SCALE",
-    "cosine_quant",
     "cosine_topk",
     "dot_decimal",
     "dot_double",
     "dot_quant",
     "quantize",
-    "sq_norm_decimal",
     "media_features",
     "connected_components_star",
     "global_prefix_sum",
     "exact_quantiles",
-    "salted_agg",
     "salted_count",
     "salted_join",
 ]

@@ -10,9 +10,10 @@ frame and a shared decoder:
   (operators/roaring.py implements the public RoaringFormatSpec layout with
   array + bitmap containers) compressed with the same zlib level 6.
 
-Spark-side the codec runs as Arrow-batched pandas UDFs over ARRAY<BIGINT>
-position columns: encode/decode never leave the executor, and the blobs are
-plain BinaryType columns any sink (Iceberg puffin files, parquet) can store.
+Spark-side the codec runs inside fused Arrow-batched pandas UDFs (file id
+and deleted-row count in, decoded-set stats out): encode/decode never leave
+the executor, and the blobs are plain bytes any sink (Iceberg puffin files,
+parquet BinaryType columns) can store.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 MAGIC = b"MDV1"
 ZLIB_LEVEL = 6  # reference poc/utils/mdv_generator.py:62
@@ -151,30 +152,6 @@ def decode_positions_any(blob: bytes) -> list[int]:
     return decode_positions_any_np(blob).tolist()
 
 
-@F.pandas_udf(BinaryType())
-def encode_positions_udf(positions: pd.Series) -> pd.Series:
-    # cells arrive as numpy arrays from Arrow — pass through, no list() copy
-    return positions.map(encode_positions)
-
-
-@F.pandas_udf(BinaryType())
-def encode_positions_roaring_udf(positions: pd.Series) -> pd.Series:
-    return positions.map(encode_positions_roaring)
-
-
-@F.pandas_udf(BinaryType())
-def encode_positions_roaring_runs_udf(positions: pd.Series) -> pd.Series:
-    # the reference's actual write path: run_optimize() before serialize
-    return positions.map(lambda p: encode_positions_roaring(p, run_optimize=True))
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def decode_positions_udf(blobs: pd.Series) -> pd.Series:
-    # ndarray cells go straight back through Arrow — no per-position
-    # PyObject list materialization
-    return blobs.map(lambda b: decode_positions_any_np(bytes(b)))
-
-
 # ---------------------------------------------------------------------------
 # fused roundtrip-stats UDFs: scalars in, scalars out
 # ---------------------------------------------------------------------------
@@ -187,8 +164,8 @@ def decode_positions_udf(blobs: pd.Series) -> pd.Series:
 # higher-order `aggregate` fold JVM-side. Fused, each row crosses as TWO
 # int64 scalars and returns FOUR — generation (same arithmetic the oracle
 # runs), encode, decode, and stats all execute vectorized in numpy inside
-# one Arrow batch. The codec work is byte-identical (same encode_* /
-# decode_positions_any_np functions the staged UDFs wrap).
+# one Arrow batch, through the same encode_* / decode_positions_any_np
+# functions the codec tests call.
 
 #: explicit StructType (not a DDL string): the Python worker re-imports this
 #: module without an active SparkContext, and DDL parsing needs one

@@ -14,7 +14,7 @@ uniform column (never rand(): results must be reproducible re-run to re-run).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -82,18 +82,3 @@ def salted_join(
     rep_small = small.withColumn("_salt", F.explode(salts))
     return salted_big.join(rep_small, [key, "_salt"], how).drop("_salt")
 
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt_col: Column,
-    partials: Callable[[], list[Column]],
-    merges: Callable[[], list[Column]],
-    n_salts: int = 16,
-) -> DataFrame:
-    """General two-phase aggregation: ``partials()`` aggregates within
-    (key, salt); ``merges()`` combines the partials per key. The caller picks
-    decomposable aggregates (sum/count/min/max — not avg directly)."""
-    salted = df.withColumn("_salt", (salt_col % n_salts).cast("int"))
-    partial = salted.groupBy(*keys, "_salt").agg(*partials())
-    return partial.groupBy(*keys).agg(*merges())

@@ -103,9 +103,8 @@ def band_rows(
 ) -> DataFrame:
     """(doc_id, band, band_sig) rows from wide mh0..mh{k-1} signatures.
 
-    Band signatures use the same "k=mh" colon-joined format as
-    lsh_candidate_pairs; the only shuffled shape downstream is
-    n_docs x n_bands short strings.
+    Band signatures are "k=mh" pairs joined by colons; the only shuffled
+    shape downstream is n_docs x n_bands short strings.
     """
     n_bands = k // rows_per_band
     band_structs = F.array(
@@ -206,27 +205,6 @@ def minhash_signatures(shingles: DataFrame, k: int = MINHASH_K) -> DataFrame:
     agg = shingles.groupBy("doc_id").agg(*min_cols)
     stack_expr = f"stack({k}, " + ", ".join(f"cast({i} as int), mh{i}" for i in range(k)) + ") as (k, minhash)"
     return agg.select("doc_id", F.expr(stack_expr))
-
-
-def lsh_candidate_pairs(signatures: DataFrame, rows_per_band: int = LSH_ROWS_PER_BAND) -> DataFrame:
-    """Candidate near-dup pairs from banded minhash signatures.
-
-    Docs collide when an entire band of their signatures matches. Output:
-    distinct (doc_a, doc_b) with doc_a < doc_b.
-    """
-    bands = (
-        signatures.withColumn("band", F.floor(F.col("k") / rows_per_band))
-        .groupBy("doc_id", "band")
-        .agg(F.concat_ws(":", F.sort_array(F.collect_list(F.concat_ws("=", F.col("k"), F.col("minhash"))))).alias("band_sig"))
-    )
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    return (
-        left.join(right, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 def jaccard_for_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:

@@ -48,12 +48,6 @@ def dot_quant(aq: Column, bq: Column) -> Column:
     )
 
 
-def cosine_quant(dot: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine from a quantized dot and quantized norms (both sides divide the
-    same exact integers, so the double result is bit-identical)."""
-    return dot.cast("double") / (norm_a * norm_b)
-
-
 def dot_decimal(a: Column, b: Column) -> Column:
     """Order-independent dot product of two float arrays (DECIMAL fold).
 
@@ -81,10 +75,6 @@ def dot_double(a: Column, b: Column) -> Column:
     """
     products = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(products, F.lit(0.0), lambda acc, z: acc + z)
-
-
-def sq_norm_decimal(a: Column) -> Column:
-    return dot_decimal(a, a)
 
 
 def absmax(a: Column) -> Column:

@@ -260,7 +260,11 @@ def q_spill_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (51s for 10K MDVs, its flagged bottleneck) becomes one sort +
     linear scan — and distributes.
     """
-    mdv = mdv_stats(spark, sf_dir)
+    return spill_policy(mdv_stats(spark, sf_dir))
+
+
+def spill_policy(mdv: DataFrame) -> DataFrame:
+    """q_spill_policy over any (manifest_id, container_type, mdv_size) frame."""
     classified = mdv.withColumn(
         "must_inline", (F.col("mdv_size") < BYTE_FLOOR) | (F.col("container_type") == "run")
     )

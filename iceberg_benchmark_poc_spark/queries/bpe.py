@@ -146,7 +146,7 @@ def _bpe_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[tuple
     bests: list[tuple] = []
     # AQE stays ON for the argmax collects. r11 turned it off on a job-count
     # argument (AQE materializes each exchange as its own scheduler job),
-    # but the r12 A/B (scratch/ab_bpe.py, interleaved medians on one host)
+    # but the r12 A/B (commit 90b7d3f, interleaved medians on one host)
     # measured the OPPOSITE on wall: persist+AQE-on 2.31 s vs the committed
     # persist+AQE-off 2.55-2.60 s at sf0.1 — AQE's coalescing of the tiny
     # pair-aggregation shuffle outweighs its extra per-exchange jobs, and

@@ -141,24 +141,25 @@ def q_minmax_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _layout_row_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Assign entries to row groups under both layouts and aggregate stats.
+def _layout_row_groups(fm: DataFrame, rows_per_group: int) -> DataFrame:
+    """Assign file-meta entries to ``rows_per_group``-entry row groups under
+    both layouts and aggregate stats.
 
     'unsorted' = arrival (file_id) order; 'sorted' = ORDER BY
     (partition_date, partition_hour, file_id) — the writer sort policy the
     reference's Experiment A measures (tab0_content.txt:120-140).
     """
-    fm = file_meta(spark, sf_dir).select("file_id", "partition_date", "partition_hour")
+    fm = fm.select("file_id", "partition_date", "partition_hour")
     w_uns = Window.orderBy("file_id")
     w_srt = Window.orderBy("partition_date", "partition_hour", "file_id")
     uns = fm.select(
         F.lit("unsorted").alias("layout"),
-        F.floor((F.row_number().over(w_uns) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
+        F.floor((F.row_number().over(w_uns) - 1) / rows_per_group).alias("rg_id"),
         "partition_date",
     )
     srt = fm.select(
         F.lit("sorted").alias("layout"),
-        F.floor((F.row_number().over(w_srt) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
+        F.floor((F.row_number().over(w_srt) - 1) / rows_per_group).alias("rg_id"),
         "partition_date",
     )
     return (
@@ -236,8 +237,13 @@ def q_skip_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~99% skip rate; unsorted row groups span the whole domain -> ~0%.
     Reproduces the reference's 99.2x bytes-read reduction as a query.
     """
-    rg = _layout_row_groups(spark, sf_dir)
-    probes = _probe_dates(spark)
+    return skip_rate(file_meta(spark, sf_dir), ROW_GROUP_ENTRIES)
+
+
+def skip_rate(fm: DataFrame, rows_per_group: int) -> DataFrame:
+    """q_skip_rate over any file-meta frame and row-group size."""
+    rg = _layout_row_groups(fm, rows_per_group)
+    probes = _probe_dates(fm.sparkSession)
     checks = rg.crossJoin(F.broadcast(probes)).withColumn(
         "skipped",
         F.when((F.col("probe_date") < F.col("min_date")) | (F.col("probe_date") > F.col("max_date")), 1).otherwise(0),
@@ -274,7 +280,7 @@ def q_range_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference reports 99.8% of domain unsorted vs 1.0% sorted
     (tab0_content.txt:30-42); span in days is the scale-free equivalent.
     """
-    rg = _layout_row_groups(spark, sf_dir)
+    rg = _layout_row_groups(file_meta(spark, sf_dir), ROW_GROUP_ENTRIES)
     span = F.datediff(F.col("max_date"), F.col("min_date"))
     return rg.groupBy("layout").agg(
         F.count("*").alias("n_row_groups"),
@@ -304,7 +310,7 @@ def q_sorted_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition_hour)`` before write (Iceberg: WRITE ORDERED BY): contiguous,
     narrow min/max ranges per row group (reference tab0_content.txt:134).
     """
-    rg = _layout_row_groups(spark, sf_dir).filter(F.col("layout") == "sorted")
+    rg = _layout_row_groups(file_meta(spark, sf_dir), ROW_GROUP_ENTRIES).filter(F.col("layout") == "sorted")
     return rg.select(
         "rg_id",
         "min_date",
@@ -368,7 +374,11 @@ def q_scan_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     them linearly; Iceberg's manifest-list pruning is the native analog).
     Returns one row of planning metrics.
     """
-    fm = file_meta(spark, sf_dir)
+    return scan_tree(file_meta(spark, sf_dir))
+
+
+def scan_tree(fm: DataFrame) -> DataFrame:
+    """q_scan_tree over any file-meta frame."""
     probe = F.to_date(F.lit(TREE_PROBE_DATE))
     w_srt = Window.orderBy("partition_date", "partition_hour", "file_id")
     entries = fm.select(

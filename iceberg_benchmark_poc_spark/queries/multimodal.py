@@ -86,7 +86,7 @@ def _ppm_payloads(d: DataFrame) -> DataFrame:
     The scan is spread before the encode UDF: encode + decode + features are
     all per-doc map work, so a single-row-group local scan would otherwise
     run the whole codec band in ONE task (r12 A/B: q_video_features 1.75x,
-    q_media_embed 1.34x, q_frame_sample 1.23x — scratch/ab_spread_scan.py).
+    q_media_embed 1.34x, q_frame_sample 1.23x — commit e9022f9).
     """
     d = spread_narrow(d, "doc_id")
     enc = F.pandas_udf(

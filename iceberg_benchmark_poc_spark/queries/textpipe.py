@@ -730,8 +730,8 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # spread a narrow scan before the per-word hashing: the signature build
     # is pure map work until its one per-doc shuffle, so a single-row-group
-    # local scan would run it in ONE task (r12 A/B 2.56x —
-    # scratch/ab_spread_scan.py); no-op at production split counts
+    # local scan would run it in ONE task (r12 A/B 2.56x, commit
+    # e9022f9); no-op at production split counts
     d = spread_narrow(_docs(spark, sf_dir), "doc_id")
     return simhash_sig(d)
 

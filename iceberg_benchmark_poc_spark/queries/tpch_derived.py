@@ -290,7 +290,7 @@ def q_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The derived commit/receipt dates are day offsets computed from the key
     columns (identical integer arithmetic both engines; Spark spells the
     date step `date_add`, DuckDB `DATE + INT` — same calendar result, the
-    parity probe class of scratch/probe_parity.py). Scale: the three date
+    parity probe class of commit 984b313). Scale: the three date
     predicates evaluate in the lineitem scan before the orderkey shuffle
     join against orders, and the 7-group fold combines map-side.
     """

@@ -185,11 +185,11 @@ def test_coalesce_picks_first_manifest(spark, cover):
 )
 @settings(**SETTINGS)
 def test_exact_dups_always_lsh_candidates(spark, words):
-    from iceberg_benchmark_poc_spark.operators.text import lsh_candidate_pairs, minhash_signatures, word_shingles
+    from iceberg_benchmark_poc_spark.operators.text import lsh_pairs_from_wide, minhash_from_arrays, shingle_arrays
 
     text = " ".join(words)
     docs = spark.createDataFrame([(0, text), (1, text), (2, "completely different content here")], "doc_id long, text string")
-    pairs = lsh_candidate_pairs(minhash_signatures(word_shingles(docs))).collect()
+    pairs = lsh_pairs_from_wide(minhash_from_arrays(shingle_arrays(docs))).collect()
     assert (0, 1) in {(r["doc_a"], r["doc_b"]) for r in pairs}
 
 

@@ -17,13 +17,13 @@ from iceberg_benchmark_poc_spark.bench.suites import (
 
 def test_writer_org_invariants(spark):
     r = suite_writer_org(spark, n_entries=10_000)
-    # the reference's core finding: sorted layout always skips more and reads less
-    assert r["skip_rate_sorted"] > r["skip_rate_unsorted"]
-    assert r["bytes_read_sorted_mb"] < r["bytes_read_unsorted_mb"]
-    # 10K entries -> 10 row groups -> each sorted group spans ~10% of the
-    # domain, so skip rate ~= 0.9 here (99% at the reference's 100K scale)
-    assert r["skip_rate_sorted"] >= 0.85
-    assert r["bytes_reduction_x"] >= 9  # ~10x at 10 row groups; 93x at reference scale
+    # the reference's core finding: sorted layout always skips more and reads
+    # less. 10K entries -> 10 row groups -> each sorted group spans ~10% of
+    # the domain, so skip rate 0.9 here (99% at the reference's 100K scale);
+    # the inputs are deterministic, so every figure is exact
+    assert (r["skip_rate_unsorted"], r["skip_rate_sorted"]) == (0.004, 0.9)
+    assert (r["bytes_read_unsorted_mb"], r["bytes_read_sorted_mb"]) == (1.9, 0.191)
+    assert r["bytes_reduction_x"] == 10.0  # 93x at reference scale
 
 
 def test_delete_storm_counts(spark):
@@ -59,9 +59,9 @@ def test_dv_resolution_shapes(spark):
 def test_adaptive_tree_prunes(spark):
     r = suite_adaptive_tree(spark, scales=(10_000,))
     row = r["10000"]
-    # pruned walk touches a tiny fraction of the 100 leaves
-    assert row["leaves_visited"] <= 3
-    assert row["files_matched"] >= 1
+    # pruned walk touches one of the 100 leaves
+    assert row["leaves_visited"] == 1
+    assert row["files_matched"] == 5
 
 
 def test_wide_table_stats_agree(spark, tmp_path):
