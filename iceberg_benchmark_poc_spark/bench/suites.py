@@ -34,6 +34,7 @@ from ..core.fixtures import (
     file_meta_of,
     has_dv,
 )
+from ..core.io import load_table
 from ..queries.aggregates import spill_policy
 from ..queries.manifests import N_PROBES, TREE_PROBE_DATE, scan_tree, skip_rate
 
@@ -998,7 +999,7 @@ def suite_media_decode(spark: SparkSession, sf_dir: str, tmp_dir: str, reps: int
 
     from ..operators.multimodal import media_features, text_to_image
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     raster_bytes = docs.select(
         F.sum(F.pow(F.ceil(F.sqrt(F.length("text"))), 2).cast("bigint")).alias("b")
     ).collect()[0]["b"]
@@ -1050,7 +1051,7 @@ def suite_text_index(spark: SparkSession, sf_dir: str, tmp_dir: str, n_probes: i
     - **score**: one full-corpus BM25 pass (the registered q_bm25 plan),
       the ranked-retrieval throughput number.
     """
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select("doc_id", "text")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     term_doc = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("term")
     ).distinct()

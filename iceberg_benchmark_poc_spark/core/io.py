@@ -9,6 +9,22 @@ once:
   loader converts it to a microsecond TimestampType, matching what DuckDB
   produces for ``CAST(ts AS TIMESTAMP)``.
 
+Schema inference runs once per file state. A plain ``spark.read.parquet``
+infers the schema from a footer in a Spark job
+(``SchemaMergeUtils.mergeSchemasInParallel``, even for one file), which
+would cost every query one job per table. ``_SCHEMAS`` maps a table path to
+the signature and schema of its last inference; the signature is
+``(relative path, size, mtime_ns)`` of every file under the path, or the
+file's own ``(size, mtime_ns)``. A changed signature re-infers and replaces
+the entry, so the cache holds one entry per distinct path. A hit reads with
+``spark.read.schema(cached)``, which runs no job; the file listing and the
+relation are still built on every call, so plans and attribute ids match an
+inferring read. For the fixture tables' types, inference depends only on
+the files and on ``nanosAsLong``, which ``ensure_session_confs`` pins before
+every read. A path the driver cannot ``os.stat`` (an object-store URI, a
+missing path) is inferred on every load, so a missing path still raises
+Spark's PATH_NOT_FOUND.
+
 At 100 TB these reads stay embarrassingly parallel: ``spark.read.parquet`` on
 a directory fans out one task per ~128 MB split (``files.maxPartitionBytes``),
 and every downstream query in this package filters/projects *before* any
@@ -19,8 +35,10 @@ shuffle so Parquet pushdown and column pruning do their job (verify with
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,6 +53,15 @@ TABLES = (
     "embeddings",
 )
 
+_PINNED_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+#: table path -> (file signature, schema) of the path's last inference
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Pin the session confs the engine's semantics depend on.
 
@@ -47,16 +74,20 @@ def ensure_session_confs(spark: SparkSession) -> None:
     host sessions the package didn't build. It is called from EVERY
     ``load_table`` and from ``epoch_micros`` — not just the events read — so
     no query's behavior depends on which table happened to load first.
+
+    A conf is written only when the session holds a different value, so a
+    session built by ``get_spark`` sees no session-conf write at query time.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for key, value in _PINNED_CONFS.items():
+        if spark.conf.get(key) != value:
+            spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # Depending on session confs, ts arrives as bigint (legacy nanosAsLong),
         # timestamp_ntz (native nanos read, Spark 4.1+), or timestamp (NTZ
@@ -74,6 +105,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif t == "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    return df
+
+
+def _file_signature(path: str) -> tuple:
+    """``(relative path, size, mtime_ns)`` of every file under ``path``, or
+    the file's own ``(size, mtime_ns)``; OSError when the driver can't see it."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    sig = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            fst = os.stat(full)
+            sig.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    files under ``path`` changed since its last inference (module docstring)."""
+    try:
+        sig = _file_signature(path)
+    except OSError:
+        return spark.read.parquet(path)
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[0] == sig:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # two threads missing on one path both infer and store; either entry
+    # matches its own signature, so the lost one costs one more inference
+    _SCHEMAS[path] = (sig, df.schema)
     return df
 
 
@@ -112,8 +175,4 @@ def epoch_micros(col) -> "F.Column":
     if active is not None:
         ensure_session_confs(active)
     return F.unix_micros(F.col(col).cast("timestamp") if isinstance(col, str) else col.cast("timestamp"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 

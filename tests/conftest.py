@@ -57,6 +57,7 @@ TEST_SHARDS: dict[int, set[str]] = {
         "test_chi2_staging.py",
         "test_tpch_derived.py",
         "test_properties.py",
+        "test_io.py",
     },
 }
 
