@@ -21,7 +21,7 @@ from .vectors import (
     dot_quant,
     quantize,
 )
-from .graph import connected_components_star
+from .graph import connected_components, connected_components_star
 from .multimodal import media_features
 from .prefix import global_prefix_sum
 from .quantiles import exact_quantiles
@@ -40,6 +40,7 @@ __all__ = [
     "dot_quant",
     "quantize",
     "media_features",
+    "connected_components",
     "connected_components_star",
     "global_prefix_sum",
     "exact_quantiles",

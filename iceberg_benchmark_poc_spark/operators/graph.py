@@ -1,46 +1,116 @@
-"""Distributed connected components in O(log n) rounds.
+"""Connected components and BFS over (src, dst) edge DataFrames.
 
-The label-propagation CC in queries/textpipe.py converges in O(diameter)
-rounds — ideal for near-clique duplicate clusters (diameter 2-3), linear in
-the worst case (a path graph needs n rounds). This module implements the
-alternating large-star / small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14 — public literature), which
-converges in O(log n) rounds on ANY graph shape, the scale-correct choice
-when cluster diameter is unbounded (chained near-duplicates, link graphs).
+``connected_components`` is the one CC operator. It runs min-label
+propagation (the DataFrame form of Pregel/GraphX cc), which converges in
+O(diameter) rounds: two or three for the near-clique graphs of duplicate
+clusters. A path graph needs n rounds, so past ``MAX_LP_ROUNDS`` the
+operator switches to ``connected_components_star``: the alternating
+large-star / small-star algorithm (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14 — public literature), which converges in
+O(log n) rounds on any graph shape. Both return the same mapping, so graph
+shape costs latency, never correctness.
 
-Both operators are one groupBy each per round:
+The star operators are one groupBy each per round:
 
 - large-star: for each node u, connect every strictly-larger neighbor to the
   minimum of u's neighborhood (including u itself);
 - small-star: orient edges toward smaller ids; for each node u, connect all
   its (smaller) neighbors and u to the minimum of the closed neighborhood.
 
-The fixed point is a star forest: every node points at its component's
-minimum. Convergence is detected by the edge multiset hash going stable —
-one scalar agg per round, same pattern as the label-propagation loop.
+The star fixed point is a star forest: every node points at its
+component's minimum. Both algorithms detect convergence with one scalar agg
+per round: a stable label sum (labels never increase) or a stable edge
+multiset hash.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+MAX_LP_ROUNDS = 15  # label-propagation round cap (a diameter bound)
 MAX_STAR_ROUNDS = 25  # ceil(log2(n)) + slack; a backstop, not the driver
 
 
-def _sym(edges: DataFrame) -> DataFrame:
-    """Undirected view: both orientations of every edge, self-loops dropped."""
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).filter("u <> v")
-    return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected (src, dst) view: both orientations of every edge, self-loops
+    dropped. One explode per input row, so an uncut upstream runs once (a
+    union of the two orientations runs it once per direction)."""
+    return (
+        edges.filter("src <> dst")
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+    )
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node on an edge; component = min node id.
+
+    Input: DataFrame with columns (src, dst), read as undirected. Nodes
+    without an edge are the caller's concern. Label propagation runs over
+    the persisted symmetric edge set; each round is one join + groupBy +
+    join, cut with a lazy localCheckpoint, and a round's convergence check
+    is the agg that materializes its cut: one job per round. Past
+    ``MAX_LP_ROUNDS`` the star algorithm takes over.
+    """
+    sym = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    # round 0 fused into label construction: every node starts at
+    # min(itself, its direct neighbors), one aggregation over sym; for
+    # near-clique components this already IS the fixed point
+    labels = (
+        sym.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("nbr_min"))
+        .select("node", F.least(F.col("node"), F.col("nbr_min")).alias("component"))
+        .localCheckpoint(eager=False)
+    )
+    # labels never increase, so an unchanged SUM proves an unchanged label
+    # vector. Every round is checked: a missed converged round costs a full
+    # join+groupBy+join round, more than the scalar fold (checking sparsely,
+    # or comparing rounds r and r-1 in one job, ran more jobs on the fixtures)
+    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
+    for _ in range(MAX_LP_ROUNDS):
+        nbr_min = (
+            sym.join(labels, sym.dst == labels.node)
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        labels = (
+            labels.join(nbr_min, "node", "left")
+            .select(
+                "node",
+                F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
+                    "component"
+                ),
+            )
+            .localCheckpoint(eager=False)
+        )
+        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    else:
+        # high diameter (chained near-duplicates, a path): stopping here
+        # would under-merge, so recompute with the O(log n) star algorithm
+        labels = connected_components_star(sym)
+    sym.unpersist()
+    return labels
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(v, m) for every neighbor v > u, where m = min(closed neighborhood)."""
-    nbr = _sym(edges)
-    m = nbr.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    nbr = symmetrize(edges)
+    m = nbr.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
     return (
-        nbr.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
+        nbr.join(m, "src")
+        .filter(F.col("dst") > F.col("src"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         .distinct()
     )
 
@@ -63,7 +133,7 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
 
     Input: DataFrame with columns (src, dst). Output covers every distinct
     endpoint; singleton nodes (no edges) are the caller's concern, exactly
-    like the label-propagation variant.
+    as in ``connected_components``.
     """
     cur = edges.select("src", "dst").filter("src <> dst").distinct().localCheckpoint(eager=False)
     prev_sig = None
@@ -71,8 +141,8 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
     for _ in range(MAX_STAR_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         # edge-multiset signature: order-insensitive sum of a mixed hash —
-        # one scalar agg materializes the round (same job-count pattern as
-        # the label-propagation convergence check)
+        # one scalar agg materializes the round (the same one-job-per-round
+        # pattern as the label-sum check)
         sig = cur.select(
             F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("s"),
             F.count("*").alias("n"),

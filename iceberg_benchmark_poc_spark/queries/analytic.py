@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..core.fixtures import commit_log, read_log, with_fixtures
 from ..core.io import epoch_micros, load_table
 from ..core.registry import register
-from ..operators.graph import bfs_distances
+from ..operators.graph import bfs_distances, symmetrize
 from ..operators.quantiles import exact_quantiles
 
 FLAGS = ("A", "N", "R")
@@ -1295,26 +1295,13 @@ def q_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
             & (F.col("a.l_partkey") < F.col("b.l_partkey")),
         )
-        .select(F.col("a.l_partkey").alias("p"), F.col("b.l_partkey").alias("q"))
+        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
         .distinct()
     )
     # lazy localCheckpoint (q_pagerank pattern): every BFS round references
     # the edge set, and without truncation Catalyst re-executes the
     # fact-scale pair build per round; checkpointing materializes it once
-    # symmetrize by exploding both orientations of each edge: one execution
-    # of the fact pair build (the unionAll form ran it once per direction)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("p").alias("src"), F.col("q").alias("dst")),
-                    F.struct(F.col("q").alias("src"), F.col("p").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=False)
-    )
+    edges = symmetrize(pairs).localCheckpoint(eager=False)
     seeds = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") % KHOP_SEED_MOD == 0)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..core.fixtures import hash60, hash60_sql
 from ..core.io import load_table, spread_narrow
 from ..core.registry import register
+from ..operators.graph import connected_components
 from ..operators.text import (
     LSH_ROWS_PER_BAND,
     MINHASH_K,
@@ -1252,14 +1253,11 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_CC_ITERS = 15  # label-propagation safety cap (graph diameter bound)
-
-
-#: q_dup_clusters' oracle. The engine side has two convergence strategies
-#: behind one query: label propagation (O(diameter), the near-clique fast
-#: path) with an automatic large-star/small-star fallback (O(log n), any
-#: graph shape) when the iteration cap is hit — output is identical either
-#: way, which is exactly what this recursive-CTE twin checks.
+#: q_dup_clusters' oracle. The engine's connected_components runs label
+#: propagation (O(diameter), the near-clique fast path) and switches to the
+#: large-star/small-star algorithm (O(log n), any graph shape) when its round
+#: cap is hit — output is identical either way, which is exactly what this
+#: recursive-CTE twin checks.
 _DUP_CLUSTERS_ORACLE = f"""
         WITH RECURSIVE classes AS (
           SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text
@@ -1356,30 +1354,15 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id of the full component, since each rep is its class's min
     member; keep one keeper per cluster.
 
-    Components are computed with iterative min-label propagation (the
-    DataFrame form of Pregel/GraphX cc): each round every node takes the min
-    label among itself and its neighbors, converging in <= diameter rounds.
-    Duplicate-cluster graphs are near-cliques (diameter 2-3), so 2-3 rounds
-    suffice; each round is one equi-join + groupBy shuffled on doc_id, and
-    convergence is detected by the (monotonically decreasing) label sum —
-    one cheap scalar agg per round, no row-level diff. Per-round results are
-    localCheckpoint()ed to truncate the iterative lineage, the standard
-    Spark iterative-algorithm pattern.
-
-    If the cap (MAX_CC_ITERS) is hit without the label sum stabilizing —
-    chained near-duplicates can make the dup graph a long path whose
-    diameter exceeds any fixed round budget — the query does NOT fall out
-    of the loop with under-merged clusters: it recomputes components with
-    the alternating large-star/small-star algorithm
-    (operators.graph.connected_components_star, Kiveris et al. SoCC'14),
-    which converges in O(log n) rounds on any graph shape. The fast path
-    stays cheap for the overwhelmingly common near-clique case; the
-    fallback makes worst-case topology a latency cost, not a correctness
-    bug.
+    Components come from operators.graph.connected_components: label
+    propagation, O(diameter) rounds, which suits near-clique duplicate
+    clusters; past its round cap (chained near-duplicates can form a long
+    path) it switches to the O(log n) large-star/small-star algorithm, so
+    worst-case topology is a latency cost, not under-merged clusters.
 
     The DuckDB twin computes the same components with a recursive CTE —
     transitive closure is only tractable on verified-duplicate edges, which
-    is exactly why the engine side uses label propagation instead.
+    is exactly why the engine side iterates labels instead.
     """
     from pyspark import StorageLevel
 
@@ -1398,93 +1381,18 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         StorageLevel.MEMORY_AND_DISK
     )
     jac = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(docs_arr)), docs_arr)
-    edges = jac.filter(F.col("jaccard") >= NEAR_JACCARD).select("doc_a", "doc_b")
-    # symmetrize by exploding both orientations: ONE execution of the
-    # LSH-candidate + Jaccard-verify pipeline (the unionByName form ran the
-    # whole edge derivation once per direction before the persist)
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("doc_a"), F.col("doc_b").alias("doc_b")),
-                    F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")),
-                )
-            ).alias("e")
-        )
-        .select("e.doc_a", "e.doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    edges = jac.filter(F.col("jaccard") >= NEAR_JACCARD).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-
-    # propagate only over the edge subgraph: every member of a size>1
-    # component touches an edge, so singletons (the overwhelming majority of
-    # a deduped corpus) never enter the loop — each round's join, checkpoint,
-    # and convergence agg run on |edge nodes| rows, not |corpus| rows.
-    #
-    # Round 0 is FUSED into label construction: every node's initial label
-    # is min(itself, its direct neighbors) — one aggregation over sym
-    # replaces both the nodes-distinct exchange and the first
-    # join+groupBy+join propagation round (for the common near-clique
-    # components this initialization already IS the fixed point, so the
-    # loop below runs once to verify and exits).
-    #
-    # lazy (eager=False) checkpoints: the per-round convergence agg is the
-    # action that materializes the checkpoint, so each round costs ONE Spark
-    # job instead of two (eager checkpoint + agg) — at fixed ~100ms job
-    # latency over MAX_CC_ITERS rounds that is the dominant driver-side cost
-    # of the loop, and at cluster scale it halves the scheduler round-trips.
-    labels = (
-        sym.groupBy(F.col("doc_a").alias("doc_id"))
-        .agg(F.min("doc_b").alias("nbr_min"))
-        .select("doc_id", F.least(F.col("doc_id"), F.col("nbr_min")).alias("cluster_id"))
-        .localCheckpoint(eager=False)
-    )
-    # per-element labels are monotonically non-increasing, so an unchanged
-    # SUM proves an unchanged label vector: seed the check with the fused
-    # round's sum (the collect doubles as the checkpoint materialization)
-    # and test EVERY round — each detected-converged round saves a full
-    # join+groupBy+join round, which costs far more than the scalar fold.
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    converged = False
-    for it in range(MAX_CC_ITERS):
-        nbr_min = (
-            sym.join(labels, sym.doc_b == labels.doc_id)
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # high-diameter topology (chained near-dups): label propagation
-        # would under-merge if we fell out of the loop here. Switch to the
-        # O(log n) large-star/small-star algorithm, correct on any shape.
-        from ..operators.graph import connected_components_star
-
-        comp = connected_components_star(
-            edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        )
-        labels = comp.select(
-            F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-        )
-    sym.unpersist()
+    # only edge nodes enter the CC rounds: singletons (the overwhelming
+    # majority of a deduped corpus) are added back as their own cluster below
+    comp = connected_components(edges)
     docs_arr.unpersist()
 
     # expand rep components to documents: every doc inherits its class
     # rep's cluster (min rep in a component IS the min doc_id of the full
     # component, since each rep is its class's min member)
-    rep_labels = labels.select(F.col("doc_id").alias("rep"), "cluster_id")
+    rep_labels = comp.select(F.col("node").alias("rep"), F.col("component").alias("cluster_id"))
     singleton_reps = (
         classes.select(F.col("doc_id").alias("rep"))
         .join(rep_labels.select("rep"), "rep", "left_anti")

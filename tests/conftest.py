@@ -19,6 +19,7 @@ the full set).
 from __future__ import annotations
 
 import datetime
+import itertools
 import math
 import os
 import sys
@@ -106,6 +107,22 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+_job_groups = itertools.count()
+
+
+def jobs_of(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"engine-tests-{next(_job_groups)}"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def duck_views(sf_dir: str):

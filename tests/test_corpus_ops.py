@@ -36,7 +36,7 @@ from iceberg_benchmark_poc_spark.queries.textpipe import (
     q_stratified_sample,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def _tokens(text: str) -> list[str]:
@@ -86,17 +86,39 @@ def test_dup_clusters_match_union_find(spark):
 
 def test_dup_clusters_star_fallback_matches_fast_path(spark, monkeypatch):
     """When label propagation exhausts its round cap without converging —
-    the high-diameter chain-graph case at scale — q_dup_clusters must switch
-    to the O(log n) star algorithm instead of returning under-merged
-    clusters. Force the switch through the REGISTERED query path by capping
-    propagation at one round, and require bit-identical output to the
-    converged fast path (which the union-find test above certifies)."""
-    from iceberg_benchmark_poc_spark.queries import textpipe
+    the high-diameter chain-graph case at scale — connected_components must
+    switch to the O(log n) star algorithm instead of returning under-merged
+    clusters. Force the switch through the REGISTERED query path with a
+    round cap of zero, check the star algorithm really ran, and require
+    bit-identical output to the converged fast path (which the union-find
+    test above certifies)."""
+    from iceberg_benchmark_poc_spark.operators import graph
 
     baseline = sorted(map(tuple, q_dup_clusters(spark, SF_DIR).collect()))
-    monkeypatch.setattr(textpipe, "MAX_CC_ITERS", 1)
+    star_calls = []
+    real_star = graph.connected_components_star
+
+    def star(edges):
+        star_calls.append(edges)
+        return real_star(edges)
+
+    monkeypatch.setattr(graph, "MAX_LP_ROUNDS", 0)
+    monkeypatch.setattr(graph, "connected_components_star", star)
     forced = sorted(map(tuple, q_dup_clusters(spark, SF_DIR).collect()))
+    assert len(star_calls) == 1
     assert forced == baseline
+
+
+def test_dup_clusters_job_counts(spark):
+    """Building q_dup_clusters runs at most 17 Spark jobs and executing it
+    at most 5: the counts at 1 and 4 cores when its CC step became one
+    operator call. A warm-up call first takes the table load's one-time
+    parquet schema inference out of the count."""
+    q_dup_clusters(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    df, build_jobs = jobs_of(spark, lambda: q_dup_clusters(spark, SF_DIR))
+    _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert build_jobs <= 17
+    assert exec_jobs <= 5
 
 
 def test_stratified_sample_deterministic_and_rated(spark):

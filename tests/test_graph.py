@@ -1,12 +1,23 @@
-"""connected_components_star: the O(log n)-round CC operator must agree with
-an exact union-find on arbitrary graphs — including the high-diameter shapes
-(paths, chains) that the O(diameter) label-propagation variant is slow on."""
+"""Connected components: both CC operators must agree with an exact
+union-find on arbitrary graphs — including the high-diameter shapes (paths,
+chains) where connected_components' label propagation hits its round cap and
+hands over to the O(log n) star algorithm."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from iceberg_benchmark_poc_spark.operators.graph import connected_components_star
+from iceberg_benchmark_poc_spark.operators.graph import (
+    MAX_LP_ROUNDS,
+    connected_components,
+    connected_components_star,
+)
+
+#: every CC test runs against both operators
+CC_FUNCTIONS = pytest.mark.parametrize(
+    "cc", [connected_components, connected_components_star], ids=lambda f: f.__name__
+)
 
 SETTINGS = dict(
     max_examples=6,
@@ -32,38 +43,43 @@ def union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
-def _run(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
+def _run(spark, cc, edges: list[tuple[int, int]]) -> dict[int, int]:
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    return {r["node"]: r["component"] for r in connected_components_star(df).collect()}
+    return {r["node"]: r["component"] for r in cc(df).collect()}
 
 
+@CC_FUNCTIONS
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=60
     )
 )
 @settings(**SETTINGS)
-def test_star_cc_matches_union_find(spark, edges):
+def test_cc_matches_union_find(spark, cc, edges):
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
         return
-    assert _run(spark, edges) == union_find(edges)
+    assert _run(spark, cc, edges) == union_find(edges)
 
 
-def test_star_cc_on_a_path_graph(spark):
-    """Worst case for label propagation (diameter = n); the star algorithm
-    must still resolve the whole chain to component 0."""
+@CC_FUNCTIONS
+def test_cc_on_a_path_graph(spark, cc):
+    """Worst case for label propagation (diameter = n): the path needs more
+    rounds than MAX_LP_ROUNDS, so connected_components must fall back to the
+    star algorithm and still resolve the whole chain to component 0."""
     n = 33
-    got = _run(spark, [(i, i + 1) for i in range(n)])
+    assert n > MAX_LP_ROUNDS
+    got = _run(spark, cc, [(i, i + 1) for i in range(n)])
     assert got == {i: 0 for i in range(n + 1)}
 
 
-def test_star_cc_on_disjoint_cliques(spark):
+@CC_FUNCTIONS
+def test_cc_on_disjoint_cliques(spark, cc):
     edges = []
     for base in (0, 100, 200):
         nodes = [base + i for i in range(4)]
         edges += [(a, b) for a in nodes for b in nodes if a < b]
-    got = _run(spark, edges)
+    got = _run(spark, cc, edges)
     for base in (0, 100, 200):
         for i in range(4):
             assert got[base + i] == base

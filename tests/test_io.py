@@ -8,7 +8,6 @@ module-level schema cache cannot carry state from one test to the next.
 from __future__ import annotations
 
 import datetime
-import itertools
 import os
 
 import pyarrow as pa
@@ -18,20 +17,7 @@ from pyspark.errors import AnalysisException
 
 from iceberg_benchmark_poc_spark.core.io import ensure_session_confs, load_table
 
-_groups = itertools.count()
-
-
-def _jobs_of(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"test_io-{next(_groups)}"
-    outer = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", outer)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from .conftest import jobs_of
 
 
 def _write_events(sf_dir) -> None:
@@ -52,8 +38,8 @@ def _write_events(sf_dir) -> None:
 
 def test_repeat_load_of_unchanged_table_runs_no_job(spark, tmp_path):
     _write_events(tmp_path)
-    miss, miss_jobs = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
-    hit, hit_jobs = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    miss, miss_jobs = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    hit, hit_jobs = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "events"))
     assert miss_jobs >= 1  # schema inference
     assert hit_jobs == 0
     assert hit.dtypes == miss.dtypes
@@ -69,7 +55,7 @@ def test_file_rewritten_with_new_schema_is_reinferred(spark, tmp_path):
     pq.write_table(
         pa.table({"o_orderkey": pa.array([1, 2], pa.int32()), "o_comment": ["a", "b"]}), path
     )
-    again, jobs = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "orders"))
+    again, jobs = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "orders"))
     assert again.dtypes == [("o_orderkey", "int"), ("o_comment", "string")]
     assert jobs >= 1
 
@@ -89,7 +75,7 @@ def test_directory_overwritten_then_appended_is_reinferred(spark, tmp_path):
     spark.createDataFrame([(2, "y")], "p_partkey int, p_name string").write.mode(
         "append"
     ).parquet(path)
-    appended, jobs = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "part"))
+    appended, jobs = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "part"))
     assert jobs >= 1  # the new part file changed the signature
     assert appended.dtypes == [("p_partkey", "int"), ("p_name", "string")]
     assert sorted(r.p_partkey for r in appended.collect()) == [1, 2]
