@@ -11,6 +11,11 @@ Design for 100 TB of documents:
   band buckets; bucket skew (a viral boilerplate string) is handled by AQE
   skew-join splitting, and candidate verification (exact Jaccard) only runs
   on bucket-collision pairs.
+
+The engine runs the packed path: ``shingle_arrays`` -> ``minhash_from_arrays``
+-> ``lsh_pairs_from_wide`` / ``lsh_pairs_between`` -> ``jaccard_from_arrays``.
+The exploded ``word_shingles`` and groupBy ``minhash_signatures`` remain for
+perfbench's operator probe, which imports them by name.
 """
 
 from __future__ import annotations
@@ -166,7 +171,13 @@ def lsh_pairs_between(
 
 
 def jaccard_from_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs, via array_intersect.
+    """Exact set Jaccard for candidate pairs, via array_intersect.
+
+    ``pairs`` is (doc_a, doc_b); ``docs_arr`` carries (doc_id, sh_arr) with
+    each sh_arr a distinct set. Output: (doc_a, doc_b, inter, size_a,
+    size_b, jaccard) — the intersection and both set sizes ride along so
+    asymmetric measures (containment = inter / size_a) need no second
+    verify; column pruning drops them where a caller does not read them.
 
     Intersection compares shingle STRINGS (not their mod-P hashes), so a hash
     collision can't inflate the count. Two equi-joins attach each side's
@@ -185,6 +196,9 @@ def jaccard_from_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
     return counted.select(
         "doc_a",
         "doc_b",
+        "inter",
+        "size_a",
+        "size_b",
         (F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))).alias("jaccard"),
     )
 
@@ -205,32 +219,6 @@ def minhash_signatures(shingles: DataFrame, k: int = MINHASH_K) -> DataFrame:
     agg = shingles.groupBy("doc_id").agg(*min_cols)
     stack_expr = f"stack({k}, " + ", ".join(f"cast({i} as int), mh{i}" for i in range(k)) + ") as (k, minhash)"
     return agg.select("doc_id", F.expr(stack_expr))
-
-
-def jaccard_for_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs.
-
-    Joins each side's shingle set and counts intersection; union =
-    |A| + |B| - inter. Only candidate pairs pay this cost.
-    """
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-    a = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(a, "doc_a")
-        .join(b.withColumn("matched", F.lit(1)), ["doc_b", "shingle"], "left")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("matched").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_shingles", "size_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_shingles", "size_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))).alias("jaccard"),
-        )
-    )
 
 
 #: simhash signature width — the full 60-bit word-hash space. 16 bits is too

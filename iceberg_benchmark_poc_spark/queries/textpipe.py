@@ -19,6 +19,7 @@ Scale design notes per query are in the docstrings; the common themes:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
@@ -29,7 +30,6 @@ from ..operators.text import (
     LSH_ROWS_PER_BAND,
     MINHASH_K,
     PORTABLE_HASH_PRIME,
-    jaccard_for_pairs,
     jaccard_from_arrays,
     lsh_pairs_between,
     lsh_pairs_from_wide,
@@ -48,8 +48,8 @@ BPE_TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"  # letters / digits / single pu
 
 _STOPLIST_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
-# words CTE shared by every oracle below (identical tokenization on both sides:
-# split on runs of whitespace after trim)
+# words CTE over documents for the per-document oracles (identical
+# tokenization on both sides: split on runs of whitespace after trim)
 _WORDS_CTE = r"""
 words AS (
   SELECT doc_id, lang, source, trim(text) AS txt,
@@ -58,10 +58,18 @@ words AS (
 )
 """
 
-# distinct word-trigram shingles (docs with < 3 words contribute the whole
-# text as one shingle), hashed to the portable 60-bit space mod P
-_SHINGLES_CTE = f"""
-{_WORDS_CTE},
+
+def _shingles_cte(src: str) -> str:
+    """The words/widx/shingles/hashed CTEs over a (doc_id, text) relation:
+    distinct word-trigram shingles (docs with < 3 words contribute the whole
+    text as one shingle), hashed to the portable 60-bit space mod P — the
+    DuckDB twin of operators.text.shingle_arrays."""
+    return f"""
+words AS (
+  SELECT doc_id, trim(text) AS txt,
+         string_split_regex(trim(text), '\\s+') AS ws
+  FROM {src}
+),
 widx AS (
   SELECT doc_id, ws, generate_subscripts(ws, 1) AS i FROM words
 ),
@@ -75,12 +83,72 @@ hashed AS (
   SELECT doc_id, shingle,
          (('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME} AS h
   FROM shingles
-)
-"""
+)"""
+
+
+#: LSH candidates within one set: band collisions between distinct reps
+_SELF_PAIRS = """
+pairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
+)"""
+
+
+def _lsh_ctes(reps: str, pairs: str = _SELF_PAIRS) -> str:
+    """The MinHash-LSH oracle chain over a (doc_id, text) relation ``reps``:
+    _shingles_cte, then sigs (MINHASH_K minhashes per doc), bands, the
+    candidate ``pairs`` CTE (band collisions; default within one set),
+    sizes (shingles per doc) and inter (shared shingles per candidate pair)
+    — the DuckDB twin of shingle_arrays -> minhash_from_arrays -> LSH pairs
+    -> jaccard_from_arrays."""
+    return f"""{_shingles_cte(reps)},
+sigs AS (
+  SELECT doc_id, CAST(k.range AS INTEGER) AS k,
+         MIN(((k.range * 2 + 3) * h + (k.range * 5 + 7)) % {PORTABLE_HASH_PRIME}) AS minhash
+  FROM hashed, range({MINHASH_K}) k
+  GROUP BY 1, 2
+),
+bands AS (
+  SELECT doc_id, CAST(floor(k / {LSH_ROWS_PER_BAND}) AS BIGINT) AS band,
+         string_agg(CAST(k AS VARCHAR) || '=' || CAST(minhash AS VARCHAR), ':' ORDER BY k) AS band_sig
+  FROM sigs GROUP BY 1, 2
+),{pairs},
+sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
+inter AS (
+  SELECT p.doc_a, p.doc_b, count(sb.shingle) AS inter
+  FROM pairs p
+  JOIN hashed sa ON sa.doc_id = p.doc_a
+  LEFT JOIN hashed sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
+  GROUP BY 1, 2
+)"""
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
+
+
+def _text_classes(d: DataFrame, *aggs: F.Column) -> tuple[DataFrame, DataFrame]:
+    """Exact-dup classes of ``d`` and their representatives' shingle sets.
+
+    ``classes`` has one row per distinct text: (text, doc_id = the class's
+    min doc_id, *aggs). ``docs_arr`` is shingle_arrays over the reps. The
+    MinHash-LSH queries run over one rep per class (the duplication-depth
+    guard; see q_fuzzy_pairs for the measured sf1 blow-up the all-pairs form
+    suffers), so the shingle+hash construction runs once per distinct text.
+    Both persist MEMORY_AND_DISK: the class table feeds the self rows, the
+    reps and the size joins, and the shingle sets feed both the signatures
+    and the Jaccard verify.
+    """
+    classes = (
+        d.groupBy("text")
+        .agg(F.min("doc_id").alias("doc_id"), *aggs)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    docs_arr = shingle_arrays(classes.select("doc_id", "text")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    return classes, docs_arr
 
 
 def _quality_score(txt: F.Column, ws: F.Column) -> tuple[F.Column, F.Column]:
@@ -306,49 +374,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT min(doc_id) AS doc_id, count(*) AS n, text
           FROM documents GROUP BY text
         ),
-        words AS (
-          SELECT doc_id, trim(text) AS txt,
-                 string_split_regex(trim(text), '\\s+') AS ws
-          FROM classes
-        ),
-        widx AS (
-          SELECT doc_id, ws, generate_subscripts(ws, 1) AS i FROM words
-        ),
-        shingles AS (
-          SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-          FROM widx WHERE i <= len(ws) - 2
-          UNION
-          SELECT DISTINCT doc_id, txt AS shingle FROM words WHERE len(ws) < 3
-        ),
-        hashed AS (
-          SELECT doc_id, shingle,
-                 (('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME} AS h
-          FROM shingles
-        ),
-        sigs AS (
-          SELECT doc_id, CAST(k.range AS INTEGER) AS k,
-                 MIN(((k.range * 2 + 3) * h + (k.range * 5 + 7)) % {PORTABLE_HASH_PRIME}) AS minhash
-          FROM hashed, range({MINHASH_K}) k
-          GROUP BY 1, 2
-        ),
-        bands AS (
-          SELECT doc_id, CAST(floor(k / {LSH_ROWS_PER_BAND}) AS BIGINT) AS band,
-                 string_agg(CAST(k AS VARCHAR) || '=' || CAST(minhash AS VARCHAR), ':' ORDER BY k) AS band_sig
-          FROM sigs GROUP BY 1, 2
-        ),
-        pairs AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
-        inter AS (
-          SELECT p.doc_a, p.doc_b, count(sb.shingle) AS inter
-          FROM pairs p
-          JOIN hashed sa ON sa.doc_id = p.doc_a
-          LEFT JOIN hashed sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        )
+        {_lsh_ctes("classes")}
         SELECT doc_id AS rep_a, doc_id AS rep_b,
                CAST(1.0 AS DOUBLE) AS jaccard,
                (n * (n - 1)) // 2  AS n_pairs
@@ -389,27 +415,14 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shingle rows never hit a shuffle: the only shuffled shapes are
     n_classes x 4 band strings and the candidate reps' shingle arrays.
 
-    The class table feeds three consumers (self-pairs, the rep pipeline,
-    the size joins) and the shingled reps feed two (signatures and Jaccard
-    verify), so both persist MEMORY_AND_DISK — the standard iterative-reuse
-    pattern.
+    The class table and the shingled reps come from _text_classes.
     """
-    from pyspark import StorageLevel
-
-    d = _docs(spark, sf_dir)
-    classes = (
-        d.groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    classes, docs_arr = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n"))
     self_pairs = classes.filter(F.col("n") >= 2).select(
         F.col("doc_id").alias("rep_a"),
         F.col("doc_id").alias("rep_b"),
         F.lit(1.0).alias("jaccard"),
         F.expr("n * (n - 1) DIV 2").alias("n_pairs"),
-    )
-    docs_arr = shingle_arrays(classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
     )
     sigs = minhash_from_arrays(docs_arr)
     pairs = lsh_pairs_from_wide(sigs)
@@ -438,49 +451,7 @@ CONTAINMENT_MIN = 0.8
           SELECT min(doc_id) AS doc_id, count(*) AS n_copies, text
           FROM documents GROUP BY text
         ),
-        words AS (
-          SELECT doc_id, trim(text) AS txt,
-                 string_split_regex(trim(text), '\\s+') AS ws
-          FROM classes
-        ),
-        widx AS (
-          SELECT doc_id, ws, generate_subscripts(ws, 1) AS i FROM words
-        ),
-        shingles AS (
-          SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-          FROM widx WHERE i <= len(ws) - 2
-          UNION
-          SELECT DISTINCT doc_id, txt AS shingle FROM words WHERE len(ws) < 3
-        ),
-        hashed AS (
-          SELECT doc_id, shingle,
-                 (('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME} AS h
-          FROM shingles
-        ),
-        sigs AS (
-          SELECT doc_id, CAST(k.range AS INTEGER) AS k,
-                 MIN(((k.range * 2 + 3) * h + (k.range * 5 + 7)) % {PORTABLE_HASH_PRIME}) AS minhash
-          FROM hashed, range({MINHASH_K}) k
-          GROUP BY 1, 2
-        ),
-        bands AS (
-          SELECT doc_id, CAST(floor(k / {LSH_ROWS_PER_BAND}) AS BIGINT) AS band,
-                 string_agg(CAST(k AS VARCHAR) || '=' || CAST(minhash AS VARCHAR), ':' ORDER BY k) AS band_sig
-          FROM sigs GROUP BY 1, 2
-        ),
-        pairs AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
-        inter AS (
-          SELECT p.doc_a, p.doc_b, count(sb.shingle) AS inter
-          FROM pairs p
-          JOIN hashed sa ON sa.doc_id = p.doc_a
-          LEFT JOIN hashed sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        ),
+        {_lsh_ctes("classes")},
         dirs AS (
           SELECT i.doc_a AS doc_id, i.doc_b AS within_id, i.inter, za.n
           FROM inter i JOIN sizes za ON za.doc_id = i.doc_a
@@ -523,24 +494,15 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     two rows carrying the n_copies product, and classes with n >= 2 emit
     one containment=1.0 self row with the n*(n-1) ordered-pair count in
     closed form. Scale shape is otherwise identical to q_minhash_dedup
-    (same banded candidate generation, same array_intersect verify on
-    candidates only); recall is bounded by the Jaccard-band collision
+    (same classes, banded candidate generation and jaccard_from_arrays
+    verify on candidates only — containment reads its inter and set
+    sizes); recall is bounded by the Jaccard-band collision
     probability, the standard limitation of reusing a symmetric index for
     asymmetric search — at production scale the band index is rebuilt over
     suffix-anchored shingle samples to recover low-Jaccard containment
     pairs.
     """
-    from pyspark import StorageLevel
-
-    d = _docs(spark, sf_dir)
-    classes = (
-        d.groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("n_copies"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    docs_arr = shingle_arrays(classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    classes, docs_arr = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n_copies"))
     self_rows = (
         classes.filter(F.col("n_copies") >= 2)
         .join(docs_arr.select("doc_id", F.size("sh_arr").alias("n_sh")), "doc_id")
@@ -552,20 +514,7 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_copies") * (F.col("n_copies") - 1)).alias("n_pairs"),
         )
     )
-    pairs = lsh_pairs_from_wide(minhash_from_arrays(docs_arr))
-    a = docs_arr.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("sh_a"))
-    b = docs_arr.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("sh_b"))
-    j = (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            F.size("sh_a").alias("size_a"),
-            F.size("sh_b").alias("size_b"),
-        )
-    )
+    j = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(docs_arr)), docs_arr)
     # both directions explode from ONE row: a union of two selects over j
     # would plan the candidate-join + array_intersect subtree twice (only
     # exchanges are reused), doubling the verify work per candidate pair
@@ -645,12 +594,14 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-bigram Jaccard over a deterministic document sample.
 
-    The ground-truth similarity measure LSH approximates, computed on a
-    fixed-size deterministic sample (doc_id % 25 == 0, capped at 32 docs) so
-    the all-pairs cost is a constant 496 pairs at ANY corpus size — the pair
-    count does not grow with scale factor. It is the oracle for LSH recall
-    measurements in tests; at full scale this query only ever runs on
-    candidates or audit samples, never the whole corpus.
+    The exact similarity measure LSH approximates, computed on a fixed-size
+    deterministic sample (doc_id % 25 == 0, capped at 32 docs) so the
+    all-pairs cost is a constant 496 pairs at ANY corpus size — the pair
+    count does not grow with scale factor. Each sampled doc's distinct
+    bigrams stay packed in one array and the pairs are verified by
+    jaccard_from_arrays, the operator the MinHash-LSH queries verify their
+    candidates with; at full scale this measure only ever runs on candidates
+    or audit samples, never the whole corpus.
     """
     d = _docs(spark, sf_dir)
     # bind the word array as a column before the lambda (see word_shingles)
@@ -670,16 +621,15 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1)),
         ),
     ).otherwise(F.array(F.col("txt")))
-    grams = sample.select("doc_id", F.explode(bigrams_arr).alias("gram")).distinct()
+    grams = sample.select("doc_id", F.array_distinct(bigrams_arr).alias("sh_arr"))
     ids = sample.select("doc_id")
     pairs = (
         ids.select(F.col("doc_id").alias("doc_a"))
         .crossJoin(ids.select(F.col("doc_id").alias("doc_b")))
         .filter(F.col("doc_a") < F.col("doc_b"))
     )
-    # the canonical operator the LSH-recall tests treat as ground truth —
-    # reused (bigrams play the shingle role) instead of re-implemented
-    return jaccard_for_pairs(pairs, grams.withColumnRenamed("gram", "shingle"))
+    # bigram sets play the shingle sets
+    return jaccard_from_arrays(pairs, grams).select("doc_a", "doc_b", "jaccard")
 
 
 #: the 60-bit SimHash signature build, shared by q_simhash and q_simhash_pairs
@@ -867,6 +817,17 @@ def q_corpus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCOMING_SOURCE = "src19"  # the fixture's last source plays the new batch
 NEAR_JACCARD = 0.5  # band candidates at/above this are near-duplicates
 
+#: q_incremental_dedup's LSH candidates: (incoming rep, corpus rep) band
+#: collisions, the oracle twin of lsh_pairs_between
+_INC_PAIRS = """
+pairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a
+  JOIN inc_classes ia ON ia.doc_id = a.doc_id
+  JOIN bands b ON b.band = a.band AND b.band_sig = a.band_sig
+  JOIN corp_classes cb ON cb.doc_id = b.doc_id
+)"""
+
 
 @register(
     "q_incremental_dedup",
@@ -884,51 +845,7 @@ NEAR_JACCARD = 0.5  # band candidates at/above this are near-duplicates
           UNION ALL
           SELECT doc_id, text FROM inc_classes
         ),
-        words AS (
-          SELECT doc_id, trim(text) AS txt,
-                 string_split_regex(trim(text), '\\s+') AS ws
-          FROM reps
-        ),
-        widx AS (
-          SELECT doc_id, ws, generate_subscripts(ws, 1) AS i FROM words
-        ),
-        shingles AS (
-          SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-          FROM widx WHERE i <= len(ws) - 2
-          UNION
-          SELECT DISTINCT doc_id, txt AS shingle FROM words WHERE len(ws) < 3
-        ),
-        hashed AS (
-          SELECT doc_id, shingle,
-                 (('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME} AS h
-          FROM shingles
-        ),
-        sigs AS (
-          SELECT doc_id, CAST(k.range AS INTEGER) AS k,
-                 MIN(((k.range * 2 + 3) * h + (k.range * 5 + 7)) % {PORTABLE_HASH_PRIME}) AS minhash
-          FROM hashed, range({MINHASH_K}) k
-          GROUP BY 1, 2
-        ),
-        bands AS (
-          SELECT doc_id, CAST(floor(k / {LSH_ROWS_PER_BAND}) AS BIGINT) AS band,
-                 string_agg(CAST(k AS VARCHAR) || '=' || CAST(minhash AS VARCHAR), ':' ORDER BY k) AS band_sig
-          FROM sigs GROUP BY 1, 2
-        ),
-        pairs AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a
-          JOIN inc_classes ia ON ia.doc_id = a.doc_id
-          JOIN bands b ON b.band = a.band AND b.band_sig = a.band_sig
-          JOIN corp_classes cb ON cb.doc_id = b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
-        inter AS (
-          SELECT p.doc_a, p.doc_b, count(sb.shingle) AS inter
-          FROM pairs p
-          JOIN hashed sa ON sa.doc_id = p.doc_a
-          LEFT JOIN hashed sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        ),
+        {_lsh_ctes("reps", _INC_PAIRS)},
         jac AS (
           SELECT i.doc_a, i.doc_b, i.inter / (za.n + zb.n - i.inter) AS j
           FROM inter i
@@ -986,8 +903,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     incoming = d.filter(F.col("source") == INCOMING_SOURCE)
 
-    from pyspark import StorageLevel
-
     # BOTH class tables from ONE groupBy(text) over the whole table with
     # conditional aggregates (r12): the old form filtered documents twice,
     # shuffled each side's classes separately, and semi-joined incoming
@@ -1017,7 +932,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persisted: each side feeds two consumers (minhash signatures and the
     # Jaccard verify) — without this the dominant-cost tokenize+trigram+md5
-    # pass runs twice per side (same pattern as q_minhash_dedup)
+    # pass runs twice per side (same pattern as _text_classes)
     inc_arr = shingle_arrays(inc_classes.select("doc_id", "text")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -1262,49 +1177,7 @@ _DUP_CLUSTERS_ORACLE = f"""
         WITH RECURSIVE classes AS (
           SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text
         ),
-        words AS (
-          SELECT doc_id, trim(text) AS txt,
-                 string_split_regex(trim(text), '\\s+') AS ws
-          FROM classes
-        ),
-        widx AS (
-          SELECT doc_id, ws, generate_subscripts(ws, 1) AS i FROM words
-        ),
-        shingles AS (
-          SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-          FROM widx WHERE i <= len(ws) - 2
-          UNION
-          SELECT DISTINCT doc_id, txt AS shingle FROM words WHERE len(ws) < 3
-        ),
-        hashed AS (
-          SELECT doc_id, shingle,
-                 (('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME} AS h
-          FROM shingles
-        ),
-        sigs AS (
-          SELECT doc_id, CAST(k.range AS INTEGER) AS k,
-                 MIN(((k.range * 2 + 3) * h + (k.range * 5 + 7)) % {PORTABLE_HASH_PRIME}) AS minhash
-          FROM hashed, range({MINHASH_K}) k
-          GROUP BY 1, 2
-        ),
-        bands AS (
-          SELECT doc_id, CAST(floor(k / {LSH_ROWS_PER_BAND}) AS BIGINT) AS band,
-                 string_agg(CAST(k AS VARCHAR) || '=' || CAST(minhash AS VARCHAR), ':' ORDER BY k) AS band_sig
-          FROM sigs GROUP BY 1, 2
-        ),
-        cpairs AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n FROM hashed GROUP BY 1),
-        inter AS (
-          SELECT p.doc_a, p.doc_b, count(sb.shingle) AS inter
-          FROM cpairs p
-          JOIN hashed sa ON sa.doc_id = p.doc_a
-          LEFT JOIN hashed sb ON sb.doc_id = p.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        ),
+        {_lsh_ctes("classes")},
         edges AS (
           SELECT doc_a AS a, doc_b AS b FROM (
             SELECT i.doc_a, i.doc_b,
@@ -1364,22 +1237,8 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure is only tractable on verified-duplicate edges, which
     is exactly why the engine side iterates labels instead.
     """
-    from pyspark import StorageLevel
-
     d = _docs(spark, sf_dir)
-    # exact-dup classes first (one rep per distinct text): identical texts
-    # are always fully connected at jaccard 1.0, so components over the
-    # REP graph expanded by class membership are provably the same
-    # components — and the shingle pipeline, the edge set, and every CC
-    # round become invariant to duplication depth
-    classes = (
-        d.groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    docs_arr = shingle_arrays(classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    classes, docs_arr = _text_classes(d)
     jac = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(docs_arr)), docs_arr)
     edges = jac.filter(F.col("jaccard") >= NEAR_JACCARD).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -1687,8 +1546,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup family: no shingles, no arrays, signatures are one BIGINT of
     payload per row at rest.
     """
-    from pyspark import StorageLevel
-
     # same pre-signature spread as q_simhash: the vote stage is map work
     # off a possibly single-split scan
     d = spread_narrow(_docs(spark, sf_dir), "doc_id")
@@ -2290,7 +2147,7 @@ def q_dup_depth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_source_overlap",
     oracle=f"""
-        WITH {_SHINGLES_CTE},
+        WITH {_shingles_cte("documents")},
         sh AS (
           SELECT DISTINCT d.source, h.h
           FROM hashed h JOIN documents d USING (doc_id)

@@ -80,12 +80,21 @@ def degenerate_sf(tmp_path_factory):
         ("empty_part_documents", "q_skyline"),
         ("empty_part_documents", "q_shard_pack"),
         ("empty_part_documents", "q_corpus_select"),
+        ("empty_part_documents", "q_minhash_dedup"),
+        ("empty_part_documents", "q_containment"),
+        ("empty_part_documents", "q_dup_clusters"),
+        ("empty_part_documents", "q_incremental_dedup"),
+        ("empty_part_documents", "q_ngram_jaccard"),
+        ("empty_part_documents", "q_source_overlap"),
     ],
 )
-def test_prefix_scan_callers_match_oracle_on_degenerate_input(spark, degenerate_sf, kind, name):
-    """The prefix-scan callers keep oracle parity on degenerate inputs: NULL
-    per-user totals sort last, as the oracles' NULLS LAST order does, and
-    an empty table's None domain scans as one range instead of raising."""
+def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
+    """Queries keep oracle parity on degenerate inputs. The prefix-scan
+    callers: NULL per-user totals sort last, as the oracles' NULLS LAST
+    order does, and an empty table's None domain scans as one range instead
+    of raising. The MinHash-LSH family (shingles, signatures, band pairs,
+    Jaccard verify), q_ngram_jaccard and q_source_overlap: a 0-row
+    documents table gives the oracles' empty results, not an error."""
     sf_dir, duck = degenerate_sf(kind)
     q = QUERIES[name]
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)

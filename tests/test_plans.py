@@ -625,6 +625,25 @@ def test_prefix_scan_range_ids_live_only_in_the_operator():
     assert "localCheckpoint" not in src and "repartitionByRange" not in src
 
 
+def test_minhash_lsh_path_is_defined_once():
+    """One MinHash-LSH near-duplicate path: textpipe.py holds one shingle CTE
+    and one LSH CTE chain (every oracle of the family calls _shingles_cte /
+    _lsh_ctes instead of carrying a copy), candidate Jaccard is computed
+    only by operators/text.py's jaccard_from_arrays (no other module calls
+    array_intersect), and the exploded jaccard_for_pairs is gone."""
+    pkg = Path(__file__).resolve().parents[1] / "iceberg_benchmark_poc_spark"
+    textpipe = (pkg / "queries" / "textpipe.py").read_text()
+    assert textpipe.count("range({MINHASH_K})") == 1
+    assert textpipe.count("ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle") == 1
+    assert textpipe.count("md5(shingle)") == 1
+    text_ops = pkg / "operators" / "text.py"
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        assert "jaccard_for_pairs" not in src, path.relative_to(pkg)
+        if path != text_ops:
+            assert not re.search(r"array_intersect\(", src), path.relative_to(pkg)
+
+
 def test_min_cost_supplier_window_partitions_by_part(spark):
     """q_min_cost_supplier (TPC-H Q2 shape): the fixed nation/region legs
     broadcast by hint; the part/supplier joins are planner-chosen since r11
