@@ -34,7 +34,7 @@ from ..core.fixtures import (
     file_meta_of,
     has_dv,
 )
-from ..core.io import load_table
+from ..core.io import load_table, read_parquet
 from ..queries.aggregates import spill_policy
 from ..queries.manifests import N_PROBES, TREE_PROBE_DATE, scan_tree, skip_rate
 
@@ -464,7 +464,7 @@ def suite_single_file_commits(spark: SparkSession, sf_dir: str, tmp_dir: str) ->
     before_bytes = _dir_bytes(sink)
     compacted = os.path.join(tmp_dir, "compacted")
     t0 = time.perf_counter()
-    spark.read.parquet(sink).coalesce(1).write.mode("overwrite").parquet(compacted)
+    read_parquet(spark, sink).coalesce(1).write.mode("overwrite").parquet(compacted)
     compact_ms = (time.perf_counter() - t0) * 1000
     after_files = [f for f in os.listdir(compacted) if f.endswith(".parquet")]
     return {
@@ -596,7 +596,7 @@ def suite_bloom_prune(spark: SparkSession, tmp_dir: str, n_rows: int = 40_000_00
         .option("parquet.bloom.filter.expected.ndv#key", "150000")
         .parquet(bloom)
     )
-    probe_key = int(spark.read.parquet(plain).limit(1).collect()[0]["key"])
+    probe_key = int(read_parquet(spark, plain).limit(1).collect()[0]["key"])
 
     import pyarrow.parquet as pq
 
@@ -611,7 +611,7 @@ def suite_bloom_prune(spark: SparkSession, tmp_dir: str, n_rows: int = 40_000_00
 
     def rows_scanned(path: str) -> tuple[int, int]:
         """(result rows, rows the scan node surfaced post row-group filter)."""
-        d = spark.read.parquet(path).filter(F.col("key") == probe_key)
+        d = read_parquet(spark, path).filter(F.col("key") == probe_key)
         n = len(d.collect())  # no exchange -> executed plan carries metrics
         scan = d._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
         it = scan.metrics().iterator()
@@ -623,7 +623,7 @@ def suite_bloom_prune(spark: SparkSession, tmp_dir: str, n_rows: int = 40_000_00
         return n, surfaced
 
     def point_lookup_ms(path: str) -> float:
-        d = spark.read.parquet(path).filter(F.col("key") == probe_key)
+        d = read_parquet(spark, path).filter(F.col("key") == probe_key)
         d.count()  # warm
         t0 = time.perf_counter()
         for _ in range(5):
@@ -688,7 +688,7 @@ def suite_stream_throughput(spark: SparkSession, sf_dir: str, tmp_dir: str, n_fi
     )
     q.awaitTermination()
     wall_s = time.perf_counter() - t0
-    n_input = spark.read.parquet(src).count()
+    n_input = read_parquet(spark, src).count()
     return {
         "input_rows": n_input,
         "result_rows": totals["rows"],
@@ -758,7 +758,7 @@ def suite_wide_table(spark: SparkSession, tmp_dir: str, n_cols: int = 500, n_fil
     # V4: one aggregated-stats table answers the predicate without footers.
     # Group by the actual source file (_metadata) — read-side partition ids
     # would coalesce small files and misattribute stats.
-    stats_df = spark.read.parquet(path).groupBy(
+    stats_df = read_parquet(spark, path).groupBy(
         F.col("_metadata.file_name").alias("file_name")
     ).agg(F.max(target).alias("mx"))
     stats = stats_df.collect()  # build once (the writer would persist this)
@@ -924,7 +924,7 @@ def suite_column_update(spark: SparkSession, tmp_dir: str, n_rows: int = 100_000
     path = os.path.join(tmp_dir, "colupd")
     cols = [((F.col("id") * (i + 13)) % 200).cast("double").alias(f"c{i}") for i in range(n_cols)]
     spark.range(n_rows).select(F.col("id"), *cols).write.mode("overwrite").parquet(path)
-    base = spark.read.parquet(path)
+    base = read_parquet(spark, path)
 
     def _write_ms(df: DataFrame, out: str) -> float:
         t0 = time.perf_counter()
@@ -1016,7 +1016,7 @@ def suite_media_decode(spark: SparkSession, sf_dir: str, tmp_dir: str, reps: int
         docs.select("doc_id", enc(F.col("text")).alias("payload")).write.mode(
             "overwrite"
         ).parquet(path)
-        payloads = spark.read.parquet(path)
+        payloads = read_parquet(spark, path)
         stored = payloads.select(F.sum(F.length("payload")).alias("b")).collect()[0]["b"]
         amplified = payloads.withColumn(
             "r", F.explode(F.sequence(F.lit(1), F.lit(reps)))
@@ -1025,7 +1025,9 @@ def suite_media_decode(spark: SparkSession, sf_dir: str, tmp_dir: str, reps: int
         out[name] = {
             "stored_bytes": int(stored),
             "decode_ms": round(ms, 1),
-            "raster_mb_per_s": round(decoded_mb / max(ms / 1000, 1e-9), 1),
+            # 3 significant digits: a slow decode under contention must not
+            # round a positive throughput to 0.0
+            "raster_mb_per_s": float(f"{decoded_mb / max(ms / 1000, 1e-9):.3g}"),
         }
         assert n == n_docs * reps
     out["png_vs_ppm_decode_x"] = round(out["png"]["decode_ms"] / max(out["ppm"]["decode_ms"], 0.001), 2)
@@ -1065,7 +1067,7 @@ def suite_text_index(spark: SparkSession, sf_dir: str, tmp_dir: str, n_probes: i
     t0 = time.perf_counter()
     idx.repartitionByRange(8, "term").sortWithinPartitions("term").write.mode("overwrite").parquet(path)
     build_ms = (time.perf_counter() - t0) * 1000
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     n_terms = index.count()
     n_docs = docs.count()
 
@@ -1182,8 +1184,8 @@ def suite_bucketed_join(
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         def plain():
-            f = spark.read.parquet(fact_path)
-            d = spark.read.parquet(dim_path)
+            f = read_parquet(spark, fact_path)
+            d = read_parquet(spark, dim_path)
             return f.join(d, f.k == d.dk)
 
         def bucketed():

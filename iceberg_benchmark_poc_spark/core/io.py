@@ -9,21 +9,52 @@ once:
   loader converts it to a microsecond TimestampType, matching what DuckDB
   produces for ``CAST(ts AS TIMESTAMP)``.
 
-Schema inference runs once per file state. A plain ``spark.read.parquet``
-infers the schema from a footer in a Spark job
-(``SchemaMergeUtils.mergeSchemasInParallel``, even for one file), which
-would cost every query one job per table. ``_SCHEMAS`` maps a table path to
-the signature and schema of its last inference; the signature is
-``(relative path, size, mtime_ns)`` of every file under the path, or the
-file's own ``(size, mtime_ns)``. A changed signature re-infers and replaces
-the entry, so the cache holds one entry per distinct path. A hit reads with
-``spark.read.schema(cached)``, which runs no job; the file listing and the
-relation are still built on every call, so plans and attribute ids match an
-inferring read. For the fixture tables' types, inference depends only on
-the files and on ``nanosAsLong``, which ``ensure_session_confs`` pins before
-every read. A path the driver cannot ``os.stat`` (an object-store URI, a
-missing path) is inferred on every load, so a missing path still raises
-Spark's PATH_NOT_FOUND.
+Every parquet read in the package goes through ``read_parquet``, which
+resolves a path's schema without a Spark job. A plain ``spark.read.parquet``
+infers the schema in a job (``SchemaMergeUtils.mergeSchemasInParallel``,
+even for one file), which would cost every query one job per table.
+``_STATES`` maps a path to the footer state of its files: a signature
+(``(relative path, size, mtime_ns)`` of every file under the path, or the
+file's own ``(size, mtime_ns)``), the data files Spark lists there, the
+resolved schema and the column bounds read so far. A changed signature
+replaces the entry, so the cache holds one entry per distinct path.
+
+- **Miss.** The schema is read on the driver from one footer, with Spark's
+  own converter: ``ParquetFileReader.readFooter`` then
+  ``ParquetFileFormat.readSchemaFromFooter`` under a
+  ``ParquetToSparkSchemaConverter`` of the session conf. That is the function
+  the inference job runs on each footer, so the type mapping is Spark's
+  (``nanosAsLong``, NTZ inference, the Spark row metadata of Spark-written
+  files), and the footer is that of the first data file in path order, the
+  one Spark's inference reads. The read is ``spark.read.schema(s)``, which
+  applies ``asNullable`` as an inferring read does, so plans and attribute
+  ids match.
+- **Fallback.** The inferring ``spark.read.parquet(path)`` runs, so Spark
+  raises its own errors, when ``spark.sql.parquet.mergeSchema`` is on; when
+  the path holds a ``_metadata`` / ``_common_metadata`` summary file or a
+  ``_spark_metadata`` sink log; when it holds a visible subdirectory (a
+  ``k=v`` partition directory); when it holds no visible data file; and when
+  the footer read raises. Its schema is cached like a footer schema.
+- **Hit.** ``spark.read.schema(cached)``; the file listing and the relation
+  are still built on every call.
+
+A path the driver cannot ``os.stat`` (an object-store URI, a missing path)
+takes the fallback on every load, so a missing path still raises Spark's
+PATH_NOT_FOUND.
+
+``column_bounds`` is the second consumer of the footer state: a table's row
+count and per-column (min, max) from the row-group statistics of every data
+file, read with pyarrow and cached under the same signature. It returns
+exactly what Spark's ``count(1)`` / ``min`` / ``max`` fold over
+``load_table`` returns, or None when the footers cannot say (no statistics,
+an unsupported type, a 0-row table, a fallback layout); ``table_bounds``
+then runs that fold. Two facts the footers hide: writers store a float zero
+minimum as ``-0.0`` (returned as ``0.0``, what the fold returns for zeros),
+and they leave NaN out of min/max, so a float column holding NaN, which
+Spark folds to NaN, yields its largest non-NaN value. Every caller uses the
+bounds to place range buckets only (operators/prefix.py keeps ids monotone
+for keys outside [lo, hi] and gives NaN keys their own range), so results
+never depend on them.
 
 At 100 TB these reads stay embarrassingly parallel: ``spark.read.parquet`` on
 a directory fans out one task per ~128 MB split (``files.maxPartitionBytes``),
@@ -34,11 +65,28 @@ shuffle so Parquet pushdown and column pruning do their job (verify with
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import stat
+from dataclasses import dataclass, field
+from types import SimpleNamespace
 
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_json_string,
+)
 
 TABLES = (
     "region",
@@ -58,8 +106,21 @@ _PINNED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
 }
 
-#: table path -> (file signature, schema) of the path's last inference
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+#: summary files and sink logs that make Spark read other files than its listing
+_SPARK_READ_NAMES = ("_metadata", "_common_metadata", "_spark_metadata")
+
+
+@dataclass
+class _FileState:
+    sig: tuple
+    #: data files in Spark's path order; None when the layout takes the fallback
+    files: tuple[str, ...] | None
+    schema: StructType | None = None
+    bounds: dict = field(default_factory=dict)
+
+
+#: path -> footer state of the path's files at their last signature
+_STATES: dict[str, _FileState] = {}
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -83,11 +144,16 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(key, value)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _table_path(sf_dir: str, name: str) -> str:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = _table_path(sf_dir, name)
     ensure_session_confs(spark)
-    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, path)
     if name == "events":
         # Depending on session confs, ts arrives as bigint (legacy nanosAsLong),
         # timestamp_ntz (native nanos read, Spark 4.1+), or timestamp (NTZ
@@ -108,36 +174,198 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _file_signature(path: str) -> tuple:
-    """``(relative path, size, mtime_ns)`` of every file under ``path``, or
-    the file's own ``(size, mtime_ns)``; OSError when the driver can't see it."""
+def _hidden(name: str) -> bool:
+    """Spark's listing skips these names (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    return hidden or name.endswith("._COPYING_")
+
+
+def _data_files(path: str) -> tuple[str, ...] | None:
+    """The data files Spark lists in a directory, in its path order, or None
+    when the layout takes the fallback (module docstring)."""
+    _, dirs, names = next(os.walk(path))
+    if any(n.startswith(_SPARK_READ_NAMES) for n in dirs + names) or not all(map(_hidden, dirs)):
+        return None
+    return tuple(os.path.join(path, n) for n in sorted(names) if not _hidden(n)) or None
+
+
+def _file_state(path: str) -> _FileState:
+    """The cached state of ``path`` if its files are unchanged, else a fresh
+    one; OSError when the driver can't see the path."""
     st = os.stat(path)
     if not stat.S_ISDIR(st.st_mode):
-        return (st.st_size, st.st_mtime_ns)
-    sig = []
-    for root, _, files in os.walk(path):
-        for f in files:
-            full = os.path.join(root, f)
-            fst = os.stat(full)
-            sig.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
-    return tuple(sorted(sig))
+        sig, files = (st.st_size, st.st_mtime_ns), (path,)
+    else:
+        sig = []
+        for root, _, names in os.walk(path):
+            for f in names:
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                sig.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+        sig, files = tuple(sorted(sig)), _data_files(path)
+    state = _STATES.get(path)
+    if state is None or state.sig != sig:
+        # two threads missing on one path both resolve and store; either
+        # entry matches its own signature, so the lost one costs one more read
+        state = _STATES[path] = _FileState(sig, files)
+    return state
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring the schema only when the
-    files under ``path`` changed since its last inference (module docstring)."""
+@functools.lru_cache(maxsize=1)
+def _footer_classes(jvm) -> SimpleNamespace:
+    """py4j handles of the classes a footer read calls, looked up once per JVM."""
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        Footer=jvm.org.apache.parquet.hadoop.Footer,
+        ParquetFileReader=jvm.org.apache.parquet.hadoop.ParquetFileReader,
+        SKIP_ROW_GROUPS=(
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        ),
+        ParquetFileFormat=parquet.ParquetFileFormat,
+        Converter=parquet.ParquetToSparkSchemaConverter,
+    )
+
+
+def _footer_schema(spark: SparkSession, state: _FileState) -> StructType | None:
+    """Spark's schema of the state's first data file, read from its footer on
+    the driver; None when the path takes the fallback (module docstring)."""
+    if state.files is None or spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    c = _footer_classes(spark._jvm)
     try:
-        sig = _file_signature(path)
+        session = spark._jsparkSession.sessionState()
+        conf = session.newHadoopConf()
+        path = c.Path(state.files[0])
+        status = path.getFileSystem(conf).getFileStatus(path)
+        footer = c.Footer(path, c.ParquetFileReader.readFooter(conf, status, c.SKIP_ROW_GROUPS))
+        schema = c.ParquetFileFormat.readSchemaFromFooter(footer, c.Converter(session.conf()))
+        return _parse_datatype_json_string(schema.json())
+    except Py4JError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job: the
+    schema comes from a footer once per file state (module docstring)."""
+    try:
+        state = _file_state(path)
     except OSError:
         return spark.read.parquet(path)
-    cached = _SCHEMAS.get(path)
-    if cached is not None and cached[0] == sig:
-        return spark.read.schema(cached[1]).parquet(path)
-    df = spark.read.parquet(path)
-    # two threads missing on one path both infer and store; either entry
-    # matches its own signature, so the lost one costs one more inference
-    _SCHEMAS[path] = (sig, df.schema)
-    return df
+    if state.schema is None:
+        state.schema = _footer_schema(spark, state)
+        if state.schema is None:
+            df = spark.read.parquet(path)
+            state.schema = df.schema
+            return df
+    return spark.read.schema(state.schema).parquet(path)
+
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+
+
+def column_bounds(
+    spark: SparkSession, sf_dir: str, table: str, cols: list[str]
+) -> tuple[int, tuple[tuple, ...]] | None:
+    """``(row count, ((min, max) per column))`` of a table from its parquet
+    footers, equal to the Spark fold ``table_bounds`` runs, or None when the
+    footers cannot say (module docstring). Cached under the file state."""
+    try:
+        state = _file_state(_table_path(sf_dir, table))
+    except OSError:
+        return None
+    key = tuple(cols)
+    if key not in state.bounds:
+        state.bounds[key] = _footer_bounds(spark, sf_dir, table, state.files, key)
+    return state.bounds[key]
+
+
+def _footer_bounds(spark, sf_dir, table, files, cols):
+    """``column_bounds`` of one file state, read from every data file's footer."""
+    if files is None:
+        return None
+    loaded = {f.name: f.dataType for f in load_table(spark, sf_dir, table).schema.fields}
+    mds = [pq.read_metadata(f) for f in files]
+    n_rows = sum(md.num_rows for md in mds)
+    if n_rows == 0:
+        return None
+    out = []
+    for col in cols:
+        values = []
+        for md in mds:
+            fv = _row_group_bounds(md, col, loaded.get(col))
+            if fv is None:
+                return None
+            values += fv
+        if not values:  # all NULL: the fold's min and max are NULL too
+            out.append((None, None))
+            continue
+        lo, hi = min(v for v, _ in values), max(w for _, w in values)
+        if isinstance(lo, float) and lo == 0:
+            lo = 0.0  # writers store a zero minimum as -0.0; the fold returns 0.0
+        out.append((lo, hi))
+    return n_rows, tuple(out)
+
+
+def _row_group_bounds(md, col: str, loaded) -> list[tuple] | None:
+    """(min, max) of ``col`` in every row group of one file that holds a
+    non-NULL value, as the fold over ``load_table`` returns them; None when
+    a statistic is missing or the type is one the footers can't stand for."""
+    i = next((i for i in range(md.num_columns) if md.schema.column(i).path == col), None)
+    if i is None:
+        return None
+    value = _stat_value(md.schema.column(i), loaded)
+    if value is None:
+        return None
+    out = []
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        s = rg.column(i).statistics
+        if s is None:
+            return None
+        if s.has_min_max:
+            lo, hi = value(s.min_raw), value(s.max_raw)
+            if lo != lo or hi != hi:  # a NaN statistic; the fold may return NaN
+                return None
+            out.append((lo, hi))
+        elif not (s.has_null_count and s.null_count == rg.num_rows):
+            return None
+    return out
+
+
+def _stat_value(column, loaded):
+    """The map from a raw statistic of a parquet column to the value of the
+    ``loaded`` Spark type it is read as, or None. Every map is monotone, so
+    the min and max of mapped values are the mapped min and max."""
+    phys, lt = column.physical_type, json.loads(column.logical_type.to_json())
+    kind, unit = lt["Type"], lt.get("timeUnit")
+    if isinstance(loaded, _INTEGRAL) and phys in ("INT32", "INT64"):
+        if kind == "None" or (kind == "Int" and lt["isSigned"]) or unit == "nanoseconds":
+            return int  # nanos read as a BIGINT under nanosAsLong
+    elif isinstance(loaded, (FloatType, DoubleType)) and phys in ("FLOAT", "DOUBLE"):
+        return float
+    elif isinstance(loaded, (TimestampType, TimestampNTZType)) and phys == "INT64":
+        if kind == "None" or unit == "nanoseconds":
+            # load_table's `ts div 1000` of the BIGINT nanos: truncates toward zero
+            return lambda v: loaded.fromInternal(v // 1000 if v >= 0 else -(-v // 1000))
+        if unit == "microseconds":
+            return loaded.fromInternal
+    return None
+
+
+def table_bounds(spark: SparkSession, sf_dir: str, table: str, cols: list[str]) -> tuple:
+    """``column_bounds``, or, when the footers cannot say, the Spark fold it
+    stands for: ``count(1)`` and ``min`` / ``max`` of each column over
+    ``load_table`` (two jobs)."""
+    bounds = column_bounds(spark, sf_dir, table, cols)
+    if bounds is not None:
+        return bounds
+    row = (
+        load_table(spark, sf_dir, table)
+        .agg(F.count(F.lit(1)), *(f(c) for c in cols for f in (F.min, F.max)))
+        .collect()[0]
+    )
+    return row[0], tuple((row[1 + 2 * i], row[2 + 2 * i]) for i in range(len(cols)))
 
 
 def spread_narrow(df: DataFrame, *keys: str) -> DataFrame:

@@ -22,7 +22,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.io import epoch_micros, load_table
+from ..core.io import epoch_micros, load_table, table_bounds
 from ..core.registry import register
 from ..operators.prefix import global_prefix_sum
 
@@ -61,7 +61,7 @@ def _log_key(col) -> F.Column:
 
 def _user_cents_bound(n_ev, v_hi) -> float:
     """Loose upper bound of one user's cents total (event count x max
-    value), from a metadata-only parquet footer fold."""
+    value), from the parquet footers (core.io.table_bounds)."""
     return max(float(n_ev) * max(float(v_hi or 0.0), 0.0) * 100.0, 1.0)
 
 
@@ -754,11 +754,11 @@ def q_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = totals.groupBy("cents").agg(F.count("*").alias("cnt"))
     # log1p range buckets for the prefix scan (operators/prefix.py): only a
     # LOOSE upper bound exists for a per-user total (event count x max
-    # value, from a metadata-only parquet footer fold), and log spacing keeps
+    # value, read from the parquet footers, no job), and log spacing keeps
     # heavy-tailed totals from collapsing into one range — bounds steer
     # balance only, never values. NULL totals (users whose values are all
     # NULL) sort last, as in the oracle, under an infinite key.
-    n_ev, v_hi = ev.agg(F.count(F.lit(1)), F.max("value")).collect()[0]
+    n_ev, ((_, v_hi),) = table_bounds(spark, sf_dir, "events", ["value"])
     summed = global_prefix_sum(
         hist,
         [F.col("cents").asc_nulls_last()],
@@ -1503,10 +1503,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric * n_users and the scan needs no per-metric reset. The 12 cut
     cells fold to one broadcast row. At 1e9 users the heavy table is the
     single melted histogram, 3 x |distinct values|. The range key is
-    metric + the value's position in its metric's domain, from a
-    metadata-only parquet footer fold (count/min/max pushdown); freq/cents
-    positions are log1p-spaced because only loose upper bounds exist for
-    the per-user totals — bounds steer balance only, never values.
+    metric + the value's position in its metric's domain, from the parquet
+    footers' row count and min/max (core.io.column_bounds, no job);
+    freq/cents positions are log1p-spaced because only loose upper bounds
+    exist for the per-user totals — bounds steer balance only, never values.
     """
     ev = load_table(spark, sf_dir, "events")
     u = (
@@ -1523,12 +1523,10 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # metadata-only domain fold (parquet aggregate pushdown): event count
-    # bounds freq, ts span bounds last_day, count*max(value) bounds the
-    # per-user cents total
-    n_ev, ts_lo, ts_hi, v_hi = ev.agg(
-        F.count(F.lit(1)), F.min("ts"), F.max("ts"), F.max("value")
-    ).collect()[0]
+    # domain bounds from the parquet footers (no job): event count bounds
+    # freq, ts span bounds last_day, count*max(value) bounds the per-user
+    # cents total
+    n_ev, ((ts_lo, ts_hi), (_, v_hi)) = table_bounds(spark, sf_dir, "events", ["ts", "value"])
 
     def _py_day(dt) -> int:
         import calendar

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.io import load_table
+from ..core.io import load_table, table_bounds
 from ..core.registry import register
 from ..operators.prefix import global_prefix_max
 
@@ -1361,14 +1361,10 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_size",
     )
     g = p.groupBy("price_cents").agg(F.max("p_size").alias("eqmax"))
-    # range buckets for the prefix max over the price domain folded from
-    # parquet footer stats (aggregate pushdown — metadata-only job);
-    # price_cents / 100 is monotone in price_cents and lies in that domain
-    lo, hi = (
-        load_table(spark, sf_dir, "part")
-        .agg(F.min("p_retailprice"), F.max("p_retailprice"))
-        .collect()[0]
-    )
+    # range buckets for the prefix max over the price domain, read from the
+    # parquet footers (core.io.column_bounds, no job); price_cents / 100 is
+    # monotone in price_cents and lies in that domain
+    _, ((lo, hi),) = table_bounds(spark, sf_dir, "part", ["p_retailprice"])
     g2 = global_prefix_max(
         g,
         [F.col("price_cents")],

@@ -37,7 +37,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
-from ..core.io import load_table
+from ..core.io import load_table, read_parquet
 from ..core.registry import register
 from ..operators.text import PORTABLE_HASH_PRIME
 
@@ -278,7 +278,7 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     path = _scratch(sf_dir, "docs_partitioned")
     d.write.mode("overwrite").partitionBy("lang").parquet(path)
-    back = spark.read.parquet(path).filter(F.col("lang").isin(*_PART_LANGS))
+    back = read_parquet(spark, path).filter(F.col("lang").isin(*_PART_LANGS))
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),

@@ -23,7 +23,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
-from ..core.io import load_table, spread_narrow
+from ..core.io import load_table, spread_narrow, table_bounds
 from ..core.registry import register
 from ..operators.graph import connected_components
 from ..operators.text import (
@@ -1456,12 +1456,10 @@ def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _quality_candidates(spark, sf_dir).select("doc_id", "n_bpe_tokens")
     from ..operators.prefix import global_prefix_sum
 
-    # range buckets over the doc_id domain, folded from parquet footer stats
-    # (aggregate pushdown — metadata-only job) and passed straight through:
-    # an empty table folds to None, which the operator scans as one range
-    id_lo, id_hi = (
-        load_table(spark, sf_dir, "documents").agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    )
+    # range buckets over the doc_id domain, read from the parquet footers
+    # (core.io.column_bounds, no job) and passed straight through: an empty
+    # table folds to None, which the operator scans as one range
+    _, ((id_lo, id_hi),) = table_bounds(spark, sf_dir, "documents", ["doc_id"])
     packed = global_prefix_sum(
         cand,
         [F.col("doc_id")],

@@ -112,8 +112,9 @@ def test_dup_clusters_star_fallback_matches_fast_path(spark, monkeypatch):
 def test_dup_clusters_job_counts(spark):
     """Building q_dup_clusters runs at most 17 Spark jobs and executing it
     at most 5: the counts at 1 and 4 cores when its CC step became one
-    operator call. A warm-up call first takes the table load's one-time
-    parquet schema inference out of the count."""
+    operator call. The count is that of a repeat build, after a warm-up
+    call: a first build in a fresh session runs 2 more jobs at sf0.001
+    (19; 20 while table loads still inferred their schema in a job)."""
     q_dup_clusters(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     df, build_jobs = jobs_of(spark, lambda: q_dup_clusters(spark, SF_DIR))
     _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
