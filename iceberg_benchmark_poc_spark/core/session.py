@@ -7,9 +7,10 @@ Defaults are chosen for correctness-at-any-scale first, then local speed:
   ``spark.sql.shuffle.partitions`` is only an upper bound — AQE coalesces.
 - UTC session timezone so timestamp semantics match the DuckDB oracle and are
   cluster-location independent.
-- ``spark.sql.legacy.parquet.nanosAsLong=true``: the events fixture stores
-  TIMESTAMP(NANOS) which Spark's vectorized reader otherwise rejects; the IO
-  layer converts the raw nanos to microsecond timestamps (see core.io).
+- ``spark.sql.legacy.parquet.nanosAsLong=true``: the events fixtures store
+  ``ts`` as TIMESTAMP(MICROS), but a TIMESTAMP(NANOS) events file, which
+  Spark's reader otherwise rejects, then reads as BIGINT nanos that the IO
+  layer converts to microsecond timestamps (see core.io).
 - Arrow enabled for any pandas interchange (Pandas UDFs, toPandas).
 """
 

@@ -25,8 +25,9 @@ multiset hash.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
+
+from ..core.io import cut
 
 MAX_LP_ROUNDS = 15  # label-propagation round cap (a diameter bound)
 MAX_STAR_ROUNDS = 25  # ceil(log2(n)) + slack; a backstop, not the driver
@@ -55,20 +56,19 @@ def connected_components(edges: DataFrame) -> DataFrame:
 
     Input: DataFrame with columns (src, dst), read as undirected. Nodes
     without an edge are the caller's concern. Label propagation runs over
-    the persisted symmetric edge set; each round is one join + groupBy +
-    join, cut with a lazy localCheckpoint, and a round's convergence check
-    is the agg that materializes its cut: one job per round. Past
-    ``MAX_LP_ROUNDS`` the star algorithm takes over.
+    the cut symmetric edge set; each round is one join + groupBy + join,
+    cut, and a round's convergence check is the agg that materializes its
+    cut: one job per round. Past ``MAX_LP_ROUNDS`` the star algorithm takes
+    over.
     """
-    sym = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    sym = cut(symmetrize(edges))
     # round 0 fused into label construction: every node starts at
     # min(itself, its direct neighbors), one aggregation over sym; for
     # near-clique components this already IS the fixed point
-    labels = (
+    labels = cut(
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("nbr_min"))
         .select("node", F.least(F.col("node"), F.col("nbr_min")).alias("component"))
-        .localCheckpoint(eager=False)
     )
     # labels never increase, so an unchanged SUM proves an unchanged label
     # vector. Every round is checked: a missed converged round costs a full
@@ -81,15 +81,13 @@ def connected_components(edges: DataFrame) -> DataFrame:
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        labels = (
-            labels.join(nbr_min, "node", "left")
-            .select(
+        labels = cut(
+            labels.join(nbr_min, "node", "left").select(
                 "node",
                 F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
                     "component"
                 ),
             )
-            .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:
@@ -99,7 +97,6 @@ def connected_components(edges: DataFrame) -> DataFrame:
         # high diameter (chained near-duplicates, a path): stopping here
         # would under-merge, so recompute with the O(log n) star algorithm
         labels = connected_components_star(sym)
-    sym.unpersist()
     return labels
 
 
@@ -135,11 +132,11 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
     endpoint; singleton nodes (no edges) are the caller's concern, exactly
     as in ``connected_components``.
     """
-    cur = edges.select("src", "dst").filter("src <> dst").distinct().localCheckpoint(eager=False)
+    cur = cut(edges.select("src", "dst").filter("src <> dst").distinct())
     prev_sig = None
     converged = False
     for _ in range(MAX_STAR_ROUNDS):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        cur = cut(_small_star(_large_star(cur)))
         # edge-multiset signature: order-insensitive sum of a mixed hash —
         # one scalar agg materializes the round (the same one-job-per-round
         # pattern as the label-sum check)
@@ -182,22 +179,22 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, hops: int) -> DataFrame:
 
     Each round expands only the previous frontier and anti-joins the
     visited set — |frontier|-proportional work per round, never
-    |reachable|-proportional. Every frontier is lazily localCheckpoint-ed:
+    |reachable|-proportional. Every frontier is cut (``core.io.cut``):
     each is referenced twice (the union and the next round), so without
     lineage truncation the plan re-derives earlier rounds combinatorially.
-    The unrolled plan stays lazy end to end — no collect, no driver state
-    beyond the loop index.
+    The unrolled plan makes no collect and keeps no driver state beyond the
+    loop index, but under AQE each cut runs the shuffle stages above it when
+    it is called.
     """
     seeds = seeds.select("node").distinct()
     visited = seeds.withColumn("dist", F.lit(0).cast("bigint"))
     frontier = seeds
     for hop in range(1, hops + 1):
-        nxt = (
+        nxt = cut(
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=False)
         )
         visited = visited.unionAll(nxt.withColumn("dist", F.lit(hop).cast("bigint")))
         frontier = nxt

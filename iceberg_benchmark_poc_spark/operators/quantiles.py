@@ -68,9 +68,10 @@ def exact_quantiles(
     Pass ``counts`` — a ``(__qv, __qcnt)`` DataFrame of per-distinct-value
     counts — when the caller already has (or wants to reuse) the value
     histogram; ``df``/``value`` are then ignored, and the row count and
-    value domain are folded from the CACHED histogram (one pass over
-    |distinct values| rows, reused by the main plan) instead of re-scanning
-    the input.
+    value domain are folded from the histogram (one pass over |distinct
+    values| rows) instead of re-scanning the input. A caller that reads the
+    histogram again cuts it first (``core.io.cut``), as q_equidepth_hist
+    does.
 
     Without ``counts``, the row count is folded with ``min``/``max`` of the
     value in ONE aggregation of the raw rows — deliberately: all three
@@ -89,10 +90,6 @@ def exact_quantiles(
             .agg(F.count("*").alias("__qcnt"))
         )
     else:
-        from pyspark import StorageLevel
-
-        # persist the caller's histogram itself, so its later uses hit the cache
-        counts.persist(StorageLevel.MEMORY_AND_DISK)
         counts = counts.filter(F.col("__qv").isNotNull())
         n_rows, lo, hi = counts.agg(
             F.sum("__qcnt"), F.min("__qv"), F.max("__qv")

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import commit_log, read_log, with_fixtures
-from ..core.io import epoch_micros, load_table
+from ..core.io import cut, epoch_micros, load_table
 from ..core.registry import register
 from ..operators.graph import bfs_distances, symmetrize
 from ..operators.quantiles import exact_quantiles
@@ -280,13 +280,13 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     cents = li.select(F.floor(F.col("l_extendedprice") * 100).cast("bigint").alias("c"))
-    # ONE full scan: the per-distinct-cent histogram is cached inside
-    # exact_quantiles (it folds n_rows from it) and EVERY later step —
-    # boundary picking, bucket assignment, per-bucket rollup — runs on the
-    # |distinct cents| histogram rows, never the raw rows again (the old
-    # form re-scanned lineitem to assign buckets row-by-row: same bucket
-    # for equal cents, so assign once per distinct value and sum counts)
-    counts = cents.groupBy(F.col("c").alias("__qv")).agg(F.count("*").alias("__qcnt"))
+    # ONE full scan: the per-distinct-cent histogram is cut, and EVERY
+    # later step — the n_rows fold, boundary picking, bucket assignment,
+    # per-bucket rollup — runs on the |distinct cents| histogram rows,
+    # never the raw rows again (the old form re-scanned lineitem to assign
+    # buckets row-by-row: same bucket for equal cents, so assign once per
+    # distinct value and sum counts)
+    counts = cut(cents.groupBy(F.col("c").alias("__qv")).agg(F.count("*").alias("__qcnt")))
     bounds = exact_quantiles(None, None, _DECILES, counts=counts)
     assigned = counts.join(F.broadcast(bounds)).select(
         F.col("__qv").alias("c"),
@@ -514,37 +514,25 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # lazy localCheckpoint (q_dup_clusters pattern): the plan references the
-    # edge set in every round (plus nodes/outdeg), and without truncation
-    # Catalyst re-executes the fact-scale build join ~2x per iteration;
-    # checkpointing materializes it once and iterations reuse the result
-    edges = (
+    # cut: the plan references the edge set in every round (plus
+    # nodes/outdeg), and without truncation Catalyst re-executes the
+    # fact-scale build join ~2x per iteration
+    edges = cut(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
             (2 * F.col("l_suppkey") + 1).alias("src"),
             (2 * F.col("o_custkey")).alias("dst"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # node table consumed 1 + PR_ITERS times (rank init + each round's left
-    # join): checkpoint it, and unpivot endpoints via explode (one edge pass)
-    nodes = (
-        edges.select(F.explode(F.array("src", "dst")).alias("node"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # join): cut it, and unpivot endpoints via explode (one edge pass)
+    nodes = cut(edges.select(F.explode(F.array("src", "dst")).alias("node")).distinct())
     # out-degree is an edge ATTRIBUTE: attach it to the edge set ONCE and
-    # checkpoint, so each round pays one join (edges_deg x ranks) instead of
-    # two (the per-round outdeg join re-aggregated and re-shuffled the same
+    # cut, so each round pays one join (edges_deg x ranks) instead of two
+    # (the per-round outdeg join re-aggregated and re-shuffled the same
     # src-keyed table every iteration)
-    edges_deg = (
-        edges.join(
-            edges.groupBy("src").agg(F.count("*").alias("outdeg")),
-            "src",
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges_deg = cut(edges.join(edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src"))
     ranks = nodes.select("node", F.lit(PR_SCALE).cast("bigint").alias("r"))
     base = (15 * PR_SCALE) // 100
     for _ in range(PR_ITERS):
@@ -655,11 +643,10 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
     )
     a, b = li.alias("a"), li.alias("b")
-    # lazy localCheckpoint (q_pagerank pattern): the edge set feeds the
-    # degree build, the orientation join and the wedge-closing join in one
-    # plan — without the cut the lineitem self-join + distinct re-executes
-    # per consumer
-    return (
+    # cut: the edge set feeds the degree build, the orientation join and
+    # the wedge-closing join in one plan — without the cut the lineitem
+    # self-join + distinct re-executes per consumer
+    return cut(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -667,19 +654,17 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("p"), F.col("b.l_partkey").alias("q"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
 
 
 def _degrees(pairs: DataFrame) -> DataFrame:
-    """Node degrees, lazily checkpointed: every consumer joins it twice
-    (dp/dq legs), and the unpivot is an explode of the endpoint array —
-    ONE pass over the edge set instead of the unionAll form's two."""
-    return (
+    """Node degrees, cut: every consumer joins it twice (dp/dq legs), and
+    the unpivot is an explode of the endpoint array — ONE pass over the
+    edge set instead of the unionAll form's two."""
+    return cut(
         pairs.select(F.explode(F.array("p", "q")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)
     )
 
 
@@ -838,16 +823,11 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     item-support joins so only surviving pairs shuffle again. The 1-row
     order-count fold broadcasts.
     """
-    # lazy localCheckpoint: the distinct (order, part) set feeds FOUR
-    # consumers (the order-count fold, the item supports, and both sides of
-    # the pair self-join) — without the cut the lineitem scan + distinct
-    # exchange re-executes per consumer
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # cut: the distinct (order, part) set feeds FOUR consumers (the
+    # order-count fold, the item supports, and both sides of the pair
+    # self-join) — without the cut the lineitem scan + distinct exchange
+    # re-executes per consumer
+    li = cut(load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct())
     n = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     item = li.groupBy(F.col("l_partkey").alias("p")).agg(F.count("*").alias("n_p"))
     a, b = li.alias("a"), li.alias("b")
@@ -1298,10 +1278,9 @@ def q_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
         .distinct()
     )
-    # lazy localCheckpoint (q_pagerank pattern): every BFS round references
-    # the edge set, and without truncation Catalyst re-executes the
-    # fact-scale pair build per round; checkpointing materializes it once
-    edges = symmetrize(pairs).localCheckpoint(eager=False)
+    # cut: every BFS round references the edge set, and without truncation
+    # Catalyst re-executes the fact-scale pair build per round
+    edges = cut(symmetrize(pairs))
     seeds = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") % KHOP_SEED_MOD == 0)

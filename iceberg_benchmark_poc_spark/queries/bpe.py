@@ -21,7 +21,7 @@ this band is capability beyond the reference by design):
 Iteration collects the per-round 1-row argmax to the driver (the same
 per-iteration-scalar class as the label-sum convergence fold of
 operators.graph.connected_components) and
-chains the merge rewrite as literal replace expressions over ONE cached
+chains the merge rewrite as literal replace expressions over ONE cut
 type dictionary — one scheduler barrier per merge round, which is the
 recurrence's inherent minimum (see _bpe_rounds).
 
@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.io import load_table
+from ..core.io import cut, load_table
 from ..core.registry import register
 
 #: bounded merge budget — enough to merge the synthetic corpus's frequent
@@ -123,27 +123,20 @@ def _bpe_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[tuple
     synchronization barrier per merge, so the collect IS the barrier and
     everything else rides on it.
 
-    Round i's words relation is the CACHED type dictionary with i literal
-    replace expressions chained on top — no per-round checkpoint. A
-    checkpoint per round materialized each rewrite as its own cache write
-    and made every argmax read a fresh RDD (an extra scheduler job per
-    round); the chained form re-applies i string replaces over the cached
-    base inside the argmax's own scan stage. The rewrite chain is
-    vocabulary-scale narrow work (BPE_MERGES * |types| replaces in total
-    across the loop — at 10M types and 10 merges that is bounded map work
-    fused into stages that already scan those rows), and the expression
-    tree grows by a constant per round, so plan size stays trivial."""
-    # narrow the cached dictionary: it is vocabulary-bounded (tens of
-    # rows here, ~10M types at web scale — kilobytes per partition either
-    # way), and every round job re-launches one task per cached partition,
-    # so width is pure scheduler overhead
-    from pyspark import StorageLevel
-
-    words = (
-        _word_types(spark, sf_dir)
-        .coalesce(8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    Round i's words relation is the cut type dictionary with i literal
+    replace expressions chained on top — no per-round cut, which would make
+    every argmax read a fresh RDD (an extra scheduler job per round); the
+    chained form re-applies i string replaces over the cut base inside the
+    argmax's own scan stage. The rewrite chain is vocabulary-scale narrow
+    work (BPE_MERGES * |types| replaces in total across the loop — at 10M
+    types and 10 merges that is bounded map work fused into stages that
+    already scan those rows), and the expression tree grows by a constant
+    per round, so plan size stays trivial."""
+    # narrow the cut dictionary: it is vocabulary-bounded (tens of rows
+    # here, ~10M types at web scale — kilobytes per partition either way),
+    # and every round job re-launches one task per partition, so width is
+    # pure scheduler overhead
+    words = cut(_word_types(spark, sf_dir).coalesce(8))
     bests: list[tuple] = []
     # AQE stays ON for the argmax collects. r11 turned it off on a job-count
     # argument (AQE materializes each exchange as its own scheduler job),

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..core.io import load_table
+from ..core.io import cut, load_table
 from ..core.registry import register
 from ..operators.vectors import (
     QUANT_SCALE,
@@ -350,13 +350,9 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     should raise to 12-16 bits x 6-10 bands: noise shrinks by ~2^10 while
     recall stays >= 0.9 — same plan, two constants.
     """
-    from pyspark import StorageLevel
-
     emb = load_table(spark, sf_dir, "embeddings")
-    classes = (
-        emb.groupBy("embedding")
-        .agg(F.min("vec_id").alias("vec_id"), F.count("*").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    classes = cut(
+        emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"), F.count("*").alias("n"))
     )
     self_rows = classes.filter(F.col("n") >= 2).select(
         "vec_id",
@@ -369,15 +365,17 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize(F.col("embedding")).alias("qe"),
         *[_bucket_col(b).alias(f"bucket{b}") for b in range(N_NEARDUP_BANDS)],
     )
-    # lazily checkpointed: feats feeds the two band-join sides plus the
-    # keep/dup verify legs (4 consumers) — without the cut the quantize +
-    # norm + 3 bucket projections re-derive from the classes cache per leg
-    feats = feats.select(
-        "vec_id",
-        "qe",
-        F.sqrt(dot_quant(F.col("qe"), F.col("qe")).cast("double")).alias("norm"),
-        *[f"bucket{b}" for b in range(N_NEARDUP_BANDS)],
-    ).localCheckpoint(eager=False)
+    # cut: feats feeds the two band-join sides plus the keep/dup verify
+    # legs (4 consumers) — without the cut the quantize + norm + 3 bucket
+    # projections re-derive from the cut classes per leg
+    feats = cut(
+        feats.select(
+            "vec_id",
+            "qe",
+            F.sqrt(dot_quant(F.col("qe"), F.col("qe")).cast("double")).alias("norm"),
+            *[f"bucket{b}" for b in range(N_NEARDUP_BANDS)],
+        )
+    )
     # band unpivot via explode: ONE pass over feats (the unionByName form
     # re-ran the feats projection once per band)
     bands = feats.select(
@@ -1093,13 +1091,12 @@ def q_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.posexplode(quantize(F.col("embedding"))).alias("dim0", "xq"),
     )
-    # lazy localCheckpoint (the _copurchase_pairs pattern): cent feeds both
-    # sides of the pairwise self-join — without the cut the corpus-scale
-    # explode + aggregation executes twice
-    cent = (
-        comp.groupBy("label", F.col("dim0").alias("dim"))
-        .agg(F.expr("SUM(xq) div count(*)").alias("cmean_fp"))
-        .localCheckpoint(eager=False)
+    # cut: cent feeds both sides of the pairwise self-join — without the
+    # cut the corpus-scale explode + aggregation executes twice
+    cent = cut(
+        comp.groupBy("label", F.col("dim0").alias("dim")).agg(
+            F.expr("SUM(xq) div count(*)").alias("cmean_fp")
+        )
     )
     a = cent.select(F.col("label").alias("label_a"), "dim", F.col("cmean_fp").alias("ca"))
     b = cent.select(F.col("label").alias("label_b"), "dim", F.col("cmean_fp").alias("cb"))

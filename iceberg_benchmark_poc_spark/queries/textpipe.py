@@ -19,11 +19,10 @@ Scale design notes per query are in the docstrings; the common themes:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
-from ..core.io import load_table, spread_narrow, table_bounds
+from ..core.io import cut, load_table, spread_narrow, table_bounds
 from ..core.registry import register
 from ..operators.graph import connected_components
 from ..operators.text import (
@@ -136,18 +135,12 @@ def _text_classes(d: DataFrame, *aggs: F.Column) -> tuple[DataFrame, DataFrame]:
     MinHash-LSH queries run over one rep per class (the duplication-depth
     guard; see q_fuzzy_pairs for the measured sf1 blow-up the all-pairs form
     suffers), so the shingle+hash construction runs once per distinct text.
-    Both persist MEMORY_AND_DISK: the class table feeds the self rows, the
-    reps and the size joins, and the shingle sets feed both the signatures
-    and the Jaccard verify.
+    Both are cut: the class table feeds the self rows, the reps and the
+    size joins, and the shingle sets feed both the signatures and the
+    Jaccard verify.
     """
-    classes = (
-        d.groupBy("text")
-        .agg(F.min("doc_id").alias("doc_id"), *aggs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    docs_arr = shingle_arrays(classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    classes = cut(d.groupBy("text").agg(F.min("doc_id").alias("doc_id"), *aggs))
+    docs_arr = cut(shingle_arrays(classes.select("doc_id", "text")))
     return classes, docs_arr
 
 
@@ -910,15 +903,13 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two text shuffles, one join. Here one scan and one text shuffle
     # produce corpus classes, incoming classes, AND the exact flag (a class
     # with doc ids on both sides IS an exact collision) as column filters
-    # over one persisted relation.
-    classes = (
-        d.groupBy("text")
-        .agg(
+    # over one cut relation.
+    classes = cut(
+        d.groupBy("text").agg(
             F.min(F.when(F.col("source") == INCOMING_SOURCE, F.col("doc_id"))).alias("inc_id"),
             F.min(F.when(F.col("source") != INCOMING_SOURCE, F.col("doc_id"))).alias("corp_id"),
             F.count(F.when(F.col("source") != INCOMING_SOURCE, F.lit(1))).alias("nc"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     corp_classes = classes.filter(F.col("corp_id").isNotNull()).select(
         "text", F.col("corp_id").alias("doc_id"), "nc"
@@ -930,15 +921,11 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("inc_id").isNotNull() & F.col("corp_id").isNotNull()
     ).select(F.col("inc_id").alias("rep"), F.lit(True).alias("exact_flag"))
 
-    # persisted: each side feeds two consumers (minhash signatures and the
+    # cut: each side feeds two consumers (minhash signatures and the
     # Jaccard verify) — without this the dominant-cost tokenize+trigram+md5
     # pass runs twice per side (same pattern as _text_classes)
-    inc_arr = shingle_arrays(inc_classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    corp_arr = shingle_arrays(corp_classes.select("doc_id", "text")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    inc_arr = cut(shingle_arrays(inc_classes.select("doc_id", "text")))
+    corp_arr = cut(shingle_arrays(corp_classes.select("doc_id", "text")))
     pairs = lsh_pairs_between(minhash_from_arrays(inc_arr), minhash_from_arrays(corp_arr))
     jac = jaccard_from_arrays(pairs, inc_arr.unionByName(corp_arr))
     cand = (
@@ -1246,7 +1233,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only edge nodes enter the CC rounds: singletons (the overwhelming
     # majority of a deduped corpus) are added back as their own cluster below
     comp = connected_components(edges)
-    docs_arr.unpersist()
 
     # expand rep components to documents: every doc inherits its class
     # rep's cluster (min rep in a component IS the min doc_id of the full
@@ -1549,13 +1535,10 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread_narrow(_docs(spark, sf_dir), "doc_id")
     # the signature build (tokenize -> 60 per-bit votes) feeds 4 band
     # branches x 2 join sides + the self-pair branch — without
-    # materialization Spark recomputes the word-explode pass 9x; persisted,
-    # it runs once and everything downstream works on one BIGINT per CLASS
-    classes = (
-        simhash_sig(d)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # materialization Spark recomputes the word-explode pass 9x; cut, it
+    # runs once and everything downstream works on one BIGINT per CLASS
+    classes = cut(
+        simhash_sig(d).groupBy("simhash").agg(F.count("*").alias("n"), F.min("doc_id").alias("rep"))
     )
     self_pairs = classes.filter(F.col("n") >= 2).select(
         F.col("rep").alias("rep_a"),
@@ -1563,7 +1546,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("int").alias("hamming"),
         F.expr("n * (n - 1) DIV 2").alias("n_pairs"),
     )
-    # band unpivot via explode: ONE pass over the class cache per join side
+    # band unpivot via explode: ONE pass over the cut classes per join side
     # (the unionByName form re-projected the classes once per band per side)
     nib = classes.select(
         "simhash",
@@ -2186,36 +2169,24 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle with source as the id column (shingle_arrays is narrow — the
     # per-doc arrays build without any shuffle), so the source label rides
     # the explode and the exploded stream is never joined back on doc_id.
-    # The lazy checkpoint is load-bearing: exploding a lambda-built array
-    # makes Generate re-evaluate the whole trigram construction per emitted
-    # row (measured 9s -> 1.4s at sf0.1); the barrier materializes each
-    # doc's array once. Hashing runs AFTER the distinct so md5 touches each
+    # The cut is load-bearing: exploding a lambda-built array makes
+    # Generate re-evaluate the whole trigram construction per emitted row
+    # (measured 9s -> 1.4s at sf0.1); the barrier materializes each doc's
+    # array once. Hashing runs AFTER the distinct so md5 touches each
     # distinct (source, shingle) once, not every instance.
-    packed = (
-        shingle_arrays(docs, id_col="source")
-        .select(F.col("doc_id").alias("source"), "sh_arr")
-        .localCheckpoint(eager=False)
+    packed = cut(
+        shingle_arrays(docs, id_col="source").select(F.col("doc_id").alias("source"), "sh_arr")
     )
-    # r12: a second cut on the per-source vocabulary itself. The old form
-    # let sh's THREE consumers (sizes + both self-join sides) each re-run
-    # the corpus-scale explode and both distinct aggregations — the
-    # executed plan showed 4 Generate nodes and zero exchange reuse (the
-    # self-join's isnotnull(h) pushes into the join sides only, breaking
-    # canonical equality across consumers). Cutting the distinct
-    # (source, h) set runs the explode + distinct chain exactly once;
-    # interleaved A/B on one host: no cut 2.82 s, plain persist 2.62 (the
-    # cached plan pins the un-coalesced 32-partition shuffle layout —
-    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is off by
-    # default), localCheckpoint 2.20. The checkpoint matches the cut style
-    # this query already carries on `packed` one step below.
-    sh = (
+    # a second cut on the per-source vocabulary itself: sh's THREE consumers
+    # (sizes + both self-join sides) would each re-run the corpus-scale
+    # explode and both distinct aggregations — the self-join's isnotnull(h)
+    # pushes into the join sides only, breaking canonical equality across
+    # consumers, so no exchange is reused
+    sh = cut(
         packed.select("source", F.explode("sh_arr").alias("shingle"))
         .distinct()
-        .select(
-            "source", (hash60(F.col("shingle")) % PORTABLE_HASH_PRIME).alias("h")
-        )
+        .select("source", (hash60(F.col("shingle")) % PORTABLE_HASH_PRIME).alias("h"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("source").agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")

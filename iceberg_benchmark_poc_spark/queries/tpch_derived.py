@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..core.io import load_table
+from ..core.io import cut, load_table
 from ..core.registry import register
 
 # --- shared ANSI derivation snippets (valid in BOTH Spark SQL and DuckDB) ---
@@ -179,10 +179,10 @@ _Q11_MEAN_MULT = 2
 
 def _q11_stock_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part stock value for the Q11 nation — the sub-plan q_important_stock
-    consumes twice (scalar fold + row-wise cut). Kept un-checkpointed here so
+    consumes twice (scalar fold + row-wise cut). Kept uncut here so
     tests/test_plans.py can pin its physical shape (map-side partial agg, one
-    ps_partkey exchange); the query itself cuts the plan with a lazy
-    localCheckpoint. The supplier⋈nation(1/25) slice is SF-scaled, so its
+    ps_partkey exchange); the query itself cuts the plan there
+    (``core.io.cut``). The supplier⋈nation(1/25) slice is SF-scaled, so its
     join is planner-chosen, not hint-frozen (r10 advice); only the fixed
     25-row nation leg carries a hint."""
     ps = _partsupp(spark, sf_dir)
@@ -227,16 +227,15 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     The HAVING-vs-global-scalar shape: per-part stock value (integer
     cents * qty, exact) is consumed twice — once folded to the 1-row
     (total, part-count) scalar, once row-wise against the mean-relative
-    cut n*value > MULT*total; a lazy localCheckpoint cuts the plan there
-    (the _copurchase_pairs pattern) so the partsupp distinct shuffle and
-    the supplier join execute once, not once per consumer. Scale: the
-    nation's suppliers broadcast into the partsupp scan as one
-    pre-filtered `supplier ⋈ nation(NATION_3)` unit (1 of 25 nations),
-    per-part values partial-aggregate map-side, and the scalar joins back
-    as a 1-row broadcast (BNLJ_ALLOWED); nothing here ever sorts or
-    collects.
+    cut n*value > MULT*total; ``core.io.cut`` cuts the plan there so the
+    partsupp distinct shuffle and the supplier join execute once, not once
+    per consumer. Scale: the nation's suppliers broadcast into the
+    partsupp scan as one pre-filtered `supplier ⋈ nation(NATION_3)` unit
+    (1 of 25 nations), per-part values partial-aggregate map-side, and the
+    scalar joins back as a 1-row broadcast (BNLJ_ALLOWED); nothing here
+    ever sorts or collects.
     """
-    val = _q11_stock_values(spark, sf_dir).localCheckpoint(eager=False)
+    val = cut(_q11_stock_values(spark, sf_dir))
     scalar = val.agg(
         F.sum("value_cents").alias("total_cents"), F.count("*").alias("n_parts")
     )

@@ -110,16 +110,24 @@ def test_dup_clusters_star_fallback_matches_fast_path(spark, monkeypatch):
 
 
 def test_dup_clusters_job_counts(spark):
-    """Building q_dup_clusters runs at most 17 Spark jobs and executing it
-    at most 5: the counts at 1 and 4 cores when its CC step became one
-    operator call. The count is that of a repeat build, after a warm-up
-    call: a first build in a fresh session runs 2 more jobs at sf0.001
-    (19; 20 while table loads still inferred their schema in a job)."""
-    q_dup_clusters(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    df, build_jobs = jobs_of(spark, lambda: q_dup_clusters(spark, SF_DIR))
-    _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
-    assert build_jobs <= 17
-    assert exec_jobs <= 5
+    """Building q_dup_clusters runs at most 15 Spark jobs and executing it
+    at most 9 (sf0.001), and the counts do not depend on what ran before:
+    they are the same after a warm-up run and after clearing the cache,
+    because no step leaves cached state behind (every materialization is
+    a core.io.cut)."""
+
+    def build_and_run():
+        df, build_jobs = jobs_of(spark, lambda: q_dup_clusters(spark, SF_DIR))
+        _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
+        return build_jobs, exec_jobs
+
+    build_and_run()  # warm-up
+    after_warm_up = build_and_run()
+    spark.catalog.clearCache()
+    assert build_and_run() == after_warm_up
+    build_jobs, exec_jobs = after_warm_up
+    assert build_jobs <= 15
+    assert exec_jobs <= 9
 
 
 def test_stratified_sample_deterministic_and_rated(spark):

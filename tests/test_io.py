@@ -1,5 +1,6 @@
-"""core.io: job-free schema resolution per file state, its fallbacks, and
-the footer bounds that stand in for Spark's min/max folds.
+"""core.io: job-free schema resolution per file state, its fallbacks, the
+footer bounds that stand in for Spark's min/max folds, and ``cut``'s
+survival of an executor loss.
 
 Every table here is written with pyarrow (or with Spark) under ``tmp_path``,
 so each test owns its paths and the module-level footer cache cannot carry
@@ -12,6 +13,9 @@ from __future__ import annotations
 import datetime
 import math
 import os
+import subprocess
+import sys
+import textwrap
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -50,7 +54,8 @@ FOLD_SITES = (
 
 
 def _write_events(sf_dir) -> None:
-    # events.ts as the fixtures' physical type: TIMESTAMP(NANOS), not UTC-adjusted
+    # events.ts as TIMESTAMP(NANOS), not UTC-adjusted: the nanos layout of other
+    # writers (the fixtures store MICROS), read through nanosAsLong's BIGINT branch
     t0 = datetime.datetime(2024, 1, 1)
     pq.write_table(
         pa.table(
@@ -286,3 +291,84 @@ def test_fold_site_queries_build_without_a_job(spark):
         q(spark, SF_DIR)
         _, jobs = jobs_of(spark, lambda: q(spark, SF_DIR))
         assert jobs == 0, q.__name__
+
+
+#: a cut read by two actions with one of its two executors killed in between
+_KILL_PROBE = textwrap.dedent(
+    """
+    import time
+    from pyspark.sql import functions as F
+    from iceberg_benchmark_poc_spark.core import cut, get_spark
+
+    spark = get_spark(
+        app_name="cut-executor-loss",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"},
+    )
+    sc = spark.sparkContext._jsc.sc()
+    deadline = time.time() + 120
+    while sc.getExecutorIds().size() < 2:
+        assert time.time() < deadline, "executors did not register"
+        time.sleep(0.2)
+    # 8 uncoalesced partitions over two one-core executors: blocks on both
+    groups = cut(
+        spark.range(0, 40000)
+        .groupBy((F.col("id") % 997).alias("k"))
+        .agg(F.sum("id").alias("s"), F.count("*").alias("n"))
+    )
+
+    def consume():
+        a, b = groups.alias("a"), groups.alias("b")
+        return tuple(
+            a.join(b, F.col("a.k") == (F.col("b.k") + 1) % 997)
+            .agg(F.sum(F.col("a.s") * F.col("b.n")), F.count("*"))
+            .collect()[0]
+        )
+
+    first = consume()
+    victim = sc.getExecutorIds().apply(0)
+    assert sc.killExecutor(victim)
+    while victim in sc.getExecutorIds().mkString(",").split(","):
+        assert time.time() < deadline, "executor was not removed"
+        time.sleep(0.2)
+    second = consume()
+    assert first == second, (first, second)
+    spark.stop()
+    """
+)
+
+
+def test_cut_survives_the_loss_of_an_executor():
+    """A cut outlives the executor that computed its blocks: on a
+    two-executor cluster, one action reads the cut, one executor is killed,
+    and a self-join plus aggregate over the same cut returns the same row.
+    A plain local checkpoint fails the second read with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; the second replica is what survives.
+    Runs in its own process, since the master of the suite's session is
+    local."""
+    import pyspark
+
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    if not os.path.isdir(spark_home):
+        pytest.skip(f"no Spark distribution at SPARK_HOME={spark_home}")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_MASTER="local-cluster[2,1,1024]",
+        SPARK_HOME=spark_home,
+        # Spark's test mode gives each local-cluster worker a temporary work
+        # directory, deleted on exit, instead of $SPARK_HOME/work
+        SPARK_TESTING="1",
+        PYTHONPATH=os.pathsep.join(filter(None, (root, os.environ.get("PYTHONPATH")))),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _KILL_PROBE],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    # the probe's stderr without the JVM stack frames, which bury the error class
+    log = [line for line in proc.stderr.splitlines() if not line.lstrip().startswith("at ")]
+    assert proc.returncode == 0, "\n".join(log)[-4000:]

@@ -612,7 +612,7 @@ def test_prefix_scan_range_ids_live_only_in_the_operator():
     """One prefix-scan path: range ids (width_bucket, the __range_pid
     column) are built only in operators/prefix.py — no query inlines its
     own copy of the scan — and the operator has no sampled-boundary mode
-    (repartitionByRange) or lineage cut (localCheckpoint)."""
+    (repartitionByRange)."""
     pkg = Path(__file__).resolve().parents[1] / "iceberg_benchmark_poc_spark"
     prefix = pkg / "operators" / "prefix.py"
     offenders = [
@@ -621,8 +621,29 @@ def test_prefix_scan_range_ids_live_only_in_the_operator():
         if path != prefix and re.search(r"width_bucket|__range_pid", path.read_text())
     ]
     assert not offenders, f"range ids built outside operators/prefix.py: {offenders}"
-    src = prefix.read_text()
-    assert "localCheckpoint" not in src and "repartitionByRange" not in src
+    assert "repartitionByRange" not in prefix.read_text()
+
+
+#: the calls that materialize a frame outside core.io.cut
+_MATERIALIZE_CALLS = re.compile(
+    r"localCheckpoint|\.persist\(|\.cache\(\)|\.checkpoint\(|unpersist|StorageLevel"
+)
+
+
+def test_queries_and_operators_materialize_only_through_cut():
+    """One materialization policy: every query and operator materializes a
+    frame through core.io.cut (a lazy local checkpoint replicated on two
+    executors), never with its own persist, cache, checkpoint or storage
+    level, and never unpersists."""
+    pkg = Path(__file__).resolve().parents[1] / "iceberg_benchmark_poc_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for sub in ("queries", "operators")
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _MATERIALIZE_CALLS.search(line)
+    ]
+    assert not offenders, "materialized outside core.io.cut:\n" + "\n".join(offenders)
 
 
 def test_minhash_lsh_path_is_defined_once():
@@ -873,16 +894,16 @@ def test_forecast_revenue_is_a_pure_pushed_scan(spark):
 
 
 def test_bpe_band_is_flat_above_its_checkpoints(spark):
-    """q_bpe_encode's plan must stay the minimal shape: ONE cached type
-    dictionary (InMemoryRelation over the single corpus-scale word-count
-    shuffle) -> the literal replace chain -> explode -> map-side partial
-    sum -> ONE token exchange. All 10 merge rounds are literal expressions
-    over the cache (argmaxes are driver scalars), so the plan contains no
-    joins and no per-round subtrees."""
+    """q_bpe_encode's plan must stay the minimal shape: ONE cut type
+    dictionary (a checkpoint of the single corpus-scale word-count shuffle)
+    -> the literal replace chain -> explode -> map-side partial sum -> ONE
+    token exchange. All 10 merge rounds are literal expressions over the
+    cut (argmaxes are driver scalars), so the plan contains no joins and no
+    per-round subtrees."""
     plan = plan_of(spark, "q_bpe_encode")
-    assert "InMemoryTableScan" in plan  # the cached dictionary cut
-    # token-agg exchange + the cached dictionary's word-count exchange,
-    # which AQE's explain prints twice (final + initial plan)
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan  # the dictionary cut
+    # the token-agg exchange, which AQE's explain may print twice (final +
+    # initial plan); the word-count exchange sits behind the cut
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 3
     assert "partial_sum" in plan
     assert "Join" not in plan  # merge rounds are expressions, never joins
@@ -899,7 +920,7 @@ def test_bpe_band_is_flat_above_its_checkpoints(spark):
 def test_important_stock_scalar_joins_back_as_one_row_broadcast(spark):
     """q_important_stock (Q11 shape): the national total/count scalar is a
     1-row broadcast (the allowlisted BNLJ), and the doubly-consumed value
-    sub-plan sits behind a lazy localCheckpoint so the partsupp distinct
+    sub-plan sits behind a cut (core.io.cut) so the partsupp distinct
     shuffle executes once, not once per consumer. The per-part aggregation's
     own shape (map-side partial, one ps_partkey exchange) is pinned on the
     un-checkpointed helper, since the checkpoint hides it from the top plan."""

@@ -610,12 +610,7 @@ def test_prefix_scan_materializes_one_range_exchange(spark, name):
     range exchange: the offsets side plans a ReusedExchange, so everything
     upstream (q_corpus_select's keeper aggregation, q_skyline's per-price
     collapse) runs once. Checked on the final AQE plan after execution,
-    because AQE decides stage reuse at run time.
-
-    q_equidepth_hist scans a CACHED histogram. AQE gives every cached-scan
-    occurrence its own TableCacheQueryStage and never reuses an exchange
-    above two of them, so there each phase has its own range exchange —
-    but both must read the cache directly, re-running nothing upstream."""
+    because AQE decides stage reuse at run time."""
     from iceberg_benchmark_poc_spark.core.registry import all_queries
 
     from .conftest import SF_DIR
@@ -627,13 +622,7 @@ def test_prefix_scan_materializes_one_range_exchange(spark, name):
         i for i, line in enumerate(lines) if "+- Exchange hashpartitioning(__range_pid" in line
     ]
     reused = [line for line in lines if "ReusedExchange" in line and "__range_pid" in line]
-    if name == "q_equidepth_hist":
-        assert len(materialized) == 2, "\n".join(lines)
-        for i in materialized:
-            stage = next(line for line in lines[i + 1 :] if "QueryStage" in line)
-            assert "TableCacheQueryStage" in stage, "\n".join(lines)
-    else:
-        assert len(materialized) == 1 and reused, "\n".join(lines)
+    assert len(materialized) == 1 and reused, "\n".join(lines)
 
 
 def test_ann_query_sets_constant_across_sf(spark):
