@@ -386,6 +386,14 @@ def spread_narrow(df: DataFrame, *keys: str) -> DataFrame:
     (hash of deterministic columns) — never round-robin ``repartition(n)``,
     which pays a local sort of the full rows (SPARK-23207) and was measured
     1.7x WORSE in r11 for exactly this purpose.
+
+    Precondition: ``df`` is narrow over a file scan (filters and
+    projections only). Then ``df.rdd.getNumPartitions()`` only plans the
+    scan's splits and runs no Spark job; every caller passes such a frame,
+    which is why q_dv_payload_roundtrip, for one, builds in zero jobs.
+    Over an exchange or a sort the same call executes the stages
+    below it at build time: one job over a groupBy, two over an orderBy,
+    measured at sf0.001 (tests/test_io.py pins the scan and groupBy cases).
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

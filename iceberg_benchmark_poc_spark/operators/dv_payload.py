@@ -180,6 +180,8 @@ _STATS_SCHEMA = StructType(
 
 
 def _stats_frame(file_ids: pd.Series, drcs: pd.Series, gen, encode) -> pd.DataFrame:
+    """Per-file stats of ``gen``'s position set, which must not be empty:
+    the queries pass only files whose set the oracle's range join keeps."""
     rows = []
     for fid, drc in zip(file_ids.astype("int64"), drcs.astype("int64")):
         out = decode_positions_any_np(encode(gen(int(fid), int(drc))))
@@ -188,21 +190,26 @@ def _stats_frame(file_ids: pd.Series, drcs: pd.Series, gen, encode) -> pd.DataFr
     return pd.DataFrame(rows, columns=["n_deleted", "min_pos", "max_pos", "pos_sum"])
 
 
+# The generators run the oracles' formulas with np.fmod, the truncated `%`
+# of Spark and DuckDB (numpy's and Python's `%` floor, which differs for a
+# negative file_id).
+
+
 def _gen_mdv1(fid: int, drc: int) -> np.ndarray:
     # q_dv_payload_roundtrip: (fid*17 + j*13) % 1000 for j < drc
-    return (fid * 17 + np.arange(drc, dtype=np.int64) * 13) % 1000
+    return np.fmod(fid * 17 + np.arange(drc, dtype=np.int64) * 13, 1000)
 
 
 def _gen_roaring(fid: int, drc: int) -> np.ndarray:
     # q_roaring_roundtrip: (fid*31 + j*7) % 60000 for j < drc*8
-    return (fid * 31 + np.arange(drc * 8, dtype=np.int64) * 7) % 60000
+    return np.fmod(fid * 31 + np.arange(drc * 8, dtype=np.int64) * 7, 60000)
 
 
 def _gen_runs(fid: int, drc: int) -> np.ndarray:
     # q_roaring_runs: one contiguous block of drc*8 at (fid*13)%5000, plus
     # 1 + drc%64 positions in the next 65536-key chunk
-    a = (fid * 13) % 5000 + np.arange(drc * 8, dtype=np.int64)
-    b = 65536 + fid % 100 + np.arange(1 + drc % 64, dtype=np.int64)
+    a = np.fmod(fid * 13, 5000) + np.arange(drc * 8, dtype=np.int64)
+    b = 65536 + np.fmod(fid, 100) + np.arange(1 + np.fmod(drc, 64), dtype=np.int64)
     return np.concatenate([a, b])
 
 

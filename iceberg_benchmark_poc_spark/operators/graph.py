@@ -1,9 +1,12 @@
 """Connected components and BFS over (src, dst) edge DataFrames.
 
 ``connected_components`` is the one CC operator. It runs min-label
-propagation (the DataFrame form of Pregel/GraphX cc), which converges in
-O(diameter) rounds: two or three for the near-clique graphs of duplicate
-clusters. A path graph needs n rounds, so past ``MAX_LP_ROUNDS`` the
+propagation as message passing (the DataFrame form of Pregel/GraphX cc):
+each node's row holds its label and its adjacency array, and a round is one
+exchange in which every node sends its label to its neighbors and keeps the
+least label it sees. It converges in O(diameter) rounds: one for the
+near-clique graphs of duplicate clusters, whose round-0 labels are already
+the fixed point. A path graph needs n rounds, so past ``MAX_LP_ROUNDS`` the
 operator switches to ``connected_components_star``: the alternating
 large-star / small-star algorithm (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SoCC'14 — public literature), which converges in
@@ -19,8 +22,8 @@ The star operators are one groupBy each per round:
 
 The star fixed point is a star forest: every node points at its
 component's minimum. Both algorithms detect convergence with one scalar agg
-per round: a stable label sum (labels never increase) or a stable edge
-multiset hash.
+per round: whether any label changed (labels never increase, so a round
+that changes none is the fixed point) or a stable edge multiset hash.
 """
 
 from __future__ import annotations
@@ -55,49 +58,83 @@ def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node on an edge; component = min node id.
 
     Input: DataFrame with columns (src, dst), read as undirected. Nodes
-    without an edge are the caller's concern. Label propagation runs over
-    the cut symmetric edge set; each round is one join + groupBy + join,
-    cut, and a round's convergence check is the agg that materializes its
-    cut: one job per round. Past ``MAX_LP_ROUNDS`` the star algorithm takes
-    over.
+    without an edge are the caller's concern.
+
+    Min-label propagation in message-passing form. The state is one row per
+    node, ``(node, component, nbrs)``: its label and its adjacency as one
+    array. A round explodes ``nbrs`` into one message per neighbor carrying
+    the sender's label, unions the messages with the nodes' own rows, and
+    runs ONE groupBy(node): the new label is ``least(own, min(msg))``, the
+    row is ``changed`` when a message undercut it, and the adjacency rides
+    through unchanged. The state is cut each round and one scalar fold,
+    ``max(changed)``, both materializes the cut and tests convergence.
+    Past ``MAX_LP_ROUNDS`` the star algorithm takes over.
+
+    Degree bound: a node's whole adjacency is one array row, so one node's
+    degree is bounded by what one row (and one task's aggregation buffer)
+    can hold. A round shuffles the state once (|V| labels plus |E|
+    neighbor ids) and the messages, which the map-side partial aggregate
+    folds to at most one per node and map partition.
     """
-    sym = cut(symmetrize(edges))
-    # round 0 fused into label construction: every node starts at
-    # min(itself, its direct neighbors), one aggregation over sym; for
-    # near-clique components this already IS the fixed point
-    labels = cut(
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("nbr_min"))
-        .select("node", F.least(F.col("node"), F.col("nbr_min")).alias("component"))
+    # round 0 fused into state construction: every node starts at
+    # min(itself, its direct neighbors), one aggregation over the symmetric
+    # edges; for near-clique components this already IS the fixed point
+    state = cut(
+        symmetrize(edges)
+        .groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("nbr_min"), F.collect_list("dst").alias("nbrs"))
+        .select("node", F.least(F.col("node"), F.col("nbr_min")).alias("component"), "nbrs")
     )
-    # labels never increase, so an unchanged SUM proves an unchanged label
-    # vector. Every round is checked: a missed converged round costs a full
-    # join+groupBy+join round, more than the scalar fold (checking sparsely,
-    # or comparing rounds r and r-1 in one job, ran more jobs on the fixtures)
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
     for _ in range(MAX_LP_ROUNDS):
-        nbr_min = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        labels = cut(
-            labels.join(nbr_min, "node", "left").select(
-                "node",
-                F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias(
-                    "component"
-                ),
-            )
-        )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:
+        state = cut(_propagate(state))
+        # labels never increase, so a round in which no message undercut a
+        # label is the fixed point (an empty graph folds to NULL)
+        if not state.agg(F.max("changed")).collect()[0][0]:
             break
-        prev_sum = cur_sum
     else:
         # high diameter (chained near-duplicates, a path): stopping here
         # would under-merge, so recompute with the O(log n) star algorithm
-        labels = connected_components_star(sym)
-    return labels
+        # over the adjacency the state already holds
+        return connected_components_star(
+            state.select(F.col("node").alias("src"), F.explode("nbrs").alias("dst"))
+        )
+    return state.select("node", "component")
+
+
+def _propagate(state: DataFrame) -> DataFrame:
+    """One label-propagation round over ``(node, component, nbrs)``: the
+    next state plus ``changed``, in one exchange."""
+    label_type, nbrs_type = state.schema["component"].dataType, state.schema["nbrs"].dataType
+    own = state.select(
+        "node",
+        F.col("component").alias("own"),
+        F.lit(None).cast(label_type).alias("msg"),
+        "nbrs",
+    )
+    msgs = state.select(
+        F.explode("nbrs").alias("node"),
+        F.lit(None).cast(label_type).alias("own"),
+        F.col("component").alias("msg"),
+        F.lit(None).cast(nbrs_type).alias("nbrs"),
+    )
+    # every node has one own row (the only non-NULL own and nbrs) and at
+    # least one message; collect_list skips the message rows' NULL nbrs and,
+    # being an object aggregate, keeps the round hash-aggregated
+    return (
+        own.unionByName(msgs)
+        .groupBy("node")
+        .agg(
+            F.max("own").alias("own"),
+            F.min("msg").alias("msg"),
+            F.flatten(F.collect_list("nbrs")).alias("nbrs"),
+        )
+        .select(
+            "node",
+            F.least(F.col("own"), F.col("msg")).alias("component"),
+            "nbrs",
+            (F.col("msg") < F.col("own")).alias("changed"),
+        )
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -138,8 +175,8 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
     for _ in range(MAX_STAR_ROUNDS):
         cur = cut(_small_star(_large_star(cur)))
         # edge-multiset signature: order-insensitive sum of a mixed hash —
-        # one scalar agg materializes the round (the same one-job-per-round
-        # pattern as the label-sum check)
+        # one scalar agg materializes the round (the same one-fold-per-round
+        # pattern as label propagation's changed check)
         sig = cur.select(
             F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("s"),
             F.count("*").alias("n"),

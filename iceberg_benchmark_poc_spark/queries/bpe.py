@@ -19,7 +19,7 @@ this band is capability beyond the reference by design):
    a handful of partitions while the corpus does not.
 
 Iteration collects the per-round 1-row argmax to the driver (the same
-per-iteration-scalar class as the label-sum convergence fold of
+per-iteration-scalar class as the ``max(changed)`` convergence fold of
 operators.graph.connected_components) and
 chains the merge rewrite as literal replace expressions over ONE cut
 type dictionary — one scheduler barrier per merge round, which is the

@@ -65,9 +65,12 @@ def q_dv_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # the codec UDF is pure per-file work off a possibly single-split scan:
     # spread the sampled rows before it (no-op at production split counts)
+    # the oracle's `j < deleted_row_count` range join yields no position,
+    # and so no row, for a count <= 0 (a negative file_id's): drop those
+    # files before the codec, which needs a non-empty set
     dv = spread_narrow(
         dv_entries(spark, sf_dir)
-        .filter(F.col("file_id") % SAMPLE_MOD == 0)
+        .filter((F.col("file_id") % SAMPLE_MOD == 0) & (F.col("deleted_row_count") > 0))
         .select("file_id", "deleted_row_count"),
         "file_id",
     )
@@ -116,9 +119,10 @@ def q_roaring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     container codecs are exercised and any single-bit corruption in either
     breaks the oracle's value hash.
     """
+    # empty position sets dropped as in q_dv_payload_roundtrip
     dv = spread_narrow(
         dv_entries(spark, sf_dir)
-        .filter(F.col("file_id") % ROARING_SAMPLE_MOD == 0)
+        .filter((F.col("file_id") % ROARING_SAMPLE_MOD == 0) & (F.col("deleted_row_count") > 0))
         .select("file_id", "deleted_row_count"),
         "file_id",
     )
@@ -177,9 +181,11 @@ def q_roaring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays are built, encoded, decoded, and aggregated inside the scan
     partition, zero shuffles, same as q_roaring_roundtrip.
     """
+    # a file whose two blocks are both empty has no row in the oracle
+    drc = F.col("deleted_row_count")
     dv = spread_narrow(
         dv_entries(spark, sf_dir)
-        .filter(F.col("file_id") % RUNS_SAMPLE_MOD == 0)
+        .filter((F.col("file_id") % RUNS_SAMPLE_MOD == 0) & ((drc * 8 > 0) | (1 + drc % 64 > 0)))
         .select("file_id", "deleted_row_count"),
         "file_id",
     )

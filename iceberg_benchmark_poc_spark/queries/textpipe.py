@@ -1215,10 +1215,13 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     member; keep one keeper per cluster.
 
     Components come from operators.graph.connected_components: label
-    propagation, O(diameter) rounds, which suits near-clique duplicate
-    clusters; past its round cap (chained near-duplicates can form a long
-    path) it switches to the O(log n) large-star/small-star algorithm, so
-    worst-case topology is a latency cost, not under-merged clusters.
+    propagation as message passing, one exchange per round and O(diameter)
+    rounds, which suits near-clique duplicate clusters (on the fixtures the
+    round-0 labels are already the fixed point, so one round and one
+    ``max(changed)`` fold prove it); past its round cap (chained
+    near-duplicates can form a long path) it switches to the O(log n)
+    large-star/small-star algorithm, so worst-case topology is a latency
+    cost, not under-merged clusters.
 
     The DuckDB twin computes the same components with a recursive CTE —
     transitive closure is only tractable on verified-duplicate edges, which

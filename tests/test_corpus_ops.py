@@ -110,7 +110,7 @@ def test_dup_clusters_star_fallback_matches_fast_path(spark, monkeypatch):
 
 
 def test_dup_clusters_job_counts(spark):
-    """Building q_dup_clusters runs at most 15 Spark jobs and executing it
+    """Building q_dup_clusters runs at most 8 Spark jobs and executing it
     at most 9 (sf0.001), and the counts do not depend on what ran before:
     they are the same after a warm-up run and after clearing the cache,
     because no step leaves cached state behind (every materialization is
@@ -126,7 +126,7 @@ def test_dup_clusters_job_counts(spark):
     spark.catalog.clearCache()
     assert build_and_run() == after_warm_up
     build_jobs, exec_jobs = after_warm_up
-    assert build_jobs <= 15
+    assert build_jobs <= 8
     assert exec_jobs <= 9
 
 

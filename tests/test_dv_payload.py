@@ -306,3 +306,34 @@ def test_roaring_bytes_identical_to_java_roaringbitmap(spark):
             assert roaring_deserialize(theirs) == sorted(set(vals)), (
                 f"{name} run_opt={ro}: decoder failed on java bytes"
             )
+
+
+# --- the registered roundtrip queries on negative file ids -----------------
+
+
+def test_roundtrip_queries_drop_negative_files_like_their_oracles(spark, tmp_path):
+    """A negative file_id gets ``1 + (file_id*17) % 1000 <= 0`` deleted rows
+    under the truncated ``%`` of both engines (file_id = -300 gives -99), so
+    the oracles' range joins produce no position and no row for it. The
+    three roundtrip queries must drop such a file too, instead of handing
+    the codec an empty set, and q_roaring_runs must not keep its second
+    block (``1 + drc % 64`` positions) for one."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_benchmark_poc_spark.core.registry import all_queries
+
+    from .conftest import compare_query_to_oracle
+
+    keys = [-1000, -450, -300, -150, -1, 0, 1, 150, 300, 450, 1000, 3000]
+    pq.write_table(pa.table({"o_orderkey": pa.array(keys, pa.int64())}), tmp_path / "orders.parquet")
+    duck = duckdb.connect()
+    duck.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')")
+    queries = all_queries()
+    for name in ("q_dv_payload_roundtrip", "q_roaring_roundtrip", "q_roaring_runs"):
+        q = queries[name]
+        compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=str(tmp_path))
+        file_ids = {r["file_id"] for r in q.fn(spark, str(tmp_path)).collect()}
+        assert -300 not in file_ids and 300 in file_ids, (name, file_ids)
+    duck.close()

@@ -85,6 +85,42 @@ def test_cc_on_disjoint_cliques(spark, cc):
             assert got[base + i] == base
 
 
+@CC_FUNCTIONS
+def test_cc_on_a_hub_with_a_tail(spark, cc):
+    """One node of degree 2,000 (its adjacency is a single array row of the
+    label-propagation state) plus a ten-edge tail path hanging off it."""
+    hub = 10_000
+    edges = [(hub, leaf) for leaf in range(1, 2_001)]
+    edges += [(hub + i, hub + i + 1) for i in range(10)]
+    assert _run(spark, cc, edges) == union_find(edges)
+
+
+def test_cc_stops_after_one_round_at_a_round_0_fixed_point(spark, monkeypatch):
+    """Disjoint cliques: every node is adjacent to its component's minimum,
+    so the state built in round 0 is already the answer. One propagation
+    round, and its one convergence fold, prove it; the star algorithm never
+    runs."""
+    from iceberg_benchmark_poc_spark.operators import graph
+
+    rounds, star_calls = [], []
+    real_propagate = graph._propagate
+
+    def propagate(state):
+        rounds.append(state)
+        return real_propagate(state)
+
+    monkeypatch.setattr(graph, "_propagate", propagate)
+    monkeypatch.setattr(graph, "connected_components_star", star_calls.append)
+    edges = []
+    for base in (0, 100, 200):
+        nodes = [base + i for i in range(5)]
+        edges += [(a, b) for a in nodes for b in nodes if a < b]
+    got = _run(spark, graph.connected_components, edges)
+    assert got == union_find(edges)
+    assert len(rounds) == 1
+    assert star_calls == []
+
+
 # ---------------------------------------------------------------------------
 # bfs_distances (q_khop's engine): exact min-hop distances
 # ---------------------------------------------------------------------------

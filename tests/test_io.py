@@ -30,6 +30,7 @@ from iceberg_benchmark_poc_spark.core.io import (
     ensure_session_confs,
     load_table,
     read_parquet,
+    spread_narrow,
     table_bounds,
 )
 from iceberg_benchmark_poc_spark.queries.behavior import q_power_users, q_rfm_segments
@@ -292,6 +293,25 @@ def test_fold_site_queries_build_without_a_job(spark):
         _, jobs = jobs_of(spark, lambda: q(spark, SF_DIR))
         assert jobs == 0, q.__name__
 
+
+
+def test_spread_narrow_is_job_free_only_over_a_scan(spark):
+    """spread_narrow reads the partition count of q_dv_payload_roundtrip's
+    input, a filtered projection of the orders scan, without running a
+    job, so that query builds in none. The same call over a groupBy runs
+    the groupBy's shuffle stage: the zero-job contract needs a scan."""
+    from iceberg_benchmark_poc_spark.core.fixtures import dv_entries
+    from iceberg_benchmark_poc_spark.queries.dv_payload import SAMPLE_MOD, q_dv_payload_roundtrip
+
+    dv = (
+        dv_entries(spark, SF_DIR)
+        .filter((F.col("file_id") % SAMPLE_MOD == 0) & (F.col("deleted_row_count") > 0))
+        .select("file_id", "deleted_row_count")
+    )
+    assert jobs_of(spark, lambda: spread_narrow(dv, "file_id"))[1] == 0
+    assert jobs_of(spark, lambda: q_dv_payload_roundtrip(spark, SF_DIR))[1] == 0
+    grouped = dv.groupBy("file_id").count()
+    assert jobs_of(spark, lambda: spread_narrow(grouped, "file_id"))[1] > 0
 
 #: a cut read by two actions with one of its two executors killed in between
 _KILL_PROBE = textwrap.dedent(
