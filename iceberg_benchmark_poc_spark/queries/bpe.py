@@ -1,5 +1,5 @@
 """Byte-pair-encoding tokenizer over the documents corpus — vocab training
-and corpus encoding as pure DataFrame plans.
+and corpus encoding as one word-count shuffle plus one Python task.
 
 The LLM-pipeline band's token accounting (q_token_stats) estimates with a
 chars/4 heuristic; a real training-data pipeline costs its corpus with a
@@ -14,35 +14,43 @@ this band is capability beyond the reference by design):
    symbol pairs weighted by word count, pick the most frequent (ties break
    on pair text so both engines agree), rewrite every type's symbol string.
    Everything after step 1 operates on data bounded by VOCABULARY size
-   (Heaps' law — sublinear in corpus size), never by corpus size: that is
-   what keeps the plan viable at 100 TB, where the dictionary still fits in
-   a handful of partitions while the corpus does not.
+   (Heaps' law — sublinear in corpus size), never by corpus size.
 
-Iteration collects the per-round 1-row argmax to the driver (the same
-per-iteration-scalar class as the ``max(changed)`` convergence fold of
-operators.graph.connected_components) and
-chains the merge rewrite as literal replace expressions over ONE cut
-type dictionary — one scheduler barrier per merge round, which is the
-recurrence's inherent minimum (see _bpe_rounds).
+Step 2 is a recurrence over a dictionary of tens of rows at the fixture
+scales, so it runs as ONE Python task (``mapInPandas`` over the dictionary
+coalesced to one partition — see _train), the way sentencepiece and HF
+tokenizers train on type counts in one process. Both plans are lazy: no
+job runs while they are built, and executing one is the word-count shuffle
+plus the task. The task holds the whole dictionary, so the vocabulary
+bound is checked in code: the trainer refuses a dictionary of more than
+MAX_WORD_TYPES types with an error naming its size.
 
-Cross-engine parity: every string op in the hot path — char split via
-``split(w, '')``, adjacent pairs via index ``transform``, merge via padded
-non-overlapping left-to-right ``replace`` — was probe-verified to behave
-identically in Spark and DuckDB; the merge expression itself is written
-ONCE as ANSI text both engines evaluate (the module's _MERGE_SQL). Counts
-are BIGINT end-to-end.
+Cross-engine parity: the oracles unroll the same rounds in DuckDB SQL, and
+the merge rewrite is written ONCE as ANSI text (_MERGE_SQL) that the
+oracles run verbatim and _merge mirrors call for call in Python — padded
+non-overlapping left-to-right ``replace`` behaves identically in both
+(probe-verified). Ties order pair text by codepoint in Python and DuckDB
+alike. Counts are BIGINT end-to-end.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core.io import cut, load_table
+from ..core.io import load_table
 from ..core.registry import register
 
 #: bounded merge budget — enough to merge the synthetic corpus's frequent
-#: stems while keeping the unrolled loop at one scheduler barrier per round
+#: stems; rounds stop early once no adjacent pair is left
 BPE_MERGES = 10
+
+#: most word types the one training task holds in memory (a few hundred
+#: bytes per type as Python strings and pair counts, so about a GB at
+#: most); a corpus whose dictionary exceeds it needs a sharded trainer
+MAX_WORD_TYPES = 2_000_000
 
 #: end-of-word marker appended as its own symbol (classic BPE): merges may
 #: absorb it (``n </w>`` -> ``n</w>``) so learned tokens distinguish suffixes
@@ -50,9 +58,8 @@ BPE_MERGES = 10
 #: marker cannot collide with real text
 BPE_EOW = "</w>"
 
-#: the merge rewrite as ANSI SQL — the oracle runs this text verbatim, and
-#: the Spark side applies the IDENTICAL algorithm as literal ``F.replace``
-#: expressions with the collected pair (see _bpe_rounds).
+#: the merge rewrite as ANSI SQL — the oracles run this text verbatim and
+#: _merge is the same chain in Python.
 #: DOUBLE every separator first, so each symbol boundary carries two spaces
 #: and the single-space-padded pattern consumes only ONE of them per side:
 #: disjoint adjacent occurrences ('b a n a n a' + pair 'a n') then both
@@ -70,13 +77,53 @@ _MERGE_SQL = (
     " ' ' || replace(pair, ' ', '') || ' ')), '  ', ' ') END"
 )
 
-#: adjacent-pair extraction (Spark side; sequence(1,0) is DESCENDING, not
-#: empty, so single-symbol rows are filtered before the transform)
-_PAIRS_EXPR = (
-    "transform(sequence(1, size(split(seq, ' ')) - 1),"
-    " i -> concat(element_at(split(seq, ' '), i), ' ',"
-    " element_at(split(seq, ' '), i + 1)))"
-)
+
+def _merge(seq: str, pair: str) -> str:
+    """_MERGE_SQL for a non-NULL pair. It strips ``" "`` only, as Spark SQL's
+    ``trim`` does: the ``\\s+`` word split leaves characters such as U+00A0
+    inside words, and a bare ``strip()`` would eat them. (DuckDB's ``trim``
+    also strips Unicode space separators, so the oracles would diverge on
+    a word starting or ending in one; the fixture corpora have none.)"""
+    padded = " " + seq.replace(" ", "  ") + " "
+    merged = padded.replace(" " + pair.replace(" ", "  ") + " ", " " + pair.replace(" ", "") + " ")
+    return merged.strip(" ").replace("  ", " ")
+
+
+def _train(seqs: list[str], weights: list[int]) -> tuple[list[tuple], list[str]]:
+    """All BPE_MERGES rounds over the type dictionary: (merge table rows
+    ``(rank, pair, merged, count)``, final symbol strings aligned with
+    ``seqs``). Each round counts adjacent pairs weighted by word count,
+    takes the arg-max by ``(-count, pair)`` and rewrites every type; the
+    first round with no pair left ends training, as the oracles' empty
+    ``LIMIT 1`` does."""
+    if len(seqs) > MAX_WORD_TYPES:
+        raise ValueError(
+            f"BPE dictionary has {len(seqs)} word types, over MAX_WORD_TYPES={MAX_WORD_TYPES}"
+        )
+    merges: list[tuple] = []
+    for rank in range(BPE_MERGES):
+        counts: dict[str, int] = {}
+        for seq, w in zip(seqs, weights):
+            syms = seq.split(" ")
+            for a, b in zip(syms, syms[1:]):
+                p = a + " " + b
+                counts[p] = counts.get(p, 0) + w
+        if not counts:
+            break
+        pair, cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rank, pair, pair.replace(" ", ""), cnt))
+        seqs = [_merge(s, pair) for s in seqs]
+    return merges, seqs
+
+
+def _dictionary(batches: Iterable[pd.DataFrame]) -> tuple[list[str], list[int]]:
+    """The task's whole (seq, weight) input as two aligned lists."""
+    seqs: list[str] = []
+    weights: list[int] = []
+    for b in batches:
+        seqs += b["seq"].tolist()
+        weights += b["weight"].tolist()
+    return seqs, weights
 
 
 def _word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,87 +142,10 @@ def _word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _best_pair(words: DataFrame) -> DataFrame:
-    """1-row (pair, cnt): the most frequent adjacent symbol pair, ties broken
-    on pair text ascending — min over the (-cnt, pair) struct, so no sort and
-    no limit; both engines order ASCII strings by codepoint."""
-    pairs = (
-        words.filter(F.expr("size(split(seq, ' ')) >= 2"))
-        .select("weight", F.explode(F.expr(_PAIRS_EXPR)).alias("pair"))
-        .groupBy("pair")
-        .agg(F.sum("weight").cast("bigint").alias("cnt"))
-    )
-    return (
-        pairs.select(F.struct((-F.col("cnt")).alias("nc"), F.col("pair").alias("pair")).alias("s"))
-        .agg(F.min("s").alias("s"))
-        .select(F.col("s.pair").alias("pair"), (-F.col("s.nc")).cast("bigint").alias("cnt"))
-    )
-
-
-def _bpe_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[tuple]]:
-    """Run BPE_MERGES rounds; returns (final word types, per-round
-    (pair, cnt) scalars).
-
-    The per-round 1-row argmax is COLLECTED to the driver (the same
-    per-iteration-scalar class as q_dup_clusters' convergence fold: one row
-    of constant size at any corpus scale) and the merge rewrite is applied
-    as a literal expression — the BPE recurrence is inherently one
-    synchronization barrier per merge, so the collect IS the barrier and
-    everything else rides on it.
-
-    Round i's words relation is the cut type dictionary with i literal
-    replace expressions chained on top — no per-round cut, which would make
-    every argmax read a fresh RDD (an extra scheduler job per round); the
-    chained form re-applies i string replaces over the cut base inside the
-    argmax's own scan stage. The rewrite chain is vocabulary-scale narrow
-    work (BPE_MERGES * |types| replaces in total across the loop — at 10M
-    types and 10 merges that is bounded map work fused into stages that
-    already scan those rows), and the expression tree grows by a constant
-    per round, so plan size stays trivial."""
-    # narrow the cut dictionary: it is vocabulary-bounded (tens of rows
-    # here, ~10M types at web scale — kilobytes per partition either way),
-    # and every round job re-launches one task per partition, so width is
-    # pure scheduler overhead
-    words = cut(_word_types(spark, sf_dir).coalesce(8))
-    bests: list[tuple] = []
-    # AQE stays ON for the argmax collects. r11 turned it off on a job-count
-    # argument (AQE materializes each exchange as its own scheduler job),
-    # but the r12 A/B (commit 90b7d3f, interleaved medians on one host)
-    # measured the OPPOSITE on wall: persist+AQE-on 2.31 s vs the committed
-    # persist+AQE-off 2.55-2.60 s at sf0.1 — AQE's coalescing of the tiny
-    # pair-aggregation shuffle outweighs its extra per-exchange jobs, and
-    # the driver's PERF showed the off-form as the round's one regression
-    # (0.88x). Dropping the toggle also removes the session-global conf
-    # mutation (ADVICE r11: racy if queries ever run concurrently).
-    for _ in range(BPE_MERGES):
-        row = _best_pair(words).collect()[0]  # 1-row scalar argmax
-        pair, cnt = row["pair"], row["cnt"]
-        bests.append((pair, cnt))
-        if pair is None:
-            # no adjacent pair left anywhere: every later round is a no-op
-            # (_MERGE_SQL's NULL case passed seq through unchanged)
-            bests.extend([(None, None)] * (BPE_MERGES - len(bests)))
-            break
-        # literal form of _MERGE_SQL: double every separator, replace the
-        # single-space-padded doubled pair with the merged symbol, collapse
-        doubled_pair = " " + pair.replace(" ", "  ") + " "
-        merged_pad = " " + pair.replace(" ", "") + " "
-        padded = F.concat(
-            F.lit(" "), F.replace(F.col("seq"), F.lit(" "), F.lit("  ")), F.lit(" ")
-        )
-        rewritten = F.replace(
-            F.trim(F.replace(padded, F.lit(doubled_pair), F.lit(merged_pad))),
-            F.lit("  "),
-            F.lit(" "),
-        )
-        words = words.select(rewritten.alias("seq"), "weight")
-    return words, bests
-
-
 def _oracle_rounds_cte() -> str:
     """WITH-clause body shared by both oracles: w0 (word types) and, per
     round i, p{i} (pair counts) / b{i} (argmax) / w{i+1} (rewrite). The
-    rewrite CASE is the same _MERGE_SQL text Spark runs. Every w{i}/b{i}
+    rewrite CASE is the _MERGE_SQL text _merge mirrors. Every w{i}/b{i}
     is AS MATERIALIZED: each is referenced twice (pair count + rewrite /
     rewrite + final union), and DuckDB's default inlining re-expands the
     whole chain per reference — 2^BPE_MERGES re-scans of the corpus word
@@ -232,16 +202,18 @@ _ENCODE_ORACLE = (
 )
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned BPE vocabulary: the ordered merge table (rank, pair, merged
-    symbol, weighted pair frequency) after BPE_MERGES rounds over the
-    corpus's word types. The merge table IS the tokenizer — rank order is
-    how an encoder replays it."""
-    _, bests = _bpe_rounds(spark, sf_dir)
-    rows = [
-        (i, pair, pair.replace(" ", "") if pair is not None else None, cnt)
-        for i, (pair, cnt) in enumerate(bests)
-    ]
-    return spark.createDataFrame(
-        rows, "merge_rank bigint, pair string, merged string, pair_count bigint"
+    symbol, weighted pair frequency) of up to BPE_MERGES rounds over the
+    corpus's word types, trained in one task. The merge table IS the
+    tokenizer — rank order is how an encoder replays it."""
+
+    def train(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        merges, _ = _train(*_dictionary(batches))
+        yield pd.DataFrame(merges, columns=["merge_rank", "pair", "merged", "pair_count"])
+
+    return (
+        _word_types(spark, sf_dir)
+        .coalesce(1)
+        .mapInPandas(train, "merge_rank bigint, pair string, merged string, pair_count bigint")
     )
 
 
@@ -253,11 +225,17 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token histogram under the learned BPE vocabulary: every word
     occurrence decomposes into the merged subword symbols, aggregated to
-    (token, n_occurrences). Encoding rides the trained type dictionary —
-    each word TYPE is rewritten once and its corpus count re-attached, so
-    the encode cost is vocabulary-scale, not corpus-scale (the real
-    accounting behind 'how many tokens is this 100 TB corpus')."""
-    words, _ = _bpe_rounds(spark, sf_dir)
+    (token, n_occurrences). The training task returns each word TYPE's
+    final symbol string with its corpus count re-attached, so the encode
+    cost is vocabulary-scale, not corpus-scale (the real accounting behind
+    'how many tokens is this 100 TB corpus')."""
+
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        seqs, weights = _dictionary(batches)
+        _, final = _train(seqs, weights)
+        yield pd.DataFrame({"seq": final, "weight": weights})
+
+    words = _word_types(spark, sf_dir).coalesce(1).mapInPandas(encode, "seq string, weight bigint")
     return (
         words.select("weight", F.explode(F.split("seq", " ")).alias("token"))
         .groupBy("token")

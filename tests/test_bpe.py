@@ -1,9 +1,10 @@
-"""Algorithm-level certification of the BPE band: the Spark merge plan must
-reproduce a textbook pure-Python BPE trainer (Sennrich et al. 2016) run on
-the same corpus — so the DataFrame formulation and the DuckDB oracle are
-both checked against the ALGORITHM, not merely against each other (the
-q_skyline brute-force pattern). Plus the structural invariants a learned
-merge table must satisfy regardless of corpus.
+"""Algorithm-level certification of the BPE band: the queries' one-task
+trainer must reproduce a textbook pure-Python BPE trainer (Sennrich et al.
+2016), on the fixture corpus and on fuzzed dictionaries — so the engine and
+the DuckDB oracle are both checked against the ALGORITHM, not merely against
+each other (the q_skyline brute-force pattern). Plus the structural
+invariants a learned merge table must satisfy regardless of corpus, and the
+queries' job budget.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ import pyarrow.parquet as pq
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 from iceberg_benchmark_poc_spark.queries.bpe import BPE_EOW, BPE_MERGES
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 def _corpus_word_counts() -> dict[str, int]:
@@ -97,13 +98,14 @@ _ADVERSARIAL_CASES = [
 ]
 
 
-def test_merge_sql_matches_greedy_scan_in_both_engines(spark):
-    """_MERGE_SQL evaluated by Spark AND DuckDB on adversarial words equals
-    the textbook greedy rewrite — the fixture corpus never exercises the
-    'banana' shape in 10 rounds, so the semantics is pinned directly."""
+def test_merge_sql_matches_greedy_scan_in_both_engines():
+    """_MERGE_SQL evaluated by DuckDB (the oracles' rewrite) and _merge (the
+    trainer's rewrite) on adversarial words both equal the textbook greedy
+    rewrite — the fixture corpus never exercises the 'banana' shape in 10
+    rounds, so the semantics is pinned directly."""
     import duckdb
 
-    from iceberg_benchmark_poc_spark.queries.bpe import _MERGE_SQL
+    from iceberg_benchmark_poc_spark.queries.bpe import _MERGE_SQL, _merge
 
     con = duckdb.connect()
     for seq, pair in _ADVERSARIAL_CASES:
@@ -113,30 +115,29 @@ def test_merge_sql_matches_greedy_scan_in_both_engines(spark):
             params=[seq, pair],
         ).fetchone()[0]
         assert got_duck == expected, f"duckdb: {seq!r} + {pair!r} -> {got_duck!r} != {expected!r}"
-    rows = spark.createDataFrame(_ADVERSARIAL_CASES, "seq string, pair string").selectExpr(
-        "seq", "pair", f"{_MERGE_SQL} AS out"
-    ).collect()
-    for r in rows:
-        expected = " ".join(_greedy_rewrite(r["seq"].split(" "), tuple(r["pair"].split(" ", 1))))
-        assert r["out"] == expected, f"spark: {r['seq']!r} + {r['pair']!r} -> {r['out']!r}"
+        got_py = _merge(seq, pair)
+        assert got_py == expected, f"_merge: {seq!r} + {pair!r} -> {got_py!r} != {expected!r}"
 
 
 def test_merge_sql_properties_fuzzed():
-    """Hypothesis fuzz of the merge SQL (DuckDB evaluates the shared ANSI
-    text; Spark-vs-DuckDB sameness is pinned by the case table above and the
-    oracle gate): for ANY symbol sequence and ANY adjacent pair drawn from
-    it, the rewrite equals the greedy scan, conserves the concatenated
-    character stream, and shortens the sequence by exactly the match count."""
+    """Hypothesis fuzz of the merge rewrite in both its forms — the shared
+    ANSI text as DuckDB evaluates it, and _merge: for ANY symbol sequence
+    and ANY adjacent pair drawn from it, each rewrite equals the greedy
+    scan, conserves the concatenated character stream, and shortens the
+    sequence by exactly the match count."""
     import duckdb
     from hypothesis import given, settings, strategies as st
 
-    from iceberg_benchmark_poc_spark.queries.bpe import _MERGE_SQL
+    from iceberg_benchmark_poc_spark.queries.bpe import _MERGE_SQL, _merge
 
     con = duckdb.connect()
     # tiny alphabet forces repeats/overlaps; include EOW-marker fragments so
-    # near-marker adjacency is fuzzed, and multi-char symbols so boundary
-    # alignment (no mid-symbol matches) is exercised
-    symbol = st.sampled_from(["a", "n", "b", "an", "na", "<", "/", "w", ">", "</w>", "</w"])
+    # near-marker adjacency is fuzzed, multi-char symbols so boundary
+    # alignment (no mid-symbol matches) is exercised, and U+00A0, which the
+    # \s+ word split keeps inside words but a whitespace strip would eat
+    symbol = st.sampled_from(
+        ["a", "n", "b", "an", "na", "<", "/", "w", ">", "</w>", "</w", "\u00a0"]
+    )
     seqs = st.lists(symbol, min_size=2, max_size=12)
 
     @settings(max_examples=300, deadline=None)
@@ -145,18 +146,95 @@ def test_merge_sql_properties_fuzzed():
         i = data.draw(st.integers(0, len(seqs) - 2))
         pair = (seqs[i], seqs[i + 1])
         seq_s, pair_s = " ".join(seqs), " ".join(pair)
-        got = con.sql(
-            f"SELECT {_MERGE_SQL} AS out FROM (SELECT ? AS seq, ? AS pair)",
-            params=[seq_s, pair_s],
-        ).fetchone()[0]
+        outs = [_merge(seq_s, pair_s)]
+        if "\u00a0" not in seq_s:
+            # DuckDB's trim also strips Unicode space separators (U+00A0,
+            # U+3000, ...), so the shared text diverges from the greedy scan
+            # on a sequence that starts or ends in one; Spark's trim, which
+            # _merge follows, strips U+0020 only
+            outs.append(
+                con.sql(
+                    f"SELECT {_MERGE_SQL} AS out FROM (SELECT ? AS seq, ? AS pair)",
+                    params=[seq_s, pair_s],
+                ).fetchone()[0]
+            )
         expected = _greedy_rewrite(seqs, pair)
-        assert got == " ".join(expected)
-        # conservation: merges never create or destroy characters
-        assert got.replace(" ", "") == seq_s.replace(" ", "")
-        # each match shortens the sequence by exactly one symbol
-        assert len(got.split(" ")) == len(expected)
+        for got in outs:
+            assert got == " ".join(expected)
+            # conservation: merges never create or destroy characters
+            assert got.replace(" ", "") == seq_s.replace(" ", "")
+            # each match shortens the sequence by exactly one symbol
+            assert len(got.split(" ")) == len(expected)
 
     check()
+
+
+def test_train_matches_textbook_trainer_fuzzed():
+    """Hypothesis property: _train on any small word-count dictionary gives
+    the textbook trainer's merge table and final vocabulary. Non-ASCII
+    letters (including U+00A0, U+FF5A and an astral-plane letter) pin the
+    codepoint tie-break and the space-only trim; counts drawn from 1..3 force count
+    ties, so the pair-text tie-break decides most rounds; one-letter words
+    run out of pairs, exercising the early stop."""
+    from hypothesis import given, settings, strategies as st
+
+    from iceberg_benchmark_poc_spark.queries.bpe import _train
+
+    # U+FF5A sorts below U+1D538 by codepoint but above it by UTF-16 unit
+    letters = ["a", "b", "é", "ß", "ü", "中", "\u00a0", "\uff5a", "\U0001d538"]
+    words = st.dictionaries(
+        st.text(st.sampled_from(letters), min_size=1, max_size=5),
+        st.integers(1, 3),
+        max_size=8,
+    )
+
+    @settings(max_examples=300, deadline=None)
+    @given(word_counts=words)
+    def check(word_counts):
+        seqs = [" ".join(w) + " " + BPE_EOW for w in word_counts]
+        weights = list(word_counts.values())
+        merges, final = _train(seqs, weights)
+        expected_table, expected_vocab = _python_bpe(word_counts, BPE_MERGES)
+        assert merges == expected_table
+        vocab: dict[tuple[str, ...], int] = {}
+        for seq, w in zip(final, weights):
+            vocab[tuple(seq.split(" "))] = vocab.get(tuple(seq.split(" ")), 0) + w
+        assert vocab == expected_vocab
+
+    check()
+
+
+def test_train_refuses_a_dictionary_over_its_bound(monkeypatch):
+    """The one training task holds the whole type dictionary, so a
+    dictionary over MAX_WORD_TYPES is an explicit error naming its size."""
+    import pytest
+
+    from iceberg_benchmark_poc_spark.queries import bpe
+
+    monkeypatch.setattr(bpe, "MAX_WORD_TYPES", 2)
+    with pytest.raises(ValueError, match="3 word types"):
+        bpe._train(["a </w>", "b </w>", "c </w>"], [1, 1, 1])
+
+
+def test_bpe_job_counts(spark):
+    """Both BPE queries build in 0 Spark jobs (the plans are lazy: no
+    collect, no cut, no driver loop) and execute in at most 2 (sf0.001),
+    the same after a warm-up run and after clearing the cache."""
+    for name in ("q_bpe_train", "q_bpe_encode"):
+        fn = all_queries()[name].fn
+
+        def build_and_run():
+            df, build_jobs = jobs_of(spark, lambda: fn(spark, SF_DIR))
+            _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
+            return build_jobs, exec_jobs
+
+        build_and_run()  # warm-up
+        after_warm_up = build_and_run()
+        spark.catalog.clearCache()
+        assert build_and_run() == after_warm_up, name
+        build_jobs, exec_jobs = after_warm_up
+        assert build_jobs == 0, name
+        assert exec_jobs <= 2, name
 
 
 def test_bpe_train_matches_textbook_trainer(spark):

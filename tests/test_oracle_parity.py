@@ -86,6 +86,8 @@ def degenerate_sf(tmp_path_factory):
         ("empty_part_documents", "q_incremental_dedup"),
         ("empty_part_documents", "q_ngram_jaccard"),
         ("empty_part_documents", "q_source_overlap"),
+        ("empty_part_documents", "q_bpe_train"),
+        ("empty_part_documents", "q_bpe_encode"),
     ],
 )
 def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
@@ -94,7 +96,11 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
     order does, and an empty table's None domain scans as one range instead
     of raising. The MinHash-LSH family (shingles, signatures, band pairs,
     Jaccard verify), q_ngram_jaccard and q_source_overlap: a 0-row
-    documents table gives the oracles' empty results, not an error."""
+    documents table gives the oracles' empty results, not an error. The BPE
+    pair: with no word types there is no pair to merge, so training stops
+    before its first round — an empty merge table (not BPE_MERGES rows of
+    NULLs) and an empty token histogram, as the oracles' empty ``LIMIT 1``
+    argmaxes give."""
     sf_dir, duck = degenerate_sf(kind)
     q = QUERIES[name]
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)

@@ -362,7 +362,7 @@ def test_manifest_json_parse_stays_in_codegen(spark):
 # ---------------------------------------------------------------------------
 
 #: Arrow-batched Python stages by design (multimodal decode pipeline, binary
-#: DV codec). Everything else must stay JVM-side.
+#: DV codec, BPE trainer). Everything else must stay JVM-side.
 ARROW_PYTHON_ALLOWED = {
     "q_dv_payload_roundtrip",
     "q_roaring_roundtrip",
@@ -375,6 +375,8 @@ ARROW_PYTHON_ALLOWED = {
     "q_avro_roundtrip",  # pure-python OCF codec in mapInPandas leaves
     "q_audio_features",  # WAV codec + windowed features in a mapInPandas leaf
     "q_video_features",  # AVI container walk + motion features in a mapInPandas leaf
+    "q_bpe_train",  # every BPE merge round in one mapInPandas task over the type dictionary
+    "q_bpe_encode",  # the same one-task trainer, its final symbols then exploded JVM-side
 }
 
 #: BroadcastNestedLoopJoin is acceptable only when the broadcast side is
@@ -811,15 +813,7 @@ def test_no_query_force_broadcasts_an_unfiltered_sf_table(spark):
             nodes = _sketch_nodes(plan)
             details = _node_details(plan)
             assert nodes, f"could not parse formatted plan for {name}"
-            if not details:
-                # a driver-materialized leaf (Scan ExistingRDD from a
-                # collected scalar table, e.g. q_bpe_train's merge list)
-                # has no per-node details section — and nothing to audit,
-                # provided it really is exchange/join-free
-                assert not any(
-                    "Exchange" in nm or "Join" in nm for _, nm, _ in nodes
-                ), f"plan for {name} has exchanges but no parseable details"
-                continue
+            assert details, f"could not parse formatted plan details for {name}"
             for i, (depth, nm, _nid) in enumerate(nodes):
                 if "BroadcastExchange" not in nm:
                     continue
@@ -894,19 +888,26 @@ def test_forecast_revenue_is_a_pure_pushed_scan(spark):
 
 
 def test_bpe_band_is_flat_above_its_checkpoints(spark):
-    """q_bpe_encode's plan must stay the minimal shape: ONE cut type
-    dictionary (a checkpoint of the single corpus-scale word-count shuffle)
-    -> the literal replace chain -> explode -> map-side partial sum -> ONE
-    token exchange. All 10 merge rounds are literal expressions over the
-    cut (argmaxes are driver scalars), so the plan contains no joins and no
-    per-round subtrees."""
+    """q_bpe_encode's plan must stay the minimal shape: the word-count
+    shuffle -> ONE MapInPandas task that runs every merge round over the
+    type dictionary -> explode -> map-side partial sum -> the token
+    exchange. No cut (the plan has no RDD leaf), no joins, no per-round
+    subtrees."""
     plan = plan_of(spark, "q_bpe_encode")
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan  # the dictionary cut
-    # the token-agg exchange, which AQE's explain may print twice (final +
-    # initial plan); the word-count exchange sits behind the cut
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 3
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan
+    assert "Join" not in plan
     assert "partial_sum" in plan
-    assert "Join" not in plan  # merge rounds are expressions, never joins
+    nodes = _sketch_nodes(plan)  # the first tree only, if AQE prints two
+    mip = [i for i, (_, nm, _) in enumerate(nodes) if nm.startswith("MapInPandas")]
+    assert len(mip) == 1, nodes
+    depth = nodes[mip[0]][0]
+    below = []
+    for d, nm, _ in nodes[mip[0] + 1:]:
+        if d <= depth:
+            break
+        below.append(nm)
+    assert sum("Exchange" in nm for nm in below) == 1, below  # the word count
+    assert any("HashAggregate" in nm for nm in below), below
 
     from iceberg_benchmark_poc_spark.queries.bpe import _word_types
 
