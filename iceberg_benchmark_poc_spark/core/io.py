@@ -439,6 +439,23 @@ def cut(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK_2)
 
 
+def order_small(df: DataFrame, *cols) -> DataFrame:
+    """The final ORDER BY of a metadata-scale result (a group-by over
+    months, specs, priorities, row groups): ``df.coalesce(1).orderBy(*cols)``.
+
+    A plain ``orderBy`` plans a ``rangepartitioning`` exchange, which under
+    AQE runs as two jobs (the range-bounds sampling job and the map stage)
+    to sort a few dozen rows. Over the one partition of ``coalesce(1)`` the
+    sort needs no exchange: the ``Coalesce 1`` is narrow, so the result's
+    last stage reads its input in one task and sorts it there. That task
+    also runs whatever narrow work sits between the last exchange and the
+    sort, so the caller's result must be small by construction, not merely
+    filtered (tests/test_plans.py lists every caller in its global-sort
+    allowlist).
+    """
+    return df.coalesce(1).orderBy(*cols)
+
+
 def epoch_micros(col) -> "F.Column":
     """Microseconds since epoch for a naive-UTC timestamp column.
 

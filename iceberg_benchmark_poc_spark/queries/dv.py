@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import dv_entries, dv_multi, file_meta, with_fixtures
-from ..core.io import load_table
+from ..core.io import load_table, order_small
 from ..core.registry import register
 from ..operators.lifecycle import apply_equality_deletes, merge_latest_wins
 
@@ -460,8 +460,7 @@ def q_equality_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", (F.col("o_orderkey") % EQ_DATA_SEQ_MOD).alias("data_seq")
     )
     live = apply_equality_deletes(d, eq, "o_custkey", "custkey")
-    return (
-        live.groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n_live"), F.sum("o_orderkey").alias("key_sum"))
-        .orderBy("o_orderstatus")
+    return order_small(
+        live.groupBy("o_orderstatus").agg(F.count("*").alias("n_live"), F.sum("o_orderkey").alias("key_sum")),
+        "o_orderstatus",
     )

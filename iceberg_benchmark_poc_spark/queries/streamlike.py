@@ -304,6 +304,9 @@ def q_manifest_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         (F.lit(200) + (F.col("event_id") * 7919) % 65536).alias("entry_bytes"),
     )
+    # a plain orderBy, not core.io.order_small: the stage under the sort
+    # replays every event through pandas, which coalesce(1) would run in one
+    # task (slower at sf0.1 in an interleaved A/B)
     return manifest_flush_batch(entries, FLUSH_Q_BYTES, FLUSH_Q_ENTRIES).orderBy(
         "writer_id", "flush_seq"
     )

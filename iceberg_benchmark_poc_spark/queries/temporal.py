@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..core.io import epoch_micros, load_table
+from ..core.io import epoch_micros, load_table, order_small
 from ..core.registry import register
 
 RATE_EVERY_MIN = 90  # snapshot cadence of the derived rate table
@@ -347,15 +347,14 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     merged = v1.unionByName(v2, allowMissingColumns=True)
-    return (
-        merged.groupBy("schema_version")
-        .agg(
+    return order_small(
+        merged.groupBy("schema_version").agg(
             F.count("*").alias("n_rows"),
             (F.count("*") - F.count("o_custkey")).alias("n_missing_custkey"),
             (F.count("*") - F.count("o_priority_class")).alias("n_missing_priority"),
             F.sum("o_orderkey").alias("key_sum"),
-        )
-        .orderBy("schema_version")
+        ),
+        "schema_version",
     )
 
 
@@ -439,14 +438,13 @@ def q_wap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("c")
     ).select("c.gate", "c.ok")
-    return (
-        checks.groupBy("gate")
-        .agg(
+    return order_small(
+        checks.groupBy("gate").agg(
             F.count("*").alias("n_checked"),
             F.count(F.when(F.col("ok"), 1)).alias("n_passed"),
             F.count(F.when(~F.col("ok"), 1)).alias("n_failed"),
-        )
-        .orderBy("gate")
+        ),
+        "gate",
     )
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
-from ..core.io import cut, load_table, spread_narrow, table_bounds
+from ..core.io import cut, load_table, order_small, spread_narrow, table_bounds
 from ..core.registry import register
 from ..operators.graph import connected_components
 from ..operators.text import (
@@ -1146,12 +1146,12 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep_per_10k"),
     )
     gate = hash60(F.col("doc_id").cast("string")) % MIX_GATE_M
-    return (
+    return order_small(
         d.select("doc_id", "source")
         .join(F.broadcast(thr), "source")
         .groupBy("source", "n_docs", "weight", "keep_per_10k")
-        .agg(F.count(F.when(gate < F.col("keep_per_10k"), 1)).alias("n_sampled"))
-        .orderBy("source")
+        .agg(F.count(F.when(gate < F.col("keep_per_10k"), 1)).alias("n_sampled")),
+        "source",
     )
 
 

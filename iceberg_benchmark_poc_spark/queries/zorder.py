@@ -17,10 +17,10 @@ q_zorder runs the experiment: assign 100-entry row groups under both
 layouts, keep per-group min/max of both dimensions, probe with three
 predicate families (date-window, hour-window, combined), and report the
 skip rate per (layout, family). Everything is integer arithmetic — exact
-DuckDB parity — and the whole query is two scans of a *metadata* table
-(one per layout) plus one aggregation: at 100 TB (< 1M manifest rows) the
-global ordering windows model the single writer laying out row groups,
-same as q_skip_rate.
+DuckDB parity — and the whole query is one scan of a *metadata* table
+ranked under both layouts plus one aggregation: at 100 TB (< 1M manifest
+rows) the global ordering windows model the single writer laying out row
+groups, same as q_skip_rate.
 """
 
 from __future__ import annotations
@@ -84,31 +84,40 @@ _PROBES_SQL = f"""
 """
 
 
-def _probes(spark: SparkSession) -> DataFrame:
-    r = spark.range(N_PROBES_PER_FAMILY)
+def _probes() -> Column:
+    """The 150 probes, ``N_PROBES_PER_FAMILY`` per family, as one array of
+    (family, lo_d, hi_d, lo_h, hi_h) structs generated inline on the
+    row-group side instead of a broadcast relation crossed in by a
+    nested-loop join. Probe ``i`` of each family uses ``_PROBES_SQL``'s
+    formulas on ``p.range``."""
     big = lambda v: F.lit(v).cast("bigint")  # noqa: E731
-    date_f = r.select(
-        F.lit(f"date{DATE_WINDOW}").alias("family"),
-        ((F.col("id") * 53) % (DATE_DOMAIN_DAYS - DATE_WINDOW)).alias("lo_d"),
-        ((F.col("id") * 53) % (DATE_DOMAIN_DAYS - DATE_WINDOW) + (DATE_WINDOW - 1)).alias("hi_d"),
-        big(0).alias("lo_h"),
-        big(23).alias("hi_h"),
-    )
-    hour_f = r.select(
-        F.lit(f"hour{HOUR_WINDOW}").alias("family"),
-        big(0).alias("lo_d"),
-        big(DATE_DOMAIN_DAYS - 1).alias("hi_d"),
-        ((F.col("id") * 5) % (24 - HOUR_WINDOW)).alias("lo_h"),
-        ((F.col("id") * 5) % (24 - HOUR_WINDOW) + (HOUR_WINDOW - 1)).alias("hi_h"),
-    )
-    combo_f = r.select(
-        F.lit(f"date{COMBO_DATE_WINDOW}_hour{HOUR_WINDOW}").alias("family"),
-        ((F.col("id") * 97) % (DATE_DOMAIN_DAYS - COMBO_DATE_WINDOW)).alias("lo_d"),
-        ((F.col("id") * 97) % (DATE_DOMAIN_DAYS - COMBO_DATE_WINDOW) + (COMBO_DATE_WINDOW - 1)).alias("hi_d"),
-        ((F.col("id") * 5) % (24 - HOUR_WINDOW)).alias("lo_h"),
-        ((F.col("id") * 5) % (24 - HOUR_WINDOW) + (HOUR_WINDOW - 1)).alias("hi_h"),
-    )
-    return date_f.unionByName(hour_f).unionByName(combo_f)
+
+    def probe(family, lo_d, hi_d, lo_h, hi_h):
+        return F.struct(
+            F.lit(family).alias("family"),
+            lo_d.alias("lo_d"),
+            hi_d.alias("hi_d"),
+            lo_h.alias("lo_h"),
+            hi_h.alias("hi_h"),
+        )
+
+    def families(i):
+        d = (i * 53) % (DATE_DOMAIN_DAYS - DATE_WINDOW)
+        c = (i * 97) % (DATE_DOMAIN_DAYS - COMBO_DATE_WINDOW)
+        h = (i * 5) % (24 - HOUR_WINDOW)
+        return F.array(
+            probe(f"date{DATE_WINDOW}", d, d + (DATE_WINDOW - 1), big(0), big(23)),
+            probe(f"hour{HOUR_WINDOW}", big(0), big(DATE_DOMAIN_DAYS - 1), h, h + (HOUR_WINDOW - 1)),
+            probe(
+                f"date{COMBO_DATE_WINDOW}_hour{HOUR_WINDOW}",
+                c,
+                c + (COMBO_DATE_WINDOW - 1),
+                h,
+                h + (HOUR_WINDOW - 1),
+            ),
+        )
+
+    return F.flatten(F.transform(F.sequence(big(0), big(N_PROBES_PER_FAMILY - 1)), families))
 
 
 _DIMS_SQL = f"""
@@ -135,29 +144,29 @@ _ZORDER_RG_SQL = f"""
 
 
 def _layout_row_groups_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Row groups of both layouts with per-group (d, h) bounds; like
+    manifests._layout_row_groups, both global row numbers come from one
+    select over one SinglePartition exchange."""
     fm = file_meta(spark, sf_dir)
     dims = fm.select(
         "file_id",
         F.col("partition_hour").cast("bigint").alias("h"),
         F.datediff("partition_date", F.to_date(F.lit(EPOCH_DATE))).cast("bigint").alias("d"),
     )
-    w_lin = Window.orderBy("d", "h", "file_id")
-    w_z = Window.orderBy(_zkey_col(F.col("d"), F.col("h")), F.col("file_id"))
-    lin = dims.select(
-        F.lit("linear").alias("layout"),
+    rg_id = lambda w: F.floor((F.row_number().over(w) - 1) / ROW_GROUP_ENTRIES)  # noqa: E731
+    ranked = dims.select(
         "d",
         "h",
-        F.floor((F.row_number().over(w_lin) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
+        rg_id(Window.orderBy("d", "h", "file_id")).alias("rg_linear"),
+        rg_id(Window.orderBy(_zkey_col(F.col("d"), F.col("h")), F.col("file_id"))).alias("rg_zorder"),
     )
-    zrd = dims.select(
-        F.lit("zorder").alias("layout"),
-        "d",
-        "h",
-        F.floor((F.row_number().over(w_z) - 1) / ROW_GROUP_ENTRIES).alias("rg_id"),
+    layouts = F.array(
+        F.struct(F.lit("linear").alias("layout"), F.col("rg_linear").alias("rg_id")),
+        F.struct(F.lit("zorder").alias("layout"), F.col("rg_zorder").alias("rg_id")),
     )
     return (
-        lin.unionByName(zrd)
-        .groupBy("layout", "rg_id")
+        ranked.select("d", "h", F.explode(layouts).alias("g"))
+        .groupBy("g.layout", "g.rg_id")
         .agg(
             F.min("d").alias("min_d"),
             F.max("d").alias("max_d"),
@@ -196,12 +205,12 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Extends the reference's 1-D writer-organization finding
     (tab0_content.txt:120-224) to multi-dimensional clustering: linear sort
     wins narrow date-only probes, is useless for hour probes (~0% skip);
-    z-order prunes on both dimensions. The probe cross-join is broadcast
-    (150 probes) so the only shuffle is the final 6-row aggregate.
+    z-order prunes on both dimensions. The 150 probes are generated inline
+    on the row-group side, and the whole query stays in the one partition of
+    the layout windows' exchange.
     """
     rg = _layout_row_groups_2d(spark, sf_dir)
-    probes = _probes(spark)
-    checks = rg.crossJoin(F.broadcast(probes)).withColumn(
+    checks = rg.select("*", F.inline(_probes())).withColumn(
         "skipped",
         F.when(
             (F.col("hi_d") < F.col("min_d"))
@@ -289,7 +298,7 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan costs anything. One scan + explode is the 100 TB shape.)
     """
     from ..core.fixtures import hash60
-    from ..core.io import load_table, spread_narrow
+    from ..core.io import load_table, order_small, spread_narrow
 
     date_s = F.col("l_shipdate").cast("string")
     specs = F.array(
@@ -320,9 +329,8 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("spec", "pkey")
         .agg(F.count("*").alias("n_rows"))
     )
-    return (
-        hist.groupBy("spec")
-        .agg(
+    return order_small(
+        hist.groupBy("spec").agg(
             F.count("*").alias("n_partitions"),
             F.sum("n_rows").alias("total_rows"),
             F.min("n_rows").alias("min_rows"),
@@ -331,6 +339,6 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.max("n_rows") * F.count("*")).cast("double")
                 / F.sum("n_rows").cast("double")
             ).alias("skew"),
-        )
-        .orderBy("spec")
+        ),
+        "spec",
     )

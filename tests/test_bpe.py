@@ -11,22 +11,39 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from iceberg_benchmark_poc_spark.core.registry import all_queries
-from iceberg_benchmark_poc_spark.queries.bpe import BPE_EOW, BPE_MERGES
+from iceberg_benchmark_poc_spark.queries.bpe import BPE_EOW, BPE_MERGES, _word_types
 
 from .conftest import SF_DIR, jobs_of
 
 
-def _corpus_word_counts() -> dict[str, int]:
-    """Whitespace word counts of the test corpus, matching the engine's
-    split(trim(text), '\\s+') tokenization."""
+def _word_counts(texts) -> dict[str, int]:
+    """Whitespace word counts matching the engine's split(trim(text), '\\s+')
+    tokenization: Spark's ``trim`` strips U+0020 only, and Java's ``\\s`` is
+    the ASCII whitespace class, so U+00A0 stays inside a word (Python's
+    ``strip()`` and ``\\s`` are Unicode-aware and would split there)."""
     counts: dict[str, int] = {}
-    for text in pq.read_table(f"{SF_DIR}/documents.parquet", columns=["text"]).column(0).to_pylist():
-        for w in re.split(r"\s+", text.strip()):
+    for text in texts:
+        for w in re.split(r"[ \t\n\x0b\f\r]+", text.strip(" ")):
             counts[w] = counts.get(w, 0) + 1
     return counts
+
+
+def _corpus_word_counts() -> dict[str, int]:
+    """Word counts of the test corpus."""
+    return _word_counts(pq.read_table(f"{SF_DIR}/documents.parquet", columns=["text"]).column(0).to_pylist())
+
+
+def test_word_types_keep_no_break_space_inside_words(spark, tmp_path):
+    texts = ["caf\u00a0e au\tlait", " x\u00a0y  x\u00a0y\u00a0 ", "au\u00a0\u00a0revoir"]
+    pq.write_table(pa.table({"doc_id": [1, 2, 3], "text": texts}), tmp_path / "documents.parquet")
+    got = {r["seq"]: r["weight"] for r in _word_types(spark, str(tmp_path)).collect()}
+    expected = {" ".join(w) + " " + BPE_EOW: c for w, c in _word_counts(texts).items()}
+    assert set(_word_counts(texts)) == {"caf\u00a0e", "au", "lait", "x\u00a0y", "x\u00a0y\u00a0", "au\u00a0\u00a0revoir"}
+    assert got == expected
 
 
 def _python_bpe(word_counts: dict[str, int], merges: int):

@@ -122,6 +122,43 @@ def test_missing_path_raises_spark_path_not_found(spark, tmp_path):
             load_table(spark, str(tmp_path), "region")
 
 
+class _BuilderRecorder:
+    """Stands in for ``SparkSession.builder``: records every conf."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, url):
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+def test_builder_turns_dataframe_debugging_off(spark, monkeypatch):
+    """get_spark's builder sets the flag PySpark caches on the first API
+    call, and extra_conf can turn it back on."""
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import SparkSession
+
+    from iceberg_benchmark_poc_spark.core.session import get_spark
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert is_debugging_enabled() is False
+    monkeypatch.setattr(SparkSession, "builder", _BuilderRecorder())
+    assert get_spark()[key] == "false"
+    monkeypatch.setattr(SparkSession, "builder", _BuilderRecorder())
+    assert get_spark(extra_conf={key: "true"})[key] == "true"
+
+
 def test_session_confs_written_only_when_different(spark, monkeypatch):
     writes = []
     real_set = spark.conf.set

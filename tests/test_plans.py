@@ -12,7 +12,7 @@ import pytest
 
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, jobs_of
 
 
 #: compiled-plan cache: four registry-wide sweeps in this file each walk all
@@ -142,11 +142,12 @@ def test_no_cartesian_in_similarity_path(spark):
 # test_plan_audit_every_query below, with ARROW_PYTHON_ALLOWED/BNLJ_ALLOWED)
 
 
-#: queries whose plan intentionally sorts through ONE partition. Every entry
-#: sorts a set that is metadata-scale BY CONSTRUCTION (manifest entries /
-#: row-group stats / commit logs: <1M rows even at 100 TB with 128 MB files
-#: — README scale notes) or tiny by construction (the |ranges|-row totals
-#: table of the two-phase prefix sum). Corpus-scale global sorts are
+#: queries whose plan intentionally sorts or windows through ONE partition.
+#: Every entry sorts a set that is metadata-scale BY CONSTRUCTION (manifest
+#: entries / row-group stats / commit logs: <1M rows even at 100 TB with
+#: 128 MB files — README scale notes) or tiny by construction (the
+#: |ranges|-row totals table of the two-phase prefix sum, a group-by result
+#: under its final ORDER BY). Corpus-scale global sorts are
 #: forbidden — q_corpus_select/q_shard_pack route theirs through
 #: operators/prefix.py and appear here only for that totals table.
 GLOBAL_SORT_ALLOWLIST = {
@@ -169,6 +170,17 @@ GLOBAL_SORT_ALLOWLIST = {
     "q_zorder": "file/row-group stats",
     "q_skyline": "prefix-max offsets table: one row per range partition",
     "q_zipf_slope": "vocabulary rank window: metadata-scale relative to the corpus",
+    "q_expire_snapshots": "manifest entries: the retention cutoff's empty-frame min/max window",
+    "q_mixture_sample": "per-source table: its empty-frame totals window and the final ORDER BY",
+    # final ORDER BY through core.io.order_small: the last stage runs in one task
+    "q_binpack_plan": "manifest entries: per-partition window and rollup under the final ORDER BY",
+    "q_equality_delete": "final ORDER BY over the order statuses",
+    "q_late_orders": "final ORDER BY over the order priorities",
+    "q_orphan_files": "final ORDER BY over the orphan months",
+    "q_partition_evolution": "final ORDER BY over the candidate partition specs",
+    "q_schema_evolution": "final ORDER BY over the schema versions",
+    "q_table_fsck": "final ORDER BY over the partition months",
+    "q_wap_audit": "final ORDER BY over the audit gates",
 }
 
 
@@ -180,12 +192,20 @@ def _detail_blocks(plan: str) -> dict[int, tuple[str, str]]:
     }
 
 
+def _into_one_partition(node_type: str, body: str) -> bool:
+    """A SinglePartition exchange or a ``coalesce(1)``."""
+    if node_type == "Exchange":
+        return "SinglePartition" in body
+    return node_type == "Coalesce" and re.search(r"^Arguments: 1$", body, re.M) is not None
+
+
 def test_no_undocumented_global_sorts(spark):
-    """Registry-wide: a SinglePartition exchange feeding a Sort is a global
-    sort/window — every input row through one task. Allowed only for
-    documented metadata-scale sets; a corpus-scale query acquiring one is a
-    100 TB bottleneck regression (exactly what q_corpus_select/q_shard_pack
-    had before the two-phase prefix sum)."""
+    """Registry-wide: a SinglePartition exchange or a ``Coalesce 1`` feeding
+    a Sort or a Window is a global sort/window — every input row through
+    one task. Allowed only for documented metadata-scale sets; a
+    corpus-scale query acquiring one is a 100 TB bottleneck regression
+    (exactly what q_corpus_select/q_shard_pack had before the two-phase
+    prefix sum)."""
     offenders = {}
     for name in sorted(all_queries()):
         try:
@@ -197,14 +217,35 @@ def test_no_undocumented_global_sorts(spark):
         hits = [
             k
             for k, (t, body) in blocks.items()
-            if t == "Exchange"
-            and "SinglePartition" in body
-            and blocks.get(k + 1, ("", ""))[0] == "Sort"
+            if _into_one_partition(t, body) and blocks.get(k + 1, ("", ""))[0] in ("Sort", "Window")
         ]
         if hits and name not in GLOBAL_SORT_ALLOWLIST:
             offenders[name] = f"single-partition sort at nodes {hits}"
     assert not offenders, f"undocumented global sorts: {offenders}"
     assert set(GLOBAL_SORT_ALLOWLIST) <= set(all_queries())
+
+
+#: (build, exec) Spark jobs at sf0.001. Under AQE each exchange runs as its
+#: own job, and the result stage is one more: the layout queries exchange
+#: once (both layout windows share one SinglePartition exchange, and the
+#: probes are generated inline, not broadcast), q_binpack_plan once (its
+#: per-partition window; the final ORDER BY sorts over ``coalesce(1)``), and
+#: q_equality_delete broadcasts its delete set and exchanges its group-by.
+METADATA_JOB_COUNTS = {
+    "q_binpack_plan": (0, 2),
+    "q_equality_delete": (0, 3),
+    "q_range_span": (0, 2),
+    "q_skip_rate": (0, 2),
+    "q_zorder": (0, 2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(METADATA_JOB_COUNTS))
+def test_metadata_query_job_counts(spark, name):
+    fn = all_queries()[name].fn
+    df, build_jobs = jobs_of(spark, lambda: fn(spark, SF_DIR))
+    _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert (build_jobs, exec_jobs) == METADATA_JOB_COUNTS[name]
 
 
 def test_plan_allowlists_not_stale():
@@ -214,6 +255,7 @@ def test_plan_allowlists_not_stale():
     assert set(BNLJ_ALLOWED) <= names  # defined below; resolved at call time
     assert set(ARROW_PYTHON_ALLOWED) <= names
     assert set(GLOBAL_SORT_ALLOWLIST) <= names
+    assert RANGE_SORT_ALLOWED <= names
 
 
 def test_neardup_bucket_join_stays_equi(spark):
@@ -379,6 +421,12 @@ ARROW_PYTHON_ALLOWED = {
     "q_bpe_encode",  # the same one-task trainer, its final symbols then exploded JVM-side
 }
 
+#: a range-partitioned ORDER BY stays only where the stage under the sort
+#: does row-scale work that core.io.order_small would run in one task
+RANGE_SORT_ALLOWED = {
+    "q_manifest_flush",  # per-writer pandas replay of the event log (one row per event)
+}
+
 #: BroadcastNestedLoopJoin is acceptable only when the broadcast side is
 #: tiny by construction — a scalar aggregate, the %100 query set, the
 #: centroid table, a generated sequence. Each name here was checked by hand;
@@ -404,12 +452,10 @@ BNLJ_ALLOWED = {
     "q_ivf_topk",        # broadcast centroids (|cells| rows)
     "q_ngram_jaccard",   # broadcast sampled probe set
     "q_scan_tree",       # scalar per-level manifest counts
-    "q_skip_rate",       # scalar predicate-date bound
     "q_spill_policy",    # scalar cap remaining after must-inline
     "q_autocorr",        # 2-row lag list crossed with the metadata-scale daily table
     "q_churn",           # 1-row final-week span fold broadcast to the activity pairs
     "q_rfm_segments",    # three 1-row quintile-cut folds broadcast to user metrics
-    "q_zorder",          # scalar file-count normalizer
     "q_benford",         # one-row grand-total fold broadcast to the 9-digit table
     "q_keyness_terms",   # one-row corpus-token-total fold broadcast to the vocabulary
     "q_important_stock",  # 1-row national-stock-total fold broadcast to per-part values
@@ -418,8 +464,9 @@ BNLJ_ALLOWED = {
 
 def test_plan_audit_every_query(spark):
     """Global scale guardrail over every registered query's physical plan:
-    no row-at-a-time Python eval, no cartesian product, Arrow-Python and
-    nested-loop broadcasts only on the explicit allowlists."""
+    no row-at-a-time Python eval, no cartesian product, no range-sampling
+    sort exchange, Arrow-Python and nested-loop broadcasts only on the
+    explicit allowlists."""
     for name in sorted(all_queries()):
         plan = plan_of(spark, name)
         assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
@@ -429,6 +476,9 @@ def test_plan_audit_every_query(spark):
                 assert marker not in plan, f"{name}: unexpected Python stage {marker}"
         if name not in BNLJ_ALLOWED:
             assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
+        if name not in RANGE_SORT_ALLOWED:
+            # a final ORDER BY over a small result goes through core.io.order_small
+            assert "rangepartitioning" not in plan, f"{name}: range-partitioned sort"
 
 
 def test_no_container_typed_outputs_on_oracle_gated_queries(spark):
