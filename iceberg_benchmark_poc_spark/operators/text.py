@@ -11,9 +11,15 @@ Design for 100 TB of documents:
   band buckets; bucket skew (a viral boilerplate string) is handled by AQE
   skew-join splitting, and candidate verification (exact Jaccard) only runs
   on bucket-collision pairs.
+- A pair colliding on several bands is emitted once, on its first colliding
+  band: each band row carries the earlier bands' minhashes, so the join
+  drops the later meetings itself and no dedupe exchange follows it.
 
 The engine runs the packed path: ``shingle_arrays`` -> ``minhash_from_arrays``
 -> ``lsh_pairs_from_wide`` / ``lsh_pairs_between`` -> ``jaccard_from_arrays``.
+``shingle_arrays`` and ``jaccard_from_arrays`` pass the other per-document
+columns through, so one relation carries a document's attributes from
+shingling to the verified pair.
 The exploded ``word_shingles`` and groupBy ``minhash_signatures`` remain for
 perfbench's operator probe, which imports them by name.
 """
@@ -54,15 +60,19 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 def shingle_arrays(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document distinct shingle sets, kept packed as arrays.
 
-    Output: (doc_id, sh_arr ARRAY<STRING>, h_arr ARRAY<BIGINT>) with the same
-    shingle/hash definitions as word_shingles — but never exploded: the whole
+    Output: every input column, ``id_col`` renamed to doc_id, then
+    (sh_arr ARRAY<STRING>, h_arr ARRAY<BIGINT>) with the same shingle/hash
+    definitions as word_shingles — but never exploded: the whole
     construction is narrow (zero shuffles), and downstream minhash/Jaccard
     stages operate on the arrays, so per-shingle rows never hit a shuffle.
-    h_arr positions don't correspond to sh_arr positions (both are
+    The other columns ride along so one relation can carry a document's
+    attributes and its shingle set; column pruning drops the ones no caller
+    reads. h_arr positions don't correspond to sh_arr positions (both are
     independently distinct sets); minhash only needs the set of hashes.
     """
+    kept = ["doc_id" if c == id_col else c for c in docs.columns]
     tokenized = docs.select(
-        F.col(id_col).alias("doc_id"),
+        *[F.col(c).alias(k) for c, k in zip(docs.columns, kept)],
         F.trim(F.col(text_col)).alias("txt"),
         F.split(F.trim(F.col(text_col)), r"\s+").alias("ws"),
     )
@@ -73,9 +83,9 @@ def shingle_arrays(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         lambda i: F.concat_ws(" ", F.element_at(ws, i), F.element_at(ws, i + 1), F.element_at(ws, i + 2)),
     )
     shingle_arr = F.when(n >= SHINGLE_WORDS, trigrams).otherwise(F.array(F.col("txt")))
-    with_sh = tokenized.select("doc_id", F.array_distinct(shingle_arr).alias("sh_arr"))
+    with_sh = tokenized.select(*kept, F.array_distinct(shingle_arr).alias("sh_arr"))
     return with_sh.select(
-        "doc_id",
+        *kept,
         "sh_arr",
         F.transform(F.col("sh_arr"), lambda s: hash60(s) % PORTABLE_HASH_PRIME).alias("h_arr"),
     )
@@ -106,45 +116,63 @@ def minhash_from_arrays(docs_arr: DataFrame, k: int = MINHASH_K) -> DataFrame:
 def band_rows(
     signatures: DataFrame, k: int = MINHASH_K, rows_per_band: int = LSH_ROWS_PER_BAND
 ) -> DataFrame:
-    """(doc_id, band, band_sig) rows from wide mh0..mh{k-1} signatures.
+    """(doc_id, band, band_sig, prev) rows from wide mh0..mh{k-1} signatures.
 
-    Band signatures are "k=mh" pairs joined by colons; the only shuffled
-    shape downstream is n_docs x n_bands short strings.
+    ``band_sig`` is the band's ``rows_per_band`` minhashes as one struct, so
+    two docs collide on a band iff the structs are equal. ``prev`` is the
+    array of the earlier bands' structs (empty on band 0): it is what lets
+    the pair generators below emit each pair only on its first colliding
+    band. The shuffled shape downstream is n_docs x n_bands short rows.
     """
     n_bands = k // rows_per_band
+    sigs = [
+        F.struct(
+            *[F.col(f"mh{b * rows_per_band + i}").alias(f"m{i}") for i in range(rows_per_band)]
+        )
+        for b in range(n_bands)
+    ]
+    # explode a literal array of per-band structs: over a column reference
+    # the optimizer would infer ``size(col) > 0`` and push it below the
+    # projection, evaluating every minhash twice
     band_structs = F.array(
         *[
             F.struct(
-                F.lit(b).cast("bigint").alias("band"),
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.concat_ws("=", F.lit(i), F.col(f"mh{i}"))
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                ).alias("band_sig"),
+                F.lit(b).alias("band"),
+                sigs[b].alias("band_sig"),
+                F.slice(F.array(*sigs), 1, b).alias("prev"),
             )
             for b in range(n_bands)
         ]
     )
     return signatures.select("doc_id", F.explode(band_structs).alias("bs")).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig")
+        "doc_id", "bs.band", "bs.band_sig", "bs.prev"
     )
+
+
+def _band_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Band collisions of ``left`` (doc_a) x ``right`` (doc_b) band rows,
+    each pair kept only on its FIRST colliding band: the pair joined on
+    band b survives iff its two signatures collide on no band < b. A doc
+    has one row per band, so a pair meets at most once per band and the
+    rule emits every colliding pair exactly once — the dedupe a
+    ``.distinct()`` would pay an exchange for."""
+    a = left.select(
+        F.col("doc_id").alias("doc_a"), "band", "band_sig", F.col("prev").alias("prev_a")
+    )
+    b = right.select(
+        F.col("doc_id").alias("doc_b"), "band", "band_sig", F.col("prev").alias("prev_b")
+    )
+    earlier = F.exists(F.zip_with("prev_a", "prev_b", lambda x, y: x == y), lambda e: e)
+    return a.join(b, ["band", "band_sig"]).filter(~earlier).select("doc_a", "doc_b")
 
 
 def lsh_pairs_from_wide(
     signatures: DataFrame, k: int = MINHASH_K, rows_per_band: int = LSH_ROWS_PER_BAND
 ) -> DataFrame:
-    """Candidate pairs from wide signatures via banded self-join."""
+    """Candidate pairs (doc_a < doc_b) from wide signatures via a banded
+    self-join; each pair once, on its first colliding band."""
     bands = band_rows(signatures, k, rows_per_band)
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
-    return (
-        left.join(right, ["band", "band_sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return _band_pairs(bands, bands).filter(F.col("doc_a") < F.col("doc_b"))
 
 
 def lsh_pairs_between(
@@ -153,21 +181,18 @@ def lsh_pairs_between(
     k: int = MINHASH_K,
     rows_per_band: int = LSH_ROWS_PER_BAND,
 ) -> DataFrame:
-    """Cross-set LSH candidates: (new doc, corpus doc) band collisions.
+    """Cross-set LSH candidates: (new doc, corpus doc) band collisions, each
+    pair once, on its first colliding band.
 
     The incremental-dedup shape: an incoming batch's bands equi-join the
     standing corpus's bands — never new x corpus text comparison, and at
     scale the corpus band table is a bucketed/sorted standing index the
     incoming batch joins into, so each increment shuffles only its own
-    n_new x n_bands strings.
+    n_new x n_bands rows.
     """
-    left = band_rows(sig_new, k, rows_per_band).select(
-        F.col("doc_id").alias("doc_a"), "band", "band_sig"
+    return _band_pairs(
+        band_rows(sig_new, k, rows_per_band), band_rows(sig_corpus, k, rows_per_band)
     )
-    right = band_rows(sig_corpus, k, rows_per_band).select(
-        F.col("doc_id").alias("doc_b"), "band", "band_sig"
-    )
-    return left.join(right, ["band", "band_sig"]).select("doc_a", "doc_b").distinct()
 
 
 def jaccard_from_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
@@ -175,23 +200,35 @@ def jaccard_from_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
 
     ``pairs`` is (doc_a, doc_b); ``docs_arr`` carries (doc_id, sh_arr) with
     each sh_arr a distinct set. Output: (doc_a, doc_b, inter, size_a,
-    size_b, jaccard) — the intersection and both set sizes ride along so
-    asymmetric measures (containment = inter / size_a) need no second
-    verify; column pruning drops them where a caller does not read them.
+    size_b, jaccard), then every other column ``c`` of ``docs_arr`` as
+    ``c_a`` / ``c_b``. The intersection, both set sizes and the per-doc
+    columns ride along so asymmetric measures (containment = inter /
+    size_a) and per-doc attributes (a class's copy count) need no second
+    verify or join; column pruning drops them where a caller does not read
+    them.
 
     Intersection compares shingle STRINGS (not their mod-P hashes), so a hash
     collision can't inflate the count. Two equi-joins attach each side's
     packed set; only candidate docs' arrays are shuffled.
     """
-    a = docs_arr.select(F.col("doc_id").alias("doc_a"), F.col("sh_arr").alias("sh_a"))
-    b = docs_arr.select(F.col("doc_id").alias("doc_b"), F.col("sh_arr").alias("sh_b"))
-    joined = pairs.join(a, "doc_a").join(b, "doc_b")
+    others = [c for c in docs_arr.columns if c not in ("doc_id", "sh_arr")]
+
+    def side(s: str) -> DataFrame:
+        return docs_arr.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("sh_arr").alias(f"sh_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in others],
+        )
+
+    carried = [f"{c}_{s}" for s in ("a", "b") for c in others]
+    joined = pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
     counted = joined.select(
         "doc_a",
         "doc_b",
         F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias("inter"),
         F.size(F.col("sh_a")).alias("size_a"),
         F.size(F.col("sh_b")).alias("size_b"),
+        *carried,
     )
     return counted.select(
         "doc_a",
@@ -200,6 +237,7 @@ def jaccard_from_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
         "size_a",
         "size_b",
         (F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))).alias("jaccard"),
+        *carried,
     )
 
 

@@ -62,11 +62,13 @@ def _shingles_cte(src: str) -> str:
     """The words/widx/shingles/hashed CTEs over a (doc_id, text) relation:
     distinct word-trigram shingles (docs with < 3 words contribute the whole
     text as one shingle), hashed to the portable 60-bit space mod P — the
-    DuckDB twin of operators.text.shingle_arrays."""
+    DuckDB twin of operators.text.shingle_arrays. The trim names its one
+    character: Spark's trim strips only U+0020, DuckDB's bare trim also
+    strips Unicode spaces such as U+00A0."""
     return f"""
 words AS (
-  SELECT doc_id, trim(text) AS txt,
-         string_split_regex(trim(text), '\\s+') AS ws
+  SELECT doc_id, trim(text, ' ') AS txt,
+         string_split_regex(trim(text, ' '), '\\s+') AS ws
   FROM {src}
 ),
 widx AS (
@@ -127,21 +129,20 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-def _text_classes(d: DataFrame, *aggs: F.Column) -> tuple[DataFrame, DataFrame]:
-    """Exact-dup classes of ``d`` and their representatives' shingle sets.
+def _text_classes(d: DataFrame, *aggs: F.Column) -> DataFrame:
+    """Exact-dup classes of ``d``, shingled: one relation with one row per
+    distinct text, (text, doc_id = the class's min doc_id, *aggs, sh_arr,
+    h_arr).
 
-    ``classes`` has one row per distinct text: (text, doc_id = the class's
-    min doc_id, *aggs). ``docs_arr`` is shingle_arrays over the reps. The
-    MinHash-LSH queries run over one rep per class (the duplication-depth
-    guard; see q_fuzzy_pairs for the measured sf1 blow-up the all-pairs form
-    suffers), so the shingle+hash construction runs once per distinct text.
-    Both are cut: the class table feeds the self rows, the reps and the
-    size joins, and the shingle sets feed both the signatures and the
-    Jaccard verify.
+    The MinHash-LSH queries run over one rep per class (the
+    duplication-depth guard; see q_fuzzy_pairs for the measured sf1
+    blow-up the all-pairs form suffers), so the shingle+hash construction
+    runs once per distinct text. The relation is cut once: it feeds the
+    signatures, both sides of the Jaccard verify (which carries the
+    aggregates through as ``<agg>_a`` / ``<agg>_b``) and the callers' own
+    class-level rows, so no caller joins the class table back.
     """
-    classes = cut(d.groupBy("text").agg(F.min("doc_id").alias("doc_id"), *aggs))
-    docs_arr = cut(shingle_arrays(classes.select("doc_id", "text")))
-    return classes, docs_arr
+    return cut(shingle_arrays(d.groupBy("text").agg(F.min("doc_id").alias("doc_id"), *aggs)))
 
 
 def _quality_score(txt: F.Column, ws: F.Column) -> tuple[F.Column, F.Column]:
@@ -406,29 +407,25 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction once per distinct text instead of once per copy. Corpus x
     corpus comparison cost collapses from O(n^2) to O(collisions), and
     per-shingle rows never hit a shuffle: the only shuffled shapes are
-    n_classes x 4 band strings and the candidate reps' shingle arrays.
+    n_classes x 4 band rows and the candidate reps' shingle arrays.
 
-    The class table and the shingled reps come from _text_classes.
+    The shingled class relation comes from _text_classes; the verify
+    carries each class's size through as n_a / n_b, so the cross rows
+    need no join back to the class table.
     """
-    classes, docs_arr = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n"))
+    classes = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n"))
     self_pairs = classes.filter(F.col("n") >= 2).select(
         F.col("doc_id").alias("rep_a"),
         F.col("doc_id").alias("rep_b"),
         F.lit(1.0).alias("jaccard"),
         F.expr("n * (n - 1) DIV 2").alias("n_pairs"),
     )
-    sigs = minhash_from_arrays(docs_arr)
-    pairs = lsh_pairs_from_wide(sigs)
-    jac = jaccard_from_arrays(pairs, docs_arr)
-    cross = (
-        jac.join(classes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(classes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select(
-            F.col("doc_a").alias("rep_a"),
-            F.col("doc_b").alias("rep_b"),
-            "jaccard",
-            (F.col("na") * F.col("nb")).alias("n_pairs"),
-        )
+    jac = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(classes)), classes)
+    cross = jac.select(
+        F.col("doc_a").alias("rep_a"),
+        F.col("doc_b").alias("rep_b"),
+        "jaccard",
+        (F.col("n_a") * F.col("n_b")).alias("n_pairs"),
     )
     return self_pairs.unionByName(cross)
 
@@ -487,27 +484,25 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     two rows carrying the n_copies product, and classes with n >= 2 emit
     one containment=1.0 self row with the n*(n-1) ordered-pair count in
     closed form. Scale shape is otherwise identical to q_minhash_dedup
-    (same classes, banded candidate generation and jaccard_from_arrays
-    verify on candidates only — containment reads its inter and set
-    sizes); recall is bounded by the Jaccard-band collision
+    (same shingled class relation, banded candidate generation and
+    jaccard_from_arrays verify on candidates only — containment reads its
+    inter, set sizes and carried n_copies, and the self rows read their
+    set size in place); recall is bounded by the Jaccard-band collision
     probability, the standard limitation of reusing a symmetric index for
     asymmetric search — at production scale the band index is rebuilt over
     suffix-anchored shingle samples to recover low-Jaccard containment
     pairs.
     """
-    classes, docs_arr = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n_copies"))
-    self_rows = (
-        classes.filter(F.col("n_copies") >= 2)
-        .join(docs_arr.select("doc_id", F.size("sh_arr").alias("n_sh")), "doc_id")
-        .select(
-            "doc_id",
-            F.col("doc_id").alias("within_id"),
-            F.lit(1.0).alias("containment"),
-            F.col("n_sh").cast("bigint").alias("n_shingles"),
-            (F.col("n_copies") * (F.col("n_copies") - 1)).alias("n_pairs"),
-        )
+    classes = _text_classes(_docs(spark, sf_dir), F.count("*").alias("n_copies"))
+    self_rows = classes.filter(F.col("n_copies") >= 2).select(
+        "doc_id",
+        F.col("doc_id").alias("within_id"),
+        F.lit(1.0).alias("containment"),
+        F.size("sh_arr").cast("bigint").alias("n_shingles"),
+        (F.col("n_copies") * (F.col("n_copies") - 1)).alias("n_pairs"),
     )
-    j = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(docs_arr)), docs_arr)
+    j = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(classes)), classes)
+    n_pairs = (F.col("n_copies_a") * F.col("n_copies_b")).alias("n_pairs")
     # both directions explode from ONE row: a union of two selects over j
     # would plan the candidate-join + array_intersect subtree twice (only
     # exchanges are reused), doubling the verify work per candidate pair
@@ -519,36 +514,19 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("doc_b").alias("within_id"),
                     (F.col("inter") / F.col("size_a")).alias("containment"),
                     F.col("size_a").cast("bigint").alias("n_shingles"),
+                    n_pairs,
                 ),
                 F.struct(
                     F.col("doc_b").alias("doc_id"),
                     F.col("doc_a").alias("within_id"),
                     (F.col("inter") / F.col("size_b")).alias("containment"),
                     F.col("size_b").cast("bigint").alias("n_shingles"),
+                    n_pairs,
                 ),
             )
         ).alias("d")
-    ).select("d.doc_id", "d.within_id", "d.containment", "d.n_shingles")
-    cross = (
-        both.filter(F.col("containment") >= CONTAINMENT_MIN)
-        .join(
-            classes.select(F.col("doc_id"), F.col("n_copies").alias("nc_a")), "doc_id"
-        )
-        .join(
-            classes.select(
-                F.col("doc_id").alias("within_id"), F.col("n_copies").alias("nc_b")
-            ),
-            "within_id",
-        )
-        .select(
-            "doc_id",
-            "within_id",
-            "containment",
-            "n_shingles",
-            (F.col("nc_a") * F.col("nc_b")).alias("n_pairs"),
-        )
-    )
-    return self_rows.unionByName(cross)
+    ).select("d.*")
+    return self_rows.unionByName(both.filter(F.col("containment") >= CONTAINMENT_MIN))
 
 
 @register(
@@ -883,7 +861,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the corpus never rescans — its md5 hashes and band rows are a
     standing index (bucketed by hash/band at rest), and the incoming batch
-    joins into it, shuffling only the batch's own hashes and band strings.
+    joins into it, shuffling only the batch's own hashes and band rows.
     Jaccard verification touches only colliding pairs' shingle arrays.
     Both sides collapse to identical-text classes before shingling (the
     family-wide duplication-depth guard): band collisions and Jaccard run
@@ -1214,6 +1192,16 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id of the full component, since each rep is its class's min
     member; keep one keeper per cluster.
 
+    Labels and sizes are computed at class scale: the shingled class
+    relation carries each class's member doc_ids, the component labels
+    left-join onto it (a class on no edge is its own cluster,
+    ``coalesce(component, doc_id)``), ``cluster_size`` sums the member
+    counts over a window on cluster_id, and the member lists explode into
+    the per-document rows last. No row carries text past the class
+    relation's cut, and documents are read once, by that cut. The cost is
+    one array row per class: a class's member list must fit in one row, the
+    degree bound connected_components already states for adjacency.
+
     Components come from operators.graph.connected_components: label
     propagation as message passing, one exchange per round and O(diameter)
     rounds, which suits near-clique duplicate clusters (on the fixtures the
@@ -1228,34 +1216,29 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly why the engine side iterates labels instead.
     """
     d = _docs(spark, sf_dir)
-    classes, docs_arr = _text_classes(d)
-    jac = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(docs_arr)), docs_arr)
+    classes = _text_classes(d, F.collect_list("doc_id").alias("members"))
+    jac = jaccard_from_arrays(lsh_pairs_from_wide(minhash_from_arrays(classes)), classes)
     edges = jac.filter(F.col("jaccard") >= NEAR_JACCARD).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     # only edge nodes enter the CC rounds: singletons (the overwhelming
-    # majority of a deduped corpus) are added back as their own cluster below
+    # majority of a deduped corpus) keep their own id through the left join
     comp = connected_components(edges)
 
-    # expand rep components to documents: every doc inherits its class
-    # rep's cluster (min rep in a component IS the min doc_id of the full
-    # component, since each rep is its class's min member)
-    rep_labels = comp.select(F.col("node").alias("rep"), F.col("component").alias("cluster_id"))
-    singleton_reps = (
-        classes.select(F.col("doc_id").alias("rep"))
-        .join(rep_labels.select("rep"), "rep", "left_anti")
-        .select("rep", F.col("rep").alias("cluster_id"))
+    # the min rep in a component IS the min doc_id of the full component,
+    # since each rep is its class's min member
+    labelled = classes.join(
+        comp.select(F.col("node").alias("doc_id"), "component"), "doc_id", "left"
+    ).select("members", F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"))
+    sized = labelled.select(
+        "members",
+        "cluster_id",
+        F.sum(F.size("members")).over(Window.partitionBy("cluster_id")).alias("cluster_size"),
     )
-    all_reps = rep_labels.unionByName(singleton_reps)
-    membership = d.select("doc_id", "text").join(
-        classes.select("text", F.col("doc_id").alias("rep")), "text"
-    )
-    full = membership.join(all_reps, "rep").select("doc_id", "cluster_id")
-    w = Window.partitionBy("cluster_id")
-    return full.select(
+    return sized.select(F.explode("members").alias("doc_id"), "cluster_id", "cluster_size").select(
         "doc_id",
         "cluster_id",
-        F.count("*").over(w).alias("cluster_size"),
+        "cluster_size",
         (F.col("doc_id") == F.col("cluster_id")).alias("is_keeper"),
     )
 
@@ -2169,7 +2152,9 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is at most |sources| choose 2 rows — metadata-scale.
     """
     docs = _docs(spark, sf_dir)
-    # shingle with source as the id column (shingle_arrays is narrow — the
+    # shingle with source as the id column (only source and text go in:
+    # shingle_arrays passes every other column through, and doc_id would
+    # clash with the renamed source; shingle_arrays is narrow — the
     # per-doc arrays build without any shuffle), so the source label rides
     # the explode and the exploded stream is never joined back on doc_id.
     # The cut is load-bearing: exploding a lambda-built array makes
@@ -2178,7 +2163,9 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array once. Hashing runs AFTER the distinct so md5 touches each
     # distinct (source, shingle) once, not every instance.
     packed = cut(
-        shingle_arrays(docs, id_col="source").select(F.col("doc_id").alias("source"), "sh_arr")
+        shingle_arrays(docs.select("source", "text"), id_col="source").select(
+            F.col("doc_id").alias("source"), "sh_arr"
+        )
     )
     # a second cut on the per-source vocabulary itself: sh's THREE consumers
     # (sizes + both self-join sides) would each re-run the corpus-scale

@@ -19,6 +19,7 @@ from iceberg_benchmark_poc_spark.operators.text import (
     shingle_arrays,
 )
 from iceberg_benchmark_poc_spark.queries.textpipe import (
+    CONTAINMENT_MIN,
     DECON_FLAG,
     DECON_GRAM_N,
     EVAL_MOD,
@@ -29,9 +30,11 @@ from iceberg_benchmark_poc_spark.queries.textpipe import (
     SAMPLE_RATES,
     TOP_TOKENS,
     WEIGHT_SCALE,
+    q_containment,
     q_decontaminate,
     q_dup_clusters,
     q_heavy_hitters,
+    q_minhash_dedup,
     q_mixture_sample,
     q_stratified_sample,
 )
@@ -109,15 +112,13 @@ def test_dup_clusters_star_fallback_matches_fast_path(spark, monkeypatch):
     assert forced == baseline
 
 
-def test_dup_clusters_job_counts(spark):
-    """Building q_dup_clusters runs at most 8 Spark jobs and executing it
-    at most 9 (sf0.001), and the counts do not depend on what ran before:
-    they are the same after a warm-up run and after clearing the cache,
-    because no step leaves cached state behind (every materialization is
-    a core.io.cut)."""
+def _stable_job_counts(spark, query) -> tuple[int, int]:
+    """(build, exec) Spark jobs of ``query`` at SF_DIR, asserted to be the
+    same after a warm-up run and after clearing the cache: no step leaves
+    cached state behind (every materialization is a core.io.cut)."""
 
     def build_and_run():
-        df, build_jobs = jobs_of(spark, lambda: q_dup_clusters(spark, SF_DIR))
+        df, build_jobs = jobs_of(spark, lambda: query(spark, SF_DIR))
         _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
         return build_jobs, exec_jobs
 
@@ -125,9 +126,35 @@ def test_dup_clusters_job_counts(spark):
     after_warm_up = build_and_run()
     spark.catalog.clearCache()
     assert build_and_run() == after_warm_up
-    build_jobs, exec_jobs = after_warm_up
-    assert build_jobs <= 8
-    assert exec_jobs <= 9
+    return after_warm_up
+
+
+def test_dup_clusters_job_counts(spark):
+    """Building q_dup_clusters runs at most 7 Spark jobs and executing it
+    at most 5 (sf0.001), stable across a warm-up and a cache clear. The
+    components are labelled and sized at class scale and the member lists
+    explode last, so no anti-join, union, documents join or
+    document-scale window adds a stage."""
+    build_jobs, exec_jobs = _stable_job_counts(spark, q_dup_clusters)
+    assert build_jobs <= 7
+    assert exec_jobs <= 5
+
+
+def test_minhash_dedup_job_counts(spark):
+    """q_minhash_dedup builds in at most 1 job and executes in at most 3
+    (sf0.001), stable across a warm-up and a cache clear: candidate pairs
+    need no dedupe exchange and the class sizes ride through the verify."""
+    build_jobs, exec_jobs = _stable_job_counts(spark, q_minhash_dedup)
+    assert build_jobs <= 1
+    assert exec_jobs <= 3
+
+
+def test_containment_job_counts(spark):
+    """q_containment builds in at most 1 job and executes in at most 3
+    (sf0.001), stable across a warm-up and a cache clear."""
+    build_jobs, exec_jobs = _stable_job_counts(spark, q_containment)
+    assert build_jobs <= 1
+    assert exec_jobs <= 3
 
 
 def test_stratified_sample_deterministic_and_rated(spark):
@@ -296,13 +323,6 @@ def test_containment_exact_on_candidates_and_recall(spark):
     within the exact-audit sample its banded candidates must recover every
     high-JACCARD containment pair (the documented recall bound: band
     collisions are driven by symmetric Jaccard)."""
-    from iceberg_benchmark_poc_spark.operators.text import shingle_arrays
-    from iceberg_benchmark_poc_spark.queries.textpipe import (
-        CONTAINMENT_MIN,
-        NEAR_JACCARD,
-        q_containment,
-    )
-
     docs = load_table(spark, SF_DIR, "documents")
     sets = {
         r["doc_id"]: set(r["sh_arr"]) for r in shingle_arrays(docs).collect()

@@ -28,13 +28,18 @@ def _write_degenerate_fixture(out, kind: str) -> str:
     - ``null_user_values``: every events.value of one user is NULL, so that
       user's totals are NULL (prefix-scan keys that must sort NULLS LAST);
     - ``empty_part_documents``: part and documents have 0 rows, so domain
-      folds over them return None.
+      folds over them return None;
+    - ``nbsp_copy``: the first incoming-source document becomes a copy of
+      the first corpus document plus a trailing U+00A0, which Spark's trim
+      keeps and DuckDB's bare ``trim`` strips.
     """
     import shutil
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from iceberg_benchmark_poc_spark.queries.textpipe import INCOMING_SOURCE
 
     from .conftest import TABLES
 
@@ -50,6 +55,14 @@ def _write_degenerate_fixture(out, kind: str) -> str:
             pq.write_table(table, dst)
         elif kind == "empty_part_documents" and t in ("part", "documents"):
             pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "nbsp_copy" and t == "documents":
+            table = pq.read_table(src)
+            texts, sources = table["text"].to_pylist(), table["source"].to_pylist()
+            orig = sources.index(next(s for s in sources if s != INCOMING_SOURCE))
+            texts[sources.index(INCOMING_SOURCE)] = texts[orig] + "\u00a0"
+            i = table.schema.get_field_index("text")
+            table = table.set_column(i, table.schema.field(i), pa.array(texts, table.schema.field(i).type))
+            pq.write_table(table, dst)
         else:
             shutil.copy(src, dst)
     return str(out)
@@ -88,6 +101,11 @@ def degenerate_sf(tmp_path_factory):
         ("empty_part_documents", "q_source_overlap"),
         ("empty_part_documents", "q_bpe_train"),
         ("empty_part_documents", "q_bpe_encode"),
+        ("nbsp_copy", "q_minhash_dedup"),
+        ("nbsp_copy", "q_containment"),
+        ("nbsp_copy", "q_dup_clusters"),
+        ("nbsp_copy", "q_incremental_dedup"),
+        ("nbsp_copy", "q_source_overlap"),
     ],
 )
 def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
@@ -100,7 +118,9 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
     pair: with no word types there is no pair to merge, so training stops
     before its first round — an empty merge table (not BPE_MERGES rows of
     NULLs) and an empty token histogram, as the oracles' empty ``LIMIT 1``
-    argmaxes give."""
+    argmaxes give. The LSH family and q_source_overlap on a copy that
+    differs only by a trailing U+00A0: both sides trim U+0020 alone, so
+    the copy's last shingle keeps the U+00A0 on both."""
     sf_dir, duck = degenerate_sf(kind)
     q = QUERIES[name]
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)

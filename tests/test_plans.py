@@ -323,6 +323,24 @@ def test_ivf_assignment_is_map_only(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_dup_clusters_labels_and_sizes_classes(spark):
+    """q_dup_clusters labels and sizes exact-dup classes and expands them
+    to documents last: the executed plan has no anti-join (singletons keep
+    their own id through a left join), never scans documents (the class
+    relation's cut did, at build time, and carries the member doc_ids), and
+    its one cluster_id exchange, under the size window, carries no text.
+    Checked on the final AQE plan after execution."""
+    df = all_queries()["q_dup_clusters"].fn(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    lines = plan.splitlines()
+    assert "LeftAnti" not in plan, plan
+    assert "/documents.parquet" not in plan, plan
+    by_cluster = [i for i, line in enumerate(lines) if "Exchange hashpartitioning(cluster_id" in line]
+    assert len(by_cluster) == 1, plan
+    assert "text#" not in lines[by_cluster[0] + 1], plan
+
+
 def test_corpus_select_shuffles_metadata_only(spark):
     """The budget sort of q_corpus_select must order (doc_id, tokens, score)
     rows — the text column stays behind the dedup/quality stages."""

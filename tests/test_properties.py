@@ -193,6 +193,67 @@ def test_exact_dups_always_lsh_candidates(spark, words):
     assert (0, 1) in {(r["doc_a"], r["doc_b"]) for r in pairs}
 
 
+def _collide(x: tuple, y: tuple) -> bool:
+    """Reference band collision: some band's minhashes are all equal."""
+    from iceberg_benchmark_poc_spark.operators.text import LSH_ROWS_PER_BAND, MINHASH_K
+
+    r = LSH_ROWS_PER_BAND
+    return any(x[b : b + r] == y[b : b + r] for b in range(0, MINHASH_K, r))
+
+
+def _signatures(spark, sigs: list[tuple], first_id: int):
+    from iceberg_benchmark_poc_spark.operators.text import MINHASH_K
+
+    schema = "doc_id long, " + ", ".join(f"mh{i} long" for i in range(MINHASH_K))
+    return spark.createDataFrame([(first_id + i, *s) for i, s in enumerate(sigs)], schema)
+
+
+#: signatures drawn from a 2-3 value domain, so pairs collide on several bands
+signature_lists = st.integers(2, 3).flatmap(
+    lambda v: st.lists(st.tuples(*[st.integers(0, v - 1)] * 8), min_size=2, max_size=12)
+)
+
+
+@given(sigs=signature_lists)
+@settings(**SETTINGS)
+def test_lsh_pairs_from_wide_emit_each_collision_once(spark, sigs):
+    """Every band-collision pair (doc_a < doc_b) comes out exactly once,
+    however many bands it collides on — the first-colliding-band rule
+    replaces a dedupe exchange."""
+    from iceberg_benchmark_poc_spark.operators.text import lsh_pairs_from_wide
+
+    rows = lsh_pairs_from_wide(_signatures(spark, sigs, 0)).collect()
+    got = [(r["doc_a"], r["doc_b"]) for r in rows]
+    expected = {
+        (a, b)
+        for a in range(len(sigs))
+        for b in range(a + 1, len(sigs))
+        if _collide(sigs[a], sigs[b])
+    }
+    assert len(got) == len(set(got))
+    assert set(got) == expected
+
+
+@given(new=signature_lists, corpus=signature_lists)
+@settings(**SETTINGS)
+def test_lsh_pairs_between_emit_each_collision_once(spark, new, corpus):
+    """Cross-set form: every (new, corpus) band-collision pair exactly once."""
+    from iceberg_benchmark_poc_spark.operators.text import lsh_pairs_between
+
+    rows = lsh_pairs_between(
+        _signatures(spark, new, 0), _signatures(spark, corpus, 100)
+    ).collect()
+    got = [(r["doc_a"], r["doc_b"]) for r in rows]
+    expected = {
+        (a, 100 + b)
+        for a in range(len(new))
+        for b in range(len(corpus))
+        if _collide(new[a], corpus[b])
+    }
+    assert len(got) == len(set(got))
+    assert set(got) == expected
+
+
 # ---------------------------------------------------------------------------
 # fingerprint: deterministic and order-sensitive
 # ---------------------------------------------------------------------------
