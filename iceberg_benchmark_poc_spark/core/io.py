@@ -53,9 +53,10 @@ then runs that fold. Two facts the footers hide: writers store a float zero
 minimum as ``-0.0`` (returned as ``0.0``, what the fold returns for zeros),
 and they leave NaN out of min/max, so a float column holding NaN, which
 Spark folds to NaN, yields its largest non-NaN value. Every caller uses the
-bounds to place range buckets only (operators/prefix.py keeps ids monotone
-for keys outside [lo, hi] and gives NaN keys their own range), so results
-never depend on them.
+bounds to place range buckets (operators/prefix.py keeps ids monotone for
+keys outside [lo, hi] and gives NaN keys their own range), so results never
+depend on their values; q_equidepth_hist also reads a None bound as the
+exact fact that the column holds no non-NULL value.
 
 At 100 TB these reads stay embarrassingly parallel: ``spark.read.parquet`` on
 a directory fans out one task per ~128 MB split (``files.maxPartitionBytes``),

@@ -40,6 +40,13 @@ ReusedExchange. That holds when ``df`` carries exactly the order columns
 and the value column (join anything else back by key); extra columns used
 downstream only cost a second exchange, never correctness.
 
+``ranked_histogram`` runs the same two phases over per-key counts: rows are
+counted per (range, key) in the range exchange's own stage, and the offsets
+table also carries the grand total and the first key of the next non-empty
+range, so every distinct key knows its ranks, its successor and the row
+count with no driver-side value (operators/quantiles.py picks order
+statistics from them).
+
 AQE-safe — coalescing merges whole hash partitions, and the window
 re-partitions logically by the id column, not by physical layout.
 
@@ -59,6 +66,10 @@ _PID = "__range_pid"
 _LOCAL = "__local_scan"
 _RANGE = "__range_agg"
 _BASE = "__base_offset"
+_VALUE = "__key_value"
+_FIRST = "__first_key"
+_NEXT = "__next_key"
+_TOTAL = "__total"
 
 #: (key expression, domain lo, domain hi, bucket count); lo/hi are Python
 #: numbers, or None when the domain fold saw no non-NULL value
@@ -85,6 +96,10 @@ def _range_id(bucket: Bucket) -> Column:
     return F.coalesce(null_key, *ids).cast("bigint")
 
 
+def _plus_base(local: Column, base: Column) -> Column:
+    return local + F.coalesce(base, F.lit(0))
+
+
 def _two_phase_scan(
     df: DataFrame,
     order_cols: list[Column],
@@ -94,30 +109,70 @@ def _two_phase_scan(
     agg: Callable[[Column], Column],
     frame_end: int,
     combine: Callable[[Column, Column], Column],
+    per_key: bool = False,
 ) -> DataFrame:
+    """The one two-phase scan. ``per_key`` is ranked_histogram's form: the
+    rows fold with ``agg`` per distinct value of the one order column after
+    the exchange, and each output row also carries its successor and the
+    aggregate over all rows."""
     ranged = df.withColumn(_PID, _range_id(bucket)).repartition(F.col(_PID))
     w = Window.partitionBy(_PID).orderBy(*order_cols)
-    local = ranged.withColumn(
-        _LOCAL, agg(value_col).over(w.rowsBetween(Window.unboundedPreceding, frame_end))
-    )
-    # the per-range aggregate comes from the SAME window spec (an unbounded
-    # frame), so column pruning leaves the offsets side's exchange equal to
-    # the local side's — a plain groupBy would prune the order columns and
-    # plan a second exchange that re-runs everything upstream
-    w_prev = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        ranged.withColumn(
-            _RANGE,
-            agg(value_col).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+    upto = (Window.unboundedPreceding, frame_end)
+    whole = (Window.unboundedPreceding, Window.unboundedFollowing)
+    # the offsets table: one row per non-empty range, over one SinglePartition
+    # window in range order, broadcast back to the per-range side
+    w_pid = Window.orderBy(_PID)
+    base = agg(F.col(_RANGE)).over(w_pid.rowsBetween(Window.unboundedPreceding, -1)).alias(_BASE)
+    if not per_key:
+        local = ranged.withColumn(_LOCAL, agg(value_col).over(w.rowsBetween(*upto)))
+        # the per-range aggregate comes from the SAME window spec (an
+        # unbounded frame), so column pruning leaves the offsets side's
+        # exchange equal to the local side's — a plain groupBy would prune
+        # the order columns and plan a second exchange that re-runs
+        # everything upstream
+        offsets = (
+            ranged.withColumn(_RANGE, agg(value_col).over(w.rowsBetween(*whole)))
+            .groupBy(_PID)
+            .agg(F.max(_RANGE).alias(_RANGE))  # one value per range
+            .select(_PID, base)
         )
-        .groupBy(_PID)
-        .agg(F.max(_RANGE).alias(_RANGE))  # one value per range
-        .select(_PID, agg(F.col(_RANGE)).over(w_prev).alias(_BASE))
+        return (
+            local.join(F.broadcast(offsets), _PID)
+            .withColumn(out_col, combine(F.col(_LOCAL), F.col(_BASE)))
+            .drop(_PID, _LOCAL, _BASE)
+        )
+    (key,) = order_cols
+    # one row per distinct key, folded in the exchange's stage: hash
+    # partitioning on the range id clusters (range id, key), so the groupBy
+    # plans no second exchange
+    keyed = ranged.groupBy(_PID, key).agg(agg(value_col).alias(_VALUE))
+    local = keyed.select(
+        key,
+        _PID,
+        _VALUE,
+        agg(F.col(_VALUE)).over(w.rowsBetween(*upto)).alias(_LOCAL),
+        F.lead(key).over(w).alias(_NEXT),
     )
-    return (
-        local.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, combine(F.col(_LOCAL), F.col(_BASE)))
-        .drop(_PID, _LOCAL, _BASE)
+    # the offsets table folds the exchanged rows per range directly: it reads
+    # the same columns as the per-key side, so its exchange stays equal. It
+    # also carries the aggregate over every range and the first key of the
+    # next non-empty range: the successor of a range's last key
+    offsets = (
+        ranged.groupBy(_PID)
+        .agg(agg(value_col).alias(_RANGE), F.min(key).alias(_FIRST))
+        .select(
+            _PID,
+            base,
+            agg(F.col(_RANGE)).over(w_pid.rowsBetween(*whole)).alias(_TOTAL),
+            F.lead(_FIRST).over(w_pid).alias(_FIRST),
+        )
+    )
+    return local.join(F.broadcast(offsets), _PID).select(
+        key,
+        F.col(_VALUE).alias("count"),
+        combine(F.col(_LOCAL), F.col(_BASE)).alias(out_col),
+        F.coalesce(_NEXT, _FIRST).alias("next"),
+        F.col(_TOTAL).alias("total"),
     )
 
 
@@ -144,7 +199,7 @@ def global_prefix_sum(
         bucket,
         F.sum,
         Window.currentRow,
-        lambda local, base: local + F.coalesce(base, F.lit(0)),
+        _plus_base,
     )
 
 
@@ -167,4 +222,33 @@ def global_prefix_max(
     """
     return _two_phase_scan(
         df, order_cols, value_col, out_col, bucket, F.max, -1, F.greatest
+    )
+
+
+def ranked_histogram(df: DataFrame, key: str, bucket: Bucket) -> DataFrame:
+    """One row per distinct value of ``df``'s column ``key``, with its ranks.
+
+    Columns: ``key``; ``count``, its rows; ``cum``, the rows whose key is at
+    most it, so its 0-indexed ranks run from ``cum - count`` to ``cum - 1``;
+    ``next``, the next larger distinct value (NULL for the largest); and
+    ``total``, the rows of ``df``. Every rank statistic sits in the plan, so
+    a caller that picks order statistics needs no driver-side count.
+
+    The prefix sum of per-key counts, over the one range exchange: the rows
+    are counted per (range, key) in the exchange's stage, the per-range
+    window adds the running count and the in-range successor, and the
+    offsets table adds each range's base, ``total`` and the successor of a
+    range's last key. ``key`` must be non-NULL (filter NULLs first), and
+    ``bucket``'s key must be non-decreasing in it.
+    """
+    return _two_phase_scan(
+        df,
+        [F.col(key)],
+        F.lit(1),
+        "cum",
+        bucket,
+        F.sum,
+        Window.currentRow,
+        _plus_base,
+        per_key=True,
     )

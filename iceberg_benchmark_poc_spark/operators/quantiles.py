@@ -8,46 +8,67 @@ memory and wall on a single core. For bounded-domain value columns
 (quantized prices, durations in ms, scores on a grid) the distinct set is
 corpus-scale-safe but still large enough to make that merge the bottleneck.
 
-This operator computes the identical result as a distributed plan:
+This module computes the identical result as one distributed plan over a
+ranked histogram (operators/prefix.py ``ranked_histogram``): one range
+exchange of the non-NULL values, a count per distinct value in the
+exchange's stage, and the two-phase prefix sum of those counts. Every
+distinct value ``v`` then carries its first and last 0-indexed rank, the
+next distinct value and the row count ``n``, so:
 
-1. ``groupBy(value)`` count — shuffled, map-side combined, one row per
-   distinct value;
-2. cumulative ranks via the two-phase :func:`global_prefix_sum` (no
-   single-partition corpus window);
-3. one conditional-aggregation pass picks the <=2*len(percentages) order
-   statistics the requested quantiles interpolate between — the 0-indexed
-   k-th order statistic is the smallest value whose cumulative count
-   covers k;
-4. linear interpolation with the same IEEE expression builtin
-   ``percentile`` evaluates: position ``p*(n-1)``, weights ``hi-pos`` /
-   ``pos-lo`` (Sterbenz-exact), products summed in the same order, AND the
-   builtin's equal-keys short-circuit (Percentile.scala returns the key
-   directly when the two order statistics it would interpolate between are
-   equal) — bit-equal output. The short-circuit is observable: when the
-   fractional position's mantissa bits plus the value's bits exceed 52, the
-   weighted sum of two equal keys rounds one ulp off the key (hypothesis
-   found v=-15, p=1.19e-07 -> -14.999999999999998). DuckDB's
+1. the rank targets of a percentage ``d`` are plan expressions — position
+   ``p = d*(n-1)``, ``lo = floor(p)``, ``hi = ceil(p)`` — in the same IEEE
+   double arithmetic as builtin ``percentile``, so no value is folded to
+   the driver;
+2. the one value whose ranks cover ``lo`` computes the quantile by itself:
+   the upper order statistic is the value itself when its ranks also cover
+   ``hi``, else its successor (consecutive order statistics have no
+   distinct value between them);
+3. the interpolation is the builtin's exact chain — weights ``hi-p`` /
+   ``p-lo`` (Sterbenz-exact), products summed in the same order — AND its
+   equal-keys short-circuit (Percentile.scala returns the key directly when
+   the two order statistics are equal). The short-circuit is observable:
+   when the fractional position's mantissa bits plus the value's bits
+   exceed 52, the weighted sum of two equal keys rounds one ulp off the key
+   (hypothesis found v=-15, p=1.19e-07 -> -14.999999999999998). DuckDB's
    ``quantile_cont`` does NOT short-circuit, so an oracle gated against
-   this operator must spell out the same CASE over explicit order
-   statistics instead of calling ``quantile_cont`` (see q_equidepth_hist).
+   this module spells out the same CASE over explicit order statistics
+   instead of calling ``quantile_cont`` (see q_equidepth_hist).
 
-The driver-side values are the non-NULL row count ``n_rows`` (the rank
-targets are literals in the final aggregation) and the value's min/max
-(the prefix sum's bucket domain), folded in one aggregation.
+:func:`exact_quantiles` picks each percentage's value in one aggregate;
+:func:`quantile_bucket` counts, on each ranked value, the quantiles at or
+below it, which is an equi-depth bucket assigned where the ranks are, with
+no boundary array joined back.
 """
 
 from __future__ import annotations
 
-import math
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .prefix import global_prefix_sum
+from .prefix import Bucket, ranked_histogram
 
-#: deterministic-bucket count for the prefix sum's range ids: ~20-100x the
-#: local core count so the hash spread over shuffle partitions is even
-#: (guide §2.5), while the offsets table stays trivially metadata-scale
-_N_RANGES = 1024
+_QV = "__qv"
+
+
+def _order_statistics(value: Column, d: float) -> tuple[Column, Column, Column]:
+    """(covers, reaches_hi, quantile) on a ranked histogram row keyed by
+    ``value``, for percentage ``d`` at position ``p = d*(n-1)``: whether the
+    value's ranks cover ``lo = floor(p)``, whether they reach ``hi =
+    ceil(p)``, and ``d``'s quantile computed from the value and its
+    successor, bit-equal to builtin ``percentile`` on the covering row."""
+    pos = F.lit(float(d)) * (F.col("total") - 1)
+    lo, hi = F.floor(pos), F.ceil(pos)
+    last = F.col("cum") - 1
+    covers = (F.col("cum") - F.col("count") <= lo) & (lo <= last)
+    reaches_hi = last >= hi
+    v_lo = value.cast("double")
+    quantile = (
+        # equal-keys short-circuit: both order statistics are this value
+        F.when(reaches_hi, v_lo)
+        .otherwise((hi - pos) * v_lo + (pos - lo) * F.col("next").cast("double"))
+    )
+    return covers, reaches_hi, quantile
 
 
 def exact_quantiles(
@@ -55,7 +76,7 @@ def exact_quantiles(
     value: Column,
     percentages: list[float],
     out_col: str = "bs",
-    counts: DataFrame | None = None,
+    bucket: Bucket | None = None,
 ) -> DataFrame:
     """One-row DataFrame: ``out_col`` = array of exact interpolated quantiles.
 
@@ -65,65 +86,43 @@ def exact_quantiles(
     included: NULL values are ignored, and empty or all-NULL input gives
     NULL, not an array of NULLs.
 
-    Pass ``counts`` — a ``(__qv, __qcnt)`` DataFrame of per-distinct-value
-    counts — when the caller already has (or wants to reuse) the value
-    histogram; ``df``/``value`` are then ignored, and the row count and
-    value domain are folded from the histogram (one pass over |distinct
-    values| rows) instead of re-scanning the input. A caller that reads the
-    histogram again cuts it first (``core.io.cut``), as q_equidepth_hist
-    does.
-
-    Without ``counts``, the row count is folded with ``min``/``max`` of the
-    value in ONE aggregation of the raw rows — deliberately: all three
-    collapse to row-group metadata over a parquet scan (aggregate
-    pushdown), which is far cheaper than building and caching a histogram
-    that near-unique value domains (raw doubles) would inflate to row
-    scale. The min/max are the prefix sum's bucket domain
-    (operators/prefix.py).
+    ``bucket=(key, lo, hi, n)`` places the ranked histogram's range ids, as
+    in ``global_prefix_sum``: ``key`` is a monotone expression of ``value``
+    over ``df``'s columns, and ``lo``/``hi`` (parquet footer min/max via
+    ``core.io.table_bounds``, say) steer balance only. Without it every
+    distinct value ranks in one range. No Spark job runs until the result
+    is.
     """
-    if counts is None:
-        n_rows, lo, hi = df.agg(F.count(value), F.min(value), F.max(value)).collect()[0]
-        counts = (
-            df.select(value.alias("__qv"))
-            .filter(F.col("__qv").isNotNull())
-            .groupBy("__qv")
-            .agg(F.count("*").alias("__qcnt"))
-        )
-    else:
-        counts = counts.filter(F.col("__qv").isNotNull())
-        n_rows, lo, hi = counts.agg(
-            F.sum("__qcnt"), F.min("__qv"), F.max("__qv")
-        ).collect()[0]
-    if not n_rows:  # builtin percentile: NULL on empty or all-NULL input
-        return counts.agg(F.lit(None).cast("array<double>").alias(out_col))
-    bucket = (F.col("__qv"), lo, hi, _N_RANGES)
-    cum = global_prefix_sum(counts, [F.col("__qv")], F.col("__qcnt"), "__qcum", bucket=bucket)
-    ks = sorted(
-        {
-            k
-            for d in percentages
-            for p in (d * (n_rows - 1),)
-            for k in (math.floor(p), math.ceil(p))
-        }
+    ranked = ranked_histogram(
+        df.withColumn(_QV, value).filter(F.col(_QV).isNotNull()),
+        _QV,
+        bucket or (F.col(_QV), None, None, 1),
     )
-    picked = cum.agg(
-        *[F.min(F.when(F.col("__qcum") >= k + 1, F.col("__qv"))).alias(f"__v{k}") for k in ks]
-    )
-    exprs = []
+    picks = []
     for d in percentages:
-        p = d * (n_rows - 1)
-        lo_k, hi_k = math.floor(p), math.ceil(p)
-        if lo_k == hi_k:
-            exprs.append(F.col(f"__v{lo_k}").cast("double"))
-        else:
-            v_lo = F.col(f"__v{lo_k}").cast("double")
-            v_hi = F.col(f"__v{hi_k}").cast("double")
-            exprs.append(
-                # builtin percentile's equal-keys short-circuit: interpolating
-                # between equal order statistics returns the key itself, never
-                # the (possibly 1-ulp-off) weighted sum
-                F.when(v_lo == v_hi, v_lo).otherwise(
-                    F.lit(hi_k - p) * v_lo + F.lit(p - lo_k) * v_hi
-                )
-            )
-    return picked.select(F.array(*exprs).alias(out_col))
+        covers, _, quantile = _order_statistics(F.col(_QV), d)
+        picks.append(F.max(F.when(covers, quantile)))  # one value covers each rank
+    # builtin percentile: NULL on empty or all-NULL input
+    return ranked.agg(F.when(F.count(F.lit(1)) > 0, F.array(*picks)).alias(out_col))
+
+
+def quantile_bucket(value: Column, percentages: list[float]) -> Column:
+    """On a ``ranked_histogram`` row keyed by ``value``: how many of the
+    ``percentages``' exact quantiles the value is at least, i.e.
+    ``size(filter(percentile(value, percentages), b -> value >= b))``.
+
+    With ``b`` interpolated between the order statistics of ranks ``lo`` and
+    ``hi``, the value is at least ``b`` exactly when its last rank reaches
+    ``hi``, or when it holds rank ``lo`` and is at least the ``b`` it
+    computes itself. That rests on ``b`` lying between its two order
+    statistics, which the interpolation keeps for integral values well
+    inside 2^52 in magnitude (q_equidepth_hist's cents); a random search of
+    the IEEE chain found one value near 2^52.8 where ``b`` rounds one below
+    its lower order statistic.
+    """
+    terms = []
+    for d in percentages:
+        covers, reaches_hi, quantile = _order_statistics(value, d)
+        at_least = reaches_hi | (covers & (value.cast("double") >= quantile))
+        terms.append(F.when(at_least, 1).otherwise(0))
+    return reduce(Column.__add__, terms).cast("int")

@@ -10,10 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import commit_log, read_log, with_fixtures
-from ..core.io import cut, epoch_micros, load_table
+from ..core.io import cut, epoch_micros, load_table, table_bounds
 from ..core.registry import register
 from ..operators.graph import bfs_distances, symmetrize
-from ..operators.quantiles import exact_quantiles
+from ..operators.prefix import ranked_histogram
+from ..operators.quantiles import quantile_bucket
 
 FLAGS = ("A", "N", "R")
 
@@ -211,9 +212,12 @@ _DECILES = [round(i / N_HIST_BUCKETS, 1) for i in range(1, N_HIST_BUCKETS)]
         WITH cents AS (
           SELECT CAST(floor(l_extendedprice * 100) AS BIGINT) AS c FROM lineitem
         ),
-        nn AS (SELECT count(*) AS cnt FROM cents),
+        -- builtin percentile ignores NULL values: they neither count in n
+        -- nor take a rank
+        nn AS (SELECT count(c) AS cnt FROM cents),
         ord AS (
-          SELECT c, row_number() OVER (ORDER BY c) - 1 AS rk FROM cents
+          SELECT c, row_number() OVER (ORDER BY c) - 1 AS rk
+          FROM cents WHERE c IS NOT NULL
         ),
         tgt AS (
           SELECT d, d * (cnt - 1) AS pos,
@@ -255,50 +259,49 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (decile) histogram of price without a global sort.
 
     The scale-correct bucketize shape: ntile() would sort every row through
-    one task; instead the 9 decile boundaries (a ONE-ROW fold) broadcast
-    back to the scan and each row counts boundaries <= itself — map-only
-    assignment, then a 10-group rollup. Prices quantize to integer cents
+    one task; instead each distinct price is bucketed where its ranks are
+    and the rows roll up into 10 groups. Prices quantize to integer cents
     first so the percentile interpolation is engine-exact at half-steps
     (same rule as q_percentiles' integral ttfb).
 
-    Boundaries are EXACT order statistics so the DuckDB oracle (explicit
+    Boundaries are EXACT order statistics (builtin ``percentile``
+    semantics: NULL prices take no rank) so the DuckDB oracle (explicit
     order-statistic interpolation — quantile_cont lacks builtin
     percentile's equal-keys short-circuit, so the oracle spells out the
-    same CASE) hash-matches, but computed distributed: builtin percentile()
-    funnels every (value, count) pair through ONE boxed-hashmap merge
-    (3.5 s of this query's wall at sf0.1, O(distinct) memory on one
-    thread). Instead: groupBy-count per distinct cent value (bounded
-    domain — price cents, not rows), a two-phase global_prefix_sum for
-    cumulative ranks, then one conditional-agg pass picks the <=18
-    order statistics the 9 deciles interpolate between. The single
-    row count feeding the literal rank targets is a scalar fold, the
-    one driver-side value this plan needs. Interpolation reproduces
-    builtin percentile's exact IEEE chain — weights (hi-p)/(p-lo) are
-    Sterbenz-exact, products and sum in the same order, equal order
-    statistics short-circuit to the key — so the result is bit-equal to
-    builtin percentile, and the oracle mirrors that chain verbatim.
+    same CASE) hash-matches, but nothing funnels through one thread:
+    builtin percentile() merges every (value, count) pair in ONE boxed
+    hashmap (3.5 s of this query's wall at sf0.1). Instead one ranked
+    histogram (operators/prefix.py ``ranked_histogram``: one range exchange
+    of the cents, counted per distinct cent value in its stage, then the
+    two-phase prefix sum) gives every distinct value its ranks, its
+    successor and the row count, and ``operators.quantiles.quantile_bucket``
+    assigns its bucket from them: no boundary fold, no row-count collect,
+    no boundary array crossed with the values. The range ids come from the
+    price's parquet-footer min/max (``core.io.table_bounds``, no job), which
+    steer balance only.
+
+    A NULL price lands in bucket 0, as ``c >= b`` is never true for it: it
+    counts in that bucket's ``n_rows`` and in no min/max. With no non-NULL
+    price the quantiles are NULL and so is that bucket.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = li.select(F.floor(F.col("l_extendedprice") * 100).cast("bigint").alias("c"))
-    # ONE full scan: the per-distinct-cent histogram is cut, and EVERY
-    # later step — the n_rows fold, boundary picking, bucket assignment,
-    # per-bucket rollup — runs on the |distinct cents| histogram rows,
-    # never the raw rows again (the old form re-scanned lineitem to assign
-    # buckets row-by-row: same bucket for equal cents, so assign once per
-    # distinct value and sum counts)
-    counts = cut(cents.groupBy(F.col("c").alias("__qv")).agg(F.count("*").alias("__qcnt")))
-    bounds = exact_quantiles(None, None, _DECILES, counts=counts)
-    assigned = counts.join(F.broadcast(bounds)).select(
-        F.col("__qv").alias("c"),
-        "__qcnt",
-        F.aggregate(
-            "bs", F.lit(0), lambda acc, b: acc + F.when(F.col("__qv") >= b, 1).otherwise(0)
-        )
-        .cast("int")
-        .alias("bucket"),
+    price = F.col("l_extendedprice")
+    cents = F.floor(price * 100).cast("bigint").alias("c")
+    _, ((lo, hi),) = table_bounds(spark, sf_dir, "lineitem", ["l_extendedprice"])
+    ranked = ranked_histogram(
+        li.filter(price.isNotNull()).select(cents), "c", (F.col("c") / 100, lo, hi, 1024)
+    ).select("c", "count", quantile_bucket(F.col("c"), _DECILES).alias("bucket"))
+    # a NULL price is a NULL cent value, and the IS NULL filter pushes down to
+    # the row groups' null counts. With no non-NULL price (None bounds:
+    # table_bounds equals the fold) the quantiles are NULL, and so is the
+    # NULL rows' bucket
+    nulls = li.filter(price.isNull()).select(
+        cents,
+        F.lit(1).cast("bigint").alias("count"),
+        F.lit(None if lo is None else 0).cast("int").alias("bucket"),
     )
-    return assigned.groupBy("bucket").agg(
-        F.sum("__qcnt").cast("bigint").alias("n_rows"),
+    return ranked.unionByName(nulls).groupBy("bucket").agg(
+        F.sum("count").cast("bigint").alias("n_rows"),
         F.min("c").cast("bigint").alias("lo_cents"),
         F.max("c").cast("bigint").alias("hi_cents"),
     )

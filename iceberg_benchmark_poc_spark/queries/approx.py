@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core.fixtures import hash60, hash60_sql
-from ..core.io import load_table
+from ..core.io import load_table, table_bounds
 from ..core.registry import register
 from ..operators.quantiles import exact_quantiles
 from ..operators.skew import salted_count, salted_join
@@ -102,13 +102,16 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     power the gate — the production profile at 100 TB runs the sketch
     columns alone.
 
-    The exact-quantile twin runs through :func:`exact_quantiles`
-    (groupBy-count + two-phase prefix sum + conditional agg — bit-equal to
-    builtin ``percentile``), NOT the builtin: the builtin's boxed value-map
-    merge funnels every distinct price through one thread and was >half of
-    this query's wall (7.1 s at sf0.1) besides being a driver-memory hazard
-    at real cardinalities. The one-row bounds table broadcast-joins the
-    sketch agg.
+    The exact-quantile twin runs through :func:`exact_quantiles` (one
+    ranked histogram — a range exchange, a count per distinct price and the
+    two-phase prefix sum — and one aggregate picking each quantile where its
+    ranks are, bit-equal to builtin ``percentile``), NOT the builtin: the
+    builtin's boxed value-map merge funnels every distinct price through
+    one thread and was >half of this query's wall (7.1 s at sf0.1) besides
+    being a driver-memory hazard at real cardinalities. Its range ids come
+    from the price's parquet-footer min/max (``core.io.table_bounds``, no
+    job), so the query builds with no Spark job. The one-row bounds table
+    broadcast-joins the sketch agg.
 
     Quantile verdicts are scalar booleans (q50/q95/q99) rather than one
     array column: the driver's canonicalization sorts cell values and list
@@ -118,8 +121,13 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
     aq = F.expr("approx_percentile(l_extendedprice, array(0.5, 0.95, 0.99))")
+    _, ((lo, hi),) = table_bounds(spark, sf_dir, "lineitem", ["l_extendedprice"])
     eq_bounds = exact_quantiles(
-        li, F.col("l_extendedprice"), [0.5, 0.95, 0.99], out_col="ebs"
+        li,
+        F.col("l_extendedprice"),
+        [0.5, 0.95, 0.99],
+        out_col="ebs",
+        bucket=(F.col("l_extendedprice"), lo, hi, 1024),
     )
 
     def within(approx, exact):
@@ -191,7 +199,7 @@ def _cms_bucket(lane, h):
     "q_countmin_topk",
     oracle=rf"""
         WITH toks AS (
-          SELECT unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents
+          SELECT unnest(string_split_regex(trim(text, ' '), '\s+')) AS t FROM documents
         ),
         hashed AS (SELECT t, {hash60_sql("t")} % {CMS_PRIME} AS h FROM toks),
         lanes AS (SELECT h, l.range AS lane FROM hashed, range({CMS_DEPTH}) l),

@@ -68,22 +68,22 @@ BPE_EOW = "</w>"
 #: 'b an an a'). replace() is left-to-right non-overlapping in both engines
 #: (probe-verified, including the 'a a a' -> 'aa a' overlap case), which
 #: with intact boundaries IS the textbook greedy scan. Collapse the
-#: doubled separators and trim afterwards; NULL pair (no pairs left)
-#: passes the sequence through.
+#: doubled separators and trim U+0020 afterwards (DuckDB's bare trim would
+#: also strip a U+00A0 symbol); NULL pair (no pairs left) passes the
+#: sequence through.
 _MERGE_SQL = (
     "CASE WHEN pair IS NULL THEN seq ELSE"
     " replace(trim(replace(' ' || replace(seq, ' ', '  ') || ' ',"
     " ' ' || replace(pair, ' ', '  ') || ' ',"
-    " ' ' || replace(pair, ' ', '') || ' ')), '  ', ' ') END"
+    " ' ' || replace(pair, ' ', '') || ' '), ' '), '  ', ' ') END"
 )
 
 
 def _merge(seq: str, pair: str) -> str:
     """_MERGE_SQL for a non-NULL pair. It strips ``" "`` only, as Spark SQL's
-    ``trim`` does: the ``\\s+`` word split leaves characters such as U+00A0
-    inside words, and a bare ``strip()`` would eat them. (DuckDB's ``trim``
-    also strips Unicode space separators, so the oracles would diverge on
-    a word starting or ending in one; the fixture corpora have none.)"""
+    ``trim`` and the SQL text's ``trim(..., ' ')`` do: the ``\\s+`` word
+    split leaves characters such as U+00A0 inside words, and a bare
+    ``strip()`` would eat them."""
     padded = " " + seq.replace(" ", "  ") + " "
     merged = padded.replace(" " + pair.replace(" ", "  ") + " ", " " + pair.replace(" ", "") + " ")
     return merged.strip(" ").replace("  ", " ")
@@ -154,7 +154,7 @@ def _oracle_rounds_cte() -> str:
         f"""w0 AS MATERIALIZED (
           SELECT array_to_string(string_split(w, ''), ' ') || ' {BPE_EOW}' AS seq,
                  CAST(count(*) AS BIGINT) AS weight
-          FROM (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS w FROM documents)
+          FROM (SELECT unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w FROM documents)
           GROUP BY w
         )"""
     ]

@@ -48,11 +48,13 @@ BPE_TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"  # letters / digits / single pu
 _STOPLIST_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 # words CTE over documents for the per-document oracles (identical
-# tokenization on both sides: split on runs of whitespace after trim)
+# tokenization on both sides: split on runs of whitespace after trim). Every
+# oracle trims with ``trim(text, ' ')``: Spark's trim strips U+0020 alone,
+# DuckDB's bare trim also strips Unicode spaces such as U+00A0
 _WORDS_CTE = r"""
 words AS (
-  SELECT doc_id, lang, source, trim(text) AS txt,
-         string_split_regex(trim(text), '\s+') AS ws
+  SELECT doc_id, lang, source, trim(text, ' ') AS txt,
+         string_split_regex(trim(text, ' '), '\s+') AS ws
   FROM documents
 )
 """
@@ -246,7 +248,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                  + len(list_filter(ws, w -> list_contains({_STOPLIST_SQL}, w))) / len(ws) * 0.3
                  + least(length(regexp_replace(txt, '\\s+', '', 'g')) / len(ws) / 8.0, 1.0) * 0.2
                                                             AS quality_score
-        FROM (SELECT doc_id, trim(text) AS txt, string_split_regex(trim(text), '\\s+') AS ws
+        FROM (SELECT doc_id, trim(text, ' ') AS txt,
+                     string_split_regex(trim(text, ' '), '\\s+') AS ws
               FROM documents) w
         """,
     tags=("text", "quality"),
@@ -280,9 +283,9 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH scored AS (
           SELECT lang,
-                 len(list_filter(string_split_regex(trim(text), '\\s+'),
+                 len(list_filter(string_split_regex(trim(text, ' '), '\\s+'),
                                  w -> list_contains({_STOPLIST_SQL}, w)))
-                   / len(string_split_regex(trim(text), '\\s+')) AS marker_ratio
+                   / len(string_split_regex(trim(text, ' '), '\\s+')) AS marker_ratio
           FROM documents
         )
         SELECT lang,
@@ -327,11 +330,11 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_fingerprint",
     oracle=f"""
         SELECT doc_id,
-               len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
+               len(string_split_regex(trim(text, ' '), '\\s+')) AS n_tokens,
                list_reduce(
                  list_prepend(
                    CAST(0 AS BIGINT),
-                   list_transform(string_split_regex(trim(text), '\\s+'),
+                   list_transform(string_split_regex(trim(text, ' '), '\\s+'),
                                   w -> (('0x' || substr(md5(w), 1, 15))::BIGINT) % {PORTABLE_HASH_PRIME})),
                  (acc, x) -> (acc * 31 + x) % {PORTABLE_HASH_PRIME}) AS fingerprint
         FROM documents
@@ -607,7 +610,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIMHASH_CTE = """
         dwords AS (
           SELECT DISTINCT doc_id, w
-          FROM (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
+          FROM (SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
                 FROM documents)
           WHERE w <> ''
         ),
@@ -674,8 +677,8 @@ _CAND_CTE = f"""
                  len(regexp_extract_all(txt, '{BPE_TOKEN_PATTERN}')) AS n_bpe_tokens,
                  {_STOP_RATIO_SQL} AS marker_ratio,
                  {_SCORE_SQL} AS quality_score
-          FROM (SELECT doc_id, text, trim(text) AS txt,
-                       string_split_regex(trim(text), '\\s+') AS ws
+          FROM (SELECT doc_id, text, trim(text, ' ') AS txt,
+                       string_split_regex(trim(text, ' '), '\\s+') AS ws
                 FROM documents)
         ),
         keep AS (SELECT min(doc_id) AS doc_id FROM feat GROUP BY text_hash),
@@ -943,7 +946,7 @@ TOP_TOKENS = 20  # heavy-hitter report size
     "q_heavy_hitters",
     oracle=f"""
         WITH toks AS (
-          SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
+          SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
           FROM documents
         ),
         agg AS (
@@ -1583,7 +1586,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH norm AS (
           SELECT doc_id, lang,
-                 substr(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), 1, 32) AS prefix
+                 substr(regexp_replace(lower(trim(text, ' ')), '\\s+', ' ', 'g'), 1, 32) AS prefix
           FROM documents
         ),
         classes AS (
@@ -1686,7 +1689,7 @@ PMI_TOP_K = 50
     "q_pmi_bigrams",
     oracle=rf"""
         WITH words AS (
-          SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         uni AS (SELECT unnest(ws) AS w FROM words),
         n1 AS (SELECT w, count(*) AS n FROM uni GROUP BY w),
@@ -1792,7 +1795,7 @@ LM_SCALE = 1_000_000  # per-bigram conditional probability in integer ppm
     "q_lm_score",
     oracle=r"""
         WITH words AS (
-          SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         uni AS (SELECT unnest(ws) AS w FROM words),
         n1 AS (SELECT w, count(*) AS n FROM uni GROUP BY w),
@@ -1887,7 +1890,7 @@ POSTINGS_CAP = 64  # max doc ids materialized per term; the rest is a count
     "q_inverted_index",
     oracle=rf"""
         WITH words AS (
-          SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         term_doc AS (
           SELECT DISTINCT w AS term, doc_id
@@ -1981,7 +1984,7 @@ BM25_PROBE_K = 4  # probe query = the top-K terms by document frequency
     "q_bm25",
     oracle=rf"""
         WITH words AS (
-          SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         uni AS (SELECT doc_id, unnest(ws) AS w FROM words),
         dl AS (SELECT doc_id, count(*) AS dl FROM uni GROUP BY doc_id),
@@ -2203,7 +2206,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_zipf_slope",
     oracle=r"""
         WITH words AS (
-          SELECT string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         tf AS (
           SELECT w AS term, count(*) AS tf
@@ -2445,7 +2448,7 @@ KEYNESS_TOP_K = 5
     "q_keyness_terms",
     oracle=rf"""
         WITH words AS (
-          SELECT lang, string_split_regex(trim(text), '\s+') AS ws FROM documents
+          SELECT lang, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
         ),
         uni AS (SELECT lang, unnest(ws) AS w FROM words),
         tfl AS (SELECT lang, w AS term, count(*) AS tf_l FROM uni GROUP BY 1, 2),

@@ -32,7 +32,7 @@ IP_PAT = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 _RAW_SQL = """
 raw AS (
   SELECT doc_id, source,
-         trim(text)
+         trim(text, ' ')
          || CASE WHEN doc_id % 3 = 0
                  THEN ' contact u' || doc_id || '@mail.example' ELSE '' END
          || CASE WHEN doc_id % 5 = 0
@@ -129,7 +129,7 @@ REP_DUP_THRESHOLD = 0.2  # flag docs whose duplicate-trigram share exceeds this
     "q_repetition_ngrams",
     oracle=f"""
         WITH words AS (
-          SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents
+          SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS ws FROM documents
         ),
         grams AS (
           SELECT doc_id,
@@ -202,7 +202,7 @@ CHUNK_STRIDE = 48  # window stride (16-token overlap)
     "q_chunk_split",
     oracle=f"""
         WITH words AS (
-          SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS n_tok
+          SELECT doc_id, len(string_split_regex(trim(text, ' '), '\\s+')) AS n_tok
           FROM documents
         ),
         starts AS (
@@ -256,7 +256,7 @@ TFIDF_TOP = 3  # keep the top-3 scoring terms per document
     "q_tfidf_terms",
     oracle=f"""
         WITH words AS (
-          SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w
+          SELECT doc_id, unnest(string_split_regex(trim(text, ' '), '\\s+')) AS w
           FROM documents
         ),
         tf AS (SELECT doc_id, w, count(*) AS tf FROM words GROUP BY 1, 2),
@@ -344,13 +344,13 @@ def _probe_positions(h):
     "q_bloom_filter",
     oracle=f"""
         WITH corpus_h AS (
-          SELECT ('0x' || substr(md5(trim(text)), 1, 15))::BIGINT AS h
+          SELECT ('0x' || substr(md5(trim(text, ' ')), 1, 15))::BIGINT AS h
           FROM documents
         ),
         batch AS (
           SELECT doc_id,
-                 CASE WHEN doc_id % 2 = 0 THEN trim(text)
-                      ELSE trim(text) || ' zz' || doc_id END AS btext
+                 CASE WHEN doc_id % 2 = 0 THEN trim(text, ' ')
+                      ELSE trim(text, ' ') || ' zz' || doc_id END AS btext
           FROM documents WHERE doc_id % {BATCH_MOD} = 1
         ),
         batch_h AS (
@@ -473,7 +473,7 @@ BOILER_DOCS = 2  # a segment appearing in >= this many distinct docs is boilerpl
             SELECT doc_id, ws,
                    unnest(range(CAST(ceil(len(ws) / {SEG_WORDS}.0) AS BIGINT))) AS i
             FROM (
-              SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM documents
+              SELECT doc_id, string_split_regex(trim(text, ' '), '\s+') AS ws FROM documents
             )
           )
         ),

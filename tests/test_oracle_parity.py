@@ -31,7 +31,10 @@ def _write_degenerate_fixture(out, kind: str) -> str:
       folds over them return None;
     - ``nbsp_copy``: the first incoming-source document becomes a copy of
       the first corpus document plus a trailing U+00A0, which Spark's trim
-      keeps and DuckDB's bare ``trim`` strips.
+      keeps and DuckDB's bare ``trim`` strips;
+    - ``null_prices``: every 7th lineitem.l_extendedprice is NULL;
+    - ``no_lineitem_stats``: lineitem is written without column statistics,
+      so its footers cannot give bounds and ``core.io.table_bounds`` folds.
     """
     import shutil
 
@@ -55,6 +58,14 @@ def _write_degenerate_fixture(out, kind: str) -> str:
             pq.write_table(table, dst)
         elif kind == "empty_part_documents" and t in ("part", "documents"):
             pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "null_prices" and t == "lineitem":
+            table = pq.read_table(src)
+            i = table.schema.get_field_index("l_extendedprice")
+            prices = [None if r % 7 == 0 else v for r, v in enumerate(table[i].to_pylist())]
+            table = table.set_column(i, table.schema.field(i), pa.array(prices, pa.float64()))
+            pq.write_table(table, dst)
+        elif kind == "no_lineitem_stats" and t == "lineitem":
+            pq.write_table(pq.read_table(src), dst, write_statistics=False)
         elif kind == "nbsp_copy" and t == "documents":
             table = pq.read_table(src)
             texts, sources = table["text"].to_pylist(), table["source"].to_pylist()
@@ -106,6 +117,28 @@ def degenerate_sf(tmp_path_factory):
         ("nbsp_copy", "q_dup_clusters"),
         ("nbsp_copy", "q_incremental_dedup"),
         ("nbsp_copy", "q_source_overlap"),
+        *(
+            ("nbsp_copy", name)
+            for name in (
+                "q_boilerplate_strip",
+                "q_bpe_encode",
+                "q_countmin_topk",
+                "q_fingerprint",
+                "q_inverted_index",
+                "q_keyness_terms",
+                "q_lm_score",
+                "q_pii_scrub",
+                "q_simhash",
+                "q_simhash_pairs",
+                "q_text_quality",
+                "q_tfidf_terms",
+                "q_zipf_slope",
+            )
+        ),
+        ("null_prices", "q_equidepth_hist"),
+        ("null_prices", "q_approx_stats"),
+        ("no_lineitem_stats", "q_equidepth_hist"),
+        ("no_lineitem_stats", "q_approx_stats"),
     ],
 )
 def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
@@ -118,9 +151,15 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
     pair: with no word types there is no pair to merge, so training stops
     before its first round — an empty merge table (not BPE_MERGES rows of
     NULLs) and an empty token histogram, as the oracles' empty ``LIMIT 1``
-    argmaxes give. The LSH family and q_source_overlap on a copy that
-    differs only by a trailing U+00A0: both sides trim U+0020 alone, so
-    the copy's last shingle keeps the U+00A0 on both."""
+    argmaxes give. The text queries on a copy that differs only by a
+    trailing U+00A0: both sides trim U+0020 alone, so the copy's last word
+    keeps the U+00A0 on both. The quantile queries: a NULL price takes no
+    rank, as builtin ``percentile`` ignores it, and a lineitem whose
+    footers hold no statistics ranks over folded bounds."""
     sf_dir, duck = degenerate_sf(kind)
+    if kind == "no_lineitem_stats":
+        from iceberg_benchmark_poc_spark.core.io import column_bounds
+
+        assert column_bounds(spark, sf_dir, "lineitem", ["l_extendedprice"]) is None
     q = QUERIES[name]
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)

@@ -240,12 +240,32 @@ METADATA_JOB_COUNTS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(METADATA_JOB_COUNTS))
-def test_metadata_query_job_counts(spark, name):
+#: (build, exec) Spark jobs at sf0.001 of the exact-quantile queries: no
+#: driver fold, the range ids from footer bounds. q_equidepth_hist runs its
+#: range exchange, the offsets table's SinglePartition exchange, its
+#: broadcast, the bucket rollup's exchange and the result stage;
+#: q_approx_stats adds its sketch and distinct-count passes.
+QUANTILE_JOB_COUNTS = {
+    "q_approx_stats": (0, 10),
+    "q_equidepth_hist": (0, 5),
+}
+
+
+def _build_and_exec_jobs(spark, name):
     fn = all_queries()[name].fn
     df, build_jobs = jobs_of(spark, lambda: fn(spark, SF_DIR))
     _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
-    assert (build_jobs, exec_jobs) == METADATA_JOB_COUNTS[name]
+    return build_jobs, exec_jobs
+
+
+@pytest.mark.parametrize("name", sorted(METADATA_JOB_COUNTS))
+def test_metadata_query_job_counts(spark, name):
+    assert _build_and_exec_jobs(spark, name) == METADATA_JOB_COUNTS[name]
+
+
+@pytest.mark.parametrize("name", sorted(QUANTILE_JOB_COUNTS))
+def test_quantile_query_job_counts(spark, name):
+    assert _build_and_exec_jobs(spark, name) == QUANTILE_JOB_COUNTS[name]
 
 
 def test_plan_allowlists_not_stale():
@@ -460,7 +480,6 @@ BNLJ_ALLOWED = {
     "q_gap_fill",        # 1-row hour-range bounds crossed with the distinct type set
     "q_interp_linear",   # same 1-row hour-range bounds cross as q_gap_fill
     "q_bm25",            # two 1-row corpus totals (L, N) broadcast to probe-term postings
-    "q_equidepth_hist",  # one-row decile-boundaries fold (9-element array)
     "q_funnel",          # three 1-row stage counts combined by scalar cross join
     "q_idle_customers",  # 1-row balance-threshold fold broadcast to customers
     "q_pmi_bigrams",     # two 1-row corpus-total folds broadcast to the bigram set

@@ -719,26 +719,101 @@ def test_ann_query_sets_constant_across_sf(spark):
 # ---------------------------------------------------------------------------
 
 
+def _bucket_of(values, kind: str, n_ranges: int):
+    """A ``bucket=`` for the property tests' value column ``v``: bounds equal
+    to the data's, narrower than it, inverted, or None."""
+    present = [v for v in values if v is not None]
+    if kind == "none" or not present:
+        return (F.col("v"), None, None, n_ranges)
+    lo, hi = min(present), max(present)
+    bounds = {
+        "exact": (lo, hi),
+        "narrow": (lo + (hi - lo) / 3, lo + (hi - lo) / 2),
+        "inverted": (hi, lo),
+    }[kind]
+    return (F.col("v"), *bounds, n_ranges)
+
+
+bucket_kinds = st.sampled_from(["none", "exact", "narrow", "inverted"])
+
+
 @given(
     values=st.lists(st.none() | st.integers(-(10**6), 10**6), min_size=0, max_size=80),
     pcts=st.lists(
         st.floats(0.0, 1.0, allow_nan=False, allow_infinity=False), min_size=1, max_size=6
     ),
+    kind=bucket_kinds,
+    n_ranges=st.integers(1, 16),
 )
 @settings(**SETTINGS)
-def test_exact_quantiles_matches_builtin_percentile(spark, values, pcts):
+def test_exact_quantiles_matches_builtin_percentile(spark, values, pcts, kind, n_ranges):
     """The distributed order-statistic quantile (operators/quantiles.py) must
     reproduce builtin exact percentile() bit-for-bit on any value multiset and
     any percentage list — duplicates, negatives, single rows, p=0/1,
     fractional positions whose interpolation exercises the IEEE weight
     arithmetic, NULL values (ignored) and empty or all-NULL input (a NULL
-    result)."""
+    result) — whatever ``bucket=`` places the ranges: bounds equal to the
+    data's, narrower than it, inverted, or None (one range)."""
     from iceberg_benchmark_poc_spark.operators.quantiles import exact_quantiles
 
     df = spark.createDataFrame([(v,) for v in values], "v bigint")
-    ours = exact_quantiles(df, F.col("v"), pcts).collect()[0]["bs"]
+    bucket = _bucket_of(values, kind, n_ranges)
+    ours = exact_quantiles(df, F.col("v"), pcts, bucket=bucket).collect()[0]["bs"]
     pct_sql = ", ".join(repr(p) for p in pcts)
     builtin = df.agg(F.expr(f"percentile(v, array({pct_sql}))").alias("bs")).collect()[0]["bs"]
+    assert ours == builtin, f"{values=} {pcts=} {bucket[1:]} -> {ours} != {builtin}"
+
+
+#: q_equidepth_hist's deciles, and the same deciles as ``0.1 * i``, whose
+#: representation error puts ``d*(n-1)`` one ulp off an integer (0.3 * 10
+#: gives 3.0000000000000004), so the interpolation weight of the upper
+#: order statistic is ~4e-16 and shows at magnitudes near 1e15
+_DECILE_LISTS = (
+    [round(i / 10, 1) for i in range(1, 10)],
+    [0.1 * i for i in range(1, 10)],
+)
+
+
+@given(
+    values=st.lists(
+        st.none() | st.integers(-3, 3) | st.integers(-(10**15), 10**15), min_size=1, max_size=60
+    ),
+    pcts=st.sampled_from(_DECILE_LISTS)
+    | st.lists(st.floats(0.0, 1.0, allow_nan=False, allow_infinity=False), min_size=1, max_size=6),
+    kind=bucket_kinds,
+    n_ranges=st.integers(1, 16),
+)
+@example(
+    values=[10**15 + 7 * i for i in range(11)], pcts=_DECILE_LISTS[1], kind="exact", n_ranges=4
+)
+@example(values=[-5, None, -5, 2, None], pcts=_DECILE_LISTS[0], kind="narrow", n_ranges=3)
+@example(values=[42], pcts=_DECILE_LISTS[0], kind="none", n_ranges=1)
+@settings(**SETTINGS)
+def test_quantile_bucket_matches_builtin_filter(spark, values, pcts, kind, n_ranges):
+    """q_equidepth_hist's bucket rule (operators/quantiles.quantile_bucket on
+    a ranked histogram) equals ``size(filter(percentile(v, pcts), b -> v >=
+    b))`` for every non-NULL value: duplicates, negatives, one row, NULLs
+    (no rank), positions one ulp off an integer at magnitudes where the
+    interpolation weight shows, and any range placement."""
+    from iceberg_benchmark_poc_spark.operators.prefix import ranked_histogram
+    from iceberg_benchmark_poc_spark.operators.quantiles import quantile_bucket
+
+    df = spark.createDataFrame([(v,) for v in values], "v bigint")
+    bucket = _bucket_of(values, kind, n_ranges)
+    ranked = ranked_histogram(df.filter(F.col("v").isNotNull()), "v", bucket)
+    ours = {
+        r["v"]: r["bucket"]
+        for r in ranked.select("v", quantile_bucket(F.col("v"), pcts).alias("bucket")).collect()
+    }
+    pct_sql = ", ".join(repr(p) for p in pcts)
+    bs = df.agg(F.expr(f"percentile(v, array({pct_sql}))").alias("bs"))
+    builtin = {
+        r["v"]: r["bucket"]
+        for r in df.filter(F.col("v").isNotNull())
+        .crossJoin(bs)
+        .select("v", F.size(F.filter("bs", lambda b: F.col("v") >= b)).alias("bucket"))
+        .collect()
+    }
     assert ours == builtin, f"{values=} {pcts=} -> {ours} != {builtin}"
 
 
