@@ -10,10 +10,12 @@ frame and a shared decoder:
   (operators/roaring.py implements the public RoaringFormatSpec layout with
   array + bitmap containers) compressed with the same zlib level 6.
 
-Spark-side the codec runs inside fused Arrow-batched pandas UDFs (file id
-and deleted-row count in, decoded-set stats out): encode/decode never leave
-the executor, and the blobs are plain bytes any sink (Iceberg puffin files,
-parquet BinaryType columns) can store.
+Spark-side the codec runs inside fused plain Python UDFs (file id and
+deleted-row count in, decoded-set stats out): encode/decode never leave the
+executor, and the blobs are plain bytes any sink (Iceberg puffin files,
+parquet BinaryType columns) can store. The module imports numpy and
+pyspark.sql only, so the worker that runs the UDFs loads neither pandas nor
+pyarrow.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ import struct
 import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -163,9 +164,14 @@ def decode_positions_any(blob: bytes) -> list[int]:
 # boundary twice (up to 8K BIGINTs each way) and paid an interpreted
 # higher-order `aggregate` fold JVM-side. Fused, each row crosses as TWO
 # int64 scalars and returns FOUR — generation (same arithmetic the oracle
-# runs), encode, decode, and stats all execute vectorized in numpy inside
-# one Arrow batch, through the same encode_* / decode_positions_any_np
-# functions the codec tests call.
+# runs), encode, decode, and stats all execute vectorized in numpy, through
+# the same encode_* / decode_positions_any_np functions the codec tests call.
+#
+# The UDFs are plain pickled ones (BatchEvalPython), not pandas or Arrow:
+# the per-row work is a numpy call per file either way, and a worker that
+# unpickles them imports this module, numpy and roaring.py only — no pandas,
+# no pyarrow (tests/test_dv_payload.py pins the import chain). That halves
+# the worker's resident set against a pandas_udf worker.
 
 #: explicit StructType (not a DDL string): the Python worker re-imports this
 #: module without an active SparkContext, and DDL parsing needs one
@@ -179,52 +185,51 @@ _STATS_SCHEMA = StructType(
 )
 
 
-def _stats_frame(file_ids: pd.Series, drcs: pd.Series, gen, encode) -> pd.DataFrame:
-    """Per-file stats of ``gen``'s position set, which must not be empty:
+def _stats(fid: int, drc: int, gen, encode) -> tuple[int, int, int, int]:
+    """Stats of ``gen``'s position set for one file, which must not be empty:
     the queries pass only files whose set the oracle's range join keeps."""
-    rows = []
-    for fid, drc in zip(file_ids.astype("int64"), drcs.astype("int64")):
-        out = decode_positions_any_np(encode(gen(int(fid), int(drc))))
-        # decoders emit sorted positions, but use min/max for robustness
-        rows.append((int(out.size), int(out.min()), int(out.max()), int(out.sum())))
-    return pd.DataFrame(rows, columns=["n_deleted", "min_pos", "max_pos", "pos_sum"])
+    out = decode_positions_any_np(encode(gen(fid, drc)))
+    # decoders emit sorted positions, but use min/max for robustness
+    return int(out.size), int(out.min()), int(out.max()), int(out.sum())
 
 
-# The generators run the oracles' formulas with np.fmod, the truncated `%`
-# of Spark and DuckDB (numpy's and Python's `%` floor, which differs for a
-# negative file_id).
+# The generators run the oracles' formulas. Positions take the floor modulus
+# (np.mod, the oracles' `((x % m) + m) % m`), so they stay in [0, m) for a
+# negative file_id too and the uint32 codecs accept them. Counts such as
+# q_roaring_runs' `1 + drc % 64` keep the truncated `%` of Spark and DuckDB
+# (np.fmod): the oracles' range joins give no position for a count <= 0.
 
 
 def _gen_mdv1(fid: int, drc: int) -> np.ndarray:
-    # q_dv_payload_roundtrip: (fid*17 + j*13) % 1000 for j < drc
-    return np.fmod(fid * 17 + np.arange(drc, dtype=np.int64) * 13, 1000)
+    # q_dv_payload_roundtrip: pmod(fid*17 + j*13, 1000) for j < drc
+    return np.mod(fid * 17 + np.arange(drc, dtype=np.int64) * 13, 1000)
 
 
 def _gen_roaring(fid: int, drc: int) -> np.ndarray:
-    # q_roaring_roundtrip: (fid*31 + j*7) % 60000 for j < drc*8
-    return np.fmod(fid * 31 + np.arange(drc * 8, dtype=np.int64) * 7, 60000)
+    # q_roaring_roundtrip: pmod(fid*31 + j*7, 60000) for j < drc*8
+    return np.mod(fid * 31 + np.arange(drc * 8, dtype=np.int64) * 7, 60000)
 
 
 def _gen_runs(fid: int, drc: int) -> np.ndarray:
-    # q_roaring_runs: one contiguous block of drc*8 at (fid*13)%5000, plus
-    # 1 + drc%64 positions in the next 65536-key chunk
-    a = np.fmod(fid * 13, 5000) + np.arange(drc * 8, dtype=np.int64)
-    b = 65536 + np.fmod(fid, 100) + np.arange(1 + np.fmod(drc, 64), dtype=np.int64)
+    # q_roaring_runs: one contiguous block of drc*8 at pmod(fid*13, 5000),
+    # plus 1 + drc%64 positions at pmod(fid, 100) in the next 65536-key chunk
+    a = np.mod(fid * 13, 5000) + np.arange(drc * 8, dtype=np.int64)
+    b = 65536 + np.mod(fid, 100) + np.arange(1 + np.fmod(drc, 64), dtype=np.int64)
     return np.concatenate([a, b])
 
 
-@F.pandas_udf(_STATS_SCHEMA)
-def mdv1_roundtrip_stats_udf(file_id: pd.Series, drc: pd.Series) -> pd.DataFrame:
-    return _stats_frame(file_id, drc, _gen_mdv1, encode_positions)
+@F.udf(returnType=_STATS_SCHEMA, useArrow=False)
+def mdv1_roundtrip_stats_udf(file_id: int, drc: int) -> tuple[int, int, int, int]:
+    return _stats(file_id, drc, _gen_mdv1, encode_positions)
 
 
-@F.pandas_udf(_STATS_SCHEMA)
-def roaring_roundtrip_stats_udf(file_id: pd.Series, drc: pd.Series) -> pd.DataFrame:
-    return _stats_frame(file_id, drc, _gen_roaring, encode_positions_roaring)
+@F.udf(returnType=_STATS_SCHEMA, useArrow=False)
+def roaring_roundtrip_stats_udf(file_id: int, drc: int) -> tuple[int, int, int, int]:
+    return _stats(file_id, drc, _gen_roaring, encode_positions_roaring)
 
 
-@F.pandas_udf(_STATS_SCHEMA)
-def roaring_runs_roundtrip_stats_udf(file_id: pd.Series, drc: pd.Series) -> pd.DataFrame:
-    return _stats_frame(
+@F.udf(returnType=_STATS_SCHEMA, useArrow=False)
+def roaring_runs_roundtrip_stats_udf(file_id: int, drc: int) -> tuple[int, int, int, int]:
+    return _stats(
         file_id, drc, _gen_runs, lambda p: encode_positions_roaring(p, run_optimize=True)
     )

@@ -5,6 +5,12 @@ oracle instead checks the DECODED result: positions survive the
 encode->compress->decompress->decode roundtrip exactly. Statistics of the
 roundtripped set (count/min/max/sum) are computed from the same generator
 formula on the DuckDB side — any codec corruption breaks the hash match.
+
+Positions take the floor modulus, ``pmod(x, m)``, written
+``((x % m) + m) % m`` in the oracles (DuckDB has no ``pmod``) and ``np.mod``
+in the UDFs' generators: both engines' ``%`` truncates, which would give a
+negative file_id negative positions that no uint32 codec can hold. Fixture
+file ids are non-negative, where the two agree.
 """
 
 from __future__ import annotations
@@ -20,6 +26,12 @@ from ..operators.dv_payload import (
     roaring_runs_roundtrip_stats_udf,
 )
 
+
+def _pmod_sql(x: str, m: int) -> str:
+    """DuckDB's floor modulus of ``x`` by a positive ``m``: in [0, m)."""
+    return f"((({x}) % {m}) + {m}) % {m}"
+
+
 SAMPLE_MOD = 100  # files with file_id % 100 == 0 get a modeled payload
 ROWS_PER_FILE = 1000
 
@@ -30,7 +42,7 @@ ROWS_PER_FILE = 1000
         f"""
         WITH deleted AS (
           SELECT DISTINCT d.file_id,
-                 (d.file_id * 17 + j.range * 13) % {ROWS_PER_FILE} AS pos
+                 {_pmod_sql("d.file_id * 17 + j.range * 13", ROWS_PER_FILE)} AS pos
           FROM dv_entries d, range(1000) j
           WHERE d.file_id % {SAMPLE_MOD} = 0 AND j.range < d.deleted_row_count
         )
@@ -44,19 +56,22 @@ ROWS_PER_FILE = 1000
         """,
         "dv_entries",
     ),
-    tags=("dv", "binary", "pandas-udf"),
+    tags=("dv", "binary", "python-udf"),
 )
 def q_dv_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode delete positions to compressed blobs, decode, and aggregate.
 
-    Pipeline: one fused Arrow-batched UDF per file row — numpy position
-    generation (the oracle's exact formula), delta+varint+zlib encode, the
-    shared any-format decode, and the four stats, all inside the Python
-    worker. Only TWO int64 scalars cross into Python and FOUR come back;
-    the staged form shipped the full position array across the boundary
-    twice and paid an interpreted JVM `aggregate` fold per row — only the
-    columns the function needs should cross, and bulk work belongs in
-    vectorized code inside the worker. The
+    Pipeline: one fused plain Python UDF call per file row (one
+    BatchEvalPython node) — numpy position generation (the oracle's exact
+    formula), delta+varint+zlib encode, the shared any-format decode, and
+    the four stats, all inside the Python worker. Only TWO int64 scalars
+    cross into Python and FOUR come back; the staged form shipped the full
+    position array across the boundary twice and paid an interpreted JVM
+    `aggregate` fold per row — only the columns the function needs should
+    cross, and bulk work belongs in vectorized code inside the worker. A
+    pickled UDF, not a pandas one: the per-row work is one numpy call per
+    file either way, and the worker then loads neither pandas nor pyarrow
+    (operators/dv_payload.py). The
     oracle recomputes the stats from the generator formula, so a single
     corrupted bit anywhere in the byte path fails the value hash. The
     whole plan is narrow — zero shuffles: the codec is per-file, so it
@@ -90,7 +105,7 @@ ROARING_SPAN = 60000  # positions land in one 65536 chunk -> exercises both
         f"""
         WITH deleted AS (
           SELECT DISTINCT d.file_id,
-                 (d.file_id * 31 + j.range * 7) % {ROARING_SPAN} AS pos
+                 {_pmod_sql("d.file_id * 31 + j.range * 7", ROARING_SPAN)} AS pos
           FROM dv_entries d, range(8000) j
           WHERE d.file_id % {ROARING_SAMPLE_MOD} = 0
             AND j.range < d.deleted_row_count * 8
@@ -105,7 +120,7 @@ ROARING_SPAN = 60000  # positions land in one 65536 chunk -> exercises both
         """,
         "dv_entries",
     ),
-    tags=("dv", "binary", "roaring", "pandas-udf"),
+    tags=("dv", "binary", "roaring", "python-udf"),
 )
 def q_roaring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roundtrip delete positions through the portable Roaring wire format.
@@ -113,11 +128,12 @@ def q_roaring_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same shape as q_dv_payload_roundtrip but through the reference's actual
     serialization (poc/utils/mdv_generator.py:56-72 wraps BitMap.serialize in
     zlib; operators/roaring.py emits that portable layout): positions ->
-    roaring containers -> zlib blob -> decode -> per-file stats, all narrow,
-    zero shuffles. deleted_row_count*8 positions over a 60000 span drive
-    cardinalities across the 4096 array/bitmap container threshold, so both
-    container codecs are exercised and any single-bit corruption in either
-    breaks the oracle's value hash.
+    roaring containers -> zlib blob -> decode -> per-file stats in one plain
+    Python UDF call per file, all narrow, zero shuffles. deleted_row_count*8
+    positions over a 60000 span drive cardinalities across the 4096
+    array/bitmap container threshold, so both container codecs are
+    exercised and any single-bit corruption in either breaks the oracle's
+    value hash.
     """
     # empty position sets dropped as in q_dv_payload_roundtrip
     dv = spread_narrow(
@@ -142,12 +158,12 @@ RUNS_CHUNK = 65536  # second delete block lands in the next 65536-key chunk
     oracle=with_fixtures(
         f"""
         WITH deleted AS (
-          SELECT d.file_id, (d.file_id * 13) % 5000 + j.range AS pos
+          SELECT d.file_id, {_pmod_sql("d.file_id * 13", 5000)} + j.range AS pos
           FROM dv_entries d, range(8000) j
           WHERE d.file_id % {RUNS_SAMPLE_MOD} = 0
             AND j.range < d.deleted_row_count * 8
           UNION ALL
-          SELECT d.file_id, {RUNS_CHUNK} + d.file_id % 100 + j.range AS pos
+          SELECT d.file_id, {RUNS_CHUNK} + {_pmod_sql("d.file_id", 100)} + j.range AS pos
           FROM dv_entries d, range(64) j
           WHERE d.file_id % {RUNS_SAMPLE_MOD} = 0
             AND j.range < 1 + d.deleted_row_count % 64
@@ -162,7 +178,7 @@ RUNS_CHUNK = 65536  # second delete block lands in the next 65536-key chunk
         """,
         "dv_entries",
     ),
-    tags=("dv", "binary", "roaring", "pandas-udf"),
+    tags=("dv", "binary", "roaring", "python-udf"),
 )
 def q_roaring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roundtrip contiguous delete ranges through run-optimized Roaring.
@@ -178,8 +194,9 @@ def q_roaring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_optimize=True (SERIAL_COOKIE 12347 wire layout, operators/roaring.py)
     and decode goes through the shared any-format decoder, so the oracle's
     value hash certifies the run codec end-to-end. The plan stays narrow —
-    arrays are built, encoded, decoded, and aggregated inside the scan
-    partition, zero shuffles, same as q_roaring_roundtrip.
+    arrays are built, encoded, decoded, and aggregated in one plain Python
+    UDF call per file inside the scan partition, zero shuffles, same as
+    q_roaring_roundtrip.
     """
     # a file whose two blocks are both empty has no row in the oracle
     drc = F.col("deleted_row_count")

@@ -317,7 +317,13 @@ def test_roundtrip_queries_drop_negative_files_like_their_oracles(spark, tmp_pat
     the oracles' range joins produce no position and no row for it. The
     three roundtrip queries must drop such a file too, instead of handing
     the codec an empty set, and q_roaring_runs must not keep its second
-    block (``1 + drc % 64`` positions) for one."""
+    block (``1 + drc % 64`` positions) for one.
+
+    A negative file_id that is a multiple of 3000 keeps one deleted row
+    (-3000*17 is a multiple of 1000), and the truncated ``%`` would give it
+    negative positions the uint32 roaring codec rejects. Positions take the
+    floor modulus in both engines, so such a file roundtrips with positions
+    in the codec's domain and matches its oracle."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -326,7 +332,7 @@ def test_roundtrip_queries_drop_negative_files_like_their_oracles(spark, tmp_pat
 
     from .conftest import compare_query_to_oracle
 
-    keys = [-1000, -450, -300, -150, -1, 0, 1, 150, 300, 450, 1000, 3000]
+    keys = [-6000, -3000, -1000, -450, -300, -150, -1, 0, 1, 150, 300, 450, 1000, 3000]
     pq.write_table(pa.table({"o_orderkey": pa.array(keys, pa.int64())}), tmp_path / "orders.parquet")
     duck = duckdb.connect()
     duck.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{tmp_path}/orders.parquet')")
@@ -334,6 +340,38 @@ def test_roundtrip_queries_drop_negative_files_like_their_oracles(spark, tmp_pat
     for name in ("q_dv_payload_roundtrip", "q_roaring_roundtrip", "q_roaring_runs"):
         q = queries[name]
         compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=str(tmp_path))
-        file_ids = {r["file_id"] for r in q.fn(spark, str(tmp_path)).collect()}
+        rows = q.fn(spark, str(tmp_path)).collect()
+        file_ids = {r["file_id"] for r in rows}
         assert -300 not in file_ids and 300 in file_ids, (name, file_ids)
+        assert {-6000, -3000} <= file_ids, (name, file_ids)
+        assert all(r["min_pos"] >= 0 for r in rows), (name, rows)
     duck.close()
+
+
+# --- the import chain a Python worker pays for ------------------------------
+
+
+def test_codec_modules_import_neither_pandas_nor_pyarrow():
+    """A Python worker that unpickles the roundtrip-stats UDFs imports
+    operators/dv_payload.py (and roaring.py through it) with their package.
+    Neither may pull in pandas or pyarrow: those two double the worker's
+    resident set (about 128 MB against 63 MB). A fresh interpreter, because
+    this test process has both loaded already."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    probe = (
+        "import sys\n"
+        "import iceberg_benchmark_poc_spark.operators.dv_payload\n"
+        "import iceberg_benchmark_poc_spark.operators.roaring\n"
+        "print(sorted(m for m in ('pandas', 'pyarrow') if m in sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.strip() == "[]", out
