@@ -37,13 +37,19 @@ Fixture map (reference provenance):
                    (poc/test_density_adaptive_policy.py:136-280)
 - commit_log     — single-file-commit metrics (poc/test_single_file_commits.py:39-66)
 - read_log       — S3 read simulator observations (poc/utils/s3_simulator.py:31-121)
+
+The ``(spark, sf_dir)`` fixtures read ``orders`` and ``events`` through
+``core.io.load_small``: a source whose files hold one row group already
+scans in one task, so the relation comes as one partition and the
+group-bys, windows and sorts above it plan no exchange. A multi-row-group
+source gets ``load_table``'s plan unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .io import load_table
+from .io import load_small
 
 # ---------------------------------------------------------------------------
 # shared constants (single source of truth for both dialects)
@@ -104,7 +110,7 @@ FILE_PATH_SQL = (
 
 
 def _order_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").select("o_orderkey")
+    return load_small(spark, sf_dir, "orders").select("o_orderkey")
 
 
 def file_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,7 +271,7 @@ def mdv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguous partition-drop deletes, 'array' below 4096 cardinality,
     'bitmap' above. Sizes follow the reference's serialized-size proxies.
     """
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey")
+    o = load_small(spark, sf_dir, "orders").select("o_orderkey")
     fid = F.col("o_orderkey")
     deleted = (F.lit(1) + (fid * 37) % 9999).alias("deleted_rows")
     df = o.select(fid.alias("manifest_id"), F.lit(10_000).alias("total_rows"), deleted)
@@ -329,7 +335,7 @@ def commit_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deterministic affine function of batch size (the reference *measures*
     these; the correctness fixture must be reproducible, see FIXTURES.md §6).
     """
-    e = load_table(spark, sf_dir, "events").select("event_id")
+    e = load_small(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id")
     batch = F.element_at(F.array(*[F.lit(b) for b in BATCH_SIZES]), (eid % 6 + 1).cast("int"))
     return e.select(
@@ -365,7 +371,7 @@ def read_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     size / 100 MBps transfer. Deterministic (event_id-derived) instead of the
     reference's unseeded gaussian (SURVEY.md §5.3 flags that bug).
     """
-    e = load_table(spark, sf_dir, "events").select("event_id")
+    e = load_small(spark, sf_dir, "events").select("event_id")
     eid = F.col("event_id")
     ttfb = (F.lit(TTFB_BASE_MS) + eid % TTFB_MOD).alias("ttfb_ms")
     size = (F.lit(200) + (eid % 1000) * 37).alias("size_bytes")

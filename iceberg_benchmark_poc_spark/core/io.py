@@ -43,9 +43,13 @@ A path the driver cannot ``os.stat`` (an object-store URI, a missing path)
 takes the fallback on every load, so a missing path still raises Spark's
 PATH_NOT_FOUND.
 
+The state also caches the pyarrow ``FileMetaData`` of every data file, read
+once per signature on first use; ``column_bounds`` and ``load_small`` both
+read that cache.
+
 ``column_bounds`` is the second consumer of the footer state: a table's row
 count and per-column (min, max) from the row-group statistics of every data
-file, read with pyarrow and cached under the same signature. It returns
+file, cached under the same signature. It returns
 exactly what Spark's ``count(1)`` / ``min`` / ``max`` fold over
 ``load_table`` returns, or None when the footers cannot say (no statistics,
 an unsupported type, a 0-row table, a fallback layout); ``table_bounds``
@@ -57,6 +61,22 @@ bounds to place range buckets (operators/prefix.py keeps ids monotone for
 keys outside [lo, hi] and gives NaN keys their own range), so results never
 depend on their values; q_equidepth_hist also reads a None bound as the
 exact fact that the column holds no non-NULL value.
+
+``load_small`` is the third: ``load_table`` plus ``.coalesce(1)`` when the
+table's data files hold at most one row group in total. Parquet splits are
+row-group granular, so such a scan already runs its rows in one task and
+the coalesce takes away no scan parallelism; above it ``SinglePartition``
+satisfies every clustering and ordering requirement, so the group-bys,
+windows and sorts of the relation plan no exchange, and under AQE each
+exchange saved is one job saved. A multi-row-group source, which is every
+table at production scale, gets ``load_table``'s plan unchanged. Only the
+``core.fixtures`` base loads call it: their relations are metadata by
+construction. A corpus table at a small scale is one row group too (sf0.1
+``documents``), but there the text pipeline's ``groupBy(text)`` exchange
+is what spreads the shingle and MinHash stage across cores: the session's
+256 KiB AQE coalesce floor was tuned for that spread (1.20x on the sf0.1
+text/graph mix, core/session.py), so the corpus and TPC-H queries keep
+``load_table``.
 
 At 100 TB these reads stay embarrassingly parallel: ``spark.read.parquet`` on
 a directory fans out one task per ~128 MB split (``files.maxPartitionBytes``),
@@ -120,6 +140,8 @@ class _FileState:
     files: tuple[str, ...] | None
     schema: StructType | None = None
     bounds: dict = field(default_factory=dict)
+    #: pyarrow FileMetaData of every data file, read on first use
+    footers: tuple | None = None
 
 
 #: path -> footer state of the path's files at their last signature
@@ -177,6 +199,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif t == "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
+
+
+def load_small(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``load_table``, as one partition when the table's data files hold at
+    most one row group in total (module docstring).
+
+    Parquet splits are row-group granular, so such a scan runs in one task
+    already and the coalesce costs no scan parallelism; it only removes the
+    exchanges above the relation. The row groups are counted on the driver,
+    in the footers the file state caches: no Spark job, no ``.rdd``, no
+    planning. A fallback layout or a path the driver cannot stat returns
+    ``load_table`` unchanged. Callers are the metadata relations of
+    ``core.fixtures``; corpus tables keep ``load_table``, whose
+    ``groupBy(text)`` exchange spreads the text pipeline across cores even
+    over one row group (the 256 KiB AQE floor of ``core/session.py``).
+    ``order_small`` is the same idea for a final ORDER BY over a small
+    group-by.
+    """
+    df = load_table(spark, sf_dir, name)
+    try:
+        state = _file_state(_table_path(sf_dir, name))
+    except OSError:
+        return df
+    if state.files is None or sum(md.num_row_groups for md in _footers(state)) > 1:
+        return df
+    return df.coalesce(1)
 
 
 def _hidden(name: str) -> bool:
@@ -281,16 +329,24 @@ def column_bounds(
         return None
     key = tuple(cols)
     if key not in state.bounds:
-        state.bounds[key] = _footer_bounds(spark, sf_dir, table, state.files, key)
+        state.bounds[key] = _footer_bounds(spark, sf_dir, table, state, key)
     return state.bounds[key]
 
 
-def _footer_bounds(spark, sf_dir, table, files, cols):
+def _footers(state: _FileState) -> tuple:
+    """The pyarrow ``FileMetaData`` of every data file of ``state`` (files not
+    None), read once per file state."""
+    if state.footers is None:
+        state.footers = tuple(pq.read_metadata(f) for f in state.files)
+    return state.footers
+
+
+def _footer_bounds(spark, sf_dir, table, state, cols):
     """``column_bounds`` of one file state, read from every data file's footer."""
-    if files is None:
+    if state.files is None:
         return None
     loaded = {f.name: f.dataType for f in load_table(spark, sf_dir, table).schema.fields}
-    mds = [pq.read_metadata(f) for f in files]
+    mds = _footers(state)
     n_rows = sum(md.num_rows for md in mds)
     if n_rows == 0:
         return None
@@ -388,13 +444,14 @@ def spread_narrow(df: DataFrame, *keys: str) -> DataFrame:
     which pays a local sort of the full rows (SPARK-23207) and was measured
     1.7x WORSE in r11 for exactly this purpose.
 
-    Precondition: ``df`` is narrow over a file scan (filters and
-    projections only). Then ``df.rdd.getNumPartitions()`` only plans the
-    scan's splits and runs no Spark job; every caller passes such a frame,
-    which is why q_dv_payload_roundtrip, for one, builds in zero jobs.
-    Over an exchange or a sort the same call executes the stages
-    below it at build time: one job over a groupBy, two over an orderBy,
-    measured at sf0.001 (tests/test_io.py pins the scan and groupBy cases).
+    Precondition: ``df`` is narrow over a file scan (filters,
+    projections, ``load_small``'s coalesce). Then ``df.rdd.getNumPartitions()``
+    only plans the scan's splits and runs no Spark job; every caller passes
+    such a frame, which is why q_dv_payload_roundtrip, for one, builds in
+    zero jobs. Over an exchange or a sort the same call executes the stages
+    below it at build time: one job over a groupBy's exchange, two over an
+    orderBy, measured at sf0.001 (tests/test_io.py pins the scan and
+    groupBy cases).
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
@@ -452,7 +509,8 @@ def order_small(df: DataFrame, *cols) -> DataFrame:
     also runs whatever narrow work sits between the last exchange and the
     sort, so the caller's result must be small by construction, not merely
     filtered (tests/test_plans.py lists every caller in its global-sort
-    allowlist).
+    allowlist). ``load_small`` applies the same one-partition idea at the
+    scan, for a relation whose source is one row group.
     """
     return df.coalesce(1).orderBy(*cols)
 

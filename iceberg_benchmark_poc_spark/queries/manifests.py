@@ -422,7 +422,8 @@ def scan_tree(fm: DataFrame) -> DataFrame:
         F.countDistinct("branch_id").alias("n_branches"),
         F.count("*").alias("n_leaves"),
         F.countDistinct(F.when(F.col("branch_hit"), F.col("branch_id"))).alias("branches_visited"),
-        F.sum(F.col("leaf_hit").cast("bigint")).alias("leaves_visited"),
+        # a count, not a sum: over no leaves it is 0, as the oracle's count(*) is
+        F.count(F.when(F.col("leaf_hit"), 1)).alias("leaves_visited"),
     )
     matched = (
         entries.join(leaves.filter("leaf_hit").select("leaf_id"), "leaf_id")

@@ -19,7 +19,6 @@ the full set).
 from __future__ import annotations
 
 import datetime
-import itertools
 import math
 import os
 import sys
@@ -109,20 +108,18 @@ def spark():
     spark.stop()
 
 
-_job_groups = itertools.count()
+def fixture_queries() -> list[str]:
+    """Registry queries that read a ``core.fixtures`` relation: the fixtures
+    are defined in lock-step with their oracle CTEs, so these are the
+    queries whose oracle composes one."""
+    from iceberg_benchmark_poc_spark.core.fixtures import CTE_SQL
+    from iceberg_benchmark_poc_spark.core.registry import all_queries
 
-
-def jobs_of(spark, fn):
-    """(result of ``fn()``, number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"engine-tests-{next(_job_groups)}"
-    outer = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", outer)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(
+        name
+        for name, q in all_queries().items()
+        if q.oracle is not None and any(sql in q.oracle for sql in CTE_SQL.values())
+    )
 
 
 def duck_views(sf_dir: str):

@@ -14,10 +14,11 @@ import re
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from iceberg_benchmark_poc_spark.bench.census import build_and_exec_jobs
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 from iceberg_benchmark_poc_spark.queries.bpe import BPE_EOW, BPE_MERGES, _word_types
 
-from .conftest import SF_DIR, jobs_of
+from .conftest import SF_DIR
 
 
 def _word_counts(texts) -> dict[str, int]:
@@ -234,16 +235,10 @@ def test_bpe_job_counts(spark):
     the same after a warm-up run and after clearing the cache."""
     for name in ("q_bpe_train", "q_bpe_encode"):
         fn = all_queries()[name].fn
-
-        def build_and_run():
-            df, build_jobs = jobs_of(spark, lambda: fn(spark, SF_DIR))
-            _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
-            return build_jobs, exec_jobs
-
-        build_and_run()  # warm-up
-        after_warm_up = build_and_run()
+        build_and_exec_jobs(spark, fn, SF_DIR)  # warm-up
+        after_warm_up = build_and_exec_jobs(spark, fn, SF_DIR)
         spark.catalog.clearCache()
-        assert build_and_run() == after_warm_up, name
+        assert build_and_exec_jobs(spark, fn, SF_DIR) == after_warm_up, name
         build_jobs, exec_jobs = after_warm_up
         assert build_jobs == 0, name
         assert exec_jobs <= 2, name

@@ -11,6 +11,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
+from iceberg_benchmark_poc_spark.bench.census import build_and_exec_jobs
 from iceberg_benchmark_poc_spark.core.io import load_table
 from iceberg_benchmark_poc_spark.operators.text import (
     jaccard_from_arrays,
@@ -39,7 +40,7 @@ from iceberg_benchmark_poc_spark.queries.textpipe import (
     q_stratified_sample,
 )
 
-from .conftest import SF_DIR, jobs_of
+from .conftest import SF_DIR
 
 
 def _tokens(text: str) -> list[str]:
@@ -116,16 +117,10 @@ def _stable_job_counts(spark, query) -> tuple[int, int]:
     """(build, exec) Spark jobs of ``query`` at SF_DIR, asserted to be the
     same after a warm-up run and after clearing the cache: no step leaves
     cached state behind (every materialization is a core.io.cut)."""
-
-    def build_and_run():
-        df, build_jobs = jobs_of(spark, lambda: query(spark, SF_DIR))
-        _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
-        return build_jobs, exec_jobs
-
-    build_and_run()  # warm-up
-    after_warm_up = build_and_run()
+    build_and_exec_jobs(spark, query, SF_DIR)  # warm-up
+    after_warm_up = build_and_exec_jobs(spark, query, SF_DIR)
     spark.catalog.clearCache()
-    assert build_and_run() == after_warm_up
+    assert build_and_exec_jobs(spark, query, SF_DIR) == after_warm_up
     return after_warm_up
 
 

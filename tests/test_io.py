@@ -13,6 +13,7 @@ from __future__ import annotations
 import datetime
 import math
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -23,11 +24,13 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from iceberg_benchmark_poc_spark.bench.census import jobs_of
 from iceberg_benchmark_poc_spark.core import io
 from iceberg_benchmark_poc_spark.core.io import (
     TABLES,
     column_bounds,
     ensure_session_confs,
+    load_small,
     load_table,
     read_parquet,
     spread_narrow,
@@ -37,7 +40,7 @@ from iceberg_benchmark_poc_spark.queries.behavior import q_power_users, q_rfm_se
 from iceberg_benchmark_poc_spark.queries.relational import q_skyline
 from iceberg_benchmark_poc_spark.queries.textpipe import q_shard_pack
 
-from .conftest import SF_DIR, jobs_of
+from .conftest import SF_DIR
 
 #: the sf0.001 and sf0.01 fixture directories beside the test fixtures
 _TESTDATA = os.path.dirname(os.path.abspath(SF_DIR))
@@ -335,20 +338,96 @@ def test_fold_site_queries_build_without_a_job(spark):
 def test_spread_narrow_is_job_free_only_over_a_scan(spark):
     """spread_narrow reads the partition count of q_dv_payload_roundtrip's
     input, a filtered projection of the orders scan, without running a
-    job, so that query builds in none. The same call over a groupBy runs
-    the groupBy's shuffle stage: the zero-job contract needs a scan."""
-    from iceberg_benchmark_poc_spark.core.fixtures import dv_entries
+    job, so that query builds in none. The same call over a groupBy that
+    exchanges (over ``load_table``'s scan; over the one partition of
+    ``load_small`` the groupBy needs no exchange) runs the groupBy's
+    shuffle stage: the zero-job contract needs a scan."""
+    from iceberg_benchmark_poc_spark.core.fixtures import dv_entries, dv_entries_of
     from iceberg_benchmark_poc_spark.queries.dv_payload import SAMPLE_MOD, q_dv_payload_roundtrip
 
-    dv = (
-        dv_entries(spark, SF_DIR)
-        .filter((F.col("file_id") % SAMPLE_MOD == 0) & (F.col("deleted_row_count") > 0))
-        .select("file_id", "deleted_row_count")
-    )
+    def sample(dv):
+        return dv.filter((F.col("file_id") % SAMPLE_MOD == 0) & (F.col("deleted_row_count") > 0)).select(
+            "file_id", "deleted_row_count"
+        )
+
+    dv = sample(dv_entries(spark, SF_DIR))
     assert jobs_of(spark, lambda: spread_narrow(dv, "file_id"))[1] == 0
     assert jobs_of(spark, lambda: q_dv_payload_roundtrip(spark, SF_DIR))[1] == 0
-    grouped = dv.groupBy("file_id").count()
+    scanned = sample(dv_entries_of(load_table(spark, SF_DIR, "orders").select("o_orderkey")))
+    grouped = scanned.groupBy("file_id").count()
     assert jobs_of(spark, lambda: spread_narrow(grouped, "file_id"))[1] > 0
+
+# -- load_small ------------------------------------------------------------------
+
+
+def _write_orders(path, row_groups: int) -> None:
+    keys = pa.array(range(6), pa.int64())
+    pq.write_table(pa.table({"o_orderkey": keys}), path, row_group_size=len(keys) // row_groups)
+
+
+def _plan(df) -> str:
+    """The analyzed logical plan with expression ids masked."""
+    return re.sub(r"#\d+", "#", df._jdf.queryExecution().analyzed().toString())
+
+
+def _coalesced(df) -> bool:
+    return "Repartition 1, false" in _plan(df)
+
+
+def test_load_small_is_one_partition_over_one_row_group_only(spark, tmp_path):
+    """One row group in total: ``load_table`` plus ``coalesce(1)``. Two row
+    groups, in one file or over two files, a fallback layout, or a path the
+    driver cannot stat (a ``file:`` URI): ``load_table``'s plan unchanged."""
+    one, two_groups, two_files, parts = (tmp_path / d for d in ("one", "groups", "files", "parts"))
+    for d in (one, two_groups, two_files / "orders.parquet"):
+        d.mkdir(parents=True)
+    _write_orders(one / "orders.parquet", 1)
+    _write_orders(two_groups / "orders.parquet", 2)
+    for i in range(2):
+        _write_orders(two_files / "orders.parquet" / f"part-{i}.parquet", 1)
+    spark.createDataFrame([(1, "de"), (2, "en")], "o_orderkey bigint, lang string").write.partitionBy(
+        "lang"
+    ).parquet(str(parts / "orders.parquet"))
+
+    small = load_small(spark, str(one), "orders")
+    assert _coalesced(small)
+    assert _plan(small) == _plan(load_table(spark, str(one), "orders").coalesce(1))
+    assert sorted(small.collect()) == sorted(load_table(spark, str(one), "orders").collect())
+    for sf_dir in (two_groups, two_files, parts, f"file://{one}"):
+        got = load_small(spark, str(sf_dir), "orders")
+        assert not _coalesced(got), sf_dir
+        assert _plan(got) == _plan(load_table(spark, str(sf_dir), "orders")), sf_dir
+
+
+def test_load_small_reads_each_footer_once_without_a_job(spark, tmp_path, monkeypatch):
+    """Two ``load_small`` calls on one file state run no Spark job and read
+    each data file's footer once; ``column_bounds`` for two column keys
+    reads the same cached footers."""
+    monkeypatch.setattr(io, "_STATES", {})
+    reads = []
+    real = pq.read_metadata
+
+    def read_metadata(path, *args, **kwargs):
+        reads.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(io.pq, "read_metadata", read_metadata)
+    one, two = tmp_path / "one", tmp_path / "two" / "orders.parquet"
+    one.mkdir()
+    two.mkdir(parents=True)
+    _write_orders(one / "orders.parquet", 1)
+    for i in range(2):
+        _write_orders(two / f"part-{i}.parquet", 1)
+    for sf_dir in (one, two.parent):
+        for _ in range(2):
+            _, jobs = jobs_of(spark, lambda: load_small(spark, str(sf_dir), "orders"))
+            assert jobs == 0
+        column_bounds(spark, str(sf_dir), "orders", ["o_orderkey"])
+        column_bounds(spark, str(sf_dir), "orders", ["o_orderkey", "o_orderkey"])
+    assert sorted(reads) == sorted(
+        [str(one / "orders.parquet"), str(two / "part-0.parquet"), str(two / "part-1.parquet")]
+    )
+
 
 #: a cut read by two actions with one of its two executors killed in between
 _KILL_PROBE = textwrap.dedent(

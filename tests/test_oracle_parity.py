@@ -8,9 +8,11 @@ import pytest
 
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 
-from .conftest import SF_DIR, compare_query_to_oracle
+from .conftest import SF_DIR, compare_query_to_oracle, fixture_queries
+from .test_plans import _detail_blocks, _into_one_partition
 
 QUERIES = all_queries()
+FIXTURE_QUERIES = fixture_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -34,7 +36,11 @@ def _write_degenerate_fixture(out, kind: str) -> str:
       keeps and DuckDB's bare ``trim`` strips;
     - ``null_prices``: every 7th lineitem.l_extendedprice is NULL;
     - ``no_lineitem_stats``: lineitem is written without column statistics,
-      so its footers cannot give bounds and ``core.io.table_bounds`` folds.
+      so its footers cannot give bounds and ``core.io.table_bounds`` folds;
+    - ``empty_orders_events``: orders and events have 0 rows, so every
+      ``core.fixtures`` relation is empty (its source one empty row group);
+    - ``two_row_groups``: orders and events are rewritten as two row groups
+      each, the multi-row-group path of ``core.io.load_small``.
     """
     import shutil
 
@@ -58,6 +64,12 @@ def _write_degenerate_fixture(out, kind: str) -> str:
             pq.write_table(table, dst)
         elif kind == "empty_part_documents" and t in ("part", "documents"):
             pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "empty_orders_events" and t in ("orders", "events"):
+            pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "two_row_groups" and t in ("orders", "events"):
+            table = pq.read_table(src)
+            pq.write_table(table, dst, row_group_size=-(-table.num_rows // 2))
+            assert pq.read_metadata(dst).num_row_groups == 2
         elif kind == "null_prices" and t == "lineitem":
             table = pq.read_table(src)
             i = table.schema.get_field_index("l_extendedprice")
@@ -139,9 +151,11 @@ def degenerate_sf(tmp_path_factory):
         ("null_prices", "q_approx_stats"),
         ("no_lineitem_stats", "q_equidepth_hist"),
         ("no_lineitem_stats", "q_approx_stats"),
+        *(("empty_orders_events", name) for name in FIXTURE_QUERIES),
+        *(("two_row_groups", name) for name in FIXTURE_QUERIES),
     ],
 )
-def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
+def test_degenerate_input_parity(spark, degenerate_sf, kind, name, monkeypatch):
     """Queries keep oracle parity on degenerate inputs. The prefix-scan
     callers: NULL per-user totals sort last, as the oracles' NULLS LAST
     order does, and an empty table's None domain scans as one range instead
@@ -155,7 +169,12 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
     trailing U+00A0: both sides trim U+0020 alone, so the copy's last word
     keeps the U+00A0 on both. The quantile queries: a NULL price takes no
     rank, as builtin ``percentile`` ignores it, and a lineitem whose
-    footers hold no statistics ranks over folded bounds."""
+    footers hold no statistics ranks over folded bounds. Every query over a
+    ``core.fixtures`` relation: on empty orders and events its aggregates
+    are those of no rows (q_scan_tree counts no leaf hits as 0), and on
+    two-row-group sources ``load_small`` adds no ``Coalesce 1``, so the
+    plan holds exactly the one-partition nodes it holds over
+    ``load_table``."""
     sf_dir, duck = degenerate_sf(kind)
     if kind == "no_lineitem_stats":
         from iceberg_benchmark_poc_spark.core.io import column_bounds
@@ -163,3 +182,16 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name):
         assert column_bounds(spark, sf_dir, "lineitem", ["l_extendedprice"]) is None
     q = QUERIES[name]
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)
+    if kind == "two_row_groups":
+        from iceberg_benchmark_poc_spark.core import fixtures, io
+
+        with_small = _one_partition_coalesces(spark, q.fn(spark, sf_dir))
+        monkeypatch.setattr(fixtures, "load_small", io.load_table)
+        assert with_small == _one_partition_coalesces(spark, q.fn(spark, sf_dir))
+
+
+def _one_partition_coalesces(spark, df) -> int:
+    """``Coalesce 1`` nodes in the formatted physical plan of ``df``."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plan = df._jdf.queryExecution().explainString(mode)
+    return sum(t == "Coalesce" and _into_one_partition(t, body) for t, body in _detail_blocks(plan).values())

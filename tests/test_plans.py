@@ -10,9 +10,10 @@ from pathlib import Path
 
 import pytest
 
+from iceberg_benchmark_poc_spark.bench.census import census
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 
-from .conftest import SF_DIR, jobs_of
+from .conftest import SF_DIR, fixture_queries
 
 
 #: compiled-plan cache: four registry-wide sweeps in this file each walk all
@@ -225,18 +226,54 @@ def test_no_undocumented_global_sorts(spark):
     assert set(GLOBAL_SORT_ALLOWLIST) <= set(all_queries())
 
 
-#: (build, exec) Spark jobs at sf0.001. Under AQE each exchange runs as its
-#: own job, and the result stage is one more: the layout queries exchange
-#: once (both layout windows share one SinglePartition exchange, and the
-#: probes are generated inline, not broadcast), q_binpack_plan once (its
-#: per-partition window; the final ORDER BY sorts over ``coalesce(1)``), and
-#: q_equality_delete broadcasts its delete set and exchanges its group-by.
+#: (build, exec) Spark jobs at sf0.001 of every query that reads a
+#: ``core.fixtures`` relation, plus q_equality_delete (its ``orders`` read
+#: goes through ``load_table``), counted by ``bench.census`` on the second of
+#: two runs. Under AQE each exchange runs as its own job, and the result
+#: stage is one more. The fixtures' one-row-group sources load through
+#: ``core.io.load_small`` as one partition, so a group-by, window or sort
+#: over a fixture relation plans no exchange: the layout queries
+#: (q_skip_rate, q_range_span, q_zorder, q_sorted_write) and q_binpack_plan
+#: run in the result stage alone. What is left is a broadcast (the DV joins,
+#: q_equality_delete's delete set, q_scan_tree's per-level counts), a
+#: ``spread_narrow`` exchange before a codec UDF, or a second relation's
+#: scan.
 METADATA_JOB_COUNTS = {
-    "q_binpack_plan": (0, 2),
+    "q_agg_stats": (0, 1),
+    "q_binpack_plan": (0, 1),
+    "q_compaction": (0, 1),
+    "q_cost_model": (0, 1),
+    "q_dv_anti_join": (0, 2),
+    "q_dv_apply": (0, 2),
+    "q_dv_coalesce": (0, 2),
+    "q_dv_hash_join": (0, 2),
+    "q_dv_payload_roundtrip": (0, 2),
+    "q_dv_positional_join": (0, 2),
+    "q_dv_semi_join": (0, 2),
     "q_equality_delete": (0, 3),
-    "q_range_span": (0, 2),
-    "q_skip_rate": (0, 2),
-    "q_zorder": (0, 2),
+    "q_expire_snapshots": (0, 1),
+    "q_group_agg": (0, 1),
+    "q_growth": (0, 1),
+    "q_lead_lag": (0, 1),
+    "q_minmax_prune": (0, 1),
+    "q_ordered_manifest": (0, 2),
+    "q_orphan_files": (0, 3),
+    "q_partition_filter": (0, 1),
+    "q_partition_summary": (0, 1),
+    "q_percentiles": (0, 1),
+    "q_range_span": (0, 1),
+    "q_read_stats": (0, 1),
+    "q_roaring_roundtrip": (0, 2),
+    "q_roaring_runs": (0, 2),
+    "q_scan_flat": (0, 1),
+    "q_scan_tree": (0, 5),
+    "q_skip_rate": (0, 1),
+    "q_snapshot_diff": (0, 1),
+    "q_sorted_write": (0, 1),
+    "q_spill_policy": (0, 2),
+    "q_table_fsck": (0, 2),
+    "q_time_travel": (0, 1),
+    "q_zorder": (0, 1),
 }
 
 
@@ -251,21 +288,18 @@ QUANTILE_JOB_COUNTS = {
 }
 
 
-def _build_and_exec_jobs(spark, name):
-    fn = all_queries()[name].fn
-    df, build_jobs = jobs_of(spark, lambda: fn(spark, SF_DIR))
-    _, exec_jobs = jobs_of(spark, lambda: df.write.format("noop").mode("overwrite").save())
-    return build_jobs, exec_jobs
-
-
 @pytest.mark.parametrize("name", sorted(METADATA_JOB_COUNTS))
 def test_metadata_query_job_counts(spark, name):
-    assert _build_and_exec_jobs(spark, name) == METADATA_JOB_COUNTS[name]
+    assert census(spark, SF_DIR, [name])[name] == METADATA_JOB_COUNTS[name]
+
+
+def test_metadata_job_gate_covers_every_fixture_query():
+    assert set(fixture_queries()) <= set(METADATA_JOB_COUNTS)
 
 
 @pytest.mark.parametrize("name", sorted(QUANTILE_JOB_COUNTS))
 def test_quantile_query_job_counts(spark, name):
-    assert _build_and_exec_jobs(spark, name) == QUANTILE_JOB_COUNTS[name]
+    assert census(spark, SF_DIR, [name])[name] == QUANTILE_JOB_COUNTS[name]
 
 
 def test_plan_allowlists_not_stale():
