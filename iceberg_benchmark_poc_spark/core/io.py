@@ -69,14 +69,27 @@ the coalesce takes away no scan parallelism; above it ``SinglePartition``
 satisfies every clustering and ordering requirement, so the group-bys,
 windows and sorts of the relation plan no exchange, and under AQE each
 exchange saved is one job saved. A multi-row-group source, which is every
-table at production scale, gets ``load_table``'s plan unchanged. Only the
-``core.fixtures`` base loads call it: their relations are metadata by
-construction. A corpus table at a small scale is one row group too (sf0.1
-``documents``), but there the text pipeline's ``groupBy(text)`` exchange
-is what spreads the shingle and MinHash stage across cores: the session's
-256 KiB AQE coalesce floor was tuned for that spread (1.20x on the sf0.1
-text/graph mix, core/session.py), so the corpus and TPC-H queries keep
+table at production scale, gets ``load_table``'s plan unchanged. The
+``core.fixtures`` base loads call it, whose relations are metadata by
+construction, and so do q_equality_delete's data and delete sides. A
+corpus table at a small scale is one row group too (sf0.1 ``documents``),
+but there the text pipeline's ``groupBy(text)`` exchange is what spreads
+the shingle and MinHash stage across cores: the session's 256 KiB AQE
+coalesce floor was tuned for that spread (1.20x on the sf0.1 text/graph
+mix, core/session.py), so the corpus and TPC-H queries keep
 ``load_table``.
+
+``load_small``, ``order_small`` and ``join_small`` are one family: each
+keeps a metadata-scale relation in one partition, so the work above it
+runs in the task that scans it instead of behind an exchange, and each
+leaves a multi-partition input with the plan it has without them.
+
+- ``load_small``: the scan of a one-row-group source, as one partition.
+- ``order_small``: a final ORDER BY over a small group-by, sorted in one
+  task instead of behind a range exchange (two jobs under AQE).
+- ``join_small``: a join of two one-partition sides, hashed and probed in
+  their one task instead of behind a broadcast (one job under AQE); over
+  any other sides the caller's join, forced broadcast or planner-chosen.
 
 At 100 TB these reads stay embarrassingly parallel: ``spark.read.parquet`` on
 a directory fans out one task per ~128 MB split (``files.maxPartitionBytes``),
@@ -211,11 +224,12 @@ def load_small(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     in the footers the file state caches: no Spark job, no ``.rdd``, no
     planning. A fallback layout or a path the driver cannot stat returns
     ``load_table`` unchanged. Callers are the metadata relations of
-    ``core.fixtures``; corpus tables keep ``load_table``, whose
-    ``groupBy(text)`` exchange spreads the text pipeline across cores even
-    over one row group (the 256 KiB AQE floor of ``core/session.py``).
-    ``order_small`` is the same idea for a final ORDER BY over a small
-    group-by.
+    ``core.fixtures`` and q_equality_delete; corpus tables keep
+    ``load_table``, whose ``groupBy(text)`` exchange spreads the text
+    pipeline across cores even over one row group (the 256 KiB AQE floor of
+    ``core/session.py``). ``order_small`` and ``join_small`` are the same
+    idea for a final ORDER BY over a small group-by and for a join of two
+    such relations.
     """
     df = load_table(spark, sf_dir, name)
     try:
@@ -472,7 +486,11 @@ def cut(df: DataFrame) -> DataFrame:
       executor fails every later read with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``,
       because the checkpoint has no lineage to recompute from. The second
       replica (``MEMORY_AND_DISK_2``) survives the loss of one executor
-      (tests/test_io.py kills one on a two-executor cluster).
+      (tests/test_io.py kills one on a two-executor cluster). A ``local`` or
+      ``local[n]`` master has one block manager, where a second replica has
+      nowhere to go and each cut would log two replication warnings, so
+      there the level is ``MEMORY_AND_DISK``; ``local-cluster`` and real
+      masters keep the replica.
     - **No cleanup.** Spark's ContextCleaner drops checkpoint blocks once
       the DataFrame is garbage-collected, so no query unpersists and none
       leaves cached state behind for the next one. A persist that was never
@@ -494,7 +512,10 @@ def cut(df: DataFrame) -> DataFrame:
       plan only, so it runs the query stages below it first): a cut over a
       shuffle runs one or more jobs when it is called.
     """
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK_2)
+    master = df.sparkSession.sparkContext.master
+    one_block_manager = master == "local" or master.startswith("local[")
+    level = StorageLevel.MEMORY_AND_DISK if one_block_manager else StorageLevel.MEMORY_AND_DISK_2
+    return df.localCheckpoint(eager=False, storageLevel=level)
 
 
 def order_small(df: DataFrame, *cols) -> DataFrame:
@@ -513,6 +534,42 @@ def order_small(df: DataFrame, *cols) -> DataFrame:
     scan, for a relation whose source is one row group.
     """
     return df.coalesce(1).orderBy(*cols)
+
+
+def join_small(left: DataFrame, right: DataFrame, on, how: str = "inner", broadcast: bool = False) -> DataFrame:
+    """``left.join(right, on, how)``, hashed and probed in the scan's task
+    when both sides are one partition.
+
+    The join first takes a ``shuffle_hash`` hint on ``right``. When its
+    physical plan is a ``ShuffledHashJoin`` whose two children report
+    ``SinglePartition`` (``load_small`` relations over one row group, and
+    the narrow work, group-bys and windows above them), that join is
+    returned: it needs no exchange, so ``right``'s hash is built and probed
+    in the one task that scans both sides, where a broadcast would run as a
+    job of its own under AQE to ship rows that task already holds.
+    Otherwise the join is the caller's: ``F.broadcast(right)`` when
+    ``broadcast``, else planner-chosen, so a multi-row-group source keeps
+    its plan and the left side never shuffles. The children are read from
+    the joined plan, not from each side alone, because the optimizer may
+    move a semi or anti join below a side's ``coalesce(1)``; a
+    one-partition side then no longer feeds the join. Reading the plan
+    plans the join (``sparkPlan``) but runs no job.
+    """
+    hashed = left.join(right.hint("shuffle_hash"), on, how)
+    if _hashed_in_one_task(hashed):
+        return hashed
+    return left.join(F.broadcast(right) if broadcast else right, on, how)
+
+
+def _hashed_in_one_task(df: DataFrame) -> bool:
+    """Whether the physical plan of ``df``, below its projections and
+    filters, is a ``ShuffledHashJoin`` of two ``SinglePartition`` children."""
+    node = df._jdf.queryExecution().sparkPlan()
+    while node.getClass().getSimpleName() in ("ProjectExec", "FilterExec"):
+        node = node.child()
+    if node.getClass().getSimpleName() != "ShuffledHashJoinExec":
+        return False
+    return all(c.outputPartitioning().toString() == "SinglePartition" for c in (node.left(), node.right()))
 
 
 def epoch_micros(col) -> "F.Column":

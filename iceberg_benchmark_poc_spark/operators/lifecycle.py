@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..core.io import join_small
+
 
 def visible_at(lineage: DataFrame, snap) -> DataFrame:
     """Table state AS OF ``snap``: the half-open interval visibility filter.
@@ -146,9 +148,13 @@ def apply_equality_deletes(
     ``deletes`` must carry ``delete_seq``. The delete manifest is small by
     nature, so it broadcasts and the fact side never shuffles — exactly how
     Spark's Iceberg reader applies equality deletes inside the scan stage.
+    When both sides are one partition (``core.io.join_small``) the delete
+    hash is built in the scan's own task instead, with no broadcast job.
     """
-    return data.join(
-        F.broadcast(deletes),
+    return join_small(
+        data,
+        deletes,
         (data[key] == deletes[delete_key]) & (data["data_seq"] < deletes["delete_seq"]),
         "left_anti",
+        broadcast=True,
     )

@@ -11,7 +11,10 @@ dynamically).
 
 Scale notes: the DV manifest side is typically 100-1000x smaller than the
 data-file manifest, so these joins broadcast at real scale; we add an explicit
-``broadcast()`` hint where the semantics guarantee the small side. Row-level
+``broadcast()`` hint where the semantics guarantee the small side. Every join
+goes through ``core.io.join_small``: over one-row-group fixtures both sides
+are one partition, and the DV side is hashed in the scan's task with no
+broadcast job; over any larger source the hint or the planner decides. Row-level
 DV application (q_dv_apply) is the only op touching row positions; at 100 TB
 that path is Iceberg merge-on-read's job, and the join keys (file, pos) are
 perfectly partition-prunable.
@@ -22,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..core.fixtures import dv_entries, dv_multi, file_meta, with_fixtures
-from ..core.io import load_table, order_small
+from ..core.io import join_small, load_small, load_table, order_small
 from ..core.registry import register
 from ..operators.lifecycle import apply_equality_deletes, merge_latest_wins
 
@@ -52,11 +55,12 @@ def q_dv_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference builds a dict on dv.file_path and probes (
     poc/test_dv_resolution_strategies.py:100-137); Spark's broadcast-hash join
     is the distributed equivalent — the DV side ships to every executor, no
-    shuffle of the big side.
+    shuffle of the big side. Over one-partition sides ``join_small`` builds
+    the same hash in the scan's task.
     """
     fm = file_meta(spark, sf_dir)
     dv = dv_entries(spark, sf_dir)
-    return fm.join(F.broadcast(dv.drop("file_id")), "file_path").select(
+    return join_small(fm, dv.drop("file_id"), "file_path", broadcast=True).select(
         "file_id",
         "file_path",
         "record_count",
@@ -88,7 +92,9 @@ def q_dv_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fm = file_meta(spark, sf_dir)
     dv = dv_entries(spark, sf_dir).select("file_path")
-    return fm.join(F.broadcast(dv), "file_path", "left_semi").select("file_id", "file_path", "record_count")
+    return join_small(fm, dv, "file_path", "left_semi", broadcast=True).select(
+        "file_id", "file_path", "record_count"
+    )
 
 
 @register(
@@ -112,7 +118,9 @@ def q_dv_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fm = file_meta(spark, sf_dir)
     dv = dv_entries(spark, sf_dir).select("file_path")
-    return fm.join(F.broadcast(dv), "file_path", "left_anti").select("file_id", "file_path", "record_count")
+    return join_small(fm, dv, "file_path", "left_anti", broadcast=True).select(
+        "file_id", "file_path", "record_count"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -171,7 +179,7 @@ def q_dv_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         dv.select("file_id", F.explode(F.sequence(F.lit(0), F.col("deleted_row_count") - 1)).alias("j"))
         .select("file_id", ((F.col("file_id") * 17 + F.col("j") * 13) % ROWS_PER_FILE).alias("pos"))
     )
-    live = data_rows.join(deleted, ["file_id", "pos"], "left_anti")
+    live = join_small(data_rows, deleted, ["file_id", "pos"], "left_anti")
     return live.groupBy("file_id").agg(F.count("*").alias("live_rows"))
 
 
@@ -223,7 +231,7 @@ def q_dv_positional_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv_side = dv.select(
         F.col("file_path").alias("dv_file_path"), "deleted_row_count"
     ).withColumn("pos", F.row_number().over(Window.orderBy("dv_file_path")).cast("bigint"))
-    return data_side.join(dv_side, "pos").select(
+    return join_small(data_side, dv_side, "pos").select(
         "pos",
         "file_path",
         "dv_file_path",
@@ -303,7 +311,7 @@ def q_ordered_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fm = file_meta(spark, sf_dir)
     dv = dv_entries(spark, sf_dir).select("file_path", "dv_size_bytes", "deleted_row_count")
-    joined = fm.join(F.broadcast(dv), "file_path", "left_outer")
+    joined = join_small(fm, dv, "file_path", "left_outer", broadcast=True)
     return joined.select(
         F.row_number().over(Window.orderBy("file_path")).cast("bigint").alias("pos"),
         "file_id",
@@ -446,17 +454,19 @@ def q_equality_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the delete manifest is small by nature (one row per deleted key),
     so it broadcasts and the fact side never shuffles — a merge-on-read scan
     at 100 TB pays one broadcast hash anti-join inside the scan stage, which
-    is exactly how Spark's Iceberg reader applies equality deletes.
+    is exactly how Spark's Iceberg reader applies equality deletes. Both
+    sides load through ``load_small``: over one-row-group sources the
+    anti-join, the group-by and the final sort all run in the scan's task.
     """
     eq = (
-        load_table(spark, sf_dir, "customer")
+        load_small(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % EQ_DELETE_KEY_MOD == 0)
         .select(
             F.col("c_custkey").alias("custkey"),
             (F.lit(EQ_DELETE_SEQ_BASE) + F.col("c_custkey") % EQ_DELETE_SEQ_MOD).alias("delete_seq"),
         )
     )
-    d = load_table(spark, sf_dir, "orders").select(
+    d = load_small(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", (F.col("o_orderkey") % EQ_DATA_SEQ_MOD).alias("data_seq")
     )
     live = apply_equality_deletes(d, eq, "o_custkey", "custkey")

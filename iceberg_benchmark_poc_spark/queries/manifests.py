@@ -43,7 +43,7 @@ from ..core.fixtures import (
     file_path_col,
     with_fixtures,
 )
-from ..core.io import load_table, order_small
+from ..core.io import join_small, load_small, load_table, order_small
 from ..core.registry import register
 from ..operators.lifecycle import change_events, expiry_cut, visible_at
 
@@ -426,7 +426,7 @@ def scan_tree(fm: DataFrame) -> DataFrame:
         F.count(F.when(F.col("leaf_hit"), 1)).alias("leaves_visited"),
     )
     matched = (
-        entries.join(leaves.filter("leaf_hit").select("leaf_id"), "leaf_id")
+        join_small(entries, leaves.filter("leaf_hit").select("leaf_id"), "leaf_id")
         .filter(F.col("partition_date") == probe)
         .agg(F.count("*").alias("files_matched"))
     )
@@ -933,8 +933,12 @@ def _storage_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarry) plus the deterministic debris a real table accumulates —
     orphaned write attempts (task retries whose commit lost) and abandoned
     staging blobs. Sizes/mtimes use the same integer generators as
-    ``file_meta`` so the committed rows describe the same physical files."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey")
+    ``file_meta`` so the committed rows describe the same physical files.
+    A listing is file-inventory metadata, so it loads through ``load_small``
+    as the fixture relations do: over one row group the union of its three
+    parts is one partition too, and its joins and group-bys plan no
+    exchange."""
+    o = load_small(spark, sf_dir, "orders").select("o_orderkey")
     fid = F.col("o_orderkey")
     mtime = F.date_add(
         F.to_date(F.lit(EPOCH_DATE)), ((fid * 7919) % DATE_DOMAIN_DAYS).cast("int")
@@ -1023,6 +1027,8 @@ def q_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     listing = _storage_listing(spark, sf_dir)
     refs = file_meta(spark, sf_dir).select(F.col("file_path").alias("path"))
+    # not join_small: the optimizer pushes the anti join below the listing's
+    # union, so no side of it is one partition
     orphans = listing.join(refs, "path", "left_anti")
     cutoff = F.date_add(F.to_date(F.lit(EPOCH_DATE)), _ORPHAN_CUT_DAYS)
     return order_small(
@@ -1087,7 +1093,7 @@ def q_table_fsck(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("file_path").alias("path"), "file_size_bytes", "partition_date"
     )
     present = _storage_listing(spark, sf_dir).select("path", F.lit(1).alias("present"))
-    joined = refs.join(present, "path", "left")
+    joined = join_small(refs, present, "path", "left")
     missing = F.col("present").isNull()
     return order_small(
         joined.groupBy(

@@ -122,6 +122,12 @@ def fixture_queries() -> list[str]:
     )
 
 
+def small_source_queries() -> list[str]:
+    """Queries over ``core.io.load_small`` sources: every ``core.fixtures``
+    relation, and q_equality_delete's ``orders`` and ``customer``."""
+    return [*fixture_queries(), "q_equality_delete"]
+
+
 def duck_views(sf_dir: str):
     """DuckDB connection with one view per fixture table of ``sf_dir``."""
     con = duckdb.connect()
@@ -137,6 +143,87 @@ def duck():
     con = duck_views(SF_DIR)
     yield con
     con.close()
+
+
+def _write_degenerate_fixture(out, kind: str) -> str:
+    """A copy of the SF_DIR tables with one degenerate edit:
+
+    - ``null_user_values``: every events.value of one user is NULL, so that
+      user's totals are NULL (prefix-scan keys that must sort NULLS LAST);
+    - ``empty_part_documents``: part and documents have 0 rows, so domain
+      folds over them return None;
+    - ``nbsp_copy``: the first incoming-source document becomes a copy of
+      the first corpus document plus a trailing U+00A0, which Spark's trim
+      keeps and DuckDB's bare ``trim`` strips;
+    - ``null_prices``: every 7th lineitem.l_extendedprice is NULL;
+    - ``no_lineitem_stats``: lineitem is written without column statistics,
+      so its footers cannot give bounds and ``core.io.table_bounds`` folds;
+    - ``empty_orders_events``: orders and events have 0 rows, so every
+      ``core.fixtures`` relation is empty (its source one empty row group);
+    - ``two_row_groups``: orders, events and customer are rewritten as two
+      row groups each, the multi-row-group path of ``core.io.load_small``
+      and so of ``core.io.join_small``.
+    """
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from iceberg_benchmark_poc_spark.queries.textpipe import INCOMING_SOURCE
+
+    for t in TABLES:
+        src, dst = f"{SF_DIR}/{t}.parquet", out / f"{t}.parquet"
+        if kind == "null_user_values" and t == "events":
+            table = pq.read_table(src)
+            user = pc.min(table["user_id"])
+            value = pc.if_else(
+                pc.equal(table["user_id"], user), pa.scalar(None, pa.float64()), table["value"]
+            )
+            table = table.set_column(table.schema.get_field_index("value"), "value", value)
+            pq.write_table(table, dst)
+        elif kind == "empty_part_documents" and t in ("part", "documents"):
+            pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "empty_orders_events" and t in ("orders", "events"):
+            pq.write_table(pq.read_table(src).slice(0, 0), dst)
+        elif kind == "two_row_groups" and t in ("orders", "events", "customer"):
+            table = pq.read_table(src)
+            pq.write_table(table, dst, row_group_size=-(-table.num_rows // 2))
+            assert pq.read_metadata(dst).num_row_groups == 2
+        elif kind == "null_prices" and t == "lineitem":
+            table = pq.read_table(src)
+            i = table.schema.get_field_index("l_extendedprice")
+            prices = [None if r % 7 == 0 else v for r, v in enumerate(table[i].to_pylist())]
+            table = table.set_column(i, table.schema.field(i), pa.array(prices, pa.float64()))
+            pq.write_table(table, dst)
+        elif kind == "no_lineitem_stats" and t == "lineitem":
+            pq.write_table(pq.read_table(src), dst, write_statistics=False)
+        elif kind == "nbsp_copy" and t == "documents":
+            table = pq.read_table(src)
+            texts, sources = table["text"].to_pylist(), table["source"].to_pylist()
+            orig = sources.index(next(s for s in sources if s != INCOMING_SOURCE))
+            texts[sources.index(INCOMING_SOURCE)] = texts[orig] + "\u00a0"
+            i = table.schema.get_field_index("text")
+            table = table.set_column(i, table.schema.field(i), pa.array(texts, table.schema.field(i).type))
+            pq.write_table(table, dst)
+        else:
+            shutil.copy(src, dst)
+    return str(out)
+
+
+@pytest.fixture(scope="session")
+def degenerate_sf(tmp_path_factory):
+    made = {}
+
+    def get(kind: str):
+        if kind not in made:
+            sf_dir = _write_degenerate_fixture(tmp_path_factory.mktemp(kind), kind)
+            made[kind] = (sf_dir, duck_views(sf_dir))
+        return made[kind]
+
+    yield get
+    for _, con in made.values():
+        con.close()
 
 
 def _norm(v):

@@ -30,6 +30,7 @@ from iceberg_benchmark_poc_spark.core.io import (
     TABLES,
     column_bounds,
     ensure_session_confs,
+    join_small,
     load_small,
     load_table,
     read_parquet,
@@ -428,6 +429,71 @@ def test_load_small_reads_each_footer_once_without_a_job(spark, tmp_path, monkey
         [str(one / "orders.parquet"), str(two / "part-0.parquet"), str(two / "part-1.parquet")]
     )
 
+
+# -- join_small ------------------------------------------------------------------
+
+
+def _physical(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+@pytest.mark.parametrize("how", ["inner", "left_semi", "left_anti", "left_outer"])
+def test_join_small_joins_in_the_scan_task_over_one_row_group_only(spark, tmp_path, how):
+    """The DV joins' sides, ``file_meta`` and ``dv_entries``, over a
+    one-row-group ``orders``: the join is a ``ShuffledHashJoin`` that plans
+    no exchange of any kind and runs as one job. Over two row groups the
+    join is the caller's, forced broadcast or planner-chosen, with the same
+    analyzed plan as a plain ``join``. The rows are those of a plain
+    ``join`` in every case."""
+    from iceberg_benchmark_poc_spark.core.fixtures import dv_entries, file_meta
+
+    def sides(row_groups):
+        sf_dir = tmp_path / str(row_groups)
+        sf_dir.mkdir()
+        _write_orders(sf_dir / "orders.parquet", row_groups)
+        return file_meta(spark, str(sf_dir)), dv_entries(spark, str(sf_dir)).drop("file_id")
+
+    left, right = sides(1)
+    expected = sorted(left.join(right, "file_path", how).collect())
+    for broadcast in (False, True):
+        got = join_small(left, right, "file_path", how, broadcast)
+        plan = _physical(got)
+        assert "ShuffledHashJoin" in plan and "Exchange" not in plan, plan
+        rows, jobs = jobs_of(spark, got.collect)
+        assert sorted(rows) == expected and jobs == 1
+
+    left, right = sides(2)
+    assert sorted(join_small(left, right, "file_path", how).collect()) == expected
+    for broadcast, plain in ((False, right), (True, F.broadcast(right))):
+        got = join_small(left, right, "file_path", how, broadcast)
+        assert _plan(got) == _plan(left.join(plain, "file_path", how))
+    assert "BroadcastHashJoin" in _physical(join_small(left, right, "file_path", how, broadcast=True))
+
+
+def test_join_small_keeps_the_callers_join_when_the_optimizer_moves_it(spark, tmp_path):
+    """A semi join whose left side is a bare one-partition scan is pushed
+    below that side's ``coalesce(1)``, so the join no longer reads one
+    partition on both sides: ``join_small`` returns the caller's join, not
+    a hash join over two hash exchanges."""
+    _write_orders(tmp_path / "orders.parquet", 1)
+    left = load_small(spark, str(tmp_path), "orders")
+    right = left.filter(F.col("o_orderkey") % 2 == 0)
+    got = join_small(left, right, "o_orderkey", "left_semi", broadcast=True)
+    assert _plan(got) == _plan(left.join(F.broadcast(right), "o_orderkey", "left_semi"))
+    assert "ShuffledHashJoin" not in _physical(got)
+    assert sorted(got.collect()) == [(k,) for k in range(0, 6, 2)]
+
+def test_cut_keeps_one_copy_under_a_local_master(spark, monkeypatch):
+    """A ``local[n]`` master has one block manager, so a cut asks for no
+    second replica there (it could not be written, and each cut would log
+    two replication warnings); the executor-loss test below covers the
+    replicated level on a ``local-cluster`` master."""
+    df, levels = spark.range(3), []
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda df, eager, storageLevel: levels.append(storageLevel))
+    assert spark.sparkContext.master.startswith("local[")
+    io.cut(df)
+    assert [(lv.useDisk, lv.useMemory, lv.replication) for lv in levels] == [(True, True, 1)]
 
 #: a cut read by two actions with one of its two executors killed in between
 _KILL_PROBE = textwrap.dedent(

@@ -4,15 +4,17 @@ driver applies at sf0.01."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from iceberg_benchmark_poc_spark.core.registry import all_queries
 
-from .conftest import SF_DIR, compare_query_to_oracle, fixture_queries
+from .conftest import SF_DIR, compare_query_to_oracle, small_source_queries
 from .test_plans import _detail_blocks, _into_one_partition
 
 QUERIES = all_queries()
-FIXTURE_QUERIES = fixture_queries()
+SMALL_SOURCE_QUERIES = small_source_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -22,90 +24,6 @@ def test_query_matches_oracle(spark, duck, name):
         assert q.fn(spark, SF_DIR).count() >= 0  # rows-only check, mirroring the driver
         return
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle)
-
-
-def _write_degenerate_fixture(out, kind: str) -> str:
-    """A copy of the SF_DIR tables with one degenerate edit:
-
-    - ``null_user_values``: every events.value of one user is NULL, so that
-      user's totals are NULL (prefix-scan keys that must sort NULLS LAST);
-    - ``empty_part_documents``: part and documents have 0 rows, so domain
-      folds over them return None;
-    - ``nbsp_copy``: the first incoming-source document becomes a copy of
-      the first corpus document plus a trailing U+00A0, which Spark's trim
-      keeps and DuckDB's bare ``trim`` strips;
-    - ``null_prices``: every 7th lineitem.l_extendedprice is NULL;
-    - ``no_lineitem_stats``: lineitem is written without column statistics,
-      so its footers cannot give bounds and ``core.io.table_bounds`` folds;
-    - ``empty_orders_events``: orders and events have 0 rows, so every
-      ``core.fixtures`` relation is empty (its source one empty row group);
-    - ``two_row_groups``: orders and events are rewritten as two row groups
-      each, the multi-row-group path of ``core.io.load_small``.
-    """
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from iceberg_benchmark_poc_spark.queries.textpipe import INCOMING_SOURCE
-
-    from .conftest import TABLES
-
-    for t in TABLES:
-        src, dst = f"{SF_DIR}/{t}.parquet", out / f"{t}.parquet"
-        if kind == "null_user_values" and t == "events":
-            table = pq.read_table(src)
-            user = pc.min(table["user_id"])
-            value = pc.if_else(
-                pc.equal(table["user_id"], user), pa.scalar(None, pa.float64()), table["value"]
-            )
-            table = table.set_column(table.schema.get_field_index("value"), "value", value)
-            pq.write_table(table, dst)
-        elif kind == "empty_part_documents" and t in ("part", "documents"):
-            pq.write_table(pq.read_table(src).slice(0, 0), dst)
-        elif kind == "empty_orders_events" and t in ("orders", "events"):
-            pq.write_table(pq.read_table(src).slice(0, 0), dst)
-        elif kind == "two_row_groups" and t in ("orders", "events"):
-            table = pq.read_table(src)
-            pq.write_table(table, dst, row_group_size=-(-table.num_rows // 2))
-            assert pq.read_metadata(dst).num_row_groups == 2
-        elif kind == "null_prices" and t == "lineitem":
-            table = pq.read_table(src)
-            i = table.schema.get_field_index("l_extendedprice")
-            prices = [None if r % 7 == 0 else v for r, v in enumerate(table[i].to_pylist())]
-            table = table.set_column(i, table.schema.field(i), pa.array(prices, pa.float64()))
-            pq.write_table(table, dst)
-        elif kind == "no_lineitem_stats" and t == "lineitem":
-            pq.write_table(pq.read_table(src), dst, write_statistics=False)
-        elif kind == "nbsp_copy" and t == "documents":
-            table = pq.read_table(src)
-            texts, sources = table["text"].to_pylist(), table["source"].to_pylist()
-            orig = sources.index(next(s for s in sources if s != INCOMING_SOURCE))
-            texts[sources.index(INCOMING_SOURCE)] = texts[orig] + "\u00a0"
-            i = table.schema.get_field_index("text")
-            table = table.set_column(i, table.schema.field(i), pa.array(texts, table.schema.field(i).type))
-            pq.write_table(table, dst)
-        else:
-            shutil.copy(src, dst)
-    return str(out)
-
-
-@pytest.fixture(scope="module")
-def degenerate_sf(tmp_path_factory):
-    from .conftest import duck_views
-
-    made = {}
-
-    def get(kind: str):
-        if kind not in made:
-            sf_dir = _write_degenerate_fixture(tmp_path_factory.mktemp(kind), kind)
-            made[kind] = (sf_dir, duck_views(sf_dir))
-        return made[kind]
-
-    yield get
-    for _, con in made.values():
-        con.close()
 
 
 @pytest.mark.parametrize(
@@ -151,8 +69,8 @@ def degenerate_sf(tmp_path_factory):
         ("null_prices", "q_approx_stats"),
         ("no_lineitem_stats", "q_equidepth_hist"),
         ("no_lineitem_stats", "q_approx_stats"),
-        *(("empty_orders_events", name) for name in FIXTURE_QUERIES),
-        *(("two_row_groups", name) for name in FIXTURE_QUERIES),
+        *(("empty_orders_events", name) for name in SMALL_SOURCE_QUERIES),
+        *(("two_row_groups", name) for name in SMALL_SOURCE_QUERIES),
     ],
 )
 def test_degenerate_input_parity(spark, degenerate_sf, kind, name, monkeypatch):
@@ -170,10 +88,11 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name, monkeypatch):
     keeps the U+00A0 on both. The quantile queries: a NULL price takes no
     rank, as builtin ``percentile`` ignores it, and a lineitem whose
     footers hold no statistics ranks over folded bounds. Every query over a
-    ``core.fixtures`` relation: on empty orders and events its aggregates
-    are those of no rows (q_scan_tree counts no leaf hits as 0), and on
-    two-row-group sources ``load_small`` adds no ``Coalesce 1``, so the
-    plan holds exactly the one-partition nodes it holds over
+    ``core.fixtures`` relation, and q_equality_delete: on empty orders and
+    events its aggregates are those of no rows (q_scan_tree counts no leaf
+    hits as 0), and on two-row-group sources ``load_small`` adds no
+    ``Coalesce 1`` and ``join_small`` keeps the caller's join, so the plan
+    holds exactly the one-partition nodes and join strategies it holds over
     ``load_table``."""
     sf_dir, duck = degenerate_sf(kind)
     if kind == "no_lineitem_stats":
@@ -184,14 +103,18 @@ def test_degenerate_input_parity(spark, degenerate_sf, kind, name, monkeypatch):
     compare_query_to_oracle(spark, duck, name, q.fn, q.oracle, sf_dir=sf_dir)
     if kind == "two_row_groups":
         from iceberg_benchmark_poc_spark.core import fixtures, io
+        from iceberg_benchmark_poc_spark.queries import dv, manifests
 
-        with_small = _one_partition_coalesces(spark, q.fn(spark, sf_dir))
-        monkeypatch.setattr(fixtures, "load_small", io.load_table)
-        assert with_small == _one_partition_coalesces(spark, q.fn(spark, sf_dir))
+        with_small = _partition_shape(spark, q.fn(spark, sf_dir))
+        for module in (fixtures, dv, manifests):
+            monkeypatch.setattr(module, "load_small", io.load_table)
+        assert with_small == _partition_shape(spark, q.fn(spark, sf_dir))
 
 
-def _one_partition_coalesces(spark, df) -> int:
-    """``Coalesce 1`` nodes in the formatted physical plan of ``df``."""
+def _partition_shape(spark, df) -> tuple[int, list[str]]:
+    """``Coalesce 1`` nodes and the sorted join nodes of the formatted
+    physical plan of ``df``."""
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = df._jdf.queryExecution().explainString(mode)
-    return sum(t == "Coalesce" and _into_one_partition(t, body) for t, body in _detail_blocks(plan).values())
+    coalesces = sum(t == "Coalesce" and _into_one_partition(t, body) for t, body in _detail_blocks(plan).values())
+    return coalesces, sorted(re.findall(r"^\(\d+\) (\w+Join)\b", plan, re.M))
